@@ -1,11 +1,14 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
-``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"failed": {...}}``
 
 ``value`` is the total wall-clock over the headline set; per-query
-seconds are in ``queries``. Includes the J3 naive-vs-inverted-index
-contrast BASELINE.md's derived targets call for.
+seconds are in ``queries``. A query that raises or leaves a cached
+frame in the session is listed in ``failed`` (and the exit status is
+1). Includes the J3 naive-vs-inverted-index contrast BASELINE.md's
+derived targets call for.
 
 Usage: ``python bench.py [sf_dir]`` (default $SPARK_GRAFT_SF_DIR or
 /root/testdata/sf0.1).
@@ -196,52 +199,6 @@ HEADLINE = (
 )
 
 
-#: Calm-window detector (round-10 verdict item 4). The r10 controls
-#: spanned 153-291 s on identical code — a 1.9× environment band (CPU
-#: steal) that drowns per-round signal. Every bench run therefore
-#: self-classifies from the run's OWN timings of five pinned heavy
-#: probe queries (all already in HEADLINE — zero added cost): the run
-#: counts as CALM iff the probe total sits within ``CALM_BAND`` of the
-#: committed per-query minima below (minima over the 15 r10 controls,
-#: sf0.1 / 32 CPUs). README cites only calm-window minima. Re-pin the
-#: committed minima when a code change on a probe member lands.
-#: (`ef_markov_attribution` was a probe member for one session but its
-#: round-11 driver-arithmetic rewrite invalidated its committed min —
-#: swapped for `sim_dbscan_lsh`, code-untouched since round 9.)
-#: ROUND-12 RE-PIN: the optimization round changed two members'
-#: execution (`sim_dbscan_lsh` — Arrow/BLAS signatures + blocked
-#: verify; `dedup_prefix_filter_join` — persisted shingle/prefix
-#: relations). No calm window occurred all round (every r11/r12
-#: control self-classified noisy), so their new minima are the BEST
-#: in-round samples — documented UPPER bounds to be tightened on the
-#: first calm window (a too-high committed min makes the detector
-#: LENIENT, so until then treat `calm == true` with suspicion, exactly
-#: as README already instructs). `ts_bigram_lm_perplexity`'s diff is
-#: comment-only after the measured revert — identical execution, so
-#: its r10-calm minimum remains valid and is kept.
-#: ROUND-13 RE-PIN (the promised tighten-on-first-calm-window):
-#: BENCH_r13_control_d is the first calm-classified run since r10
-#: (probe ratio 0.928 under the r12 pins). Two members' execution
-#: changed again this round — `p1_news_keywords_distributed` (Arrow
-#: vote round-kernel, 41e0f7e) and `sim_dbscan_lsh` (per-partition
-#: components contraction, 1a5c692) — and the r12 provisional upper
-#: bounds are replaced by control d's CALM samples (5.520 → 4.596,
-#: 7.781 → 5.303), making the detector strictly TIGHTER.
-#: `dedup_prefix_filter_join`'s calm-window time (6.752) sits ABOVE
-#: its committed 4.753 (the r12 best-in-round sample caught a lucky
-#: window); the pin is a minimum, so raising it would LOOSEN the
-#: detector — kept. q9 / bigram calm samples match their pins within
-#: 2–5%.
-CALM_PROBE_COMMITTED_MIN_SEC = {
-    "rel_q9_product_profit": 0.756,
-    "sim_dbscan_lsh": 5.303,
-    "p1_news_keywords_distributed": 4.596,
-    "dedup_prefix_filter_join": 4.753,
-    "ts_bigram_lm_perplexity": 0.298,
-}
-CALM_BAND = 1.15
-
-
 #: Queries whose builder freezes the physical plan under temporarily
 #: opened session confs (QueryExecution phases cached inside the
 #: builder, confs restored before return). `Dataset.count()` builds a
@@ -254,26 +211,6 @@ CALM_BAND = 1.15
 FROZEN_PLAN_QUERIES = {"s30_bloom_join_runtime"}
 
 
-def classify_calm(timings: dict[str, float], sf: float | None) -> dict:
-    """Calm/noisy self-classification for one bench run's timings."""
-    committed = round(sum(CALM_PROBE_COMMITTED_MIN_SEC.values()), 3)
-    have = [k for k in CALM_PROBE_COMMITTED_MIN_SEC if k in timings]
-    probe_total = round(sum(timings[k] for k in have), 3)
-    out = {
-        "probe": sorted(CALM_PROBE_COMMITTED_MIN_SEC),
-        "probe_total_sec": probe_total,
-        "committed_min_sec": committed,
-        "band": CALM_BAND,
-    }
-    if sf != 0.1 or len(have) != len(CALM_PROBE_COMMITTED_MIN_SEC):
-        # minima are pinned for the default sf0.1/32-CPU control config
-        out["calm"] = None
-        return out
-    out["ratio"] = round(probe_total / committed, 3)
-    out["calm"] = probe_total <= round(CALM_BAND * committed, 3)
-    return out
-
-
 def main() -> int:
     sf_dir = (
         sys.argv[1]
@@ -283,9 +220,12 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
+    from recommedation_system_under_flink_spark.operators import bsp
     from recommedation_system_under_flink_spark.session import get_spark
 
     import __spark_entry__ as entrymod
+
+    bsp.refuse_plan_audit("bench.py")
 
     spark = get_spark(app_name="bench")
     qs = entrymod.queries()
@@ -334,25 +274,31 @@ def main() -> int:
     clickgen(spark, rows=8).count()
 
     timings: dict[str, float] = {}
+    failed: dict[str, str] = {}
     for name in HEADLINE:
         fn = qs.get(name)
         if fn is None:
             continue
-        # NOTE: no clearCache between queries — CacheManager reuses
-        # identical persisted subplans across queries (the keyword
-        # chains, edge lists), exactly as a long-running warm cluster
-        # serving this workload would. Timings are therefore
-        # marginal-cost per query within one session.
         t0 = time.time()
-        df = fn(spark, sf_dir)
-        if name in FROZEN_PLAN_QUERIES:
-            # reuse the builder-frozen physical plan (see above)
-            df._jdf.queryExecution().toRdd().count()
+        err = None
+        try:
+            df = fn(spark, sf_dir)
+            if name in FROZEN_PLAN_QUERIES:
+                # reuse the builder-frozen physical plan (see above)
+                df._jdf.queryExecution().toRdd().count()
+            else:
+                # count() executes the full plan without driver-side row
+                # transfer
+                df.count()
+        except Exception as e:  # noqa: BLE001
+            err = f"{type(e).__name__}: {str(e)[:300]}"
+        wall = round(time.time() - t0, 3)
+        if bsp.leaked_cache(spark):
+            err = (f"{err}; " if err else "") + "left a cached frame in the session"
+        if err:
+            failed[name] = err
         else:
-            # count() executes the full plan without driver-side row
-            # transfer
-            df.count()
-        timings[name] = round(time.time() - t0, 3)
+            timings[name] = wall
 
     out = {
         "metric": "headline_queries_total_wall_sec",
@@ -360,10 +306,10 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "calm_probe": classify_calm(timings, sf),
+        "failed": failed,
     }
     print(json.dumps(out))
-    return 0
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

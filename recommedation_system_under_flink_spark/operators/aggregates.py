@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SCENE, TODAY
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import CLICKS_CTE, clicks, events_raw, with_ctes
@@ -573,7 +574,7 @@ def a15_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pooled curve feeds the OLS points and the day-1 row - persist
     # both, released after the 1-row fit materializes (r12 scan
     # audit: 8 duplicate scans before)
-    activity = ev.select("user_id", ts_date("ts").alias("day")).distinct().persist()
+    activity = bsp.persist(ev.select("user_id", ts_date("ts").alias("day")).distinct())
     cohorts = activity.groupBy("user_id").agg(F.min("day").alias("cohort"))
     sizes = cohorts.groupBy("cohort").agg(
         F.count("*").cast("bigint").alias("n")
@@ -584,7 +585,7 @@ def a15_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cohort", F.datediff("day", "cohort").cast("bigint").alias("o"))
         .agg(F.count("*").cast("bigint").alias("active"))
     )
-    pooled = (
+    pooled = bsp.persist(
         cells.join(sizes, "cohort")
         .crossJoin(F.broadcast(mx))
         .filter(
@@ -595,7 +596,6 @@ def a15_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (F.sum("active").cast("double") / F.sum("n")).alias("r")
         )
-        .persist()
     )
     pts = pooled.filter(F.col("r") > 0).select(
         F.col("o").cast("double").alias("x"), F.log(F.col("r")).alias("y")
@@ -621,6 +621,4 @@ def a15_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.log(F.lit(2.0)) / F.nullif(lam, F.lit(0.0)), 6
         ).alias("half_life_days"),
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, activity, pooled)
+    return bsp.checkpoint_result(out)

@@ -1,21 +1,33 @@
-"""Shared plumbing for BSP-style iterative operators.
+"""Query-scoped cache lifecycle and shared plumbing for BSP-style
+iterative operators.
 
-Every iterative operator here (PageRank, BFS, PPR, hash-min connected
-components, distributed TextRank) has the same shape: persist the loop
-invariants (edges, degrees, vocab), iterate K join+aggregate rounds,
-emit a SMALL result (per-node labels/ranks — O(|keys|), not O(|input|)).
-Two lifecycle problems follow at scale:
+**Cache scope.** Every registered builder runs inside a
+:func:`query_scope` (``registry.register`` wraps it). Operator code
+caches a frame with :func:`persist`, which records the frame in the
+innermost open scope; the scope unpersists every frame it recorded on
+every way out, exceptions included. A builder therefore never releases
+a cache by hand, and ``persist`` outside a scope raises, so no cache can
+outlive the query that made it. Scopes nest: a builder that calls
+another registered builder gets the inner one's caches released when
+the inner call returns.
 
-1. **Lineage depth.** Each round's DataFrame references the previous
-   round's plan; after K rounds the plan is K levels deep, and anything
-   that recomputes it (a retry, a second action) replays the whole
-   chain. ``checkpoint_result`` truncates the final lineage with an
-   eager ``localCheckpoint()``.
-2. **Cache lifetime.** The persisted invariants must outlive the loop's
-   LAZY result — unpersisting before the caller's action would silently
-   recompute the loop without caching. Checkpointing first makes the
-   unpersist safe, so a 150-query session doesn't accumulate orphaned
-   cache entries (round-2 advice on graph_bfs_hops / p1 / a3).
+The release happens when the builder RETURNS, before the caller runs
+its action. A builder whose returned lazy plan still reads a persisted
+frame must therefore materialize it first with
+:func:`checkpoint_result`; otherwise the action silently recomputes the
+un-cached lineage (and a nondeterministic or corrupt-record read may
+see different rows).
+
+**BSP loops.** Every iterative operator here (PageRank, BFS, PPR,
+hash-min connected components, distributed TextRank) has the same
+shape: persist the loop invariants (edges, degrees, vocab), iterate K
+join+aggregate rounds, emit a SMALL result (per-node labels/ranks —
+O(|keys|), not O(|input|)). Each round's DataFrame references the
+previous round's plan; after K rounds the plan is K levels deep, and
+anything that recomputes it (a retry, a second action) replays the
+whole chain. ``checkpoint_result`` truncates the final lineage with an
+eager ``localCheckpoint()``; ``checkpoint_round`` does the same every
+``CHECKPOINT_EVERY`` rounds of an unbounded loop.
 
 ``localCheckpoint`` stores partitions on executors (not a reliable
 FS) — right for these small results and for local[32]. A 1000-executor
@@ -27,6 +39,8 @@ storage; the call sites don't change.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
@@ -37,29 +51,73 @@ CHECKPOINT_EVERY = 5
 #: ``checkpoint_result`` normally explain() as the post-checkpoint
 #: ``Scan ExistingRDD`` stub, which hides the executed lineage from the
 #: committed plan dumps. Setting SPARK_GRAFT_PLAN_AUDIT=1 makes
-#: ``checkpoint_result`` return the UN-truncated plan (and keep the
-#: caches, so InMemoryRelation boundaries stay visible). Timing and
-#: cache lifecycle are both wrong in this mode — it exists ONLY for
-#: throwaway explain-dump sessions (scripts/plan_probe.py
-#: --plan-audit), never for bench/gate runs.
+#: ``checkpoint_result`` return the UN-truncated plan and makes every
+#: scope keep its caches, so InMemoryRelation boundaries stay visible.
+#: Timing and cache lifecycle are both wrong in this mode — it exists
+#: ONLY for throwaway explain-dump sessions (scripts/plan_probe.py
+#: --plan-audit); the gate, bench and sweep scripts refuse to start
+#: with it set.
 _PLAN_AUDIT = os.environ.get("SPARK_GRAFT_PLAN_AUDIT", "") == "1"
 
+#: Open scopes, innermost last; each holds the frames it persisted.
+_SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar(
+    "bsp_query_scopes", default=()
+)
 
-def checkpoint_result(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a BSP loop's (small) final result, truncating its
-    K-round lineage, then release the loop's persisted invariants.
 
-    The unpersist runs in ``finally``: if the eager checkpoint fails
-    mid-materialization (executor loss, OOM in a loop join), the
-    loop's caches must not leak into the rest of a long-lived
-    gate/bench session (round-8 review finding on the ALS rewrite)."""
+@contextmanager
+def query_scope():
+    """Open a cache scope: every frame :func:`persist`-ed inside it is
+    unpersisted when it closes, however it closes."""
+    frames: list[DataFrame] = []
+    token = _SCOPES.set((*_SCOPES.get(), frames))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        if not _PLAN_AUDIT:
+            for df in frames:
+                df.unpersist()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released by the innermost open :func:`query_scope`."""
+    scopes = _SCOPES.get()
+    if not scopes:
+        raise RuntimeError(
+            "persist() outside a query_scope(): nothing would release it"
+        )
+    scopes[-1].append(df)
+    return df.persist()
+
+
+def refuse_plan_audit(tool: str) -> None:
+    """Gate, bench and sweep harnesses call this first: their numbers
+    are meaningless in plan-audit mode."""
+    if _PLAN_AUDIT:
+        raise SystemExit(
+            f"{tool}: refusing to run with SPARK_GRAFT_PLAN_AUDIT=1 "
+            "(plan-audit mode keeps every cache and skips checkpoints)"
+        )
+
+
+def leaked_cache(spark) -> bool:
+    """True when the session's CacheManager still holds a cached plan
+    after a query; the cache is then cleared, so one leak fails only
+    the query that made it."""
+    if spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        return False
+    spark.catalog.clearCache()
+    return True
+
+
+def checkpoint_result(result: DataFrame) -> DataFrame:
+    """Materialize a builder's (small) final result, truncating its
+    lineage, so the returned frame no longer reads the scope's caches
+    when they are released."""
     if _PLAN_AUDIT:
         return result
-    try:
-        return result.localCheckpoint(eager=True)
-    finally:
-        for df in cached:
-            df.unpersist()
+    return result.localCheckpoint(eager=True)
 
 
 def checkpoint_round(df: DataFrame, round_idx: int) -> DataFrame:

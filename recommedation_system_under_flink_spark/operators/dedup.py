@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import TOKEN_SPLIT_REGEX
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -42,6 +43,11 @@ SHINGLE_N = 3
 #: Near-duplicate Jaccard threshold (fixture-calibrated: planted
 #: near-dups sit ≥0.5, unrelated docs <0.1).
 JACCARD_THRESHOLD = 0.5
+#: JACCARD_THRESHOLD as an exact integer ratio p/q, so the PPJoin length
+#: bound least·q ≥ greatest·p stays in long arithmetic (no FP boundary).
+_JACCARD_P, _JACCARD_Q = JACCARD_THRESHOLD.as_integer_ratio()
+if _JACCARD_Q > 1 << 20:  # n·q must not overflow a long for any set size
+    raise ValueError(f"JACCARD_THRESHOLD={JACCARD_THRESHOLD} has no short exact ratio")
 #: MinHash signature size and banding (16 bands × 2 rows).
 MINHASH_H = 32
 MINHASH_BANDS = 16
@@ -136,8 +142,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts → ``|∩| / (n1 + n2 - |∩|)``. Only docs sharing ≥1 shingle
     ever pair up."""
     docs = load_raw(spark, sf_dir, "documents")
-    # three consumers (sizes + both join sides), no cross-subtree CSE
-    # in Catalyst - persist once, release after the small pair result
+    # three consumers (sizes + both join sides) each re-derive the
+    # shingle chain (no cross-subtree CSE in Catalyst): sh is NOT
+    # persisted; only the small pair result is checkpointed
     sh = shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
@@ -159,11 +166,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(
-        jac.filter(F.col("jaccard") >= JACCARD_THRESHOLD), sh
-    )
+    return bsp.checkpoint_result(jac.filter(F.col("jaccard") >= JACCARD_THRESHOLD))
 
 
 # ------------------------------------------------------ MinHash LSH dedup
@@ -1126,9 +1129,9 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sample), while candidates stay LSH-bounded."""
     docs = load_raw(spark, sf_dir, "documents")
     sh = shingles(docs)
-    sig = minhash_signatures(sh).persist()
+    sig = bsp.persist(minhash_signatures(sh))
     true_pairs = (
-        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").persist()
+        bsp.persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
     )
     n_true = true_pairs.agg(
         F.count("*").cast("long").alias("n_true")
@@ -1159,7 +1162,7 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bb.bucket").alias("bucket"),
         )
         a, b = banded.alias("a"), banded.alias("b")
-        cand = (
+        cand = bsp.persist(
             a.join(
                 b,
                 (F.col("a.band") == F.col("b.band"))
@@ -1171,7 +1174,6 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.doc_id").alias("doc_b"),
             )
             .distinct()
-            .persist()
         )
         cands.append(cand)
         n_cand = cand.agg(F.count("*").cast("long").alias("n_candidates"))
@@ -1205,9 +1207,7 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = slices[0]
     for s in slices[1:]:
         out = out.unionByName(s)
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, sig, true_pairs, *cands)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- n-gram novelty
@@ -1398,11 +1398,13 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # un-persisted, the tokenize+shingle-hash+window chain executed 4x
     # (4 scans in plans/r12/dedup_winnowing_before.txt). Released after
     # the small pair result materializes (r12).
-    fp = wins.select(
-        "doc_id",
-        (F.col("sel") / (1 << _WIN_POS_BITS)).cast("long").alias("fp_hash"),
-        (_WIN_POS_CAP - F.col("sel") % (1 << _WIN_POS_BITS)).alias("fp_pos"),
-    ).distinct().persist()
+    fp = bsp.persist(
+        wins.select(
+            "doc_id",
+            (F.col("sel") / (1 << _WIN_POS_BITS)).cast("long").alias("fp_hash"),
+            (_WIN_POS_CAP - F.col("sel") % (1 << _WIN_POS_BITS)).alias("fp_pos"),
+        ).distinct()
+    )
     counts = fp.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_fp"))
     fph = fp.select("doc_id", "fp_hash").distinct()
     a = fph.select(
@@ -1440,9 +1442,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("containment"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, fp)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------ boundary stitching
@@ -1732,9 +1732,9 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # un-persisted this plan held 20 parquet scans / 54 exchanges
     # (plans/r12/dedup_prefix_filter_join_before.txt) — the whole
     # tokenize+shingle+distinct chain re-ran per consumer. pfx likewise
-    # feeds both sides of the candidate self-join. Both released after
-    # the (small) pair result materializes (operators/bsp.py).
-    sh = shingles(docs).persist()
+    # feeds both sides of the candidate self-join. The query scope
+    # releases both after the (small) pair result materializes.
+    sh = bsp.persist(shingles(docs))
     from pyspark.sql import Window
 
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -1752,18 +1752,17 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    pfx = (
+    pfx = bsp.persist(
         ordered.filter(
             F.col("rk")
             <= F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1
         )
         .select("doc_id", "shingle", "n")
-        .persist()
     )
     # PPJoin length filter (r13, guide §3 pre-filter): J(A,B) ≤
-    # min(|A|,|B|)/max(|A|,|B|), so J ≥ t requires min ≥ t·max — at
-    # t = 1/2 exactly 2·least(n_a, n_b) ≥ greatest(n_a, n_b) in pure
-    # integer arithmetic (no FP boundary risk). Pairs failing it can
+    # min(|A|,|B|)/max(|A|,|B|), so J ≥ t = p/q requires
+    # q·least(n_a, n_b) ≥ p·greatest(n_a, n_b) — pure integer
+    # arithmetic (no FP boundary risk). Pairs failing it can
     # never reach the threshold, so pruning them INSIDE the candidate
     # join changes no result (the final jaccard filter would drop them)
     # while the expensive per-candidate verify joins see fewer rows.
@@ -1774,8 +1773,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.shingle") == F.col("b.shingle"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
-                F.least(F.col("a.n"), F.col("b.n")) * 2
-                >= F.greatest(F.col("a.n"), F.col("b.n"))
+                F.least(F.col("a.n"), F.col("b.n")) * _JACCARD_Q
+                >= F.greatest(F.col("a.n"), F.col("b.n")) * _JACCARD_P
             ),
         )
         .select(
@@ -1821,9 +1820,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = jac.filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard")
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, sh, pfx)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------ duplicated-span scrub

@@ -39,6 +39,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from ..sources import events_raw
 from .quantize import ppm_sum, ppm_value
@@ -275,9 +276,7 @@ def ef_range_join_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ funnel
 
-def staged_funnel(
-    ev: DataFrame, key: list[str]
-) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+def staged_funnel(ev: DataFrame, key: list[str]) -> DataFrame:
     """First-occurrence view → click → purchase staging keyed on
     ``key``: per key, the earliest view (t1), the earliest click
     strictly after it (t2), the earliest purchase strictly after that
@@ -288,23 +287,21 @@ def staged_funnel(
 
     v and c each feed the next stage AND the final join (no
     cross-subtree CSE — the r12 scan audit saw the whole input chain
-    re-executed per reference), so both persist here; the caller MUST
-    release them via ``checkpoint_result(out, *caches)`` using the
-    returned cache tuple. Callers whose ``ev`` is itself expensive
-    (the sessionized form) should persist it too."""
-    v = (
+    re-executed per reference), so both persist here, in the caller's
+    query scope: the caller must end in ``checkpoint_result``. Callers
+    whose ``ev`` is itself expensive (the sessionized form) should
+    persist it too."""
+    v = bsp.persist(
         ev.filter(F.col("event_type") == "view")
         .groupBy(*key)
         .agg(F.min("tsm").alias("t1"))
-        .persist()
     )
-    c = (
+    c = bsp.persist(
         ev.filter(F.col("event_type") == "click")
         .join(v, key)
         .filter(F.col("tsm") > F.col("t1"))
         .groupBy(*key)
         .agg(F.min("tsm").alias("t2"))
-        .persist()
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -313,7 +310,7 @@ def staged_funnel(
         .groupBy(*key)
         .agg(F.min("tsm").alias("t3"))
     )
-    return v.join(c, key, "left").join(p, key, "left"), (v, c)
+    return v.join(c, key, "left").join(p, key, "left")
 
 
 _FUNNEL_ORACLE = """WITH ev AS (
@@ -366,7 +363,7 @@ def ef_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
         "event_type",
         F.expr("ts DIV 1000").alias("tsm"),
     )
-    staged, caches = staged_funnel(ev, ["user_id", "day"])
+    staged = staged_funnel(ev, ["user_id", "day"])
     out = (
         staged.select(
             "day",
@@ -379,9 +376,7 @@ def ef_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("day", "depth")
         .agg(F.count("*").cast("long").alias("n_users"))
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, *caches)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- native session window
@@ -501,8 +496,8 @@ def ef_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the sessionize window annotation feeds all three funnel stages —
     # persist it so the window runs once, not per stage
-    sess = annotate_sessions(ev).persist()
-    staged, caches = staged_funnel(sess, ["user_id", "session_seq"])
+    sess = bsp.persist(annotate_sessions(ev))
+    staged = staged_funnel(sess, ["user_id", "session_seq"])
     out = (
         staged.select(
             F.when(F.col("t3").isNotNull(), 3)
@@ -514,9 +509,7 @@ def ef_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("depth")
         .agg(F.count("*").cast("long").alias("n_sessions"))
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, sess, *caches)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- attribution report
@@ -778,15 +771,17 @@ def ef_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ctsm").alias("t0"), first_conv_agg().alias("tp"))
     )
-    durations = subj.crossJoin(F.broadcast(t_end)).select(
-        (F.col("tp").isNotNull()).cast("int").alias("event"),
-        F.when(
-            F.col("tp").isNotNull(),
-            F.expr(f"(tp - t0) DIV {_US_PER_DAY}"),
+    durations = bsp.persist(
+        subj.crossJoin(F.broadcast(t_end)).select(
+            (F.col("tp").isNotNull()).cast("int").alias("event"),
+            F.when(
+                F.col("tp").isNotNull(),
+                F.expr(f"(tp - t0) DIV {_US_PER_DAY}"),
+            )
+            .otherwise(F.expr(f"(t_end - t0) DIV {_US_PER_DAY}"))
+            .alias("t_day"),
         )
-        .otherwise(F.expr(f"(t_end - t0) DIV {_US_PER_DAY}"))
-        .alias("t_day"),
-    ).persist()
+    )
     event_days = (
         durations.filter(F.col("event") == 1).select("t_day").distinct()
     )
@@ -825,11 +820,7 @@ def ef_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d_events").cast("long").alias("d_events"),
         F.round(alive * F.exp(logsum), 6).alias("survival"),
     )
-    from .bsp import checkpoint_result
-
-    # checkpoint_result releases `durations` in finally — without it the
-    # persist leaked into the session on every KM run (session review).
-    return checkpoint_result(out, durations)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------- conversion-rate significance
@@ -992,16 +983,18 @@ def ef_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ctsm").alias("t0"), first_conv_agg().alias("tp"))
         .withColumn("cohort", F.col("t0") % 2)
     )
-    durations = subj.crossJoin(F.broadcast(t_end)).select(
-        "cohort",
-        (F.col("tp").isNotNull()).cast("int").alias("event"),
-        F.when(
-            F.col("tp").isNotNull(),
-            F.expr(f"(tp - t0) DIV {_US_PER_DAY}"),
+    durations = bsp.persist(
+        subj.crossJoin(F.broadcast(t_end)).select(
+            "cohort",
+            (F.col("tp").isNotNull()).cast("int").alias("event"),
+            F.when(
+                F.col("tp").isNotNull(),
+                F.expr(f"(tp - t0) DIV {_US_PER_DAY}"),
+            )
+            .otherwise(F.expr(f"(t_end - t0) DIV {_US_PER_DAY}"))
+            .alias("t_day"),
         )
-        .otherwise(F.expr(f"(t_end - t0) DIV {_US_PER_DAY}"))
-        .alias("t_day"),
-    ).persist()
+    )
     event_days = (
         durations.filter(F.col("event") == 1).select("t_day").distinct()
     )
@@ -1050,12 +1043,7 @@ def ef_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("logrank_chi2"),
     )
-    from .bsp import checkpoint_result
-
-    # pass the cache as *cached so the finally-release holds even if
-    # the eager checkpoint fails (the exact leak-on-failure class
-    # checkpoint_result exists for).
-    return checkpoint_result(out, durations)
+    return bsp.checkpoint_result(out)
 
 
 # --------------------------------------------------- Welch's t-test
@@ -1371,7 +1359,11 @@ def ef_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv = F.col("value").cast("decimal(18,6)")
     tsm = F.expr("ts DIV 1000")
     is_p = F.col("event_type") == "purchase"
-    subj = (
+    # subj feeds both the pooled moments and the per-cohort aggregate
+    # (whose output feeds both cohort sides) — persist, released after
+    # the 1-row result materializes (r12 scan audit: 6 duplicate scans
+    # before)
+    subj = bsp.persist(
         ev.crossJoin(F.broadcast(mid))
         .groupBy("user_id")
         .agg(
@@ -1387,11 +1379,6 @@ def ef_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
         .select("x", "y", (F.col("user_id") % 2).alias("cohort"))
-        # feeds both the pooled moments and the per-cohort aggregate
-        # (whose output feeds both cohort sides) — persist, released
-        # after the 1-row result materializes (r12 scan audit: 6
-        # duplicate scans before)
-        .persist()
     )
     m = subj.agg(
         F.count("*").cast("long").alias("n"),
@@ -1460,9 +1447,7 @@ def ef_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(adj_a - adj_b, 6).alias("adj_diff"),
         F.round(F.col("rho2"), 6).alias("var_reduction"),
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, subj)
+    return bsp.checkpoint_result(out)
 
 
 # --------------------------------------------------- forward as-of join
@@ -1656,8 +1641,8 @@ def ef_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: conv plus all three edge branches (one of which joins
     # conv, itself seq-derived) read this subtree — unpersisted, the
     # events scan + window chain executes ~5x building m0 (no
-    # cross-subtree CSE). Released right after m0's checkpoint.
-    seq.persist()
+    # cross-subtree CSE). Released when the query scope closes.
+    bsp.persist(seq)
     conv = (
         seq.select("user_id", "last_t")
         .distinct()
@@ -1711,10 +1696,7 @@ def ef_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted before accumulating so the driver arithmetic is
     # bit-deterministic regardless of collect/partition order
     # (stronger than the old shuffle-order Spark sums).
-    try:
-        cells = {(r["i"], r["j"]): r["p"] for r in m0.collect()}
-    finally:
-        seq.unpersist()
+    cells = {(r["i"], r["j"]): r["p"] for r in m0.collect()}
 
     def py_round9(v: float) -> float:
         # F.round(double, 9) is BigDecimal.valueOf(v).setScale(9,

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from ..sources import events_raw
 from .quantize import ppm_sum, ppm_value
@@ -433,7 +434,7 @@ def ev_user_rfm_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import events_raw
     from ..sources.tables import ts_date
 
-    base = (
+    base = bsp.persist(
         events_raw(spark, sf_dir)
         .groupBy("user_id")
         .agg(
@@ -445,7 +446,6 @@ def ev_user_rfm_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.lit(0.0)).cast("decimal(18,6)")
             ).alias("monetary_dec"),
         )
-        .persist()
     )
     head = base.agg(
         F.max("last_day").alias("anchor"), F.count("*").alias("n")
@@ -501,14 +501,16 @@ def ev_user_rfm_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (c <= F.lit(c1)).cast("int")
         ).cast("int")
 
-    return base.select(
-        "user_id",
-        "last_day",
-        "frequency",
-        F.col("monetary_dec").cast("double").alias("monetary"),
-        asc_q("recency_days", r1, r2, r3).alias("r_quartile"),
-        desc_q("frequency", f1, f2, f3).alias("f_quartile"),
-        desc_q("monetary_dec", m1, m2, m3).alias("m_quartile"),
+    return bsp.checkpoint_result(
+        base.select(
+            "user_id",
+            "last_day",
+            "frequency",
+            F.col("monetary_dec").cast("double").alias("monetary"),
+            asc_q("recency_days", r1, r2, r3).alias("r_quartile"),
+            desc_q("frequency", f1, f2, f3).alias("f_quartile"),
+            desc_q("monetary_dec", m1, m2, m3).alias("m_quartile"),
+        )
     )
 
 
@@ -1556,21 +1558,25 @@ def ev_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the day count; pairs feeds the median window and the pair count —
     # persist both tiny relations or the events scan re-runs per
     # consumer (r12 scan audit: 8 duplicate scans before)
-    idx = daily.select(
-        "n",
-        (F.row_number().over(Window.orderBy("date")) - 1)
-        .cast("long")
-        .alias("x"),
-    ).persist()
+    idx = bsp.persist(
+        daily.select(
+            "n",
+            (F.row_number().over(Window.orderBy("date")) - 1)
+            .cast("long")
+            .alias("x"),
+        )
+    )
     a = idx.select(F.col("x").alias("xi"), F.col("n").alias("ni"))
     b = idx.select(F.col("x").alias("xj"), F.col("n").alias("nj"))
-    pairs = a.join(b, F.col("xj") > F.col("xi")).select(
-        "xi",
-        "xj",
-        ((F.col("nj") - F.col("ni")) * 1.0 / (F.col("xj") - F.col("xi"))).alias(
-            "sl"
-        ),
-    ).persist()
+    pairs = bsp.persist(
+        a.join(b, F.col("xj") > F.col("xi")).select(
+            "xi",
+            "xj",
+            ((F.col("nj") - F.col("ni")) * 1.0 / (F.col("xj") - F.col("xi"))).alias(
+                "sl"
+            ),
+        )
+    )
     wm = Window.orderBy("sl", "xi", "xj")
     ms = pairs.select(
         "sl",
@@ -1607,9 +1613,7 @@ def ev_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("icpt"), 6).alias("ts_intercept"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, idx, pairs)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- autocorrelation (ACF)
@@ -1672,16 +1676,20 @@ def ev_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idx feeds the totals and the deviation pass; dev feeds the
     # denominator and both lag-join sides — persist both tiny series
     # relations (r12 scan audit: 6 duplicate scans before)
-    idx = daily.select(
-        "y", F.row_number().over(Window.orderBy("date")).cast("long").alias("t")
-    ).persist()
+    idx = bsp.persist(
+        daily.select(
+            "y", F.row_number().over(Window.orderBy("date")).cast("long").alias("t")
+        )
+    )
     s = idx.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("y").cast("long").alias("sy"),
     )
-    dev = idx.crossJoin(F.broadcast(s)).select(
-        "t", (F.col("y") * F.col("n") - F.col("sy")).alias("d")
-    ).persist()
+    dev = bsp.persist(
+        idx.crossJoin(F.broadcast(s)).select(
+            "t", (F.col("y") * F.col("n") - F.col("sy")).alias("d")
+        )
+    )
     denom = dev.agg(F.sum(F.col("d") * F.col("d")).cast("long").alias("den"))
     lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = dev.select(F.col("t").alias("ta"), F.col("d").alias("da"))
@@ -1699,9 +1707,7 @@ def ev_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("acf"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, idx, dev)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- EWMA forecast
@@ -1856,13 +1862,15 @@ def ev_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idx feeds the smoother and the day count; the smoothed series
     # feeds the last value, the shifted copy and the MAE join — persist
     # both tiny series relations (r12 scan audit: 10 duplicate scans)
-    idx = daily.select(
-        "y",
-        (F.row_number().over(Window.orderBy("date")) - 1)
-        .cast("long")
-        .alias("x"),
-    ).persist()
-    s = _ewma_smoothed(spark, idx).persist()
+    idx = bsp.persist(
+        daily.select(
+            "y",
+            (F.row_number().over(Window.orderBy("date")) - 1)
+            .cast("long")
+            .alias("x"),
+        )
+    )
+    s = bsp.persist(_ewma_smoothed(spark, idx))
     last = (
         s.orderBy(F.col("tx").desc())
         .limit(1)
@@ -1885,9 +1893,7 @@ def ev_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("m", 6).alias("mae_one_step"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, idx, s)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------- seasonal decomposition (weekly)

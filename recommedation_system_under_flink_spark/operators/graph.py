@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import CLICKS_CTE, with_ctes
-from .bsp import checkpoint_result
+from . import bsp
 
 #: Damping factor and fixed iteration count (pinned for oracle parity).
 PAGERANK_D = 0.85
@@ -85,7 +85,7 @@ def graph_pagerank_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import clicks
 
     pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -101,13 +101,12 @@ def graph_pagerank_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
-    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d")).persist()
+    deg = bsp.persist(
+        edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
+    )
     n_nodes = deg.count()  # materializes edges + deg before the loop
     if n_nodes == 0:
-        edges.unpersist()
-        deg.unpersist()
         return spark.createDataFrame([], "node long, rank double")
 
     teleport = (1.0 - PAGERANK_D) / n_nodes
@@ -132,12 +131,10 @@ def graph_pagerank_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumnRenamed("node", "src")
         )
-    # Materialize the small (node, rank) result (truncating the
-    # K-round lineage), then release edges/deg — see operators/bsp.py.
-    return checkpoint_result(
-        ranks.select(F.col("src").alias("node"), F.col("r").alias("rank")),
-        edges,
-        deg,
+    # Materialize the small (node, rank) result, truncating the K-round
+    # lineage before the scope releases edges/deg (operators/bsp.py).
+    return bsp.checkpoint_result(
+        ranks.select(F.col("src").alias("node"), F.col("r").alias("rank"))
     )
 
 
@@ -192,7 +189,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import clicks
 
     pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -208,11 +205,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
     seed_row = pairs.agg(F.min("news_id").alias("m")).first()
     if seed_row is None or seed_row["m"] is None:
-        edges.unpersist()
         return spark.createDataFrame([], "node long, dist int")
 
     seed = int(seed_row["m"]) * 2 + 1
@@ -222,21 +217,18 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist: each level feeds BOTH the next expansion and the
         # final union — uncached, level h would be recomputed
         # (BFS_MAX_HOPS - h) extra times through the union's lineage.
-        frontier = (
+        frontier = bsp.persist(
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .withColumn("dist", F.lit(h).cast("int"))
-            .persist()
         )
         levels.append(frontier)
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
-    return checkpoint_result(
-        out.groupBy("node").agg(F.min("dist").cast("int").alias("dist")),
-        edges,
-        *levels[1:],  # levels[0] is the un-persisted seed frame
+    return bsp.checkpoint_result(
+        out.groupBy("node").agg(F.min("dist").cast("int").alias("dist"))
     )
 
 
@@ -310,7 +302,7 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import clicks as clicks_table
 
     pairs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -326,13 +318,12 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
-    deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d")).persist()
+    deg = bsp.persist(
+        edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
+    )
     seed_row = pairs.agg(F.min("user_id").alias("m")).first()
     if seed_row is None or seed_row["m"] is None:
-        edges.unpersist()
-        deg.unpersist()
         return spark.createDataFrame([], "news_id long, score double")
 
     seed = int(seed_row["m"]) * 2
@@ -377,7 +368,7 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= 10)
         .select("news_id", "score")
     )
-    return checkpoint_result(out, edges, deg)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- HITS (hubs/authorities)
@@ -441,15 +432,14 @@ def graph_hits_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregate (same shuffle shape as a PageRank round); the L1
     sums are 1-row aggregates broadcast back (intentional scalar
     cross — see scripts/audit_plans.py allowlist). Fixed K rounds →
-    bounded lineage; edges persist across rounds and are released via
-    checkpoint_result (operators/bsp.py)."""
+    bounded lineage; edges persist across rounds and are released by
+    the query scope after checkpoint_result (operators/bsp.py)."""
     from ..sources import clicks
 
-    pairs = (
-        clicks(spark, sf_dir).select("user_id", "news_id").distinct().persist()
+    pairs = bsp.persist(
+        clicks(spark, sf_dir).select("user_id", "news_id").distinct()
     )
     if pairs.count() == 0:  # materializes pairs before the loop
-        pairs.unpersist()
         return spark.createDataFrame([], "kind string, id long, score double")
 
     hub = pairs.select(F.col("user_id").alias("u")).distinct().select(
@@ -463,25 +453,21 @@ def graph_hits_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache, the BSP-convergence-check idiom) and re-enters the
     # plan as a literal — a lit divide, not a broadcast-nested-loop
     # cross per round. Caches release after the final materialization.
-    round_caches = []
     for _ in range(HITS_ITERS):
-        a_raw = (
+        a_raw = bsp.persist(
             pairs.join(hub, pairs.user_id == hub.u)
             .groupBy(F.col("news_id").alias("n"))
             .agg(F.sum("s").alias("s"))
-            .persist()
         )
         a_tot = a_raw.agg(F.sum("s")).collect()[0][0]
         auth = a_raw.select("n", (F.col("s") / F.lit(a_tot)).alias("s"))
-        h_raw = (
+        h_raw = bsp.persist(
             pairs.join(auth, pairs.news_id == auth.n)
             .groupBy(F.col("user_id").alias("u"))
             .agg(F.sum("s").alias("s"))
-            .persist()
         )
         h_tot = h_raw.agg(F.sum("s")).collect()[0][0]
         hub = h_raw.select("u", (F.col("s") / F.lit(h_tot)).alias("s"))
-        round_caches += [a_raw, h_raw]
     out = hub.select(
         F.lit("hub").alias("kind"), F.col("u").alias("id"), F.col("s").alias("score")
     ).unionAll(
@@ -491,7 +477,7 @@ def graph_hits_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s").alias("score"),
         )
     )
-    return checkpoint_result(out, pairs, *round_caches)
+    return bsp.checkpoint_result(out)
 
 
 @register("graph_bfs_recursive", _bfs_oracle())
@@ -593,13 +579,12 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
     a = prefs.select("user_id", F.col("news_id").alias("x"))
     b = prefs.select(F.col("user_id").alias("u2"), F.col("news_id").alias("y"))
-    e = (
+    e = bsp.persist(
         a.join(b, (F.col("user_id") == F.col("u2")) & (F.col("x") < F.col("y")))
         .groupBy("x", "y")
         .agg(F.count("*").alias("cooc"))
         .filter(F.col("cooc") >= TRI_MIN_COOC)
         .select("x", "y")
-        .persist()
     )
     n_edges = e.count()  # materializes the projection once for all uses
     deg = (
@@ -641,8 +626,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering_coeff"),
         )
     )
-    # release rides checkpoint_result's finally (leak-on-failure safe)
-    return checkpoint_result(out, e)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------ k-core (bounded peel)
@@ -704,7 +688,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import clicks
 
     pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -720,7 +704,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
     edges.count()
     for _ in range(KCORE_PEEL_ROUNDS):
@@ -730,11 +713,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n") >= KCORE_K)
             .select("src")
         )
-        nxt = (
+        nxt = bsp.persist(
             edges.join(surv, "src", "left_semi")
             .join(surv.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")
-            .persist()
         )
         nxt.count()
         edges.unpersist()
@@ -742,7 +724,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("core_deg")
     )
-    return checkpoint_result(out, edges)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------ link prediction (Adamic-Adar)
@@ -818,13 +800,12 @@ def graph_link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
     a = prefs.select("user_id", F.col("news_id").alias("x"))
     b = prefs.select(F.col("user_id").alias("u2"), F.col("news_id").alias("y"))
-    e = (
+    e = bsp.persist(
         a.join(b, (F.col("user_id") == F.col("u2")) & (F.col("x") < F.col("y")))
         .groupBy("x", "y")
         .agg(F.count("*").alias("cooc"))
         .filter(F.col("cooc") >= TRI_MIN_COOC)
         .select("x", "y")
-        .persist()
     )
     e.count()
     adj = e.select(F.col("x").alias("v"), F.col("y").alias("w")).unionAll(
@@ -847,8 +828,7 @@ def graph_link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("aa_score").desc(), "x", "y")
         .limit(AA_TOP_N)
     )
-    # release rides checkpoint_result's finally (leak-on-failure safe)
-    return checkpoint_result(out, e)
+    return bsp.checkpoint_result(out)
 
 
 # --------------------------------------- label-propagation communities
@@ -925,7 +905,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import clicks
 
     pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -941,10 +921,8 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
     if edges.limit(1).count() == 0:
-        edges.unpersist()
         return spark.createDataFrame([], "node long, label long")
 
     labels = edges.select(F.col("src").alias("node")).distinct().select(
@@ -968,12 +946,11 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (-F.col("m.neg")).alias("label"),
             )
         )
-    return checkpoint_result(
+    return bsp.checkpoint_result(
         labels.select(
             F.col("node").cast("long").alias("node"),
             F.col("label").cast("long").alias("label"),
-        ),
-        edges,
+        )
     )
 
 
@@ -1055,7 +1032,7 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entry that LPA's exit would unpersist out from under us.
     labels = graph_lpa_communities(spark, sf_dir)  # checkpointed, small
     pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = (
+    edges = bsp.persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -1071,10 +1048,8 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist()
     )
     if edges.limit(1).count() == 0:
-        edges.unpersist()
         return spark.createDataFrame(
             [],
             "label long, n_nodes long, deg_sum long, intra_edges long,"
@@ -1118,7 +1093,7 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("q_contribution"),
         )
     )
-    return checkpoint_result(out, edges)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------ degree distribution

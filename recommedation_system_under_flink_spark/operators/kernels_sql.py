@@ -26,6 +26,7 @@ from ..functions.kernels import (
     positive_correlation_sql,
     rank_weighted_distance_sql,
 )
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import CLICKS_CTE, NEWS_CTE, clicks, events_raw, load_raw, with_ctes
@@ -1360,12 +1361,11 @@ def s24_malformed_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines.write.mode("overwrite").text(out)
 
     schema = "doc_id long, n_chars long, lang string, _corrupt_record string"
-    permissive = (
+    permissive = bsp.persist(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
-        .cache()
     )
     perm_stats = permissive.agg(
         F.count("*").cast("long").alias("n_total"),
@@ -1393,16 +1393,20 @@ def s24_malformed_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(out)
         .agg(F.count("n_chars").cast("long").alias("n_after_drop"))
     )
-    return perm_stats.crossJoin(F.broadcast(dropped)).select(
-        "n_total",
-        "n_good",
-        "n_corrupt",
-        "n_after_drop",
-        "sum_good_chars",
-        ppm_value(
-            F.col("n_corrupt").cast("double")
-            / F.nullif(F.col("n_total"), F.lit(0))
-        ).alias("corrupt_rate"),
+    # the PERMISSIVE aggregates need the cache at action time, so the
+    # 1-row audit materializes before the scope releases it
+    return bsp.checkpoint_result(
+        perm_stats.crossJoin(F.broadcast(dropped)).select(
+            "n_total",
+            "n_good",
+            "n_corrupt",
+            "n_after_drop",
+            "sum_good_chars",
+            ppm_value(
+                F.col("n_corrupt").cast("double")
+                / F.nullif(F.col("n_total"), F.lit(0))
+            ).alias("corrupt_rate"),
+        )
     )
 
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -173,65 +174,62 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     model, K sequential passes (cacheable if iterated further). This
     is the same driver-bounded-state contract as sim_kmeans_lloyd."""
     feats = _feats(spark, sf_dir)
-    feats.persist()
-    try:
-        w = [0.0, 0.0, 0.0, 0.0]
-        for _ in range(GD_ITERS):
-            z = (
-                F.lit(w[0])
-                + F.lit(w[1]) * F.col("x1")
-                + F.lit(w[2]) * F.col("x2")
-                + F.lit(w[3]) * F.col("x3")
-            )
-            resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-            g = feats.agg(
-                F.avg(resid).alias("gb"),
-                F.avg(resid * F.col("x1")).alias("g1"),
-                F.avg(resid * F.col("x2")).alias("g2"),
-                F.avg(resid * F.col("x3")).alias("g3"),
-            ).collect()[0]
-            if g["gb"] is None:  # empty input: no gradient, w stays 0
-                break
-            w = [
-                w[0] - GD_LR * g["gb"],
-                w[1] - GD_LR * g["g1"],
-                w[2] - GD_LR * g["g2"],
-                w[3] - GD_LR * g["g3"],
-            ]
+    bsp.persist(feats)
+    w = [0.0, 0.0, 0.0, 0.0]
+    for _ in range(GD_ITERS):
         z = (
             F.lit(w[0])
             + F.lit(w[1]) * F.col("x1")
             + F.lit(w[2]) * F.col("x2")
             + F.lit(w[3]) * F.col("x3")
         )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        return feats.agg(
-            F.round(F.lit(w[0]), 6).alias("w_bias"),
-            F.round(F.lit(w[1]), 6).alias("w_x1"),
-            F.round(F.lit(w[2]), 6).alias("w_x2"),
-            F.round(F.lit(w[3]), 6).alias("w_x3"),
-            F.round(
-                F.avg(
-                    -(
-                        F.col("y") * F.log(p)
-                        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-                    )
-                ),
-                6,
-            ).alias("logloss"),
-            F.round(
-                F.avg(
-                    F.when(
-                        (p >= 0.5) == (F.col("y") == 1.0), 1.0
-                    ).otherwise(0.0)
-                ),
-                6,
-            ).alias("accuracy"),
-        )
-    finally:
-        # Safe to release before the caller collects: the returned plan
-        # holds only literal weights, so it recomputes feats in one pass.
-        feats.unpersist()
+        resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
+        g = feats.agg(
+            F.avg(resid).alias("gb"),
+            F.avg(resid * F.col("x1")).alias("g1"),
+            F.avg(resid * F.col("x2")).alias("g2"),
+            F.avg(resid * F.col("x3")).alias("g3"),
+        ).collect()[0]
+        if g["gb"] is None:  # empty input: no gradient, w stays 0
+            break
+        w = [
+            w[0] - GD_LR * g["gb"],
+            w[1] - GD_LR * g["g1"],
+            w[2] - GD_LR * g["g2"],
+            w[3] - GD_LR * g["g3"],
+        ]
+    z = (
+        F.lit(w[0])
+        + F.lit(w[1]) * F.col("x1")
+        + F.lit(w[2]) * F.col("x2")
+        + F.lit(w[3]) * F.col("x3")
+    )
+    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    # The scope releases feats before the caller collects: the returned
+    # plan holds only literal weights, so it recomputes feats in one pass.
+    return feats.agg(
+        F.round(F.lit(w[0]), 6).alias("w_bias"),
+        F.round(F.lit(w[1]), 6).alias("w_x1"),
+        F.round(F.lit(w[2]), 6).alias("w_x2"),
+        F.round(F.lit(w[3]), 6).alias("w_x3"),
+        F.round(
+            F.avg(
+                -(
+                    F.col("y") * F.log(p)
+                    + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
+                )
+            ),
+            6,
+        ).alias("logloss"),
+        F.round(
+            F.avg(
+                F.when(
+                    (p >= 0.5) == (F.col("y") == 1.0), 1.0
+                ).otherwise(0.0)
+            ),
+            6,
+        ).alias("accuracy"),
+    )
 
 
 # Interpolate the constant so the docstring tracks GD_ITERS (r7 advice:
@@ -742,78 +740,75 @@ def ml_lr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     input (seeds, regularization, feature subsets via masked columns).
     Scoring is one final pass with the 3-row weight table broadcast."""
     feats = _feats(spark, sf_dir)
-    feats.persist()
-    try:
-        ws = {lr: [0.0, 0.0, 0.0, 0.0] for lr in SWEEP_LRS}
-        for _ in range(GD_ITERS):
-            aggs = []
-            for ci, lr in enumerate(SWEEP_LRS):
-                w = ws[lr]
-                z = (
-                    F.lit(w[0])
-                    + F.lit(w[1]) * F.col("x1")
-                    + F.lit(w[2]) * F.col("x2")
-                    + F.lit(w[3]) * F.col("x3")
-                )
-                resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-                aggs += [
-                    F.avg(resid).alias(f"gb_{ci}"),
-                    F.avg(resid * F.col("x1")).alias(f"g1_{ci}"),
-                    F.avg(resid * F.col("x2")).alias(f"g2_{ci}"),
-                    F.avg(resid * F.col("x3")).alias(f"g3_{ci}"),
-                ]
-            g = feats.agg(*aggs).collect()[0]
-            if g["gb_0"] is None:  # empty input: no gradients, w stays 0
-                break
-            for ci, lr in enumerate(SWEEP_LRS):
-                w = ws[lr]
-                ws[lr] = [
-                    w[0] - lr * g[f"gb_{ci}"],
-                    w[1] - lr * g[f"g1_{ci}"],
-                    w[2] - lr * g[f"g2_{ci}"],
-                    w[3] - lr * g[f"g3_{ci}"],
-                ]
-        sweep = spark.createDataFrame(
-            [(float(lr), *ws[lr]) for lr in SWEEP_LRS],
-            "lr double, wb double, w1 double, w2 double, w3 double",
-        )
-        z = (
-            F.col("wb")
-            + F.col("w1") * F.col("x1")
-            + F.col("w2") * F.col("x2")
-            + F.col("w3") * F.col("x3")
-        )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        return (
-            feats.crossJoin(F.broadcast(sweep))
-            .groupBy("lr")
-            .agg(
-                F.round(F.first("wb"), 6).alias("w_bias"),
-                F.round(F.first("w1"), 6).alias("w_x1"),
-                F.round(F.first("w2"), 6).alias("w_x2"),
-                F.round(F.first("w3"), 6).alias("w_x3"),
-                F.round(
-                    F.avg(
-                        -(
-                            F.col("y") * F.log(p)
-                            + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-                        )
-                    ),
-                    6,
-                ).alias("logloss"),
-                F.round(
-                    F.avg(
-                        F.when((p >= 0.5) == (F.col("y") == 1.0), 1.0).otherwise(
-                            0.0
-                        )
-                    ),
-                    6,
-                ).alias("accuracy"),
+    bsp.persist(feats)
+    ws = {lr: [0.0, 0.0, 0.0, 0.0] for lr in SWEEP_LRS}
+    for _ in range(GD_ITERS):
+        aggs = []
+        for ci, lr in enumerate(SWEEP_LRS):
+            w = ws[lr]
+            z = (
+                F.lit(w[0])
+                + F.lit(w[1]) * F.col("x1")
+                + F.lit(w[2]) * F.col("x2")
+                + F.lit(w[3]) * F.col("x3")
             )
-            .orderBy("lr")
+            resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
+            aggs += [
+                F.avg(resid).alias(f"gb_{ci}"),
+                F.avg(resid * F.col("x1")).alias(f"g1_{ci}"),
+                F.avg(resid * F.col("x2")).alias(f"g2_{ci}"),
+                F.avg(resid * F.col("x3")).alias(f"g3_{ci}"),
+            ]
+        g = feats.agg(*aggs).collect()[0]
+        if g["gb_0"] is None:  # empty input: no gradients, w stays 0
+            break
+        for ci, lr in enumerate(SWEEP_LRS):
+            w = ws[lr]
+            ws[lr] = [
+                w[0] - lr * g[f"gb_{ci}"],
+                w[1] - lr * g[f"g1_{ci}"],
+                w[2] - lr * g[f"g2_{ci}"],
+                w[3] - lr * g[f"g3_{ci}"],
+            ]
+    sweep = spark.createDataFrame(
+        [(float(lr), *ws[lr]) for lr in SWEEP_LRS],
+        "lr double, wb double, w1 double, w2 double, w3 double",
+    )
+    z = (
+        F.col("wb")
+        + F.col("w1") * F.col("x1")
+        + F.col("w2") * F.col("x2")
+        + F.col("w3") * F.col("x3")
+    )
+    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    return (
+        feats.crossJoin(F.broadcast(sweep))
+        .groupBy("lr")
+        .agg(
+            F.round(F.first("wb"), 6).alias("w_bias"),
+            F.round(F.first("w1"), 6).alias("w_x1"),
+            F.round(F.first("w2"), 6).alias("w_x2"),
+            F.round(F.first("w3"), 6).alias("w_x3"),
+            F.round(
+                F.avg(
+                    -(
+                        F.col("y") * F.log(p)
+                        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
+                    )
+                ),
+                6,
+            ).alias("logloss"),
+            F.round(
+                F.avg(
+                    F.when((p >= 0.5) == (F.col("y") == 1.0), 1.0).otherwise(
+                        0.0
+                    )
+                ),
+                6,
+            ).alias("accuracy"),
         )
-    finally:
-        feats.unpersist()
+        .orderBy("lr")
+    )
 
 
 # ------------------------------------------- isotonic calibration
@@ -1152,13 +1147,14 @@ def ml_als_two_sweeps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the objective rows); persist them so the executed job reuses one
     # materialization instead of re-deriving the whole chain per leg
     # (Catalyst has no cross-subtree CSE — see scripts/audit_plans.py).
-    r.persist()
-    u1 = solve(r, fac0, "user_id", "news_id", "f0", "f1").persist()
-    fac1 = solve(r, u1, "news_id", "user_id", "u0", "u1").select(
-        "news_id", F.col("u0").alias("f0"), F.col("u1").alias("f1")
-    ).persist()
-    u2 = solve(r, fac1, "user_id", "news_id", "f0", "f1").persist()
-    _cached = (r, u1, fac1, u2)
+    bsp.persist(r)
+    u1 = bsp.persist(solve(r, fac0, "user_id", "news_id", "f0", "f1"))
+    fac1 = bsp.persist(
+        solve(r, u1, "news_id", "user_id", "u0", "u1").select(
+            "news_id", F.col("u0").alias("f0"), F.col("u1").alias("f1")
+        )
+    )
+    u2 = bsp.persist(solve(r, fac1, "user_id", "news_id", "f0", "f1"))
 
     def norm(df: DataFrame, a: str, b: str) -> DataFrame:
         return df.agg(F.sum(F.col(a) * F.col(a) + F.col(b) * F.col(b)).alias("nrm"))
@@ -1192,13 +1188,11 @@ def ml_als_two_sweeps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(obj(3, u2, fac1, norm(u2, "u0", "u1"), norm(fac1, "f0", "f1")))
         .orderBy("step")
     )
-    # Truncate the 2-sweep lineage and release the persisted factor
-    # tables through the shared BSP helper (same lifecycle as
+    # Truncate the 2-sweep lineage before the scope releases the
+    # persisted factor tables (same lifecycle as
     # keywords.vote_fixed_rounds) instead of a driver-side collect —
     # keeps the returned plan a distributed scan the plan audit can see.
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, *_cached)
+    return bsp.checkpoint_result(out)
 
 
 # ----------------------------------------- WOE / information value
@@ -1845,52 +1839,49 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     must fall (pinned in pytest — shrinkage < 1 guarantees strict
     improvement whenever the split has positive gain)."""
     feats = _feats(spark, sf_dir).select("x1", "x2", "y")
-    feats.persist()
-    try:
-        s1 = _sse_split_frame(feats, "x1", "y")
-        r1 = feats.crossJoin(F.broadcast(s1)).select(
-            "x1",
-            "x2",
-            (
-                F.col("y")
-                - BOOST_NU
-                * F.when(F.col("x1") <= F.col("threshold"), F.col("vl"))
-                .otherwise(F.col("vr"))
-            ).alias("res"),
-        )
-        r1.persist()
-        s2 = _sse_split_frame(r1, "x2", "res")
-        r2 = r1.crossJoin(F.broadcast(s2)).select(
-            (
-                F.col("res")
-                - BOOST_NU
-                * F.when(F.col("x2") <= F.col("threshold"), F.col("vl"))
-                .otherwise(F.col("vr"))
-            ).alias("res2")
-        )
-        row1 = s1.crossJoin(
-            F.broadcast(r1.agg(F.avg(F.col("res") * F.col("res")).alias("mse")))
-        ).select(
-            F.lit(1).alias("stage"),
-            F.lit("x1").alias("feature"),
-            F.round("threshold", 6).alias("threshold"),
-            F.round(F.col("vl") * BOOST_NU, 6).alias("left_step"),
-            F.round(F.col("vr") * BOOST_NU, 6).alias("right_step"),
-            F.round("mse", 6).alias("train_mse"),
-        )
-        row2 = s2.crossJoin(
-            F.broadcast(r2.agg(F.avg(F.col("res2") * F.col("res2")).alias("mse")))
-        ).select(
-            F.lit(2).alias("stage"),
-            F.lit("x2").alias("feature"),
-            F.round("threshold", 6).alias("threshold"),
-            F.round(F.col("vl") * BOOST_NU, 6).alias("left_step"),
-            F.round(F.col("vr") * BOOST_NU, 6).alias("right_step"),
-            F.round("mse", 6).alias("train_mse"),
-        )
-        return row1.unionByName(row2).orderBy("stage")
-    finally:
-        feats.unpersist()
+    bsp.persist(feats)
+    s1 = _sse_split_frame(feats, "x1", "y")
+    r1 = feats.crossJoin(F.broadcast(s1)).select(
+        "x1",
+        "x2",
+        (
+            F.col("y")
+            - BOOST_NU
+            * F.when(F.col("x1") <= F.col("threshold"), F.col("vl"))
+            .otherwise(F.col("vr"))
+        ).alias("res"),
+    )
+    bsp.persist(r1)
+    s2 = _sse_split_frame(r1, "x2", "res")
+    r2 = r1.crossJoin(F.broadcast(s2)).select(
+        (
+            F.col("res")
+            - BOOST_NU
+            * F.when(F.col("x2") <= F.col("threshold"), F.col("vl"))
+            .otherwise(F.col("vr"))
+        ).alias("res2")
+    )
+    row1 = s1.crossJoin(
+        F.broadcast(r1.agg(F.avg(F.col("res") * F.col("res")).alias("mse")))
+    ).select(
+        F.lit(1).alias("stage"),
+        F.lit("x1").alias("feature"),
+        F.round("threshold", 6).alias("threshold"),
+        F.round(F.col("vl") * BOOST_NU, 6).alias("left_step"),
+        F.round(F.col("vr") * BOOST_NU, 6).alias("right_step"),
+        F.round("mse", 6).alias("train_mse"),
+    )
+    row2 = s2.crossJoin(
+        F.broadcast(r2.agg(F.avg(F.col("res2") * F.col("res2")).alias("mse")))
+    ).select(
+        F.lit(2).alias("stage"),
+        F.lit("x2").alias("feature"),
+        F.round("threshold", 6).alias("threshold"),
+        F.round(F.col("vl") * BOOST_NU, 6).alias("left_step"),
+        F.round(F.col("vr") * BOOST_NU, 6).alias("right_step"),
+        F.round("mse", 6).alias("train_mse"),
+    )
+    return bsp.checkpoint_result(row1.unionByName(row2).orderBy("stage"))
 
 
 # Docstring tracks the shrinkage constant (r7 advice).
@@ -1960,15 +1951,14 @@ def ml_gbdt_k_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     GBDT training recurrence at scale: K rounds = K (scan + split +
     residual-update) passes, driver state bounded by one 3-double
     stump per round, residuals living as a column (persisted per
-    round, released through checkpoint_result once the K-row
-    certificate materializes — the ml_als_two_sweeps lifecycle). The
+    round, released by the query scope once checkpoint_result has
+    materialized the K-row certificate — the ml_als_two_sweeps lifecycle). The
     first two output rows are definitionally ml_boosted_stumps's two
     rows (pinned in pytest), and train_mse must be non-increasing
     round over round."""
     feats = _feats(spark, sf_dir).select("x1", "x2", "y")
     cur = feats.select("x1", "x2", F.col("y").alias("res"))
-    cur.persist()
-    cached = [cur]
+    bsp.persist(cur)
     stage_rows = []
     for k in range(1, GBDT_ROUNDS + 1):
         xcol = GBDT_FEATURES[(k - 1) % len(GBDT_FEATURES)]
@@ -1983,8 +1973,7 @@ def ml_gbdt_k_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.col("vr"))
             ).alias("res"),
         )
-        nxt.persist()
-        cached.append(nxt)
+        bsp.persist(nxt)
         stage_rows.append(
             s.crossJoin(
                 F.broadcast(
@@ -2003,9 +1992,7 @@ def ml_gbdt_k_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stage_rows[0]
     for r in stage_rows[1:]:
         out = out.unionByName(r)
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out.orderBy("stage"), *cached)
+    return bsp.checkpoint_result(out.orderBy("stage"))
 
 
 ml_gbdt_k_rounds.__doc__ = (
@@ -2109,88 +2096,85 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _feats(spark, sf_dir).withColumn(
         "bucket", split_hash("doc_id") % 10
     )
-    feats.persist()
-    try:
-        ws = {f: [0.0, 0.0, 0.0, 0.0] for f in CURVE_FRACTIONS}
-        for _ in range(GD_ITERS):
-            aggs = []
-            for ci, frac in enumerate(CURVE_FRACTIONS):
-                nbuck = int(round(frac * 10))
-                w = ws[frac]
-                z = (
-                    F.lit(w[0])
-                    + F.lit(w[1]) * F.col("x1")
-                    + F.lit(w[2]) * F.col("x2")
-                    + F.lit(w[3]) * F.col("x3")
-                )
-                resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-                mask = F.when(F.col("bucket") < nbuck, resid)
-                aggs += [
-                    F.avg(mask).alias(f"gb_{ci}"),
-                    F.avg(mask * F.col("x1")).alias(f"g1_{ci}"),
-                    F.avg(mask * F.col("x2")).alias(f"g2_{ci}"),
-                    F.avg(mask * F.col("x3")).alias(f"g3_{ci}"),
-                ]
-            g = feats.agg(*aggs).collect()[0]
-            if all(
-                g[f"gb_{ci}"] is None for ci in range(len(CURVE_FRACTIONS))
-            ):
-                break
-            for ci, frac in enumerate(CURVE_FRACTIONS):
-                # an empty subset (e.g. bucket<1 matched no rows) yields
-                # NULL gradients — poison that config's weights with NaN,
-                # truly mirroring the oracle's NULL propagation (its NULL
-                # AVG makes every later weight and the fitted loglosses
-                # NULL; NaN canonicalizes to the same NULL in the gate)
-                if g[f"gb_{ci}"] is None:
-                    ws[frac] = [float("nan")] * 4
-                    continue
-                w = ws[frac]
-                ws[frac] = [
-                    w[0] - GD_LR * g[f"gb_{ci}"],
-                    w[1] - GD_LR * g[f"g1_{ci}"],
-                    w[2] - GD_LR * g[f"g2_{ci}"],
-                    w[3] - GD_LR * g[f"g3_{ci}"],
-                ]
-        curve = spark.createDataFrame(
-            [
-                (float(f), int(round(f * 10)), *ws[f])
-                for f in CURVE_FRACTIONS
-            ],
-            "fraction double, n_buckets int, wb double, w1 double, "
-            "w2 double, w3 double",
-        )
-        z = (
-            F.col("wb")
-            + F.col("w1") * F.col("x1")
-            + F.col("w2") * F.col("x2")
-            + F.col("w3") * F.col("x3")
-        )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        ll = -(
-            F.col("y") * F.log(p)
-            + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-        )
-        return (
-            feats.crossJoin(F.broadcast(curve))
-            .groupBy("fraction", "n_buckets")
-            .agg(
-                F.sum(
-                    F.when(F.col("bucket") < F.col("n_buckets"), 1).otherwise(0)
-                ).alias("n_train"),
-                F.round(
-                    F.avg(
-                        F.when(F.col("bucket") < F.col("n_buckets"), ll)
-                    ),
-                    6,
-                ).alias("train_logloss"),
-                F.round(F.avg(ll), 6).alias("full_logloss"),
+    bsp.persist(feats)
+    ws = {f: [0.0, 0.0, 0.0, 0.0] for f in CURVE_FRACTIONS}
+    for _ in range(GD_ITERS):
+        aggs = []
+        for ci, frac in enumerate(CURVE_FRACTIONS):
+            nbuck = int(round(frac * 10))
+            w = ws[frac]
+            z = (
+                F.lit(w[0])
+                + F.lit(w[1]) * F.col("x1")
+                + F.lit(w[2]) * F.col("x2")
+                + F.lit(w[3]) * F.col("x3")
             )
-            .select("fraction", "n_train", "train_logloss", "full_logloss")
-            .orderBy("fraction")
+            resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
+            mask = F.when(F.col("bucket") < nbuck, resid)
+            aggs += [
+                F.avg(mask).alias(f"gb_{ci}"),
+                F.avg(mask * F.col("x1")).alias(f"g1_{ci}"),
+                F.avg(mask * F.col("x2")).alias(f"g2_{ci}"),
+                F.avg(mask * F.col("x3")).alias(f"g3_{ci}"),
+            ]
+        g = feats.agg(*aggs).collect()[0]
+        if all(
+            g[f"gb_{ci}"] is None for ci in range(len(CURVE_FRACTIONS))
+        ):
+            break
+        for ci, frac in enumerate(CURVE_FRACTIONS):
+            # an empty subset (e.g. bucket<1 matched no rows) yields
+            # NULL gradients — poison that config's weights with NaN,
+            # truly mirroring the oracle's NULL propagation (its NULL
+            # AVG makes every later weight and the fitted loglosses
+            # NULL; NaN canonicalizes to the same NULL in the gate)
+            if g[f"gb_{ci}"] is None:
+                ws[frac] = [float("nan")] * 4
+                continue
+            w = ws[frac]
+            ws[frac] = [
+                w[0] - GD_LR * g[f"gb_{ci}"],
+                w[1] - GD_LR * g[f"g1_{ci}"],
+                w[2] - GD_LR * g[f"g2_{ci}"],
+                w[3] - GD_LR * g[f"g3_{ci}"],
+            ]
+    curve = spark.createDataFrame(
+        [
+            (float(f), int(round(f * 10)), *ws[f])
+            for f in CURVE_FRACTIONS
+        ],
+        "fraction double, n_buckets int, wb double, w1 double, "
+        "w2 double, w3 double",
+    )
+    z = (
+        F.col("wb")
+        + F.col("w1") * F.col("x1")
+        + F.col("w2") * F.col("x2")
+        + F.col("w3") * F.col("x3")
+    )
+    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    ll = -(
+        F.col("y") * F.log(p)
+        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
+    )
+    return (
+        feats.crossJoin(F.broadcast(curve))
+        .groupBy("fraction", "n_buckets")
+        .agg(
+            F.sum(
+                F.when(F.col("bucket") < F.col("n_buckets"), 1).otherwise(0)
+            ).alias("n_train"),
+            F.round(
+                F.avg(
+                    F.when(F.col("bucket") < F.col("n_buckets"), ll)
+                ),
+                6,
+            ).alias("train_logloss"),
+            F.round(F.avg(ll), 6).alias("full_logloss"),
         )
-    finally:
-        feats.unpersist()
+        .select("fraction", "n_train", "train_logloss", "full_logloss")
+        .orderBy("fraction")
+    )
 
 
 # ------------------------------------------------ average precision

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -935,7 +936,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only banded candidates."""
     m = media(spark, sf_dir).filter(F.col("modality") == "image")
     sig = phash_signatures(m)
-    sig.persist()
+    bsp.persist(sig)
     band_structs = F.array(
         *[
             F.struct(
@@ -978,9 +979,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
         .orderBy("media_a", "media_b")
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, sig)
+    return bsp.checkpoint_result(out)
 
 
 mm_phash_dedup.__doc__ = mm_phash_dedup.__doc__.replace(

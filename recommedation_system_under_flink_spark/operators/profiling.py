@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from .quantize import ppm_sum, ppm_value
 from ..sources import load_raw
@@ -357,14 +358,14 @@ def prof_l_diversity_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") / 10.0).cast("long").alias("value_bucket"),
         "event_type",
     )
-    # deliberately left persisted: cells feeds three branches of the
-    # returned lazy plan (grp, gdist, the TVD join) — unpersisting
-    # before the caller's action would defeat the cache; |cells| is
-    # bounded by the QI×sensitive arity and LRU-evicts (same
-    # convention as graph_pagerank_clicks)
-    cells = rel.groupBy("date", "value_bucket", "event_type").agg(
-        F.count("*").cast("long").alias("n")
-    ).persist()
+    # cells feeds three branches of the plan (grp, gdist, the TVD
+    # join): persist it and checkpoint the 1-row result before the
+    # scope releases it
+    cells = bsp.persist(
+        rel.groupBy("date", "value_bucket", "event_type").agg(
+            F.count("*").cast("long").alias("n")
+        )
+    )
     grp = cells.groupBy("date", "value_bucket").agg(
         F.sum("n").cast("long").alias("n_rows"),
         F.count("*").cast("long").alias("l"),
@@ -424,7 +425,7 @@ def prof_l_diversity_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(above).cast("double") / F.sum("n_rows"), 6
         ).alias("share_rows_above_t"),
     )
-    return out
+    return bsp.checkpoint_result(out)
 
 
 @register(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SCENE
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import CLICKS_CTE, clicks, with_ctes
@@ -357,11 +358,12 @@ def t5_policy_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. Exact integer counts; one quantized ratio."""
     from ..sources import clicks as clicks_table
 
-    daily = (
+    # daily feeds the policy and replay branches of one plan: persist
+    # it and checkpoint the result before the scope releases it
+    daily = bsp.persist(
         clicks_table(spark, sf_dir)
         .groupBy("date", "news_id")
         .agg(F.sum("cnt").cast("long").alias("clicks"))
-        .persist()  # feeds policy + replay branches of one lazy plan
     )
     w = Window.partitionBy("date").orderBy(
         F.desc("clicks"), F.asc("news_id")
@@ -378,7 +380,7 @@ def t5_policy_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("news_id") == F.col("policy_item"), F.col("clicks"))
         .otherwise(0)
     )
-    return (
+    return bsp.checkpoint_result(
         daily.join(policy, daily["date"] == policy["serve_date"])
         .groupBy("date", "policy_item")
         .agg(

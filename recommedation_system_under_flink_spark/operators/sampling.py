@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -838,9 +839,11 @@ def samp_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import ts_quality_score
 
     n_cuts = CURRICULUM_BUCKETS - 1
-    q = ts_quality_score(spark, sf_dir).select(
-        "doc_id", ppm_value(F.col("quality")).alias("q6")
-    ).persist()
+    q = bsp.persist(
+        ts_quality_score(spark, sf_dir).select(
+            "doc_id", ppm_value(F.col("quality")).alias("q6")
+        )
+    )
     head = q.agg(F.count("*").alias("n")).first()
     n = int(head["n"]) if head else 0
     if n == 0:
@@ -860,8 +863,10 @@ def samp_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile = F.lit(1)
     for k in range(1, n_cuts + 1):
         decile = decile + (F.col("q6") <= F.lit(cut_row[f"c{k}"])).cast("int")
-    return q.select(
-        "doc_id", F.col("q6").alias("quality"), decile.cast("int").alias("decile")
+    return bsp.checkpoint_result(
+        q.select(
+            "doc_id", F.col("q6").alias("quality"), decile.cast("int").alias("decile")
+        )
     )
 
 

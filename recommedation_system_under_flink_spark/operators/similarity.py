@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bsp
 from ..registry import register
 from ..sources import load_raw
 
@@ -411,9 +412,9 @@ def _vec_blocks(emb: DataFrame) -> DataFrame:
     """(bid, rows) id-block layout of the embedding corpus — the unit
     the blocked scorers ship to tasks. Callers that score SEVERAL
     candidate relations (or whose scorer references both sides of a
-    block join) should ``.persist()`` this and release it after the
-    result materializes: the scorer references it twice (u-side and
-    v-side) and Catalyst has no cross-subtree CSE."""
+    block join) should ``bsp.persist`` this and checkpoint the result:
+    the scorer references it twice (u-side and v-side) and Catalyst has
+    no cross-subtree CSE."""
     return (
         emb.select("vec_id", _as_double("embedding").alias("e"))
         .withColumn("bid", F.expr(f"vec_id DIV {NEARDUP_BLOCK}"))
@@ -527,10 +528,6 @@ IVF_ITERS = 2
 #: (deterministic, id-keyed) and never sees the full corpus.
 IVF_FIT_TARGET = IVF_K * 400
 
-#: Fitted centroids per dataset dir (deterministic → safe to reuse).
-_IVF_CACHE: dict[str, list[list[float]]] = {}
-
-
 def _probe_udf(cents: list[list[float]], nprobe: int):
     """Arrow-batched probe: the ``nprobe`` nearest centroid ids by
     cosine, as an int array. The K×D centroid matrix ships in the UDF
@@ -612,12 +609,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
         "nrm", _norm(F.col("emb"))
     )
-    # The fit is deterministic per dataset (id-keyed seed, fixed
-    # iteration count) — cache it like any trained model artifact so
-    # repeated queries don't re-run the Lloyd jobs.
-    cents = _IVF_CACHE.get(sf_dir)
-    if cents is None:
-        cents = _IVF_CACHE[sf_dir] = _ivf_centroids(base)
+    cents = _ivf_centroids(base)
     if not cents:  # empty corpus → nothing to index or search
         return spark.createDataFrame(
             [], "query_id long, corpus_id long, cosine double, rank int"
@@ -898,21 +890,22 @@ def hash_min_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
                 out_d.append(n)
         yield pd.DataFrame({"src": out_s, "dst": out_d})
 
-    edges = raw_edges.mapInPandas(
-        _contract,
-        T.StructType(
-            [
-                T.StructField("src", key_t, False),
-                T.StructField("dst", key_t, False),
-            ]
-        ),
-    ).persist()
-    labels = (
+    edges = bsp.persist(
+        raw_edges.mapInPandas(
+            _contract,
+            T.StructType(
+                [
+                    T.StructField("src", key_t, False),
+                    T.StructField("dst", key_t, False),
+                ]
+            ),
+        )
+    )
+    labels = bsp.persist(
         edges.groupBy(F.col("src").alias("node"))
         # Seed with min(self, neighbors) — a free first propagation
         # round folded into the vertex-set build.
         .agg(F.least(F.first("src"), F.min("dst")).alias("comp"))
-        .persist()
     )
     # Materialize seed (and, transitively, edges) BEFORE the loop: the
     # round-0 plan references both twice, and evaluating them uncached
@@ -969,7 +962,6 @@ def hash_min_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    edges.unpersist()  # labels are fully cached by the per-round action
     return labels
 
 
@@ -2329,7 +2321,7 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     output (pytest-pinned); not registered, the fast form is."""
     from pyspark.sql import Window
 
-    pool = _mmr_pool(spark, sf_dir).persist()
+    pool = bsp.persist(_mmr_pool(spark, sf_dir))
     a = pool.select("query_id", F.col("corpus_id").alias("id_a"), "emb", "nrm")
     b = pool.select(
         "query_id",
@@ -2337,7 +2329,7 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("b_emb"),
         F.col("nrm").alias("b_nrm"),
     )
-    sims = (
+    sims = bsp.persist(
         a.join(b, "query_id")
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
@@ -2350,7 +2342,6 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("sim"),
         )
-        .persist()
     )
     cand = pool.select("query_id", "corpus_id", "rel")
     rel_w = Window.partitionBy("query_id").orderBy(
@@ -2394,11 +2385,7 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "corpus_id", "rel", F.lit(k).alias("pick"))
         )
         selected = selected.unionByName(next_pick)
-    result = selected.persist()
-    result.count()
-    pool.unpersist()
-    sims.unpersist()
-    return result
+    return bsp.checkpoint_result(selected)
 
 
 # ------------------------------------------------- k-center coreset
@@ -2494,9 +2481,11 @@ def sim_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             1 - _dot(F.col("emb"), lit_vec) / (F.col("nrm") * F.lit(vnrm)), 6
         )
 
-    state = base.select(
-        "vec_id", "emb", "nrm", dist_to(list(seed[0]["emb"])).alias("dmin")
-    ).persist()
+    state = bsp.persist(
+        base.select(
+            "vec_id", "emb", "nrm", dist_to(list(seed[0]["emb"])).alias("dmin")
+        )
+    )
     state.count()
     chosen = [0]
     picks: list[tuple[int, int, float | None]] = [(1, 0, None)]
@@ -2513,18 +2502,19 @@ def sim_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((k, top[0]["vec_id"], float(top[0]["dmin"])))
         chosen.append(top[0]["vec_id"])
         if k < KCENTER_K:
-            new_state = state.select(
-                "vec_id",
-                "emb",
-                "nrm",
-                F.least(
-                    F.col("dmin"), dist_to(list(top[0]["emb"]))
-                ).alias("dmin"),
-            ).persist()
+            new_state = bsp.persist(
+                state.select(
+                    "vec_id",
+                    "emb",
+                    "nrm",
+                    F.least(
+                        F.col("dmin"), dist_to(list(top[0]["emb"]))
+                    ).alias("dmin"),
+                )
+            )
             new_state.count()
             state.unpersist()
             state = new_state
-    state.unpersist()
     return spark.createDataFrame(
         picks, "pick int, center_id long, radius double"
     )
@@ -2727,11 +2717,13 @@ def _dbscan_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     edges = pairs.select(
         F.col("va").alias("s"), F.col("vb").alias("d")
     ).unionAll(pairs.select(F.col("vb").alias("s"), F.col("va").alias("d")))
-    edges = edges.persist()
+    edges = bsp.persist(edges)
     deg = edges.groupBy("s").agg(F.count("*").alias("n"))
-    core = deg.filter(F.col("n") >= DBSCAN_MIN_NEIGHBORS).select(
-        F.col("s").alias("v")
-    ).persist()
+    core = bsp.persist(
+        deg.filter(F.col("n") >= DBSCAN_MIN_NEIGHBORS).select(
+            F.col("s").alias("v")
+        )
+    )
     core.count()
     core_edges = (
         edges.join(core.withColumnRenamed("v", "s"), "s", "left_semi")
@@ -2740,10 +2732,9 @@ def _dbscan_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
         .select("s", "d")
     )
     labels = hash_min_components(core_edges, "s", "d")
-    core_label = (
+    core_label = bsp.persist(
         core.join(labels, core["v"] == labels["node"], "left")
         .select("v", F.coalesce("comp", F.col("v")).alias("cluster"))
-        .persist()
     )
     core_label.count()
     nb = core_label.select(
@@ -2769,11 +2760,7 @@ def _dbscan_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
             F.coalesce("cluster", "bcluster").alias("cluster"),
         )
     )
-    from .bsp import checkpoint_result
-
-    # releases ride checkpoint_result's finally (leak-on-failure safe)
-    result = checkpoint_result(out, edges, core, core_label)
-    return result
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------- LSH-candidate DBSCAN
@@ -2836,10 +2823,9 @@ def sim_dbscan_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice and Catalyst has no cross-subtree CSE — un-persisted, the
     # 60-hyperplane signature projection (the map-side cost of the
     # whole query) evaluated twice.
-    bucketed = (
+    bucketed = bsp.persist(
         _bucketed(emb, DBSCAN_LSH_TABLES, DBSCAN_LSH_BITS)
         .select("vec_id", "table", "bucket")
-        .persist()
     )
     a = bucketed.alias("a")
     b = bucketed.alias("b")
@@ -2858,15 +2844,13 @@ def sim_dbscan_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured ~2s blocked vs ~9-25s folded at sf0.1 (same kernel
     # economics as sim_dbscan's _exact_pairs_blocked, which this
     # mirrors float-op for float-op)
-    blocks = _vec_blocks(emb).persist()
+    blocks = bsp.persist(_vec_blocks(emb))
     pairs = (
         _score_candidates_blocked(emb, cand, "va", "vb", blocks=blocks)
         .filter(F.col("cosine") >= DBSCAN_EPS_COS)
         .select(F.col("u").alias("va"), F.col("v").alias("vb"))
         .localCheckpoint(eager=True)
     )
-    bucketed.unpersist()
-    blocks.unpersist()
     return _dbscan_from_pairs(emb, pairs)
 
 
@@ -3713,7 +3697,7 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
         F.posexplode(_probe_udf(cents, max_n)(F.col("emb"))).alias("pos", "cid"),
     )
-    cands = (
+    cands = bsp.persist(
         corpus.join(F.broadcast(queries), "cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -3724,12 +3708,10 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))
             ).alias("cosine"),
         )
-        .persist()
     )
-    bf = (
+    bf = bsp.persist(
         sim_bruteforce_topk(spark, sf_dir)
         .select("query_id", "corpus_id")
-        .persist()
     )
     spine = bf.groupBy("query_id").agg(F.count("*").cast("long").alias("k_eff"))
 
@@ -3766,9 +3748,7 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = slices[0]
     for s in slices[1:]:
         out = out.unionByName(s)
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, cands, bf)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------- Lloyd k-means, verified
@@ -3890,7 +3870,7 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncut chain re-ran earlier rounds per reference (r12 scan audit:
     # 5 duplicate scans). Persist base; eagerly checkpoint each K×D
     # centroid table (tiny) to truncate the per-round lineage.
-    base = emb.select("vec_id", _as_double("embedding").alias("e")).persist()
+    base = bsp.persist(emb.select("vec_id", _as_double("embedding").alias("e")))
     c0 = base.filter(F.col("vec_id") < KM_K).select(
         F.col("vec_id").alias("cid"), F.col("e").alias("ce")
     )
@@ -3916,9 +3896,7 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max(sqnorm), 6).alias("centroid_sqnorm"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, base)
+    return bsp.checkpoint_result(out)
 
 
 # ----------------------------------------------- embedding drift audit
@@ -4283,8 +4261,8 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_raw(spark, sf_dir, "embeddings")
     # shared by all three scoring legs (init, refined, exact) — persist
-    # once, released via checkpoint_result below
-    blocks = _vec_blocks(emb).persist()
+    # once, released by the query scope after checkpoint_result below
+    blocks = bsp.persist(_vec_blocks(emb))
 
     def score(cand: DataFrame) -> DataFrame:
         """Exact cosine over a (u, v) id relation via the blocked numpy
@@ -4312,7 +4290,7 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERSISTED (r12): the candidate self-join references the bucketed
     # relation twice (no cross-subtree CSE) — un-persisted, the 32-
     # hyperplane signature projection evaluated twice.
-    bucketed = _bucketed(emb).select("vec_id", "table", "bucket").persist()
+    bucketed = bsp.persist(_bucketed(emb).select("vec_id", "table", "bucket"))
     # Score each unordered bucket pair ONCE (u < v halves the cosine
     # work of the dominant leg) and mirror: the scorer's per-pair sum is
     # element-ordered, so cos(u,v) and cos(v,u) are bit-identical.
@@ -4326,9 +4304,9 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: the mirror union references this subtree TWICE, and
     # Catalyst has no cross-subtree CSE — unpersisted, the dominant
     # cosine leg would execute once per branch (the ml_als_two_sweeps
-    # lesson; released via checkpoint_result below).
+    # lesson; released by the query scope after checkpoint_result).
     sc_lt = score(cand0_lt)
-    sc_lt.persist()
+    bsp.persist(sc_lt)
     g0 = rank_topk(
         sc_lt.unionByName(
             sc_lt.select(
@@ -4336,11 +4314,11 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    g0.persist()
+    bsp.persist(g0)
     undir = g0.unionByName(
         g0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
-    undir.persist()
+    bsp.persist(undir)
     cand1 = (
         undir.alias("x")
         .join(undir.alias("y"), F.col("x.v") == F.col("y.u"))
@@ -4350,7 +4328,7 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     g1 = topk(cand1)
-    g1.persist()
+    bsp.persist(g1)
 
     ids = emb.select("vec_id")
     exact = topk(
@@ -4381,9 +4359,7 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_refined"),
         )
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, bucketed, blocks, sc_lt, g0, undir, g1)
+    return bsp.checkpoint_result(out)
 
 
 sim_nndescent_round.__doc__ = (

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import bsp
 from ..registry import register
 from ..sources import clicks, events_raw, load_raw
 from ..sources.tables import CLICKS_CTE, NEWS_MOD, with_ctes
@@ -557,7 +558,7 @@ def sk_count_min_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the click stream feeds the exact counts plus CMS_D bucket
     # aggregates (no cross-subtree CSE - r12 scan audit: 5 duplicate
     # scans); persist once, released after the 1-row audit materializes
-    cl = clicks_table(spark, sf_dir).select("news_id").persist()
+    cl = bsp.persist(clicks_table(spark, sf_dir).select("news_id"))
 
     def bucket(row: int):
         return F.conv(
@@ -605,9 +606,7 @@ def sk_count_min_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_overestimate"
         ),
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, cl)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------------- Bloom filter

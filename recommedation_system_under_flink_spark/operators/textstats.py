@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
+from . import bsp
 from ..registry import register
 from ..sources import load_raw
 from .quantize import ppm_value
@@ -1193,21 +1194,12 @@ def _bpe_merge_fold(left: str, right: str) -> Column:
     )
 
 
-#: Per-session memo of learned merge tables, keyed by sf_dir — the
-#: induction loop is deterministic per dataset, so learn-then-encode
-#: sessions (and the bench) pay for the K rounds once.
-_BPE_CACHE: dict[str, list[tuple[int, str, str, str, int]]] = {}
-
-
 def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, int]]:
     """Run the ``BPE_MERGES``-round induction loop (see
     :func:`ts_bpe_learn_merges` for the algorithm and scale notes) and
     return the merge table as driver-side model state."""
-    cached = _BPE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
     docs = load_raw(spark, sf_dir, "documents")
-    words = (
+    words = bsp.persist(
         docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("wc"))
@@ -1217,7 +1209,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
             ).alias("symbols"),
             "wc",
         )
-        .persist()
     )
     words.count()
     # One action per round (r13): the round's argmax collect is the
@@ -1225,7 +1216,8 @@ def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
     # that persist itself — the extra per-round count() barrier bought
     # nothing (no concurrent-fill race with a single sequential
     # consumer, unlike the HITS/DBSCAN scalar barriers). Unpersists
-    # defer to the 4-round checkpoint boundary; at most 5 vocab-sized
+    # defer to the 4-round checkpoint boundary (the query scope releases
+    # the rest); at most 5 vocab-sized
     # tables live at once (BPE's whole premise is that this state is
     # vocab-, not corpus-, sized). The final round's fold has no
     # consumer and is never built.
@@ -1258,9 +1250,11 @@ def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
         merges.append((rank, left, right, left + right, n))
         if rank + 1 == BPE_MERGES:
             break  # last merge learned; its folded table has no reader
-        new_words = words.select(
-            _bpe_merge_fold(left, right).alias("symbols"), "wc"
-        ).persist()
+        new_words = bsp.persist(
+            words.select(
+                _bpe_merge_fold(left, right).alias("symbols"), "wc"
+            )
+        )
         cached.append(new_words)
         words = new_words
         if (rank + 1) % 4 == 0:  # bound lineage like the BSP loops
@@ -1269,9 +1263,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
                 c.unpersist()
             cached = []
             words = checkpointed
-    for c in cached:
-        c.unpersist()
-    _BPE_CACHE[sf_dir] = merges
     return merges
 
 
@@ -1814,9 +1805,11 @@ def ts_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four consumers (doc count, df model, both pair sides), no
     # cross-subtree CSE — persist the tokenize+distinct once, released
     # after the top-K result materializes (r12 scan audit: 5 dup scans)
-    dt = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
-    ).distinct().persist()
+    dt = bsp.persist(
+        docs.select(
+            "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
+        ).distinct()
+    )
     n = dt.agg(F.count_distinct("doc_id").alias("n_docs"))
     df = dt.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     a = dt.select("doc_id", F.col("term").alias("term_a"))
@@ -1860,9 +1853,7 @@ def ts_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= PMI_TOP_K)
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, dt)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------- vocabulary build
@@ -2103,17 +2094,17 @@ def ts_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist across the sweep and release on exit."""
     from pyspark.sql import Window
 
-    from .bsp import checkpoint_result
-
     docs = load_raw(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(_tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    ranked = counts.withColumn(
-        "rnk", F.row_number().over(Window.orderBy(F.desc("n"), F.asc("term")))
-    ).persist()
+    ranked = bsp.persist(
+        counts.withColumn(
+            "rnk", F.row_number().over(Window.orderBy(F.desc("n"), F.asc("term")))
+        )
+    )
     tot = ranked.agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("total_tokens"),
         F.count("*").cast("long").alias("n_terms"),
@@ -2144,7 +2135,7 @@ def ts_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = slices[0]
     for sl in slices[1:]:
         out = out.unionByName(sl)
-    return checkpoint_result(out, ranked)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------------------- RAKE keywords
@@ -2788,15 +2779,16 @@ def ts_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left join; src_tot feeds the grid and the final join (no
     # cross-subtree CSE) — persist both, released after the |sources|-
     # row report materializes (r12 scan audit: 5 duplicate scans)
-    per = (
+    per = bsp.persist(
         docs.select("source", F.explode(toks).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .persist()
     )
-    src_tot = per.groupBy("source").agg(
-        F.sum("c").cast("bigint").alias("ns")
-    ).persist()
+    src_tot = bsp.persist(
+        per.groupBy("source").agg(
+            F.sum("c").cast("bigint").alias("ns")
+        )
+    )
     corp = per.groupBy("tok").agg(F.sum("c").cast("bigint").alias("cc"))
     corp_tot = corp.agg(F.sum("cc").cast("bigint").alias("nc"))
     grid = (
@@ -2821,9 +2813,7 @@ def ts_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ns").alias("n_tokens"),
         F.round("jsd", 6).alias("jsd_bits"),
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, per, src_tot)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------- Heaps-law vocab growth
@@ -2901,7 +2891,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the 6-row curve feeds both the OLS points and the output
     # join (no cross-subtree CSE) - persist both, released after the
     # 6-row result materializes (r12 scan audit: 8 scans before)
-    t = docs.select("doc_id", toks.alias("ts")).persist()
+    t = bsp.persist(docs.select("doc_id", toks.alias("ts")))
     firsts = (
         t.select("doc_id", F.explode("ts").alias("tok"))
         .groupBy("tok")
@@ -2930,7 +2920,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i", "cut")
         .agg(F.count("tok").cast("bigint").alias("vocab"))
     )
-    curve = n_per_cut.join(v_per_cut, ["i", "cut"]).persist()
+    curve = bsp.persist(n_per_cut.join(v_per_cut, ["i", "cut"]))
     pts = curve.filter(
         (F.col("n_tokens") > 0) & (F.col("vocab") > 0)
     ).select(
@@ -2956,9 +2946,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(beta, 6).alias("heaps_beta"),
         F.round(F.pow(F.lit(2.0), intercept), 6).alias("heaps_k"),
     )
-    from .bsp import checkpoint_result
-
-    return checkpoint_result(out, t, curve)
+    return bsp.checkpoint_result(out)
 
 
 # ------------------------------------------- lang-ID accuracy eval

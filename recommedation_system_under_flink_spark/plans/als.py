@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SCENE, TODAY
+from ..operators import bsp
 from ..registry import register
 from ..sources import clicks
 
@@ -194,13 +195,12 @@ def als_rank1_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sweep and the scorer - with no cross-subtree CSE the executed
     # plan held 10 parquet scans (r12 scan audit), re-deriving earlier
     # sweeps per reference. Persist the ratings once and each (tiny,
-    # entity-bounded) factor table as it lands; release after the
-    # top-K result materializes (operators/bsp.py).
-    r = (
+    # entity-bounded) factor table as it lands; the query scope releases
+    # them after the top-K result materializes (operators/bsp.py).
+    r = bsp.persist(
         clicks(spark, sf_dir)
         .groupBy("user_id", "news_id")
         .agg(F.sum("cnt").cast("long").alias("c"))
-        .persist()
     )
     v = (
         r.select("news_id")
@@ -208,11 +208,9 @@ def als_rank1_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("news_id", F.lit(ALS1_PPM).cast("decimal(38,0)").alias("f"))
     )
     u = None
-    _cached = [r]
     for _ in range(ALS1_SWEEPS):
-        u = _als1_half_sweep(r, v, key="user_id", other="news_id").persist()
-        v = _als1_half_sweep(r, u, key="news_id", other="user_id").persist()
-        _cached += [u, v]
+        u = bsp.persist(_als1_half_sweep(r, v, key="user_id", other="news_id"))
+        v = bsp.persist(_als1_half_sweep(r, u, key="news_id", other="user_id"))
 
     from pyspark.sql import Window
 
@@ -267,6 +265,4 @@ def als_rank1_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("score_p12").cast("double") / F.lit(1e12)).alias("score"),
         )
     )
-    from ..operators.bsp import checkpoint_result
-
-    return checkpoint_result(out, *_cached)
+    return bsp.checkpoint_result(out)

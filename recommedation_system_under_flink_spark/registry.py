@@ -11,10 +11,14 @@ pytest covers them with ground-truth fixtures instead.
 
 from __future__ import annotations
 
+import functools
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .operators import bsp
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,13 +34,21 @@ _REGISTRY: dict[str, Entry] = {}
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under
+    ``name``. The registered (and returned) builder runs inside a
+    ``bsp.query_scope()``, which releases every frame it persisted."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Entry(name, fn, oracle)
-        return fn
+
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs) -> DataFrame:
+            with bsp.query_scope():
+                return fn(*args, **kwargs)
+
+        _REGISTRY[name] = Entry(name, scoped, oracle)
+        return scoped
 
     return deco
 
@@ -150,9 +162,7 @@ def oracles() -> dict[str, str]:
 _LOADED = False
 
 
-#: Modules that register queries on import. Missing ones are skipped so
-#: the registry degrades gracefully while coverage is being built out —
-#: a misspelled module name must never take down the whole catalogue.
+#: Modules that register queries on import.
 _QUERY_MODULES = (
     "operators.filters",
     "operators.aggregates",
@@ -187,18 +197,6 @@ def _load_all() -> None:
     global _LOADED
     if _LOADED:
         return
-    import importlib
-    import importlib.util
-
     for mod in _QUERY_MODULES:
-        name = f"{__package__}.{mod}"
-        # Skip only modules that don't exist yet; a genuine import error
-        # inside an existing module must surface, not be swallowed.
-        try:
-            missing = importlib.util.find_spec(name) is None
-        except ModuleNotFoundError:  # parent package absent
-            missing = True
-        if missing:
-            continue
-        importlib.import_module(name)
+        importlib.import_module(f"{__package__}.{mod}")
     _LOADED = True

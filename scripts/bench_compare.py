@@ -2,30 +2,21 @@
 
 Methodology (SCALE.md "CPU-steal variance"): single runs are
 meaningless in this environment's 1.9x steal band, so compare PER-QUERY
-MINIMA over a round's controls; round 11 adds the calm-window detector
-(bench.py::classify_calm) and this script therefore prefers CALM
-controls — pass --calm-only to restrict the newer round's controls to
-runs whose embedded (or recomputed) calm_probe verdict is true.
+MINIMA over a round's controls. Wall-clock minima still move with CPU
+steal; perfbench's CPU-time metrics (perfbench/README.md) do not.
 
 Usage::
 
     python scripts/bench_compare.py BENCH_r11_control_*.json --vs BENCH_r10_control_*.json
-    python scripts/bench_compare.py --calm-only BENCH_r11_control_*.json --vs ...
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import bench
 
 
-def _minima(paths: list[str], calm_only: bool) -> tuple[dict, int]:
+def _minima(paths: list[str]) -> tuple[dict, int]:
     mins: dict[str, float] = {}
     used = 0
     for p in paths:
@@ -34,10 +25,6 @@ def _minima(paths: list[str], calm_only: bool) -> tuple[dict, int]:
         q = d.get("queries")
         if not q:
             continue
-        if calm_only:
-            cp = d.get("calm_probe") or bench.classify_calm(q, d.get("sf"))
-            if cp.get("calm") is not True:
-                continue
         used += 1
         for k, v in q.items():
             if k not in mins or v < mins[k]:
@@ -49,14 +36,12 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("new", nargs="+")
     ap.add_argument("--vs", nargs="+", required=True)
-    ap.add_argument("--calm-only", action="store_true",
-                    help="restrict NEW controls to calm-classified runs")
     ap.add_argument("--flag", type=float, default=1.10,
                     help="report queries at or above this ratio")
     args = ap.parse_args()
 
-    new, n_new = _minima(args.new, args.calm_only)
-    old, n_old = _minima(args.vs, False)
+    new, n_new = _minima(args.new)
+    old, n_old = _minima(args.vs)
     common = sorted(set(new) & set(old))
     tot_new = sum(new[k] for k in common)
     tot_old = sum(old[k] for k in common)

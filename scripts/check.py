@@ -45,6 +45,7 @@ import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from recommedation_system_under_flink_spark.operators import bsp
 from recommedation_system_under_flink_spark.session import get_spark
 
 TABLES = (
@@ -121,6 +122,7 @@ def _oracle_frame(con, sql):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    bsp.refuse_plan_audit("check.py")
 
     con = duckdb.connect()
     for t in TABLES:
@@ -137,6 +139,7 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        err = None
         try:
             sdf = qs[name](spark, sf_dir)
             # toPandas mirrors the driver: a NULL-bearing long column
@@ -145,7 +148,11 @@ def main() -> int:
             scols = list(spdf.columns)
             srows = [tuple(rec) for rec in spdf.itertuples(index=False, name=None)]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
+            err = f"spark error: {type(e).__name__}: {str(e)[:300]}"
+        if bsp.leaked_cache(spark):
+            err = (f"{err}; " if err else "") + "left a cached frame in the session"
+        if err:
+            print(f"FAIL  {name}: {err}")
             n_fail += 1
             continue
         if name not in oracles:

@@ -9,7 +9,8 @@ deployments); operators must return empty relations, not throw.
 Current state: 0 crashes / all queries (the three historical offenders
 — ALS on no ratings, the partitioned re-read with no partition dirs,
 the IVF fit on an empty corpus — are guarded and regression-tested in
-tests/test_events_flow.py::test_empty_input_robustness).
+tests/test_events_flow.py::test_empty_input_robustness). A query that
+leaves a cached frame in the session counts as a failure too.
 
 Usage: ``python scripts/empty_sweep.py [src_sf_dir]``
 """
@@ -42,23 +43,28 @@ def make_empty_fixture(src: str) -> str:
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
+    from recommedation_system_under_flink_spark.operators import bsp
+    from recommedation_system_under_flink_spark.session import get_spark
+
+    bsp.refuse_plan_audit("empty_sweep.py")
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     dst = make_empty_fixture(src)
 
-    import __spark_entry__ as entrymod
-    from recommedation_system_under_flink_spark.session import get_spark
-
     spark = get_spark(app_name="empty-sweep")
     qs = entrymod.queries()
-    bad = []
+    bad, leaks = [], []
     for name in sorted(qs):
         try:
             qs[name](spark, dst).count()
         except Exception as exc:  # pragma: no cover - audit tool
             bad.append(name)
             print(f"CRASH {name}: {type(exc).__name__}: {str(exc).splitlines()[0][:120]}")
-    print(f"{len(bad)} crashes / {len(qs)} queries")
-    return 1 if bad else 0
+        if bsp.leaked_cache(spark):
+            leaks.append(name)
+            print(f"LEAK  {name}: left a cached frame in the session")
+    print(f"{len(bad)} crashes, {len(leaks)} cache leaks / {len(qs)} queries")
+    return 1 if bad or leaks else 0
 
 
 if __name__ == "__main__":

@@ -754,6 +754,7 @@ def test_mmr_udf_equals_unrolled_catalyst(queries, spark):
     """The grouped-UDF MMR and the pure-Catalyst unrolled form must
     trace the identical greedy trajectory — same (query, corpus, pick)
     rows with equal quantized relevance."""
+    from recommedation_system_under_flink_spark.operators.bsp import query_scope
     from recommedation_system_under_flink_spark.operators.similarity import (
         MMR_K,
         mmr_rerank_unrolled,
@@ -763,10 +764,11 @@ def test_mmr_udf_equals_unrolled_catalyst(queries, spark):
         (r["query_id"], r["pick"]): (r["corpus_id"], r["rel"])
         for r in queries["sim_mmr_rerank"](spark, SF_DIR).collect()
     }
-    slow = {
-        (r["query_id"], r["pick"]): (r["corpus_id"], r["rel"])
-        for r in mmr_rerank_unrolled(spark, SF_DIR).collect()
-    }
+    with query_scope():  # an unregistered builder: no scope of its own
+        slow = {
+            (r["query_id"], r["pick"]): (r["corpus_id"], r["rel"])
+            for r in mmr_rerank_unrolled(spark, SF_DIR).collect()
+        }
     assert fast == slow
     assert fast
     picks = [p for (_, p) in fast]

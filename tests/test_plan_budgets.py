@@ -29,7 +29,7 @@ def queries():
 #: measured round 7 at sf0.001: scans/exchanges were
 #: hot_topics 1/1, tfidf 8/23, j3 8/22, minhash 6/13, ivf_pinned 2/3,
 #: logreg 1/1, curation_fused 1/1, mix_fused 2/7, rfm 2/2, q1 1/1,
-#: decontamination 2/4 (p1 memoizes to a checkpoint: 0/0).
+#: decontamination 2/4 (p1 ends in a checkpoint: 0/0).
 BUDGETS = {
     "hot_topics_pipeline": (2, 3, False, True),
     "tfidf_pipeline": (10, 28, True, True),
@@ -69,7 +69,7 @@ BUDGETS = {
     # round 9: the remaining top-6 cost centers (r8 verdict ask #6),
     # measured at sf0.001: prefix-filter 10/27; markov 0/12 with the
     # 1-row total-journeys scalar broadcast as its only cartesian;
-    # p1-distributed and HITS memoize through a checkpoint, so their
+    # p1-distributed and HITS end in a checkpoint, so their
     # executed plans must STAY trivial — a regression that drops the
     # checkpoint shows up as reappearing scans/exchanges
     "dedup_prefix_filter_join": (12, 32, False, False),

@@ -322,6 +322,10 @@ def test_distributed_vote_on_adversarial_random_docs(spark):
         textrank_vote,
         tokenize,
     )
+    from recommedation_system_under_flink_spark.operators.bsp import (
+        persist,
+        query_scope,
+    )
     from recommedation_system_under_flink_spark.operators.keywords import (
         TEXTRANK_SQL_ITERS,
         tr_positions_from,
@@ -340,12 +344,13 @@ def test_distributed_vote_on_adversarial_random_docs(spark):
     )
     pos = tr_positions_from(df)
     got: dict[int, dict[str, float]] = {}
-    out = vote_fixed_rounds(
-        windowed_edges(pos).persist(),
-        pos.select("news_id", "term").distinct().persist(),
-        "news_id",
-        sc.num_news_keywords,
-    )
+    with query_scope():
+        out = vote_fixed_rounds(
+            persist(windowed_edges(pos)),
+            persist(pos.select("news_id", "term").distinct()),
+            "news_id",
+            sc.num_news_keywords,
+        )
     for r in out.collect():
         got.setdefault(r["news_id"], {})[r["term"]] = r["score"]
 
@@ -375,6 +380,10 @@ def test_distributed_clique_vote_on_random_tweet_sets(spark):
         cooccurrence_clique,
         textrank_vote,
         tokenize,
+    )
+    from recommedation_system_under_flink_spark.operators.bsp import (
+        persist,
+        query_scope,
     )
     from recommedation_system_under_flink_spark.operators.keywords import (
         TEXTRANK_SQL_ITERS,
@@ -418,9 +427,11 @@ def test_distributed_clique_vote_on_random_tweet_sets(spark):
     )
     vocab = ut.select("user_id", "term").distinct()
     got: dict[int, dict[str, float]] = {}
-    for r in vote_fixed_rounds(
-        edges.persist(), vocab.persist(), "user_id", sc.num_user_keywords
-    ).collect():
+    with query_scope():
+        out = vote_fixed_rounds(
+            persist(edges), persist(vocab), "user_id", sc.num_user_keywords
+        )
+    for r in out.collect():
         got.setdefault(r["user_id"], {})[r["term"]] = r["score"]
 
     for uid, tweet_texts in texts.items():
@@ -456,21 +467,6 @@ def test_plan_exchange_budgets(queries, spark):
         plan = _plan(queries[name](spark, SF_DIR))
         got = plan.count("Exchange")
         assert got <= budget, (name, got, budget)
-
-
-def test_distributed_keyword_memoization(queries, spark):
-    """The distributed keyword model tables memoize per (session,
-    sf_dir): repeat builds return the SAME checkpointed frame (free),
-    and distinct sf_dirs stay distinct. Guards the round-3 fix for the
-    pipeline-composition cost (textrank_pipeline_distributed rebuilt
-    both keyword chains eagerly per invocation)."""
-    from recommedation_system_under_flink_spark.operators.keywords import (
-        p1_news_keywords_distributed,
-    )
-
-    a = p1_news_keywords_distributed(spark, SF_DIR)
-    b = p1_news_keywords_distributed(spark, SF_DIR)
-    assert a is b  # memo hit: no rebuild, no re-checkpoint
 
 
 def test_rank_limit_pushdown_plans(queries, spark):

@@ -44,6 +44,7 @@ def test_hash_min_contraction_matches_reference_cc(spark):
     components (min vertex id per component), across partitionings —
     exercised on a long chain (the worst case for round count), rings,
     and scattered small components."""
+    from recommedation_system_under_flink_spark.operators.bsp import query_scope
     from recommedation_system_under_flink_spark.operators.similarity import (
         hash_min_components,
     )
@@ -75,10 +76,11 @@ def test_hash_min_contraction_matches_reference_cc(spark):
 
     for nparts in (1, 3, 16):
         df = spark.createDataFrame(edges, "a long, b long").repartition(nparts)
-        got = {
-            r["node"]: r["comp"]
-            for r in hash_min_components(df, "a", "b").collect()
-        }
+        with query_scope():  # a helper, not a registered builder
+            got = {
+                r["node"]: r["comp"]
+                for r in hash_min_components(df, "a", "b").collect()
+            }
         assert got == ref, f"nparts={nparts}: CC labels diverge"
 
 
