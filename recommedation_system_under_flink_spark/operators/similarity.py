@@ -211,6 +211,32 @@ def _bucketed(emb: DataFrame, tables: int = LSH_TABLES, bits: int = LSH_BITS) ->
     )
 
 
+def _lsh_pairs(emb: DataFrame, tables: int, bits: int) -> DataFrame:
+    """Distinct LSH candidate id pairs ``(u, v)``, ``u < v``: every
+    pair sharing a (table, bucket) cell — the one bucket self-join of
+    the package. Candidates are deduped on ids only; a distinct over
+    rows carrying two 64-dim arrays shuffles the payload once per table
+    (measured 2.3× a whole sim_dbscan_lsh query). The bucketed frame is
+    persisted because the self-join references it twice and Catalyst
+    has no cross-subtree CSE: un-persisted, the signature projection
+    (the map-side cost of every LSH query) evaluates twice."""
+    bucketed = bsp.persist(
+        _bucketed(emb, tables, bits).select("vec_id", "table", "bucket")
+    )
+    a = bucketed.alias("a")
+    b = bucketed.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.table") == F.col("b.table"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(F.col("a.vec_id").alias("u"), F.col("b.vec_id").alias("v"))
+        .distinct()
+    )
+
+
 def _lsh_sig_ctes(tables: int, bits: int) -> str:
     """Shared proj/sig/tb CTE block for the hyperplane-LSH oracles."""
     planes = _hyperplanes(tables, bits)
@@ -339,28 +365,56 @@ def sim_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     J3. Output cosines are double-precision BLAS sums — they agree with
     the oracle's sequential sums to ~15 significant digits, far inside
     the 9-digit compare window."""
-    return _exact_pairs_blocked(spark, sf_dir, COSINE_THRESHOLD)
-
-
-def _exact_pairs_blocked(
-    spark: SparkSession, sf_dir: str, thr: float
-) -> DataFrame:
-    """Blocked-GEMM exact pair scorer (see sim_neardup_pairs_exact for
-    the plan rationale), threshold-parameterized so the tuning sweep
-    can score at a lower bar without duplicating the kernel."""
-    import numpy as np
-    import pandas as pd_  # noqa: F401 — mapInPandas ships pandas frames
-
-    emb = load_raw(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("emb")
+    return _exact_pairs_blocked(
+        _vec_blocks(load_raw(spark, sf_dir, "embeddings")), COSINE_THRESHOLD
     )
-    blocks = (
-        emb.withColumn("bid", F.expr(f"vec_id DIV {NEARDUP_BLOCK}"))
-        .groupBy("bid")
-        .agg(F.collect_list(F.struct("vec_id", "emb")).alias("rows"))
+
+
+def _vec_blocks(emb: DataFrame) -> DataFrame:
+    """``(bid, ids array<long>, x array<double>)`` id-block layout of
+    the embedding corpus — the one unit every blocked scorer ships to
+    its tasks. ``ids`` ascend; ``x`` is the block's vectors flattened
+    row-major in ``ids`` order. Flat list columns, not a
+    ``collect_list(struct)``, because Arrow hands flat lists to the
+    kernel as numpy arrays, so a block reads as
+    ``np.asarray(x).reshape(len(ids), -1)`` with no per-row Python
+    loop. Scorer callers may ``bsp.persist`` the layout: each scorer
+    reads it on both pair sides and Catalyst has no cross-subtree
+    CSE."""
+    rows = F.array_sort(F.collect_list(F.struct("vec_id", "e")))
+    return (
+        emb.select("vec_id", _as_double("embedding").alias("e"))
+        .groupBy(F.expr(f"vec_id DIV {NEARDUP_BLOCK}").alias("bid"))
+        .agg(rows.alias("rows"))
+        .select("bid", F.col("rows.vec_id").alias("ids"), F.flatten("rows.e").alias("x"))
     )
-    a = blocks.select(F.col("bid").alias("abid"), F.col("rows").alias("arows"))
-    b = blocks.select(F.col("bid").alias("bbid"), F.col("rows").alias("brows"))
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Zero-guarded L2 row normalize: a zero row stays zero instead of
+    turning into NaNs."""
+    n = np.linalg.norm(x, axis=1)
+    n[n == 0.0] = 1.0
+    return x / n[:, None]
+
+
+def _unit_block(ids, x) -> tuple[np.ndarray, np.ndarray]:
+    """One :func:`_vec_blocks` row as (ids, unit-normalized rows)."""
+    ids = np.asarray(ids, dtype=np.int64)
+    return ids, _unit_rows(np.asarray(x, dtype=np.float64).reshape(len(ids), -1))
+
+
+def _exact_pairs_blocked(blocks: DataFrame, thr: float) -> DataFrame:
+    """Blocked-GEMM exact pair scorer over a :func:`_vec_blocks` layout
+    (see sim_neardup_pairs_exact for the plan rationale), threshold-
+    parameterized so the tuning sweep can score at a lower bar without
+    duplicating the kernel."""
+    a = blocks.select(
+        F.col("bid").alias("abid"), F.col("ids").alias("aids"), F.col("x").alias("ax")
+    )
+    b = blocks.select(
+        F.col("bid").alias("bbid"), F.col("ids").alias("bids"), F.col("x").alias("bx")
+    )
     # Repartition by the pair key: the nested-loop join's output keeps
     # the LEFT side's partitioning, so without this the GEMM stage has
     # only #blocks-many tasks, each scoring a whole row of the
@@ -372,22 +426,13 @@ def _exact_pairs_blocked(
     )
 
     def score(batches):
-        import pandas as pd
-
-        def unit(rows):
-            ids = np.fromiter((r["vec_id"] for r in rows), dtype=np.int64)
-            x = np.array([r["emb"] for r in rows], dtype=np.float64)
-            n = np.linalg.norm(x, axis=1)
-            n[n == 0.0] = 1.0
-            return ids, x / n[:, None]
-
         for pdf in batches:
             out = []
-            for arows, brows, same in zip(
-                pdf["arows"], pdf["brows"], pdf["abid"] == pdf["bbid"]
+            for aids, ax, bids, bx, same in zip(
+                pdf["aids"], pdf["ax"], pdf["bids"], pdf["bx"], pdf["abid"] == pdf["bbid"]
             ):
-                ida, ua = unit(arows)
-                idb, ub = unit(brows)
+                ida, ua = _unit_block(aids, ax)
+                idb, ub = _unit_block(bids, bx)
                 sims = ua @ ub.T
                 keep = sims >= thr
                 if same:
@@ -408,33 +453,16 @@ def _exact_pairs_blocked(
     return block_pairs.mapInPandas(score, "vec_a long, vec_b long, cosine double")
 
 
-def _vec_blocks(emb: DataFrame) -> DataFrame:
-    """(bid, rows) id-block layout of the embedding corpus — the unit
-    the blocked scorers ship to tasks. Callers that score SEVERAL
-    candidate relations (or whose scorer references both sides of a
-    block join) should ``bsp.persist`` this and checkpoint the result:
-    the scorer references it twice (u-side and v-side) and Catalyst has
-    no cross-subtree CSE."""
-    return (
-        emb.select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("bid", F.expr(f"vec_id DIV {NEARDUP_BLOCK}"))
-        .groupBy("bid")
-        .agg(F.collect_list(F.struct("vec_id", "e")).alias("rows"))
-    )
-
-
 def _score_candidates_blocked(
-    emb: DataFrame,
-    cand: DataFrame,
-    u: str = "u",
-    v: str = "v",
-    blocks: DataFrame | None = None,
+    blocks: DataFrame, cand: DataFrame, u: str = "u", v: str = "v"
 ) -> DataFrame:
-    """Exact cosine for an id-pair CANDIDATE relation ``cand(u, v)`` via
-    per-block numpy batches — :func:`_exact_pairs_blocked`'s kernel
-    economics applied to a sparse pair list instead of the full block-
-    pair grid (guide §4.2/§8: ship the heavy vectors per block once,
-    decide per candidate with one vectorized einsum).
+    """Exact cosine for an id-pair CANDIDATE relation ``cand(u, v)``
+    over a :func:`_vec_blocks` layout via per-block numpy batches —
+    :func:`_exact_pairs_blocked`'s kernel economics applied to a sparse
+    pair list instead of the full block-pair grid (guide §4.2/§8: ship
+    the heavy vectors per block once, decide per candidate with one
+    vectorized einsum). Pairs whose ids are absent from the layout are
+    dropped (inner-join semantics).
 
     Why not the per-pair Catalyst join + ``_dot`` fold: higher-order
     folds are CodegenFallback (interpreted per element — the measured
@@ -450,25 +478,26 @@ def _score_candidates_blocked(
     reference it); parallelism = occupied (u-block, v-block) cells,
     shuffled by the cell key. No all-pairs anything.
     """
-    import numpy as np
-    import pandas as pd_  # noqa: F401 — mapInPandas ships pandas frames
-
-    if blocks is None:
-        blocks = _vec_blocks(emb)
     cells = (
         cand.select(F.col(u).alias("u"), F.col(v).alias("v"))
-        .withColumn("ba", F.expr(f"u DIV {NEARDUP_BLOCK}"))
-        .withColumn("bb", F.expr(f"v DIV {NEARDUP_BLOCK}"))
-        .groupBy("ba", "bb")
+        .groupBy(
+            F.expr(f"u DIV {NEARDUP_BLOCK}").alias("ba"),
+            F.expr(f"v DIV {NEARDUP_BLOCK}").alias("bb"),
+        )
         .agg(F.collect_list(F.struct("u", "v")).alias("prs"))
+        .select("ba", "bb", F.col("prs.u").alias("pu"), F.col("prs.v").alias("pv"))
     )
     joined = (
         cells.join(
-            blocks.select(F.col("bid").alias("ba"), F.col("rows").alias("arows")),
+            blocks.select(
+                F.col("bid").alias("ba"), F.col("ids").alias("aids"), F.col("x").alias("ax")
+            ),
             "ba",
         )
         .join(
-            blocks.select(F.col("bid").alias("bb"), F.col("rows").alias("brows")),
+            blocks.select(
+                F.col("bid").alias("bb"), F.col("ids").alias("bids"), F.col("x").alias("bx")
+            ),
             "bb",
         )
         # parallelism = occupied cells, AQE-coalescible (same rationale
@@ -477,30 +506,18 @@ def _score_candidates_blocked(
     )
 
     def score(batches):
-        import pandas as pd
-
-        def unit(rows):
-            ids = np.fromiter((r["vec_id"] for r in rows), dtype=np.int64)
-            x = np.array([r["e"] for r in rows], dtype=np.float64)
-            n = np.linalg.norm(x, axis=1)
-            n[n == 0.0] = 1.0
-            order = np.argsort(ids)
-            return ids[order], (x / n[:, None])[order]
-
         for pdf in batches:
             out = []
-            for arows, brows, prs in zip(pdf["arows"], pdf["brows"], pdf["prs"]):
-                ida, ua = unit(arows)
-                idb, ub = unit(brows)
-                if len(ida) == 0 or len(idb) == 0:
-                    continue  # nothing to join against in this cell
-                pu = np.fromiter((p["u"] for p in prs), dtype=np.int64)
-                pv = np.fromiter((p["v"] for p in prs), dtype=np.int64)
+            for aids, ax, bids, bx, pu, pv in zip(
+                pdf["aids"], pdf["ax"], pdf["bids"], pdf["bx"], pdf["pu"], pdf["pv"]
+            ):
+                ida, ua = _unit_block(aids, ax)
+                idb, ub = _unit_block(bids, bx)
+                pu = np.asarray(pu, dtype=np.int64)
+                pv = np.asarray(pv, dtype=np.int64)
                 # inner-join semantics: drop pairs whose id is absent
-                # from emb (searchsorted would otherwise map them to
-                # the nearest row or run past the block end); current
-                # callers only pass ids drawn from emb, so this mask
-                # is a no-op for them
+                # from the layout (searchsorted would otherwise map them
+                # to the nearest row or run past the block end)
                 iu = np.searchsorted(ida, pu).clip(max=len(ida) - 1)
                 iv = np.searchsorted(idb, pv).clip(max=len(idb) - 1)
                 ok = (ida[iu] == pu) & (idb[iv] == pv)
@@ -536,10 +553,8 @@ def _probe_udf(cents: list[list[float]], nprobe: int):
     ``zip_with`` dots) was 5-10× slower end-to-end here: the K·D
     literal tree blows past whole-stage-codegen limits and recompiles
     every Lloyd round because the literals change."""
-    cu = np.asarray(cents, dtype=np.float64)
-    norms = np.linalg.norm(cu, axis=1)
-    norms[norms == 0.0] = 1.0
-    cu = (cu / norms[:, None]).T  # D×K; query-side norm can't flip ranks
+    # D×K; query-side norm can't flip ranks
+    cu = _unit_rows(np.asarray(cents, dtype=np.float64)).T
 
     @F.pandas_udf("array<int>")
     def probe(embs: pd.Series) -> pd.Series:
@@ -575,12 +590,9 @@ def _ivf_centroids(
     x = np.array([list(r["emb"]) for r in rows], dtype=np.float64)
     cents = x[:k].copy()  # init: first k by vec_id (deterministic)
     for _ in range(iters):
-        cu = cents.copy()
-        norms = np.linalg.norm(cu, axis=1)
-        norms[norms == 0.0] = 1.0
         # argmax of cosine == argmax of dot with unit centroids; first
         # max wins, matching the probe UDF's lower-cid tiebreak
-        cid = np.argmax(x @ (cu / norms[:, None]).T, axis=1)
+        cid = np.argmax(x @ _unit_rows(cents).T, axis=1)
         for c in range(k):  # empty cells keep their previous centroid
             members = x[cid == c]
             if len(members):
@@ -692,55 +704,18 @@ def sim_neardup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine — the O(pairs-per-bucket) scale path. The pinned hyperplanes
     make the bucket chain engine-reproducible, so the full chain is
     hash-compared against the DuckDB twin (:func:`_lsh_oracle`);
-    subset-of-exact and recall stay pytest-checked."""
+    subset-of-exact and recall stay pytest-checked. Candidates are
+    verified by the blocked numpy scorer, the same float recipe as
+    :func:`sim_neardup_pairs_exact`; the result is checkpointed because
+    its plan reads :func:`_lsh_pairs`' persisted buckets."""
     emb = load_raw(spark, sf_dir, "embeddings")
-    # dedupe candidates on IDS ONLY, then re-join the vectors for the
-    # verify (round-9 review: the previous distinct carried both 64-dim
-    # arrays through the shuffle — the sim_dbscan_lsh measurement put
-    # that at 2.3× the whole query; same oracle, same values)
-    bucketed = _bucketed(emb, NEARDUP_TABLES, NEARDUP_BITS).select(
-        "vec_id", "table", "bucket"
-    )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    proj = emb.select(
-        "vec_id", _as_double("embedding").alias("e")
-    ).withColumn("nrm", _norm(F.col("e")))
-    pa = proj.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    pb = proj.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cands.join(pa, "vec_a")
-        .join(pb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))).alias(
-                "cosine"
-            ),
-        )
+    cands = _lsh_pairs(emb, NEARDUP_TABLES, NEARDUP_BITS)
+    out = (
+        _score_candidates_blocked(_vec_blocks(emb), cands)
         .filter(F.col("cosine") >= COSINE_THRESHOLD)
+        .select(F.col("u").alias("vec_a"), F.col("v").alias("vec_b"), "cosine")
     )
+    return bsp.checkpoint_result(out)
 
 
 # --------------------------------------------- near-dup components
@@ -1699,7 +1674,8 @@ def sim_threshold_sweep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-column window over ≤14 bin rows."""
     from pyspark.sql import Window
 
-    pairs = _exact_pairs_blocked(spark, sf_dir, SWEEP_BASE).select(
+    emb = load_raw(spark, sf_dir, "embeddings")
+    pairs = _exact_pairs_blocked(_vec_blocks(emb), SWEEP_BASE).select(
         F.round("cosine", 6).alias("c")
     )
     bins = pairs.groupBy(
@@ -2703,7 +2679,7 @@ def sim_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 64-task mapInPandas scorer — measured 5× the whole query's cost
     # in replayed stages.
     pairs = (
-        _exact_pairs_blocked(spark, sf_dir, DBSCAN_EPS_COS)
+        _exact_pairs_blocked(_vec_blocks(emb), DBSCAN_EPS_COS)
         .select(F.col("vec_a").alias("va"), F.col("vec_b").alias("vb"))
         .localCheckpoint(eager=True)
     )
@@ -2815,38 +2791,14 @@ def sim_dbscan_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     below quadratic cost. The pinned planes make the whole chain
     hash-certified against the DuckDB twin."""
     emb = load_raw(spark, sf_dir, "embeddings")
-    # dedupe candidates on IDS ONLY before re-joining the vectors for
-    # the verify (the oracle's own shape) — a distinct over rows
-    # carrying two 64-dim arrays shuffles the payload 12× and measured
-    # 2.3× the whole query's cost.
-    # PERSISTED (r12): the self-join references the bucketed relation
-    # twice and Catalyst has no cross-subtree CSE — un-persisted, the
-    # 60-hyperplane signature projection (the map-side cost of the
-    # whole query) evaluated twice.
-    bucketed = bsp.persist(
-        _bucketed(emb, DBSCAN_LSH_TABLES, DBSCAN_LSH_BITS)
-        .select("vec_id", "table", "bucket")
-    )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-        .distinct()
-    )
+    cand = _lsh_pairs(emb, DBSCAN_LSH_TABLES, DBSCAN_LSH_BITS)
     # verify via the blocked numpy scorer (r12): the per-pair Catalyst
     # `_dot` fold evaluated interpreted per element — the verify leg
-    # measured ~2s blocked vs ~9-25s folded at sf0.1 (same kernel
-    # economics as sim_dbscan's _exact_pairs_blocked, which this
-    # mirrors float-op for float-op)
+    # measured ~2s blocked vs ~9-25s folded at sf0.1. The layout is
+    # persisted because the scorer joins it on both pair sides.
     blocks = bsp.persist(_vec_blocks(emb))
     pairs = (
-        _score_candidates_blocked(emb, cand, "va", "vb", blocks=blocks)
+        _score_candidates_blocked(blocks, cand)
         .filter(F.col("cosine") >= DBSCAN_EPS_COS)
         .select(F.col("u").alias("va"), F.col("v").alias("vb"))
         .localCheckpoint(eager=True)
@@ -4266,13 +4218,10 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(cand: DataFrame) -> DataFrame:
         """Exact cosine over a (u, v) id relation via the blocked numpy
-        scorer (r12; was two keyed joins + the Catalyst ``_dot`` fold —
-        interpreted per element, the dominant per-task cost of both
-        scoring legs). Vector movement stays block-linear and compute
-        candidate-linear, so the candidate economics are unchanged; the
-        float recipe mirrors the oracle-green _exact_pairs_blocked
-        kernel (normalize rows, then Σ xᵢyᵢ)."""
-        return _score_candidates_blocked(emb, cand, "u", "v", blocks=blocks)
+        scorer over the shared layout, not the Catalyst ``_dot`` fold,
+        which evaluates interpreted per element and would dominate the
+        per-task cost of both scoring legs."""
+        return _score_candidates_blocked(blocks, cand)
 
     def rank_topk(scored: DataFrame) -> DataFrame:
         w = Window.partitionBy("u").orderBy(
@@ -4287,20 +4236,10 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     def topk(cand: DataFrame) -> DataFrame:
         return rank_topk(score(cand))
 
-    # PERSISTED (r12): the candidate self-join references the bucketed
-    # relation twice (no cross-subtree CSE) — un-persisted, the 32-
-    # hyperplane signature projection evaluated twice.
-    bucketed = bsp.persist(_bucketed(emb).select("vec_id", "table", "bucket"))
     # Score each unordered bucket pair ONCE (u < v halves the cosine
     # work of the dominant leg) and mirror: the scorer's per-pair sum is
     # element-ordered, so cos(u,v) and cos(v,u) are bit-identical.
-    cand0_lt = (
-        bucketed.alias("a")
-        .join(bucketed.alias("b"), ["table", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("u"), F.col("b.vec_id").alias("v"))
-        .distinct()
-    )
+    cand0_lt = _lsh_pairs(emb, LSH_TABLES, LSH_BITS)
     # Persisted: the mirror union references this subtree TWICE, and
     # Catalyst has no cross-subtree CSE — unpersisted, the dominant
     # cosine leg would execute once per branch (the ml_als_two_sweeps

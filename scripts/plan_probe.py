@@ -2,9 +2,10 @@
 
 For each named query: build the DataFrame, dump ``explain("formatted")``
 to ``plans/r13/<query>_<tag>.txt``, then time ``repeats`` executions.
-Timing follows bench.py's methodology (build + execute, warm session)
-so numbers are comparable with the committed controls, but the timed
-action is selectable:
+Timing uses bench.py's warm-up (``bench.warm_session``) and timed
+action (``bench.run_action``), build + execute, so numbers are
+comparable with the committed controls, but the timed action is
+selectable:
 
 - ``count``  — bench.py's action (default; what the driver measures)
 - ``noop``   — ``df.write.format("noop")`` per guide §1.4 (computes
@@ -56,28 +57,7 @@ def main() -> int:
     spark = get_spark(app_name="plan_probe")
     qs = entrymod.queries()
 
-    # bench.py's warm-up: pay session-scoped first-touch costs up front
-    from pyspark.sql import functions as F
-
-    for t in ("events", "documents", "embeddings", "lineitem", "orders"):
-        p = os.path.join(args.sf, f"{t}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).count()
-    warm = spark.range(100_000).withColumn("g", F.col("id") % 7)
-    warm.groupBy("g").count().count()
-    from pyspark.sql import Window
-
-    warm.withColumn(
-        "r", F.row_number().over(Window.partitionBy("g").orderBy("id"))
-    ).count()
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    def _noop_impl(s):
-        return s
-
-    _noop = pandas_udf(_noop_impl, "long")
-    warm.select(_noop("id")).count()
+    bench.warm_session(spark, args.sf)
 
     plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(plan_dir, exist_ok=True)
@@ -106,12 +86,10 @@ def main() -> int:
                 with open(os.path.join(plan_dir, f"{name}_{args.tag}.txt"), "w") as fh:
                     fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                         df._jdf.queryExecution(), "formatted"))
-            if name in bench.FROZEN_PLAN_QUERIES:
-                df._jdf.queryExecution().toRdd().count()
-            elif args.action == "noop":
+            if args.action == "noop" and name not in bench.FROZEN_PLAN_QUERIES:
                 df.write.format("noop").mode("overwrite").save()
             else:
-                df.count()
+                bench.run_action(name, df)
             times.append(round(time.time() - t0, 3))
         spark.sparkContext.setJobDescription(None)
         out[name] = {"times": times, "min": min(times)}

@@ -73,15 +73,19 @@ def test_lsh_topk_recall_vs_bruteforce(queries, spark):
 
 
 def test_neardup_lsh_subset_of_exact(queries, spark):
+    """LSH pairs are a subset of the exact pairs, and the LSH verify
+    scores every shared pair as the exact scorer does (9 dp)."""
     exact = {
-        (r.vec_a, r.vec_b)
+        (r.vec_a, r.vec_b): r.cosine
         for r in queries["sim_neardup_pairs_exact"](spark, SF_DIR).collect()
     }
     lsh = {
-        (r.vec_a, r.vec_b)
+        (r.vec_a, r.vec_b): r.cosine
         for r in queries["sim_neardup_pairs_lsh"](spark, SF_DIR).collect()
     }
-    assert lsh <= exact
+    assert lsh.keys() <= exact.keys()
+    for k, cos in lsh.items():
+        assert round(cos, 9) == round(exact[k], 9), k
 
 
 # ------------------------------------------------------------- textstats

@@ -115,6 +115,11 @@ BUDGETS = {
     "ef_mannwhitney_u": (4, 14, True, False),
     "ev_ks_drift": (5, 14, True, False),
     "ev_trimmed_mean": (5, 14, True, False),
+    # both LSH candidate queries read the persisted bucket frame of
+    # similarity._lsh_pairs, so they end in a checkpoint (the p1/HITS
+    # pattern): any scan/exchange means the checkpoint was dropped
+    "sim_neardup_pairs_lsh": (0, 0, False, False),
+    "sim_dbscan_lsh": (0, 0, False, False),
 }
 
 #: Queries whose plans must contain ZERO single-partition Window nodes

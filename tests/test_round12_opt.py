@@ -6,9 +6,10 @@ future refactor can't silently break one:
 
 - the Arrow/BLAS LSH bucketing (`_bucket_udf`) produces exactly the
   buckets of the Catalyst sign-bit fold it replaced;
-- the blocked candidate scorer (`_score_candidates_blocked`) agrees
-  with the Catalyst cosine expression to float tolerance (and exactly
-  at the 6-dp quantization every ranking uses);
+- both blocked scorers (`_score_candidates_blocked`,
+  `_exact_pairs_blocked`) agree with the Catalyst cosine expression to
+  float tolerance (and exactly at the 6-dp quantization every ranking
+  uses);
 - the TF-IDF window-df equals the old count-distinct df row for row;
 - the ts_lang_id struct-argmax plan really is single-scan/no-shuffle.
 """
@@ -62,19 +63,17 @@ def test_bucket_udf_matches_catalyst_fold(spark, emb):
 
 
 def test_blocked_scorer_matches_catalyst_cosine(spark, emb):
-    """Row-wise einsum over normalized block rows vs the Catalyst
-    dot/(|a|·|b|) fold: equal at the 6-dp ranking quantization and
-    within 1e-9 raw."""
+    """Both blocked kernels over the shared ``_vec_blocks`` layout —
+    row-wise einsum over candidates and the all-pairs GEMM — vs the
+    Catalyst dot/(|a|·|b|) fold: equal at the 6-dp ranking quantization
+    and within 1e-9 raw. A candidate whose id is missing from the
+    layout is dropped (inner-join semantics)."""
     ids = emb.select("vec_id")
     cand = (
         ids.select(F.col("vec_id").alias("u"))
         .crossJoin(ids.select(F.col("vec_id").alias("v")))
         .filter((F.col("u") < F.col("v")) & (F.col("v") < 40))
     )
-    got = {
-        (r["u"], r["v"]): r["cosine"]
-        for r in S._score_candidates_blocked(emb, cand, "u", "v").collect()
-    }
     proj = emb.filter(F.col("vec_id") < 40).select(
         "vec_id", S._as_double("embedding").alias("e")
     ).withColumn("nrm", S._norm(F.col("e")))
@@ -88,10 +87,30 @@ def test_blocked_scorer_matches_catalyst_cosine(spark, emb):
             (S._dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))).alias("cosine"),
         ).collect()
     }
-    assert set(got) == set(want) and got
-    for k, v in want.items():
-        assert abs(got[k] - v) < 1e-9, k
-        assert round(got[k], 6) == round(v, 6), k
+    blocks = S._vec_blocks(emb)
+    candidates = {
+        (r["u"], r["v"]): r["cosine"]
+        for r in S._score_candidates_blocked(blocks, cand).collect()
+    }
+    all_pairs = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in S._exact_pairs_blocked(blocks, -1.0)
+        .filter(F.col("vec_b") < 40)
+        .collect()
+    }
+    missing = 7
+    masked = {
+        (r["u"], r["v"]): r["cosine"]
+        for r in S._score_candidates_blocked(
+            S._vec_blocks(emb.filter(F.col("vec_id") != missing)), cand
+        ).collect()
+    }
+    assert want and set(candidates) == set(all_pairs) == set(want)
+    assert set(masked) == {k for k in want if missing not in k}
+    for got in (candidates, all_pairs, masked):
+        for k, cos in got.items():
+            assert abs(cos - want[k]) < 1e-9, k
+            assert round(cos, 6) == round(want[k], 6), k
 
 
 def test_tfidf_window_df_equals_count_distinct(spark):
