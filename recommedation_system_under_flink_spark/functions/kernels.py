@@ -19,21 +19,20 @@ inputs (Java ``0d/0`` at CosineSimilarity.java:48,126); here empty
 inputs yield ``0.0`` so downstream ``score > 0`` filters
 (TextRank.java:275) behave identically without NaN propagation.
 
-Each kernel exists three ways: pure Python (unit tests), a pandas UDF
-factory (Arrow-batched, for the scored join J3), and — where the
-algebra allows — a pure-SQL twin that stays inside whole-stage codegen
-(F8 via ``map_zip_with``; F5 is algebraically eliminable into an
-inverted-index equi-join, see operators/joins.py).
+Each kernel exists two ways: pure Python (unit tests and ground
+truth) and — where the algebra allows — a pure-SQL twin that stays
+inside whole-stage codegen (F8 via ``map_zip_with``). J3's scale path
+uses neither: F5 and F8 are algebraically eliminable into one
+inverted-index equi-join (``scored_pairs`` in operators/joins.py); the
+SQL twins back its naive cross-join twin.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 # --------------------------------------------------------------- pure python
@@ -151,25 +150,6 @@ def calculate_max(len1: int, len2: int) -> int:
         value += multiple * multiple
         multiple -= len2
     return value
-
-
-# ------------------------------------------------------------- pandas UDFs
-
-def _map_series_kernel(fn):
-    def batched(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fn(a, b) for a, b in zip(s1, s2)], index=s1.index, dtype="float64"
-        )
-
-    return batched
-
-
-#: Arrow-batched UDF forms for the scored join (J3). Maps arrive as
-#: Python dicts per Arrow conversion; the kernel bodies above apply
-#: unchanged.
-calculate_x_udf = F.pandas_udf(_map_series_kernel(calculate_x), T.DoubleType())
-fuzzy_overlap_udf = F.pandas_udf(_map_series_kernel(fuzzy_overlap), T.DoubleType())
-dot_product_udf = F.pandas_udf(_map_series_kernel(dot_product), T.DoubleType())
 
 
 # ------------------------------------------------------------- SQL twins

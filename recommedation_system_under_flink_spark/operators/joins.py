@@ -8,38 +8,45 @@ replacements:
 - J1/J2 → **broadcast left-semi joins** on flat (date, user_id) rows —
   no collected lists, no O(|L|·|R|) cross (TextRank.java:246-254,
   TF_IDF.java:176-184; TextRank.java:103-110).
-- J3 → the scored all-pairs join, both ways (SURVEY §4.2):
-  (a) ``crossJoin(broadcast(news))`` + the F5 kernel as a Catalyst
-  expression — correct but O(users·news); kept as the naive twin.
-  (b) the **inverted-index equi-join**: F5's score is
-  ``|k1∩k2| / (|k1|·|k2|)``, computable from exploded keyword rows —
-  equi-join on ``term``, count matches per (user, news), divide by the
-  per-side keyword counts. The cross product is algebraically
-  eliminated; only pairs sharing ≥1 term are ever materialized, which
-  also subsumes the P6 ``score > 0`` filter (TextRank.java:275-278).
+- J3 → :func:`scored_pairs`, the one scored all-pairs kernel (SURVEY
+  §4.2): an **inverted-index equi-join** on ``term`` between flat
+  ``(user_id, term, weight)`` and ``(news_id, term, weight)`` rows that
+  dispatches on ``Scene.similarity_algorithm`` exactly once, like the
+  reference's flatMap (TF_IDF.java:195-200, TextRank.java:267-274).
+  F5's ``|k1∩k2| / (|k1|·|k2|)`` becomes match counts over per-side
+  keyword counts, F8's dot product a quantized SUM of weight products.
+  The cross product is algebraically eliminated; only pairs sharing
+  ≥1 term are ever materialized, which also subsumes the P6
+  ``score > 0`` filter (TextRank.java:275-278). Its callers are
+  :func:`j3_scored_join` (here) and the TF-IDF / TextRank recommend()
+  pipelines (plans/pipelines.py). :func:`j3_scored_join_naive`
+  (``crossJoin(broadcast(news))`` + the F5 Catalyst kernel, O(users·
+  news)) and :func:`j3_scored_join_salted` (``(term, salt)`` join
+  key) stay separate twins hash-checked against the same oracle.
 - J4 → precision eval (absent ``PrecisionStats``, TextRank.java:354-368):
   explode recommendations, inner-join today's clicks on
   (user, news), aggregate (hits, total, precision).
 
-Scale notes (100 TB): J3(b) is THE scale path — shuffle keys are terms
-(bounded vocabulary × K keywords/doc), and the per-(user, news) result
-is sparse. Naive J3(a) materializes |users|·|news| rows per day and
-exists only as the cross-validation twin and bench contrast. The
-broadcast hints on the day-scoped sides (today's clickers, one day's
-news keywords) keep the big fact table shuffle-free.
+Scale notes (100 TB): the J3 equi-join is THE scale path — shuffle
+keys are terms (bounded vocabulary × K keywords/doc), and the
+per-(user, news) result is sparse. The naive twin materializes
+|users|·|news| rows per day and exists only as the cross-validation
+twin and bench contrast. The broadcast hints on the day-scoped sides
+(today's clickers, one day's news keywords) keep the big fact table
+shuffle-free.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SCENE, TODAY, Scene, SimilarityAlgorithm
 from ..functions.kernels import calculate_x_sql
 from ..registry import register
-from .quantize import ppm_value
+from .quantize import ppm_sum, ppm_value
 from ..sources import CLICKS_CTE, NEWS_CTE, TWEETS_CTE, clicks, news, tweets, with_ctes
 from .filters import leading_zone, trailing_zone
 from .tfidf import (
@@ -140,16 +147,86 @@ def j2_tweets_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------- J3
 
-def _news_window_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """News keywords (corpus-wide TF-IDF, a8) restricted to the news
-    eligible for today — the P4 leading zone (TextRank.java:258-262)."""
+def _news_window_keywords(
+    spark: SparkSession, sf_dir: str, kw: DataFrame
+) -> DataFrame:
+    """Keyword rows ``kw`` (keyed by ``news_id``) restricted to the news
+    eligible for today — the P4 leading zone (TextRank.java:258-262),
+    as a broadcast left-semi join on the news ids."""
     eligible = (
         news(spark, sf_dir)
         .filter(leading_zone(F.col("date"), TODAY, NUM_DAYS))
         .select("news_id")
     )
-    return a8_news_keywords_topk(spark, sf_dir).join(
-        F.broadcast(eligible), "news_id", "left_semi"
+    return kw.join(F.broadcast(eligible), "news_id", "left_semi")
+
+
+def scored_pairs(
+    user_kw: DataFrame, news_kw: DataFrame, scene: Scene = DEFAULT_SCENE
+) -> DataFrame:
+    """J3's one scored-pair kernel: ``(user_id, news_id, score)`` for
+    every pair sharing a keyword, from ``(user_id, term, weight)`` and
+    ``(news_id, term, weight)`` rows. The only place that branches on
+    ``scene.similarity_algorithm`` (enum SimilarityAlgorithm.java:6-9):
+
+    - COSINE_SIMILARITY → F5 ``calculateX`` = ``|k1∩k2| / (|k1|·|k2|)``
+      (CosineSimilarity.java:88-127) needs only the intersection size
+      and per-side keyword counts, so the all-pairs cross
+      (TextRank.java:258-279) collapses into an equi-join on ``term``.
+      The counts ride along as window columns on the SAME pass that
+      produced the keywords (the window shares the top-K partitioning,
+      so no extra exchange) — NOT as separate aggregate subtrees, which
+      would re-run the whole keyword chain (Catalyst does no cross-join
+      common-subplan elimination). A caller's semi-join keeps or drops
+      whole users/news, so each survivor's count is unchanged.
+    - EUCLIDEAN_DISTANCE → F8 ``compute`` (a shared-word dot product
+      despite the class name, EuclideanDistance.java:29-43):
+      ``Σ_{w∈k1∩k2} v1(w)·v2(w)`` is a sum over the term intersection,
+      so the same equi-join materializes exactly the contributing
+      (user, term, news) triples and a SUM replaces F5's count/divide —
+      no count windows, one exchange lighter. Each product is
+      FLOOR-quantized to micro-units and summed exactly
+      (:func:`~.quantize.ppm_sum`; a raw double SUM is partition-
+      order-dependent), then one division publishes the 6-dp score.
+      P6 ``score > 0`` (TF_IDF.java:201) is kept explicitly: a TF-IDF
+      weight is 0 when its term appears in every doc (idf = ln 1).
+
+    Broadcast hints are the caller's: a ``F.broadcast(news_kw)`` hint
+    survives the window and projection above it here."""
+    if scene.similarity_algorithm is SimilarityAlgorithm.EUCLIDEAN_DISTANCE:
+        return (
+            user_kw.select("user_id", "term", F.col("weight").alias("u_weight"))
+            .join(
+                news_kw.select("news_id", "term", F.col("weight").alias("n_weight")),
+                "term",
+            )
+            .groupBy("user_id", "news_id")
+            .agg(
+                (
+                    ppm_sum(F.col("u_weight") * F.col("n_weight")).cast("double")
+                    / F.lit(1000000.0)
+                ).alias("score")
+            )
+            .filter(F.col("score") > 0)
+        )
+    n_user = F.count("*").over(Window.partitionBy("user_id")).alias("n_user")
+    n_news = F.count("*").over(Window.partitionBy("news_id")).alias("n_news")
+    return (
+        user_kw.select("user_id", "term", n_user)
+        .join(news_kw.select("news_id", "term", n_news), "term")
+        .groupBy("user_id", "news_id")
+        .agg(
+            F.count("*").alias("inter"),
+            F.max("n_user").alias("n_user"),
+            F.max("n_news").alias("n_news"),
+        )
+        .select(
+            "user_id",
+            "news_id",
+            (F.col("inter").cast("double") / (F.col("n_user") * F.col("n_news"))).alias(
+                "score"
+            ),
+        )
     )
 
 
@@ -178,82 +255,29 @@ _J3_ORACLE = with_ctes(_J3_BODY, CLICKS_CTE, *_NEWS_KW_CHAIN, *_USER_KW_CHAIN)
 def j3_scored_join(
     spark: SparkSession, sf_dir: str, scene: Scene = DEFAULT_SCENE
 ) -> DataFrame:
-    """J3, inverted-index form (SURVEY §4.2) — the 100 TB path.
-
-    Dispatches on ``scene.similarity_algorithm`` exactly like the
-    reference's flatMap (TF_IDF.java:195-200, TextRank.java:267-274;
-    enum SimilarityAlgorithm.java:6-9): COSINE_SIMILARITY → F5
-    ``calculateX``, EUCLIDEAN_DISTANCE → F8 ``compute`` (a shared-word
-    dot product despite the class name, EuclideanDistance.java:29-43).
-    Both kernels collapse the reference's all-pairs cross into the same
-    term equi-join skeleton — see :func:`_j3_inverted_dot` for the F8
-    algebra. The registered entry is the default (cosine) scene;
-    ``j3_scored_join_dot`` registers the EUCLIDEAN_DISTANCE scene.
-
-    F5 ``calculateX`` = ``|k1∩k2| / (|k1|·|k2|)``
-    (CosineSimilarity.java:88-127) needs only the intersection size and
-    per-side keyword counts, so the all-pairs cross
-    (TextRank.java:258-279) collapses into an equi-join on ``term``:
-    only (user, news) pairs sharing a keyword are materialized, and the
-    P6 positive filter is satisfied by construction."""
-    if scene.similarity_algorithm is SimilarityAlgorithm.EUCLIDEAN_DISTANCE:
-        return _j3_inverted_dot(spark, sf_dir)
-    from pyspark.sql import Window
-
-    # Per-side keyword counts ride along as window columns computed on
-    # the SAME pass that produced the keywords (the window shares the
-    # top-K partitioning, so no extra exchange) — NOT as separate
-    # aggregate subtrees, which would re-run the whole keyword chain
-    # (Catalyst does no cross-join common-subplan elimination; the
-    # audit showed 22 file scans in the naively-structured plan).
-    # Semi-join BEFORE the count window: the window partitions by
-    # user_id and the semi-join keeps whole users, so each survivor's
-    # count is unchanged — but the window (a sort within partitions)
-    # now runs over today's clickers only, not the full user base.
-    user_kw = (
-        a7_user_keywords(spark, sf_dir)
-        .join(F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi")
-        .withColumn("n_user", F.count("*").over(Window.partitionBy("user_id")))
+    """J3, inverted-index form (SURVEY §4.2) — the 100 TB path: today's
+    clickers' TF-IDF keywords against the keywords of the news eligible
+    today, scored by :func:`scored_pairs` under ``scene``. The
+    registered entry is the default (cosine) scene;
+    ``j3_scored_join_dot`` registers the EUCLIDEAN_DISTANCE scene."""
+    user_kw = a7_user_keywords(spark, sf_dir).join(
+        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
     )
-    news_kw = _news_window_keywords(spark, sf_dir).withColumn(
-        "n_news", F.count("*").over(Window.partitionBy("news_id"))
+    news_kw = _news_window_keywords(
+        spark, sf_dir, a8_news_keywords_topk(spark, sf_dir)
     )
-
     # No broadcast hint on the term join: a forced broadcast serializes
     # the whole news-keyword build through the driver before the join
     # can start; AQE converts to broadcast at runtime when the built
     # side is actually small (measured marginally faster shuffled here,
     # and at 100 TB the news side of a wide window may not fit anyway).
-    return (
-        user_kw.select("user_id", "term", "n_user")
-        .join(news_kw.select("news_id", "term", "n_news"), "term")
-        .groupBy("user_id", "news_id")
-        .agg(
-            F.count("*").alias("inter"),
-            F.max("n_user").alias("n_user"),
-            F.max("n_news").alias("n_news"),
-        )
-        .select(
-            "user_id",
-            "news_id",
-            (F.col("inter").cast("double") / (F.col("n_user") * F.col("n_news"))).alias(
-                "score"
-            ),
-        )
-    )
+    return scored_pairs(user_kw, news_kw, scene)
 
 
-#: J3 under EUCLIDEAN_DISTANCE (F8): the dot product over shared terms
-#: is a SUM of per-term weight products, so it collapses into the SAME
-#: term equi-join as F5 — no per-side counts needed, just
-#: SUM(u.weight · n.weight) per (user, news). The reference's
-#: ``value > 0`` guard (TF_IDF.java:201) is kept explicitly: TF-IDF
-#: weights can be 0 when a term appears in every document (idf = ln 1).
-#: Hash-path discipline (round-10 review): a raw double SUM is
-#: partition-order-dependent, so each weight product is FLOOR-quantized
-#: to micro-unit BIGINTs and summed exactly (the cf_novelty_report /
-#: ml_cv_ridge_path pattern), with one mirrored division publishing
-#: the 6-dp score both engines agree on bit-for-bit.
+#: J3 under EUCLIDEAN_DISTANCE (F8, see :func:`scored_pairs`): the
+#: shared-term SUM of micro-unit-quantized weight products, exact BIGINT
+#: accumulation and one mirrored division, so both engines agree on the
+#: 6-dp score bit-for-bit; the ``value > 0`` guard is TF_IDF.java:201.
 _J3_DOT_BODY = f"""SELECT i.user_id, i.news_id, i.score
 FROM (
   SELECT u.user_id, n.news_id,
@@ -271,49 +295,12 @@ WHERE i.score > 0"""
 _J3_DOT_ORACLE = with_ctes(_J3_DOT_BODY, CLICKS_CTE, *_NEWS_KW_CHAIN, *_USER_KW_CHAIN)
 
 
-def _j3_inverted_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 scored join under F8 (EuclideanDistance.compute,
-    EuclideanDistance.java:29-43): ``Σ_{w∈k1∩k2} v1(w)·v2(w)``.
-
-    Same inverted-index skeleton as the F5 form — the dot product is a
-    sum over the term intersection, so the term equi-join materializes
-    exactly the contributing (user, term, news) triples and a
-    SUM aggregate replaces F5's count/divide. No count windows needed
-    (F8 ignores the per-side keyword-set sizes), so this plan is one
-    exchange LIGHTER than the cosine form. P6 ``score > 0``
-    (TF_IDF.java:201) kept explicitly: a weight is 0 when its term
-    appears in every doc of the corpus (idf = ln 1). The score is the
-    6-dp micro-unit sum (order-free exact BIGINT accumulation — see
-    the oracle note above), not a raw double SUM."""
-    from .quantize import ppm_sum
-
-    user_kw = a7_user_keywords(spark, sf_dir).join(
-        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
-    )
-    news_kw = _news_window_keywords(spark, sf_dir)
-    return (
-        user_kw.select("user_id", "term", F.col("weight").alias("u_weight"))
-        .join(
-            news_kw.select("news_id", "term", F.col("weight").alias("n_weight")),
-            "term",
-        )
-        .groupBy("user_id", "news_id")
-        .agg(
-            (
-                ppm_sum(F.col("u_weight") * F.col("n_weight")).cast("double")
-                / F.lit(1000000.0)
-            ).alias("score")
-        )
-        .filter(F.col("score") > 0)
-    )
-
-
 @register("j3_scored_join_dot", _J3_DOT_ORACLE)
 def j3_scored_join_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 with the reference's one config knob flipped: a
     ``Scene(similarity_algorithm=EUCLIDEAN_DISTANCE)`` routed through
-    the same :func:`j3_scored_join` dispatch a user would hit
-    (TF_IDF.java:195-200)."""
+    :func:`j3_scored_join` to the same :func:`scored_pairs` dispatch a
+    user would hit (TF_IDF.java:195-200)."""
     return j3_scored_join(spark, sf_dir, scene=_EUCLID_SCENE)
 
 
@@ -332,7 +319,7 @@ def j3_scored_join_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     news_maps = (
-        _news_window_keywords(spark, sf_dir)
+        _news_window_keywords(spark, sf_dir, a8_news_keywords_topk(spark, sf_dir))
         .groupBy("news_id")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("term", "weight"))).alias("n_kw")
@@ -375,8 +362,6 @@ def j3_scored_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffled-hash joins, stream-stream joins, engines without runtime
     re-planning) and makes the fan-out deterministic rather than
     runtime-dependent."""
-    from pyspark.sql import Window
-
     user_kw = (
         a7_user_keywords(spark, sf_dir)
         .join(F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi")
@@ -384,7 +369,7 @@ def j3_scored_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("salt", (F.col("user_id") % J3_SALT_R).cast("int"))
     )
     news_kw = (
-        _news_window_keywords(spark, sf_dir)
+        _news_window_keywords(spark, sf_dir, a8_news_keywords_topk(spark, sf_dir))
         .withColumn("n_news", F.count("*").over(Window.partitionBy("news_id")))
         .select(
             "news_id",
@@ -623,8 +608,6 @@ def j6_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three aggregates over the recommendation table (itself
     top-K-bounded) and one over the catalog — diagnostics cost nothing
     next to the recommender."""
-    from pyspark.sql import Window
-
     from .ranking import K, _scores, top_k_rows
 
     recs = top_k_rows(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import DEFAULT_SCENE, TODAY, Scene, SimilarityAlgorithm
+from ..config import DEFAULT_SCENE, TODAY, Scene
 from ..registry import register
 from ..sources import CLICKS_CTE, clicks, with_ctes
 from ..operators.joins import (
@@ -39,7 +39,9 @@ from ..operators.joins import (
     _J3_DOT_BODY,
     _NEWS_KW_CHAIN,
     _USER_KW_CHAIN,
+    _news_window_keywords,
     j3_scored_join,
+    scored_pairs,
     today_clickers,
 )
 from ..operators.ranking import global_top_k, ranked_list, top_k_rows
@@ -179,39 +181,14 @@ def textrank_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         p1_news_keywords_textrank,
     )
     from ..operators.filters import leading_zone
-    from ..sources import news
 
-    from pyspark.sql import Window
-
-    # sizes as window columns on the same pass — never separate
-    # aggregate subtrees that would re-run the pandas-UDF keyword
-    # extraction (see j3_scored_join)
-    user_kw = (
-        a3_user_keywords_textrank(spark, sf_dir)
-        .withColumn("n_user", F.count("*").over(Window.partitionBy("user_id")))
-        .join(F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi")
+    user_kw = a3_user_keywords_textrank(spark, sf_dir).join(
+        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
     )
     news_kw = p1_news_keywords_textrank(spark, sf_dir).filter(
         leading_zone(F.col("date"), TODAY, NUM_DAYS)
-    ).withColumn("n_news", F.count("*").over(Window.partitionBy("news_id")))
-
-    scored = (
-        user_kw.select("user_id", "term", "n_user")
-        .join(F.broadcast(news_kw.select("news_id", "term", "n_news")), "term")
-        .groupBy("user_id", "news_id")
-        .agg(
-            F.count("*").alias("inter"),
-            F.max("n_user").alias("n_user"),
-            F.max("n_news").alias("n_news"),
-        )
-        .select(
-            "user_id",
-            "news_id",
-            (
-                F.col("inter").cast("double") / (F.col("n_user") * F.col("n_news"))
-            ).alias("score"),
-        )
     )
+    scored = scored_pairs(user_kw, F.broadcast(news_kw))
     ranked = top_k_rows(scored, "user_id", [F.desc("score"), F.asc("news_id")], K)
     return ranked_list(ranked, "user_id").select(
         "user_id", F.lit(TODAY).cast("date").alias("date"), "news"
@@ -275,34 +252,9 @@ def tfidf_recommend_all_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.tfidf import a7_user_keywords, a8_news_keywords_topk
     from ..sources import news
 
-    from pyspark.sql import Window
-
-    user_kw = a7_user_keywords(spark, sf_dir).withColumn(
-        "n_user", F.count("*").over(Window.partitionBy("user_id"))
-    )
-    news_kw = a8_news_keywords_topk(spark, sf_dir).withColumn(
-        "n_news", F.count("*").over(Window.partitionBy("news_id"))
-    )
-
-    # scored pairs, once for the whole range (inverted-index J3 form;
-    # per-side sizes as window columns — see j3_scored_join)
-    scored = (
-        user_kw.select("user_id", "term", "n_user")
-        .join(F.broadcast(news_kw.select("news_id", "term", "n_news")), "term")
-        .groupBy("user_id", "news_id")
-        .agg(
-            F.count("*").alias("inter"),
-            F.max("n_user").alias("n_user"),
-            F.max("n_news").alias("n_news"),
-        )
-        .select(
-            "user_id",
-            "news_id",
-            (F.col("inter").cast("double") / (F.col("n_user") * F.col("n_news"))).alias(
-                "score"
-            ),
-        )
-    )
+    # scored pairs, once for the whole range (F5 inverted-index J3 form)
+    news_kw = a8_news_keywords_topk(spark, sf_dir)
+    scored = scored_pairs(a7_user_keywords(spark, sf_dir), F.broadcast(news_kw))
 
     # active (day, user) pairs across the range — flat A1 rows
     active = (
@@ -466,71 +418,22 @@ def textrank_pipeline_distributed(
     pipeline — tokenization, graphs, vote, semi-join, scoring, ranking
     — is hash-verified against one DuckDB query. Same plan skeleton,
     same scale properties as the UDF form."""
-    from pyspark.sql import Window
-
-    from ..operators.filters import leading_zone
     from ..operators.keywords import (
         a3_user_keywords_distributed,
         p1_news_keywords_distributed,
     )
-    from ..sources import news
 
-    user_kw = a3_user_keywords_distributed(spark, sf_dir).join(
-        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
+    # the vote score is the keyword weight F8 multiplies
+    user_kw = (
+        a3_user_keywords_distributed(spark, sf_dir)
+        .withColumnRenamed("score", "weight")
+        .join(F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi")
     )
-    news_dates = news(spark, sf_dir).select("news_id", "date")
-    news_kw = (
-        p1_news_keywords_distributed(spark, sf_dir)
-        .join(F.broadcast(news_dates), "news_id")
-        .filter(leading_zone(F.col("date"), TODAY, NUM_DAYS))
+    news_kw = p1_news_keywords_distributed(spark, sf_dir).withColumnRenamed(
+        "score", "weight"
     )
-    if scene.similarity_algorithm is SimilarityAlgorithm.EUCLIDEAN_DISTANCE:
-        # F8 branch (TextRank.java:267-274): dot product of vote scores
-        # over shared terms — no per-side count windows needed. Scores
-        # sum as micro-unit BIGINTs (order-free; see the oracle note).
-        from ..operators.quantize import ppm_sum
-
-        scored = (
-            user_kw.select("user_id", "term", F.col("score").alias("u_score"))
-            .join(
-                F.broadcast(
-                    news_kw.select("news_id", "term", F.col("score").alias("n_score"))
-                ),
-                "term",
-            )
-            .groupBy("user_id", "news_id")
-            .agg(
-                (
-                    ppm_sum(F.col("u_score") * F.col("n_score")).cast("double")
-                    / F.lit(1000000.0)
-                ).alias("score")
-            )
-            .filter(F.col("score") > 0)
-        )
-    else:
-        user_kw = user_kw.withColumn(
-            "n_user", F.count("*").over(Window.partitionBy("user_id"))
-        )
-        news_kw = news_kw.withColumn(
-            "n_news", F.count("*").over(Window.partitionBy("news_id"))
-        )
-        scored = (
-            user_kw.select("user_id", "term", "n_user")
-            .join(F.broadcast(news_kw.select("news_id", "term", "n_news")), "term")
-            .groupBy("user_id", "news_id")
-            .agg(
-                F.count("*").alias("inter"),
-                F.max("n_user").alias("n_user"),
-                F.max("n_news").alias("n_news"),
-            )
-            .select(
-                "user_id",
-                "news_id",
-                (
-                    F.col("inter").cast("double") / (F.col("n_user") * F.col("n_news"))
-                ).alias("score"),
-            )
-        )
+    news_kw = _news_window_keywords(spark, sf_dir, news_kw)
+    scored = scored_pairs(user_kw, F.broadcast(news_kw), scene)
     ranked = top_k_rows(scored, "user_id", [F.desc("score"), F.asc("news_id")], K)
     return ranked.select(
         "user_id",

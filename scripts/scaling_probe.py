@@ -4,7 +4,9 @@ and report the growth ratio against the 10x data-size steps.
 A query whose wall time grows ~linearly (ratio ~<= 10 per step, usually
 far less while fixed overhead dominates) is plan-shaped to survive the
 100x extrapolation; a super-linear ratio flags a shape that will not.
-Warm session, one untimed warmup of the smallest SF per query.
+Timing uses bench.py's warm-up (``bench.warm_session``, once per SF
+before the loop) and timed action (``bench.run_action``), build +
+execute, plus one untimed warm run of the smallest SF per query.
 
 Usage: python scripts/scaling_probe.py [query ...]
 """
@@ -44,22 +46,26 @@ DEFAULT = (
 
 
 def main() -> int:
-    import __spark_entry__ as entrymod
     from recommedation_system_under_flink_spark.session import get_spark
+
+    import __spark_entry__ as entrymod
+    import bench
 
     spark = get_spark(app_name="scaling_probe")
     qs = entrymod.queries()
     names = sys.argv[1:] or list(DEFAULT)
+    for sf in SFS:
+        bench.warm_session(spark, sf)
 
     print(f"{'query':34s} {'sf0.001':>8s} {'sf0.01':>8s} {'sf0.1':>8s} "
           f"{'r(0.01)':>8s} {'r(0.1)':>7s}")
     for name in names:
         fn = qs[name]
-        fn(spark, SFS[0]).count()  # warm the session/code paths
+        bench.run_action(name, fn(spark, SFS[0]))  # untimed warm run
         times = []
         for sf in SFS:
             t0 = time.time()
-            fn(spark, sf).count()
+            bench.run_action(name, fn(spark, sf))
             times.append(time.time() - t0)
         r1 = times[1] / times[0] if times[0] > 0 else float("nan")
         r2 = times[2] / times[1] if times[1] > 0 else float("nan")

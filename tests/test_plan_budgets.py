@@ -120,6 +120,13 @@ BUDGETS = {
     # pattern): any scan/exchange means the checkpoint was dropped
     "sim_neardup_pairs_lsh": (0, 0, False, False),
     "sim_dbscan_lsh": (0, 0, False, False),
+    # the two remaining daily_recs pipelines on the shared scored-pair
+    # kernel, measured at sf0.001: all-days 8/22 (its cartesians are
+    # the TF-IDF chains' 1-row corpus-size scalar broadcasts, as in
+    # a5), distributed TextRank 2/6 (its keyword chains end in
+    # checkpoints, so only the news and events scans remain)
+    "tfidf_recommend_all_days": (10, 27, True, True),
+    "textrank_pipeline_distributed": (3, 8, False, True),
 }
 
 #: Queries whose plans must contain ZERO single-partition Window nodes

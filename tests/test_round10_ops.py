@@ -79,6 +79,9 @@ def test_j3_dot_equals_naive_cross_kernel_twin(spark):
         j1_user_docs_semijoin,
         j3_scored_join_dot,
     )
+    from recommedation_system_under_flink_spark.operators.tfidf import (
+        a8_news_keywords_topk,
+    )
 
     user_maps = (
         j1_user_docs_semijoin(spark, SF_DIR)
@@ -86,7 +89,7 @@ def test_j3_dot_equals_naive_cross_kernel_twin(spark):
         .agg(F.map_from_entries(F.collect_list(F.struct("term", "weight"))).alias("u"))
     )
     news_maps = (
-        _news_window_keywords(spark, SF_DIR)
+        _news_window_keywords(spark, SF_DIR, a8_news_keywords_topk(spark, SF_DIR))
         .groupBy("news_id")
         .agg(F.map_from_entries(F.collect_list(F.struct("term", "weight"))).alias("n"))
     )
@@ -116,12 +119,16 @@ def test_j3_dot_matches_pure_python_kernel(spark):
         j1_user_docs_semijoin,
         j3_scored_join_dot,
     )
+    from recommedation_system_under_flink_spark.operators.tfidf import (
+        a8_news_keywords_topk,
+    )
 
     u_maps: dict[int, dict[str, float]] = {}
     for r in j1_user_docs_semijoin(spark, SF_DIR).collect():
         u_maps.setdefault(r["user_id"], {})[r["term"]] = r["weight"]
     n_maps: dict[int, dict[str, float]] = {}
-    for r in _news_window_keywords(spark, SF_DIR).collect():
+    news_kw = a8_news_keywords_topk(spark, SF_DIR)
+    for r in _news_window_keywords(spark, SF_DIR, news_kw).collect():
         n_maps.setdefault(r["news_id"], {})[r["term"]] = r["weight"]
 
     got = {
