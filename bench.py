@@ -2,10 +2,14 @@
 
 Prints ONE JSON line:
 ``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-"failed": {...}}``
+"failed": {...}, "warmup": [...]}``
 
 ``value`` is the total wall-clock over the headline set; per-query
-seconds are in ``queries``. A query that raises or leaves a cached
+seconds are in ``queries``. ``warmup`` names the untimed warm-up steps
+run before the first timed query (:func:`warm_session`): a query's
+time is comparable across runs only when both ran the same steps
+(``python_datasource`` moved s21's DataSource spin-up out of its
+time). A query that raises or leaves a cached
 frame in the session is listed in ``failed`` (and the exit status is
 1). Includes the J3 naive-vs-inverted-index contrast BASELINE.md's
 derived targets call for.
@@ -230,7 +234,7 @@ def main() -> int:
     spark = get_spark(app_name="bench")
     qs = entrymod.queries()
 
-    warm_session(spark, sf_dir)
+    warmup = warm_session(spark, sf_dir)
 
     timings: dict[str, float] = {}
     failed: dict[str, str] = {}
@@ -259,31 +263,37 @@ def main() -> int:
         "queries": timings,
         "sf": sf,
         "failed": failed,
+        "warmup": warmup,
     }
     print(json.dumps(out))
     return 1 if failed else 0
 
 
-def warm_session(spark, sf_dir: str) -> None:
+def warm_session(spark, sf_dir: str) -> list[str]:
     """Warm-cluster methodology: first-touch costs (JIT of codegen
     stages, parquet footer reads, Arrow Python-worker pool spin-up)
     are session-scoped, not per-query — pay them once up front so
     per-query timings measure the plan, exactly as a long-running
     cluster would behave. Every harness that times queries calls this
-    before its first timed action."""
+    before its first timed action. Returns the names of the steps run,
+    in order."""
     from pyspark.sql import functions as F
 
+    steps = []
     for t in ("events", "documents", "embeddings", "lineitem", "orders"):
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             spark.read.parquet(p).count()
+            steps.append(f"parquet:{t}")
     warm = spark.range(100_000).withColumn("g", F.col("id") % 7)
     warm.groupBy("g").count().count()  # shuffle + hash-agg codegen
+    steps.append("shuffle_agg")
     from pyspark.sql import Window
 
     warm.withColumn(
         "r", F.row_number().over(Window.partitionBy("g").orderBy("id"))
     ).count()  # window codegen
+    steps.append("window")
     from pyspark.sql.functions import pandas_udf
 
     # no annotations: postponed-evaluation strings (future import above)
@@ -294,6 +304,7 @@ def warm_session(spark, sf_dir: str) -> None:
     _noop = pandas_udf(_noop_impl, "long")
 
     warm.select(_noop("id")).count()  # Arrow + Python worker pool
+    steps.append("pandas_udf")
 
     # Python DataSource machinery (r13): the first scan through a
     # registered pyspark.sql.datasource pays ~7 s of session-scoped
@@ -307,6 +318,8 @@ def warm_session(spark, sf_dir: str) -> None:
     from recommedation_system_under_flink_spark.sources.pysource import clickgen
 
     clickgen(spark, rows=8).count()
+    steps.append("python_datasource")
+    return steps
 
 
 def run_action(name: str, df) -> None:

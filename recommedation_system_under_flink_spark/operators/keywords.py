@@ -8,14 +8,30 @@ The TextRank pipeline computes keywords inline, not via TF-IDF:
   full-clique co-occurrence graph over ALL of a user's tweets, then
   vote. A custom per-group aggregation (UDAF) → ``applyInPandas``.
 
-Both run the pure-Python bodies from functions/text.py inside
-Arrow-batched pandas UDFs — the graphs are per-document/per-user and
-tiny, so iteration stays local (SURVEY §4.2 "Iteration": no GraphFrames,
-no distributed loop). Not SQL-expressible → rows-only driver checks;
-pytest fixtures cover the numeric semantics (tests/test_text.py).
+Each has two forms.
 
-Output shape is FLAT (doc, term, weight) rows, not maps: flat rows feed
-the inverted-index J3 directly and keep the driver hash order-stable.
+- **UDF form** (``*_textrank``, ``a3_user_keywords_windowed``): the
+  pure-Python bodies from functions/text.py inside Arrow-batched pandas
+  UDFs, keeping the reference's early-exit vote. The graphs are
+  per-document/per-user and tiny, so iteration stays local (SURVEY §4.2
+  "Iteration": no GraphFrames, no distributed loop). Not
+  SQL-expressible → rows-only gate checks; pytest fixtures cover the
+  numeric semantics (tests/test_text.py). :func:`a3_textrank_from`
+  runs the A3 merge over any ``(keys..., content)`` frame.
+- **Distributed form** (``*_distributed``): no Python UDF in the graph
+  build — Catalyst tokens and edges, then :func:`vote_fixed_rounds`
+  (``TEXTRANK_SQL_ITERS`` rounds in one Arrow kernel, quantized top-N),
+  hash-verified against DuckDB twins. Two frame-taking helpers hold
+  the chains: :func:`p1_keywords_from` over any ``(news_id, content)``
+  frame and :func:`a3_keywords_from` over any ``(key, tweet_id,
+  content)`` frame. Every stage is keyed by the document or user, so a
+  caller that needs only some keys (today's clickers, the leading-zone
+  news) filters the INPUT and gets exactly those keys' rows of the
+  full output — the distributed TextRank pipeline relies on this.
+
+Output shape is FLAT (doc, term, weight|score) rows, not maps: flat
+rows feed the inverted-index J3 directly and keep the output hash
+order-stable.
 
 Scale notes (100 TB): P1 is embarrassingly parallel (mapInPandas-style,
 no shuffle; cost is the Python boundary, amortized by Arrow batches).
@@ -35,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import DEFAULT_SCENE
+from ..config import DEFAULT_SCENE, TODAY
 from ..functions.text import extract_keywords_clique, extract_keywords_windowed
 from . import bsp
 from ..registry import register
@@ -74,11 +90,13 @@ def p1_news_keywords_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("a3_user_keywords_textrank")  # UDAF → rows-only check
-def a3_user_keywords_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 (TextRank.java:111-128): per-user clique-graph TextRank over
-    all the user's tweets — grouped-map ``applyInPandas``, one shuffle
-    on user_id."""
+def a3_textrank_from(
+    rows: DataFrame, keys: tuple[str, ...] = ("user_id",)
+) -> DataFrame:
+    """A3 clique-graph TextRank over any ``(keys..., content)`` frame:
+    one ``applyInPandas`` group per key tuple, all of its contents
+    merged into one graph, the reference's early-exit vote →
+    ``(keys..., term, weight)``."""
     scene = DEFAULT_SCENE
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -91,18 +109,26 @@ def a3_user_keywords_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return pd.DataFrame(
             {
-                "user_id": pdf["user_id"].iloc[0],
+                **{k: pdf[k].iloc[0] for k in keys},
                 "term": list(kws.keys()),
                 "weight": list(kws.values()),
             }
         )
 
+    key_ddl = ", ".join(f"{k} {rows.schema[k].dataType.simpleString()}" for k in keys)
     return (
-        tweets(spark, sf_dir)
-        .select("user_id", "content")
-        .groupBy("user_id")
-        .applyInPandas(merge, "user_id long, term string, weight double")
+        rows.select(*keys, "content")
+        .groupBy(*keys)
+        .applyInPandas(merge, f"{key_ddl}, term string, weight double")
     )
+
+
+@register("a3_user_keywords_textrank")  # UDAF → rows-only check
+def a3_user_keywords_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A3 (TextRank.java:111-128): per-user clique-graph TextRank over
+    all the user's tweets — grouped-map ``applyInPandas``, one shuffle
+    on user_id."""
+    return a3_textrank_from(tweets(spark, sf_dir))
 
 
 @register("a3_user_keywords_windowed")  # UDAF → rows-only check
@@ -119,41 +145,25 @@ def a3_user_keywords_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     than ``days`` separate scans of the corpus; the per-group graph
     stays vocabulary-bounded exactly as in :func:`a3_user_keywords_textrank`.
     """
+    served = _served_tweets(tweets(spark, sf_dir))
+    return a3_textrank_from(served, keys=("day", "user_id"))
+
+
+def _served_tweets(tw: DataFrame) -> DataFrame:
+    """Tweets replicated to each loop day they serve: a tweet dated
+    ``t`` feeds days ``[t, t+num_days-1]`` clipped to the loop range
+    ``[from_date, TODAY]`` → ``(day, tweet_id, user_id, content)``."""
     scene = DEFAULT_SCENE
-    from ..config import TODAY
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        kws = extract_keywords_clique(
-            pdf["content"].tolist(),
-            scene.num_user_keywords,
-            scene.friction,
-            scene.max_iterates,
-            scene.min_difference,
-        )
-        return pd.DataFrame(
-            {
-                "day": pdf["day"].iloc[0],
-                "user_id": pdf["user_id"].iloc[0],
-                "term": list(kws.keys()),
-                "weight": list(kws.values()),
-            }
-        )
-
     lo = F.lit(scene.from_date.isoformat()).cast("date")
     hi = F.lit(TODAY.isoformat()).cast("date")
     last_served = F.date_add(F.col("date"), scene.num_days - 1)
-    return (
-        tweets(spark, sf_dir)
-        .filter((F.col("date") <= hi) & (last_served >= lo))
-        .select(
-            F.explode(
-                F.sequence(F.greatest(F.col("date"), lo), F.least(last_served, hi))
-            ).alias("day"),
-            "user_id",
-            "content",
-        )
-        .groupBy("day", "user_id")
-        .applyInPandas(merge, "day date, user_id long, term string, weight double")
+    return tw.filter((F.col("date") <= hi) & (last_served >= lo)).select(
+        F.explode(
+            F.sequence(F.greatest(F.col("date"), lo), F.least(last_served, hi))
+        ).alias("day"),
+        "tweet_id",
+        "user_id",
+        "content",
     )
 
 
@@ -166,26 +176,26 @@ def a3_user_keywords_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXTRANK_SQL_ITERS = 5
 
 
-def tr_positions_from(docs: DataFrame) -> DataFrame:
-    """(news_id, i, term) from any (news_id, content) frame:
-    position-indexed tokens, positions taken in the stopword-FILTERED
-    list exactly as functions.text.tokenize returns it. Factored out of
-    the news-table path so property tests can drive the same code with
-    synthetic documents."""
+def _content_tokens():
+    """Lower-cased ``content`` split on the shared token regex, empty
+    strings and stopwords dropped — functions.text.tokenize as a
+    Catalyst expression."""
     from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
 
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    toks = F.filter(
+    return F.filter(
         F.split(F.lower(F.col("content")), TOKEN_SPLIT_REGEX),
         lambda t: (t != "") & ~F.array_contains(stop, t),
     )
-    return docs.select("news_id", toks.alias("ts")).select(
+
+
+def tr_positions_from(docs: DataFrame) -> DataFrame:
+    """(news_id, i, term) from any (news_id, content) frame:
+    position-indexed tokens, positions taken in the stopword-FILTERED
+    list exactly as functions.text.tokenize returns it."""
+    return docs.select("news_id", _content_tokens().alias("ts")).select(
         "news_id", F.posexplode("ts").alias("i", "term")
     )
-
-
-def _tr_positions(spark: SparkSession, sf_dir: str):
-    return tr_positions_from(news(spark, sf_dir).select("news_id", "content"))
 
 
 def _p1_kw_ctes(prefix: str = "") -> list[str]:
@@ -272,24 +282,29 @@ def _vote_sql(key: str, n_top: int, prefix: str = "") -> list[str]:
 
 @register("p1_news_keywords_distributed", _textrank_sql_oracle())
 def p1_news_keywords_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1 TextRank as a **fully distributed Catalyst computation** — no
-    Python UDF anywhere: positional tokens → windowed co-occurrence
-    edges via a position-band self-join → ``TEXTRANK_SQL_ITERS`` vote
-    rounds as join+aggregate passes → quantized per-doc top-N.
+    """P1 TextRank as a **fully distributed Catalyst computation** over
+    the whole news table — :func:`p1_keywords_from` on every
+    ``(news_id, content)``.
 
     The UDF form (:func:`p1_news_keywords_textrank`) keeps the
     reference's early-exit semantics and is the right choice when docs
     fit a task; THIS form is the scale path for documents/graphs too
     large for one task and is hash-verified end-to-end against a DuckDB
     twin (the UDF form can only be rows-only checked). Parity between
-    the two is pytest-asserted at fixed iterations.
+    the two is pytest-asserted at fixed iterations."""
+    return p1_keywords_from(news(spark, sf_dir))
 
-    Scale: every stage keys on (news_id, term) — high-cardinality,
-    uniform; the vote loop is K bounded shuffles (same BSP family as
-    operators/graph.py). Edges/vocab persist across rounds (deg is
-    derived in the per-round neighbor map, not a separate relation);
-    score lineage stays K-deep."""
-    pos = _tr_positions(spark, sf_dir)
+
+def p1_keywords_from(docs: DataFrame) -> DataFrame:
+    """Distributed P1 over any ``(news_id, content)`` frame: positional
+    tokens → windowed co-occurrence edges → ``TEXTRANK_SQL_ITERS`` vote
+    rounds → quantized per-doc top-N ``(news_id, term, score)``.
+
+    Every stage keys on the doc, so filtering ``docs`` yields exactly
+    the kept docs' rows of the unfiltered result. Scale: every stage
+    keys on (news_id, term) — high-cardinality, uniform; edges and
+    vocab persist across the rounds of :func:`vote_fixed_rounds`."""
+    pos = tr_positions_from(docs)
     edges = bsp.persist(windowed_edges(pos))
     vocab = bsp.persist(pos.select("news_id", "term").distinct())
     return vote_fixed_rounds(edges, vocab, "news_id", DEFAULT_SCENE.num_news_keywords)
@@ -482,7 +497,7 @@ def vote_fixed_rounds(
     # score(n)/deg(n) lookup evaluated interpreted, and the map build
     # re-collected the full per-key state each round. All rounds now
     # run in ONE Arrow pass over the key-partitioned adjacency
-    # (`_vote_rounds_kernel`): each task loads its partition's docs
+    # (`_vote_rounds_arrow`): each task loads its partition's docs
     # once, flattens the neighbor lists, and iterates the vote as
     # vectorized numpy over the flat edge arrays. Float results are
     # BIT-identical to the fold (pinned in tests/test_round13_opt.py):
@@ -560,29 +575,28 @@ def _a3_sql_oracle() -> str:
 @register("a3_user_keywords_distributed", _a3_sql_oracle())
 def a3_user_keywords_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 (per-user clique-graph TextRank) as a fully distributed
-    Catalyst computation — the scale path for users whose accumulated
+    Catalyst computation over every author — :func:`a3_keywords_from`
+    on the tweet table. The scale path for users whose accumulated
     vocabulary graph outgrows one ``applyInPandas`` group, and the
     oracle-checkable twin of :func:`a3_user_keywords_textrank` (which
-    keeps the reference's early-exit vote and stays rows-only).
+    keeps the reference's early-exit vote and stays rows-only)."""
+    return a3_keywords_from(tweets(spark, sf_dir))
+
+
+def a3_keywords_from(rows: DataFrame, key: str = "user_id") -> DataFrame:
+    """Distributed A3 over any ``(key, tweet_id, content)`` frame →
+    per-``key`` quantized top-N ``(key, term, score)``.
 
     Clique edges never materialize per-tweet token *pairs* beyond the
-    distinct set: distinct (tweet, term) first, then the pair self-join
-    on tweet_id, then distinct (user, w, n) — each stage an equi-join
-    shuffle on bounded keys. The vote loop is the shared
-    :func:`vote_fixed_rounds` BSP.
-    """
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
-
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    toks = F.filter(
-        F.split(F.lower(F.col("content")), TOKEN_SPLIT_REGEX),
-        lambda t: (t != "") & ~F.array_contains(stop, t),
-    )
-    ut = (
-        tweets(spark, sf_dir)
-        .select("user_id", "tweet_id", F.explode(toks).alias("term"))
-        .distinct()
-    )
+    distinct set: distinct (key, tweet, term) first, then the pair
+    self-join on (key, tweet_id), then distinct (key, w, n) — each
+    stage an equi-join shuffle on bounded keys. The vote loop is the
+    shared :func:`vote_fixed_rounds` BSP. Every stage keys on ``key``,
+    so filtering ``rows`` yields exactly the kept keys' rows of the
+    unfiltered result."""
+    ut = rows.select(
+        key, "tweet_id", F.explode(_content_tokens()).alias("term")
+    ).distinct()
     a = ut.alias("a")
     b = ut.alias("b")
     # a.term < b.term halves the self-join output and the distinct
@@ -592,11 +606,12 @@ def a3_user_keywords_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = (
         a.join(
             b,
-            (F.col("a.tweet_id") == F.col("b.tweet_id"))
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col("a.tweet_id") == F.col("b.tweet_id"))
             & (F.col("a.term") < F.col("b.term")),
         )
         .select(
-            F.col("a.user_id").alias("user_id"),
+            F.col(f"a.{key}").alias(key),
             F.col("a.term").alias("w"),
             F.col("b.term").alias("n"),
         )
@@ -604,7 +619,7 @@ def a3_user_keywords_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = bsp.persist(
         und.select(
-            "user_id",
+            key,
             F.explode(
                 F.array(
                     F.struct(F.col("w"), F.col("n")),
@@ -612,10 +627,10 @@ def a3_user_keywords_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("e"),
         )
-        .select("user_id", "e.w", "e.n")
+        .select(key, "e.w", "e.n")
     )
-    vocab = bsp.persist(ut.select("user_id", "term").distinct())
-    return vote_fixed_rounds(edges, vocab, "user_id", DEFAULT_SCENE.num_user_keywords)
+    vocab = bsp.persist(ut.select(key, "term").distinct())
+    return vote_fixed_rounds(edges, vocab, key, DEFAULT_SCENE.num_user_keywords)
 
 
 def _a3_windowed_sql_oracle() -> str:
@@ -624,7 +639,6 @@ def _a3_windowed_sql_oracle() -> str:
     keyed on a synthesized ``(day, user)`` long (``epoch_day·10⁶ +
     user_id`` — the shared vote CTEs take one key column), decomposed
     back at the end."""
-    from ..config import TODAY
     from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
     from ..sources import TWEETS_CTE, with_ctes
 
@@ -673,81 +687,19 @@ def a3_user_keywords_windowed_distributed(
 ) -> DataFrame:
     """The all-days windowed A3 (every loop day × trailing tweet
     window) in fully distributed form: tweet→serving-day replication
-    (bounded ×num_days explode, the daily-loop amortization), clique
-    edges per (day, user), and the shared fixed-round vote — zero
-    UDFs, whole thing hash-verified. The (day, user) key is synthesized
-    as one long (``epoch_day·10⁶ + user_id``) so the shared vote core
-    and its CTE twin stay single-key."""
-    from ..config import TODAY
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
-
-    scene = DEFAULT_SCENE
-    lo = F.lit(scene.from_date.isoformat()).cast("date")
-    hi = F.lit(TODAY.isoformat()).cast("date")
-    last_served = F.date_add(F.col("date"), scene.num_days - 1)
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    toks = F.filter(
-        F.split(F.lower(F.col("content")), TOKEN_SPLIT_REGEX),
-        lambda t: (t != "") & ~F.array_contains(stop, t),
+    (bounded ×num_days explode, the daily-loop amortization), then
+    :func:`a3_keywords_from` keyed per (day, user) — zero UDFs, whole
+    thing hash-verified. The (day, user) key is synthesized as one long
+    (``epoch_day·10⁶ + user_id``) so the shared vote core and its CTE
+    twin stay single-key."""
+    epoch = F.lit("1970-01-01").cast("date")
+    day_key = F.datediff(F.col("day"), epoch).cast("long") * 1_000_000
+    served = _served_tweets(tweets(spark, sf_dir)).select(
+        (day_key + F.col("user_id")).alias("duk"), "tweet_id", "content"
     )
-    served = (
-        tweets(spark, sf_dir)
-        .filter((F.col("date") <= hi) & (last_served >= lo))
-        .select(
-            F.explode(
-                F.sequence(F.greatest(F.col("date"), lo), F.least(last_served, hi))
-            ).alias("day"),
-            "tweet_id",
-            "content",
-            "user_id",
-        )
-        .select(
-            (
-                F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")).cast(
-                    "long"
-                )
-                * 1_000_000
-                + F.col("user_id")
-            ).alias("duk"),
-            "tweet_id",
-            "content",
-        )
-    )
-    ut = served.select("duk", "tweet_id", F.explode(toks).alias("term")).distinct()
-    a = ut.alias("a")
-    b = ut.alias("b")
-    # a.term < b.term: undirected-pair dedup (half the self-join output
-    # and distinct shuffle), both directions emitted after — same
-    # rewrite as windowed_edges / a3 (round 4).
-    und = (
-        a.join(
-            b,
-            (F.col("a.duk") == F.col("b.duk"))
-            & (F.col("a.tweet_id") == F.col("b.tweet_id"))
-            & (F.col("a.term") < F.col("b.term")),
-        )
-        .select(F.col("a.duk").alias("duk"), F.col("a.term").alias("w"), F.col("b.term").alias("n"))
-        .distinct()
-    )
-    edges = bsp.persist(
-        und.select(
-            "duk",
-            F.explode(
-                F.array(
-                    F.struct(F.col("w"), F.col("n")),
-                    F.struct(F.col("n").alias("w"), F.col("w").alias("n")),
-                )
-            ).alias("e"),
-        )
-        .select("duk", "e.w", "e.n")
-    )
-    vocab = bsp.persist(ut.select("duk", "term").distinct())
-    kw = vote_fixed_rounds(edges, vocab, "duk", scene.num_user_keywords)
+    kw = a3_keywords_from(served, key="duk")
     return kw.select(
-        F.date_add(
-            F.lit("1970-01-01").cast("date"),
-            (F.col("duk") / 1_000_000).cast("int"),
-        ).alias("day"),
+        F.date_add(epoch, (F.col("duk") / 1_000_000).cast("int")).alias("day"),
         (F.col("duk") % 1_000_000).alias("user_id"),
         "term",
         "score",

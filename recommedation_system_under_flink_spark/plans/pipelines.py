@@ -32,18 +32,18 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_SCENE, TODAY, Scene
 from ..registry import register
-from ..sources import CLICKS_CTE, clicks, with_ctes
+from ..sources import CLICKS_CTE, clicks, news, tweets, with_ctes
 from ..operators.joins import (
     _EUCLID_SCENE,
     _J3_BODY,
     _J3_DOT_BODY,
     _NEWS_KW_CHAIN,
     _USER_KW_CHAIN,
-    _news_window_keywords,
     j3_scored_join,
     scored_pairs,
     today_clickers,
 )
+from ..operators.filters import leading_zone
 from ..operators.ranking import global_top_k, ranked_list, top_k_rows
 
 K = DEFAULT_SCENE.num_recommendations
@@ -170,21 +170,25 @@ def tfidf_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------------- TextRank
 
+def _clickers_tweets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J1 on the A3 input: the tweets of users who clicked today."""
+    return tweets(spark, sf_dir).join(
+        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
+    )
+
+
 @register("textrank_pipeline")  # UDF keywords → rows-only check
 def textrank_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank recommend() end-to-end for today (TextRank.java:220-312):
     P1/A3 TextRank keywords → inverted-index scored join (F5 needs only
     set sizes, so UDF keyword rows slot straight in) → T1 top-K
     truncation (TextRank.java:294-296)."""
-    from ..operators.keywords import (
-        a3_user_keywords_textrank,
-        p1_news_keywords_textrank,
-    )
-    from ..operators.filters import leading_zone
+    from ..operators.keywords import a3_textrank_from, p1_news_keywords_textrank
 
-    user_kw = a3_user_keywords_textrank(spark, sf_dir).join(
-        F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi"
-    )
+    # only today's clickers' tweets reach the Python A3 (Catalyst cannot
+    # push the semi-join below FlatMapGroupsInPandas); the news filter
+    # reaches the scan below the P1 UDF on its own
+    user_kw = a3_textrank_from(_clickers_tweets(spark, sf_dir))
     news_kw = p1_news_keywords_textrank(spark, sf_dir).filter(
         leading_zone(F.col("date"), TODAY, NUM_DAYS)
     )
@@ -250,7 +254,6 @@ def tfidf_recommend_all_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day user keyword files from trailing tweets, TextRank.java:246).
     """
     from ..operators.tfidf import a7_user_keywords, a8_news_keywords_topk
-    from ..sources import news
 
     # scored pairs, once for the whole range (F5 inverted-index J3 form)
     news_kw = a8_news_keywords_topk(spark, sf_dir)
@@ -408,31 +411,37 @@ def textrank_pipeline_distributed(
     spark: SparkSession, sf_dir: str, scene: Scene = DEFAULT_SCENE
 ) -> DataFrame:
     """TextRank recommend() end-to-end with the **distributed** keyword
-    twins (no Python UDF anywhere): Catalyst P1/A3 fixed-round TextRank
-    → J1 semi-join on today's clickers → inverted-index scored join
-    (F5: ``inter / (n_user · n_news)``) → T1 top-K → recommendations.
+    twins (no Python UDF anywhere), in stage order:
+
+    1. J1 + P4 on the INPUTS — today's clickers' tweets (tweets ⋉
+       broadcast clickers) and the leading-zone news (TextRank.java:
+       246-262);
+    2. Catalyst A3/P1 fixed-round TextRank over just those rows
+       (:func:`a3_keywords_from`, :func:`p1_keywords_from`), each chain
+       ending in a checkpoint;
+    3. inverted-index scored join (F5: ``inter / (n_user · n_news)``,
+       or F8 under the euclidean scene) → T1 top-K.
+
+    The restrictions sit below the vote because the vote's checkpoint
+    is a barrier Catalyst cannot push a filter through, and every vote
+    stage is keyed by the user or document, so voting on the eligible
+    rows alone gives exactly their rows of the all-corpus vote
+    (tests/test_scored_pairs.py pins this).
 
     The UDF pipeline (:func:`textrank_pipeline`) is reference-faithful
     (early-exit vote) and rows-only checkable; THIS twin trades the
     early exit for a pinned iteration count and in exchange the ENTIRE
     pipeline — tokenization, graphs, vote, semi-join, scoring, ranking
-    — is hash-verified against one DuckDB query. Same plan skeleton,
-    same scale properties as the UDF form."""
-    from ..operators.keywords import (
-        a3_user_keywords_distributed,
-        p1_news_keywords_distributed,
-    )
+    — is hash-verified against one DuckDB query."""
+    from ..operators.keywords import a3_keywords_from, p1_keywords_from
 
     # the vote score is the keyword weight F8 multiplies
-    user_kw = (
-        a3_user_keywords_distributed(spark, sf_dir)
-        .withColumnRenamed("score", "weight")
-        .join(F.broadcast(today_clickers(spark, sf_dir)), "user_id", "left_semi")
-    )
-    news_kw = p1_news_keywords_distributed(spark, sf_dir).withColumnRenamed(
+    user_kw = a3_keywords_from(_clickers_tweets(spark, sf_dir)).withColumnRenamed(
         "score", "weight"
     )
-    news_kw = _news_window_keywords(spark, sf_dir, news_kw)
+    news_kw = p1_keywords_from(
+        news(spark, sf_dir).filter(leading_zone(F.col("date"), TODAY, NUM_DAYS))
+    ).withColumnRenamed("score", "weight")
     scored = scored_pairs(user_kw, F.broadcast(news_kw), scene)
     ranked = top_k_rows(scored, "user_id", [F.desc("score"), F.asc("news_id")], K)
     return ranked.select(

@@ -5,6 +5,12 @@ meaningless in this environment's 1.9x steal band, so compare PER-QUERY
 MINIMA over a round's controls. Wall-clock minima still move with CPU
 steal; perfbench's CPU-time metrics (perfbench/README.md) do not.
 
+Each side also reports the distinct bench.py warm-up step lists its
+files ran (``"unrecorded"`` for files written before bench.py named
+them); ``warmup_mixed`` is true when the files do not all share one,
+since a query timed after different warm-ups (s21 before and after the
+``python_datasource`` step) is not comparable.
+
 Usage::
 
     python scripts/bench_compare.py BENCH_r11_control_*.json --vs BENCH_r10_control_*.json
@@ -16,20 +22,23 @@ import argparse
 import json
 
 
-def _minima(paths: list[str]) -> tuple[dict, int]:
+def _minima(paths: list[str]) -> tuple[dict, int, set]:
     mins: dict[str, float] = {}
     used = 0
+    warmups: set[str] = set()
     for p in paths:
         with open(p) as f:
             d = json.load(f)
+        d = d.get("parsed", d)  # a bench.py line wrapped with run metadata
         q = d.get("queries")
         if not q:
             continue
         used += 1
+        warmups.add(",".join(d["warmup"]) if "warmup" in d else "unrecorded")
         for k, v in q.items():
             if k not in mins or v < mins[k]:
                 mins[k] = v
-    return mins, used
+    return mins, used, warmups
 
 
 def main() -> int:
@@ -40,8 +49,8 @@ def main() -> int:
                     help="report queries at or above this ratio")
     args = ap.parse_args()
 
-    new, n_new = _minima(args.new)
-    old, n_old = _minima(args.vs)
+    new, n_new, warm_new = _minima(args.new)
+    old, n_old, warm_old = _minima(args.vs)
     common = sorted(set(new) & set(old))
     tot_new = sum(new[k] for k in common)
     tot_old = sum(old[k] for k in common)
@@ -53,6 +62,9 @@ def main() -> int:
     print(json.dumps({
         "controls_used_new": n_new,
         "controls_used_old": n_old,
+        "warmup_new": sorted(warm_new),
+        "warmup_old": sorted(warm_old),
+        "warmup_mixed": len(warm_new | warm_old) > 1,
         "common_queries": len(common),
         "total_new_sec": round(tot_new, 1),
         "total_old_sec": round(tot_old, 1),

@@ -123,10 +123,12 @@ BUDGETS = {
     # the two remaining daily_recs pipelines on the shared scored-pair
     # kernel, measured at sf0.001: all-days 8/22 (its cartesians are
     # the TF-IDF chains' 1-row corpus-size scalar broadcasts, as in
-    # a5), distributed TextRank 2/6 (its keyword chains end in
-    # checkpoints, so only the news and events scans remain)
+    # a5), distributed TextRank 0/3 — the clickers semi-join and the
+    # leading-zone news filter run below the votes, and both keyword
+    # chains end in checkpoints, so no scan may remain: a restriction
+    # moved back above a vote brings its news or events scan back
     "tfidf_recommend_all_days": (10, 27, True, True),
-    "textrank_pipeline_distributed": (3, 8, False, True),
+    "textrank_pipeline_distributed": (0, 3, False, True),
 }
 
 #: Queries whose plans must contain ZERO single-partition Window nodes

@@ -1,6 +1,8 @@
 """J3's one scored-pair kernel (``operators.joins.scored_pairs``) against
-the pure-Python F5/F8 kernels, and ground truth for the UDF TextRank
-pipeline, which the oracle gate checks by row count only.
+the pure-Python F5/F8 kernels, ground truth for the UDF TextRank
+pipeline, which the oracle gate checks by row count only, and the
+per-key independence of the distributed keyword helpers that lets the
+distributed TextRank pipeline restrict its inputs below the vote.
 """
 
 from __future__ import annotations
@@ -125,3 +127,46 @@ def test_textrank_pipeline_matches_pure_python_topk(spark):
     }
     assert got == want
     assert got
+
+
+def test_keyword_helpers_vote_per_key(spark):
+    """Voting on a subset of documents or users gives exactly those
+    keys' rows of the all-corpus vote: P1 over the leading-zone news
+    and A3 over today's clickers' tweets, the inputs
+    ``textrank_pipeline_distributed`` feeds them."""
+    from pyspark.sql import functions as F
+
+    from recommedation_system_under_flink_spark.operators.bsp import query_scope
+    from recommedation_system_under_flink_spark.operators.filters import (
+        leading_zone,
+    )
+    from recommedation_system_under_flink_spark.operators.keywords import (
+        a3_keywords_from,
+        a3_user_keywords_distributed,
+        p1_keywords_from,
+        p1_news_keywords_distributed,
+    )
+    from recommedation_system_under_flink_spark.plans.pipelines import (
+        _clickers_tweets,
+    )
+    from recommedation_system_under_flink_spark.sources import news
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    eligible = news(spark, SF_DIR).filter(
+        leading_zone(F.col("date"), TODAY, DEFAULT_SCENE.num_days)
+    )
+    with query_scope():
+        p1_sub = rows(p1_keywords_from(eligible))
+        a3_sub = rows(a3_keywords_from(_clickers_tweets(spark, SF_DIR)))
+    p1_all = rows(p1_news_keywords_distributed(spark, SF_DIR))
+    a3_all = rows(a3_user_keywords_distributed(spark, SF_DIR))
+
+    news_ids = {r["news_id"] for r in eligible.select("news_id").collect()}
+    users = {r["user_id"] for r in _clickers_tweets(spark, SF_DIR).collect()}
+    # non-empty proper subsets: the restriction must drop keys
+    assert p1_sub and len(p1_sub) < len(p1_all)
+    assert a3_sub and len(a3_sub) < len(a3_all)
+    assert p1_sub == [r for r in p1_all if r[0] in news_ids]
+    assert a3_sub == [r for r in a3_all if r[0] in users]
