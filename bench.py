@@ -2,16 +2,18 @@
 
 Prints ONE JSON line:
 ``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-"failed": {...}, "warmup": [...]}``
+"failed": {...}, "warmup": [...], "codegen_compiles": {...}}``
 
 ``value`` is the total wall-clock over the headline set; per-query
-seconds are in ``queries``. ``warmup`` names the untimed warm-up steps
-run before the first timed query (:func:`warm_session`): a query's
-time is comparable across runs only when both ran the same steps
-(``python_datasource`` moved s21's DataSource spin-up out of its
-time). A query that raises or leaves a cached
-frame in the session is listed in ``failed`` (and the exit status is
-1). Includes the J3 naive-vs-inverted-index contrast BASELINE.md's
+seconds are in ``queries``, and ``codegen_compiles`` counts the
+classes Spark's code generator compiled during each query's timed
+action (:func:`codegen_compiles`), a counter CPU steal cannot move.
+``warmup`` names the untimed warm-up steps run before the first timed
+query (:func:`warm_session`): a query's time is comparable across runs
+only when both ran the same steps (``python_datasource`` moved s21's
+DataSource spin-up out of its time). A query that raises or leaves a
+cached frame in the session is listed in ``failed`` (and the exit
+status is 1). Includes the J3 naive-vs-inverted-index contrast BASELINE.md's
 derived targets call for.
 
 Usage: ``python bench.py [sf_dir]`` (default $SPARK_GRAFT_SF_DIR or
@@ -237,15 +239,19 @@ def main() -> int:
     warmup = warm_session(spark, sf_dir)
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     failed: dict[str, str] = {}
     for name in HEADLINE:
         fn = qs.get(name)
         if fn is None:
             continue
         t0 = time.time()
-        err = None
+        err = n_compiled = None
         try:
-            run_action(name, fn(spark, sf_dir))
+            df = fn(spark, sf_dir)
+            c0 = codegen_compiles(spark)
+            run_action(name, df)
+            n_compiled = codegen_compiles(spark) - c0
         except Exception as e:  # noqa: BLE001
             err = f"{type(e).__name__}: {str(e)[:300]}"
         wall = round(time.time() - t0, 3)
@@ -255,6 +261,7 @@ def main() -> int:
             failed[name] = err
         else:
             timings[name] = wall
+            compiles[name] = n_compiled
 
     out = {
         "metric": "headline_queries_total_wall_sec",
@@ -264,6 +271,7 @@ def main() -> int:
         "sf": sf,
         "failed": failed,
         "warmup": warmup,
+        "codegen_compiles": compiles,
     }
     print(json.dumps(out))
     return 1 if failed else 0
@@ -330,6 +338,13 @@ def run_action(name: str, df) -> None:
     else:
         # count() executes the full plan without driver-side row transfer
         df.count()
+
+
+def codegen_compiles(spark) -> int:
+    """Classes compiled so far by Spark's code generator in this JVM
+    (``CodegenMetrics``; a generated-code cache hit compiles nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 if __name__ == "__main__":

@@ -34,11 +34,6 @@ from ..sources import CLICKS_CTE, NEWS_CTE, clicks, news, with_ctes
 NUM_DAYS = DEFAULT_SCENE.num_days
 
 
-def date_eq(c: Column, day: dt.date) -> Column:
-    """P2."""
-    return c == F.lit(day.isoformat()).cast("date")
-
-
 def trailing_zone(c: Column, today: dt.date, num_days: int) -> Column:
     """P3: DateZoneFilter(today, num_days, 0)."""
     start = today - dt.timedelta(days=num_days - 1)
@@ -49,13 +44,6 @@ def leading_zone(c: Column, today: dt.date, num_days: int) -> Column:
     """P4: DateZoneFilter(today, num_days, 1)."""
     end = today + dt.timedelta(days=num_days - 1)
     return c.between(F.lit(today.isoformat()).cast("date"), F.lit(end.isoformat()).cast("date"))
-
-
-def loop_range(c: Column, from_date: dt.date, today: dt.date) -> Column:
-    """P5: DateLoopFilter(gap, from, to, today)."""
-    return c.between(
-        F.lit(from_date.isoformat()).cast("date"), F.lit(today.isoformat()).cast("date")
-    )
 
 
 # ------------------------------------------------------------- queries

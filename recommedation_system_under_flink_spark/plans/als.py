@@ -156,10 +156,6 @@ FROM (
     return with_ctes(body, CLICKS_CTE, *ctes)
 
 
-def als1_oracle_sql() -> str:  # exported for tests
-    return _als1_oracle()
-
-
 @register("als_rank1_topk", _als1_oracle())
 def als_rank1_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Rank-1 ALS, exact-integer form** — the oracle-able twin of

@@ -296,25 +296,8 @@ def tfidf_recommend_all_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = top_k_rows(
         per_day, ["date", "user_id"], [F.desc("score"), F.asc("news_id")], K
     )
-    # FLAT ranked rows (driver-hashable); the nested per-(day, user)
-    # list shape is tfidf_recommend_all_days_lists
+    # FLAT ranked rows (driver-hashable)
     return ranked.select("date", "user_id", "news_id", "score", "rank")
-
-
-def tfidf_recommend_all_days_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-days recommendations in the reference's nested shape —
-    ``(date, user_id, news array<long>)``. NOT registered (array
-    column); the flat twin above is the compared form."""
-    ranked = tfidf_recommend_all_days(spark, sf_dir)
-    return (
-        ranked.groupBy("date", "user_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("rank", "news_id"))),
-                lambda s: s["news_id"],
-            ).alias("news")
-        )
-    )
 
 
 # ------------------------------------------------------------------- S5
@@ -460,19 +443,6 @@ def textrank_pipeline_distributed_dot(spark: SparkSession, sf_dir: str) -> DataF
     of vote scores), routed through the same dispatch as the cosine
     form."""
     return textrank_pipeline_distributed(spark, sf_dir, scene=_EUCLID_SCENE)
-
-
-def textrank_recommendations_distributed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Distributed TextRank recommend() in the reference's nested shape
-    — ``(user_id, date, news array<long>)`` (TextRank.java:289-293).
-    NOT registered (array column); the flat twin above is the compared
-    form."""
-    ranked = textrank_pipeline_distributed(spark, sf_dir)
-    return ranked_list(ranked, "user_id").select(
-        "user_id", F.lit(TODAY).cast("date").alias("date"), "news"
-    )
 
 
 # -------------------------------- hybrid rank fusion (content + CF)

@@ -11,6 +11,12 @@ them); ``warmup_mixed`` is true when the files do not all share one,
 since a query timed after different warm-ups (s21 before and after the
 ``python_datasource`` step) is not comparable.
 
+Each side's ``codegen_compiles`` totals, over the common queries, each
+query's minimum generated-class compile count (bench.py's
+``codegen_compiles``): a slowdown that compiles more is recompiling,
+not computing more. A side with a file written before bench.py counted
+compiles reports ``"unrecorded"``.
+
 Usage::
 
     python scripts/bench_compare.py BENCH_r11_control_*.json --vs BENCH_r10_control_*.json
@@ -22,8 +28,9 @@ import argparse
 import json
 
 
-def _minima(paths: list[str]) -> tuple[dict, int, set]:
+def _minima(paths: list[str]) -> tuple[dict, int, set, dict | None]:
     mins: dict[str, float] = {}
+    compiles: dict[str, int] | None = {}
     used = 0
     warmups: set[str] = set()
     for p in paths:
@@ -35,10 +42,24 @@ def _minima(paths: list[str]) -> tuple[dict, int, set]:
             continue
         used += 1
         warmups.add(",".join(d["warmup"]) if "warmup" in d else "unrecorded")
-        for k, v in q.items():
-            if k not in mins or v < mins[k]:
-                mins[k] = v
-    return mins, used, warmups
+        _min_into(mins, q)
+        if "codegen_compiles" not in d:
+            compiles = None
+        elif compiles is not None:
+            _min_into(compiles, d["codegen_compiles"])
+    return mins, used, warmups, compiles
+
+
+def _min_into(acc: dict, values: dict) -> None:
+    for k, v in values.items():
+        if k not in acc or v < acc[k]:
+            acc[k] = v
+
+
+def _compiles(compiles: dict | None, common: list[str]):
+    if compiles is None:
+        return "unrecorded"
+    return sum(compiles.get(k, 0) for k in common)
 
 
 def main() -> int:
@@ -49,8 +70,8 @@ def main() -> int:
                     help="report queries at or above this ratio")
     args = ap.parse_args()
 
-    new, n_new, warm_new = _minima(args.new)
-    old, n_old, warm_old = _minima(args.vs)
+    new, n_new, warm_new, comp_new = _minima(args.new)
+    old, n_old, warm_old, comp_old = _minima(args.vs)
     common = sorted(set(new) & set(old))
     tot_new = sum(new[k] for k in common)
     tot_old = sum(old[k] for k in common)
@@ -69,6 +90,8 @@ def main() -> int:
         "total_new_sec": round(tot_new, 1),
         "total_old_sec": round(tot_old, 1),
         "ratio": round(tot_new / tot_old, 3) if tot_old else None,
+        "codegen_compiles_new": _compiles(comp_new, common),
+        "codegen_compiles_old": _compiles(comp_old, common),
         "flagged": [
             {"query": k, "ratio": round(r, 3),
              "new_sec": new[k], "old_sec": old[k]}

@@ -1,5 +1,6 @@
 """scripts/bench_compare.py reads bench.py lines, bare or wrapped with run
-metadata, and flags comparisons whose files ran different warm-ups."""
+metadata, flags comparisons whose files ran different warm-ups, and reports
+codegen compile counts where the files recorded them."""
 
 from __future__ import annotations
 
@@ -45,3 +46,14 @@ def test_unrecorded_or_different_warmup_is_mixed(tmp_path):
     assert got["warmup_mixed"]
     got = _compare(tmp_path, new, {**new, "warmup": WARMUP[:-1]})
     assert got["warmup_mixed"]
+
+
+def test_codegen_compiles_reported_or_unrecorded(tmp_path):
+    new = {"queries": {"q": 2.0, "r": 3.0}, "codegen_compiles": {"q": 4, "r": 20}}
+    old = {"queries": {"q": 2.0, "r": 1.0}, "codegen_compiles": {"q": 6, "r": 1}}
+    got = _compare(tmp_path, new, old)
+    assert got["codegen_compiles_new"] == 24
+    assert got["codegen_compiles_old"] == 7
+    got = _compare(tmp_path, new, {"queries": old["queries"]})
+    assert got["codegen_compiles_new"] == 24
+    assert got["codegen_compiles_old"] == "unrecorded"
