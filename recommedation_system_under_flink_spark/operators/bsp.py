@@ -26,38 +26,21 @@ O(|keys|), not O(|input|)). Each round's DataFrame references the
 previous round's plan; after K rounds the plan is K levels deep, and
 anything that recomputes it (a retry, a second action) replays the
 whole chain. ``checkpoint_result`` truncates the final lineage with an
-eager ``localCheckpoint()``; ``checkpoint_round`` does the same every
-``CHECKPOINT_EVERY`` rounds of an unbounded loop.
+eager ``localCheckpoint()``, which stores partitions on executors (not
+a reliable FS): right for these small results on one host.
 
-``localCheckpoint`` stores partitions on executors (not a reliable
-FS) — right for these small results and for local[32]. A 1000-executor
-deployment with executor loss in scope would flip ``RELIABLE_CHECKPOINT
-= True`` and set a ``spark.sparkContext.setCheckpointDir`` on durable
-storage; the call sites don't change.
+**Executed plans.** A checkpointed result's own plan is a ``Scan
+ExistingRDD`` stub. The lineage it ran is not lost: Spark's SQL status
+store records every execution, the ``localCheckpoint`` one included,
+with its physical plan (``scripts/plan_probe.py --tag`` dumps them).
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
-
-#: Rounds between mid-loop lineage truncations (see checkpoint_round).
-CHECKPOINT_EVERY = 5
-
-#: Plan-audit mode (round-13, VERDICT r12 item 8): queries that end in
-#: ``checkpoint_result`` normally explain() as the post-checkpoint
-#: ``Scan ExistingRDD`` stub, which hides the executed lineage from the
-#: committed plan dumps. Setting SPARK_GRAFT_PLAN_AUDIT=1 makes
-#: ``checkpoint_result`` return the UN-truncated plan and makes every
-#: scope keep its caches, so InMemoryRelation boundaries stay visible.
-#: Timing and cache lifecycle are both wrong in this mode — it exists
-#: ONLY for throwaway explain-dump sessions (scripts/plan_probe.py
-#: --plan-audit); the gate, bench and sweep scripts refuse to start
-#: with it set.
-_PLAN_AUDIT = os.environ.get("SPARK_GRAFT_PLAN_AUDIT", "") == "1"
 
 #: Open scopes, innermost last; each holds the frames it persisted.
 _SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar(
@@ -75,9 +58,8 @@ def query_scope():
         yield
     finally:
         _SCOPES.reset(token)
-        if not _PLAN_AUDIT:
-            for df in frames:
-                df.unpersist()
+        for df in frames:
+            df.unpersist()
 
 
 def persist(df: DataFrame) -> DataFrame:
@@ -89,16 +71,6 @@ def persist(df: DataFrame) -> DataFrame:
         )
     scopes[-1].append(df)
     return df.persist()
-
-
-def refuse_plan_audit(tool: str) -> None:
-    """Gate, bench and sweep harnesses call this first: their numbers
-    are meaningless in plan-audit mode."""
-    if _PLAN_AUDIT:
-        raise SystemExit(
-            f"{tool}: refusing to run with SPARK_GRAFT_PLAN_AUDIT=1 "
-            "(plan-audit mode keeps every cache and skips checkpoints)"
-        )
 
 
 def leaked_cache(spark) -> bool:
@@ -115,17 +87,5 @@ def checkpoint_result(result: DataFrame) -> DataFrame:
     """Materialize a builder's (small) final result, truncating its
     lineage, so the returned frame no longer reads the scope's caches
     when they are released."""
-    if _PLAN_AUDIT:
-        return result
     return result.localCheckpoint(eager=True)
 
-
-def checkpoint_round(df: DataFrame, round_idx: int) -> DataFrame:
-    """Mid-loop cadence for UNBOUNDED loops (convergence-driven, e.g.
-    hash-min components): every ``CHECKPOINT_EVERY`` rounds, cut the
-    accumulated lineage so round R's plan depth is O(CHECKPOINT_EVERY),
-    not O(R). Fixed-K loops (K ≤ ~4) don't need this — their depth is
-    bounded by construction."""
-    if round_idx > 0 and round_idx % CHECKPOINT_EVERY == 0:
-        return df.localCheckpoint(eager=True)
-    return df

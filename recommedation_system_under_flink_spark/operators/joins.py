@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_SCENE, TODAY, Scene, SimilarityAlgorithm
 from ..functions.kernels import calculate_x_sql
 from ..registry import register
-from .quantize import ppm_sum, ppm_value
+from .quantize import ppm_floor_sql, ppm_sum, ppm_value
 from ..sources import CLICKS_CTE, NEWS_CTE, TWEETS_CTE, clicks, news, tweets, with_ctes
 from .filters import leading_zone, trailing_zone
 from .tfidf import (
@@ -230,25 +230,57 @@ def scored_pairs(
     )
 
 
-#: J3's SELECT body, exposed separately so plans/pipelines.py can embed
-#: it as a ``scored AS (...)`` CTE in the pipeline oracle.
-_J3_BODY = f"""SELECT i.user_id, i.news_id,
+def scored_pairs_sql(user_kw: str, news_kw: str, scene: Scene = DEFAULT_SCENE) -> str:
+    """DuckDB twin of :func:`scored_pairs`: a ``(user_id, news_id,
+    score)`` SELECT over the relations ``user_kw`` ``(user_id, term,
+    weight)`` and ``news_kw`` ``(news_id, term, weight)`` (CTE names or
+    parenthesized subqueries). The only SQL branch on
+    ``scene.similarity_algorithm``. F8 mirrors :func:`~.quantize.ppm_sum`:
+    exact BIGINT micro-unit accumulation and one division, so both
+    engines agree on the score bit-for-bit (the 6-dp vote scores make
+    exact ties common, and an ulp would flip the news_id tiebreak), and
+    keeps P6 ``score > 0`` (TF_IDF.java:201)."""
+    if scene.similarity_algorithm is SimilarityAlgorithm.EUCLIDEAN_DISTANCE:
+        return f"""SELECT user_id, news_id, score FROM (
+  SELECT u.user_id, n.news_id,
+         CAST(SUM({ppm_floor_sql("u.weight * n.weight")}) AS DOUBLE) / 1000000.0 AS score
+  FROM {user_kw} u JOIN {news_kw} n ON u.term = n.term
+  GROUP BY u.user_id, n.news_id
+) WHERE score > 0"""
+    return f"""SELECT i.user_id, i.news_id,
        CAST(i.inter AS DOUBLE) / (su.n * sn.n) AS score
 FROM (
   SELECT u.user_id, n.news_id, COUNT(*) AS inter
-  FROM (SELECT * FROM user_kw WHERE user_id IN
-          (SELECT DISTINCT user_id FROM clicks WHERE date = DATE '{TODAY}')) u
-  JOIN (SELECT k.* FROM news_kw k JOIN news ns ON k.news_id = ns.news_id
-        WHERE ns.date BETWEEN DATE '{TODAY}' AND DATE '{_LEAD_END}') n
-    ON u.term = n.term
+  FROM {user_kw} u JOIN {news_kw} n ON u.term = n.term
   GROUP BY u.user_id, n.news_id
 ) i
-JOIN (SELECT user_id, COUNT(*) AS n FROM user_kw GROUP BY user_id) su
+JOIN (SELECT user_id, COUNT(*) AS n FROM {user_kw} GROUP BY user_id) su
   ON i.user_id = su.user_id
-JOIN (SELECT news_id, COUNT(*) AS n FROM news_kw GROUP BY news_id) sn
+JOIN (SELECT news_id, COUNT(*) AS n FROM {news_kw} GROUP BY news_id) sn
   ON i.news_id = sn.news_id"""
 
-_J3_ORACLE = with_ctes(_J3_BODY, CLICKS_CTE, *_NEWS_KW_CHAIN, *_USER_KW_CHAIN)
+
+def _j3_scored_sql(scene: Scene = DEFAULT_SCENE) -> str:
+    """J3's SELECT body: today's clickers' TF-IDF keywords against the
+    keywords of the news eligible today, scored under ``scene``. Needs
+    :data:`CLICKS_CTE` and the keyword chains; plans/pipelines.py embeds
+    it as a ``scored AS (...)`` CTE."""
+    return scored_pairs_sql(
+        f"""(SELECT * FROM user_kw WHERE user_id IN
+    (SELECT DISTINCT user_id FROM clicks WHERE date = DATE '{TODAY}'))""",
+        f"""(SELECT k.* FROM news_kw k JOIN news ns ON k.news_id = ns.news_id
+    WHERE ns.date BETWEEN DATE '{TODAY}' AND DATE '{_LEAD_END}')""",
+        scene,
+    )
+
+
+def _j3_oracle(scene: Scene = DEFAULT_SCENE) -> str:
+    return with_ctes(
+        _j3_scored_sql(scene), CLICKS_CTE, *_NEWS_KW_CHAIN, *_USER_KW_CHAIN
+    )
+
+
+_J3_ORACLE = _j3_oracle()
 
 
 @register("j3_scored_join", _J3_ORACLE)
@@ -274,28 +306,7 @@ def j3_scored_join(
     return scored_pairs(user_kw, news_kw, scene)
 
 
-#: J3 under EUCLIDEAN_DISTANCE (F8, see :func:`scored_pairs`): the
-#: shared-term SUM of micro-unit-quantized weight products, exact BIGINT
-#: accumulation and one mirrored division, so both engines agree on the
-#: 6-dp score bit-for-bit; the ``value > 0`` guard is TF_IDF.java:201.
-_J3_DOT_BODY = f"""SELECT i.user_id, i.news_id, i.score
-FROM (
-  SELECT u.user_id, n.news_id,
-         CAST(SUM(CAST(FLOOR((u.weight * n.weight) * 1000000.0 + 0.5)
-                  AS BIGINT)) AS DOUBLE) / 1000000.0 AS score
-  FROM (SELECT * FROM user_kw WHERE user_id IN
-          (SELECT DISTINCT user_id FROM clicks WHERE date = DATE '{TODAY}')) u
-  JOIN (SELECT k.* FROM news_kw k JOIN news ns ON k.news_id = ns.news_id
-        WHERE ns.date BETWEEN DATE '{TODAY}' AND DATE '{_LEAD_END}') n
-    ON u.term = n.term
-  GROUP BY u.user_id, n.news_id
-) i
-WHERE i.score > 0"""
-
-_J3_DOT_ORACLE = with_ctes(_J3_DOT_BODY, CLICKS_CTE, *_NEWS_KW_CHAIN, *_USER_KW_CHAIN)
-
-
-@register("j3_scored_join_dot", _J3_DOT_ORACLE)
+@register("j3_scored_join_dot", _j3_oracle(_EUCLID_SCENE))
 def j3_scored_join_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 with the reference's one config knob flipped: a
     ``Scene(similarity_algorithm=EUCLIDEAN_DISTANCE)`` routed through

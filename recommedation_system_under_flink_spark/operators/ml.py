@@ -922,41 +922,90 @@ def _als_item_factor_sql(col: str, salt: int) -> str:
     )
 
 
-_ALS_ORACLE = f"""WITH r AS (
+def _als_ratings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Click-count ratings ``(user_id, news_id, rating)`` and the pinned
+    item factors ``(news_id, f0, f1)`` of every rated item."""
+    from ..sources import events_raw
+
+    r = (
+        events_raw(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .groupBy("user_id", (F.col("event_id") % _NEWS_MOD).alias("news_id"))
+        .agg(F.count("*").cast("double").alias("rating"))
+    )
+    fac0 = r.select("news_id").distinct().select(
+        "news_id",
+        F.expr(_als_item_factor_sql("news_id", 1)).alias("f0"),
+        F.expr(_als_item_factor_sql("news_id", 2)).alias("f1"),
+    )
+    return r, fac0
+
+
+#: SQL twin of :func:`_als_ratings`: the ``r`` and ``fac0`` CTEs.
+_ALS_RATINGS_SQL = f"""r AS (
   SELECT user_id, event_id % {_NEWS_MOD} AS news_id,
          CAST(COUNT(*) AS DOUBLE) AS rating
   FROM events WHERE event_type = 'click' GROUP BY user_id, event_id % {_NEWS_MOD}
 ),
-f AS (
+fac0 AS (
   SELECT news_id,
          {_als_item_factor_sql('news_id', 1)} AS f0,
          {_als_item_factor_sql('news_id', 2)} AS f1
   FROM (SELECT DISTINCT news_id FROM r)
-),
-m AS (
-  SELECT r.user_id,
-         CAST(COUNT(*) AS BIGINT) AS n_items,
-         SUM(f.f0 * f.f0) + {ALS_LAMBDA} AS m00,
-         SUM(f.f0 * f.f1) AS m01,
-         SUM(f.f1 * f.f1) + {ALS_LAMBDA} AS m11,
-         SUM(f.f0 * r.rating) AS b0,
-         SUM(f.f1 * r.rating) AS b1
-  FROM r JOIN f ON r.news_id = f.news_id
-  GROUP BY r.user_id
-),
-u AS (
-  SELECT user_id, n_items,
-         (b0 * m11 - b1 * m01) / (m00 * m11 - m01 * m01) AS u0,
-         (m00 * b1 - m01 * b0) / (m00 * m11 - m01 * m01) AS u1
-  FROM m
-)
-SELECT u.user_id, ANY_VALUE(u.n_items) AS n_items,
+)"""
+
+
+def _als_solve(ratings: DataFrame, fac: DataFrame, ent: str, fac_ent: str,
+               fa: str, fb: str) -> DataFrame:
+    """Every ``ent``'s ridge solve u = (GᵀG + λI)⁻¹Gᵀr against the fixed
+    factors ``fac`` (entity col ``fac_ent``, factor cols ``fa``/``fb``):
+    the 2×2 normal equations summed in one groupBy, solved by Cramer's
+    rule. Columns ``(ent, u0, u1)``."""
+    joined = ratings.join(F.broadcast(fac), fac_ent)
+    m = joined.groupBy(ent).agg(
+        (F.sum(F.col(fa) * F.col(fa)) + ALS_LAMBDA).alias("sm00"),
+        F.sum(F.col(fa) * F.col(fb)).alias("sm01"),
+        (F.sum(F.col(fb) * F.col(fb)) + ALS_LAMBDA).alias("sm11"),
+        F.sum(F.col(fa) * F.col("rating")).alias("sb0"),
+        F.sum(F.col(fb) * F.col("rating")).alias("sb1"),
+    )
+    det = F.col("sm00") * F.col("sm11") - F.col("sm01") * F.col("sm01")
+    return m.select(
+        ent,
+        ((F.col("sb0") * F.col("sm11") - F.col("sb1") * F.col("sm01")) / det).alias("u0"),
+        ((F.col("sm00") * F.col("sb1") - F.col("sm01") * F.col("sb0")) / det).alias("u1"),
+    )
+
+
+def _als_solve_sql(ent: str, src_fac: str, fac_ent: str, fa: str, fb: str) -> str:
+    """SQL twin of :func:`_als_solve`: a CTE body over the ``r`` CTE and
+    the factor CTE ``src_fac``."""
+    return f"""(
+  SELECT {ent},
+         (sb0 * sm11 - sb1 * sm01) / (sm00 * sm11 - sm01 * sm01) AS u0,
+         (sm00 * sb1 - sm01 * sb0) / (sm00 * sm11 - sm01 * sm01) AS u1
+  FROM (
+    SELECT r.{ent},
+           SUM(g.{fa} * g.{fa}) + {ALS_LAMBDA} AS sm00,
+           SUM(g.{fa} * g.{fb}) AS sm01,
+           SUM(g.{fb} * g.{fb}) + {ALS_LAMBDA} AS sm11,
+           SUM(g.{fa} * r.rating) AS sb0,
+           SUM(g.{fb} * r.rating) AS sb1
+    FROM r JOIN {src_fac} g ON r.{fac_ent} = g.{fac_ent}
+    GROUP BY r.{ent}
+  )
+)"""
+
+
+_ALS_ORACLE = f"""WITH {_ALS_RATINGS_SQL},
+u AS {_als_solve_sql("user_id", "fac0", "news_id", "f0", "f1")}
+SELECT u.user_id, CAST(COUNT(*) AS BIGINT) AS n_items,
        ROUND(ANY_VALUE(u.u0), 6) AS u0,
        ROUND(ANY_VALUE(u.u1), 6) AS u1,
        ROUND(SQRT(SUM((r.rating - (u.u0 * f.f0 + u.u1 * f.f1))
                       * (r.rating - (u.u0 * f.f0 + u.u1 * f.f1)))
-                  / ANY_VALUE(u.n_items)), 6) AS rmse
-FROM u JOIN r ON u.user_id = r.user_id JOIN f ON r.news_id = f.news_id
+                  / COUNT(*)), 6) AS rmse
+FROM u JOIN r ON u.user_id = r.user_id JOIN fac0 f ON r.news_id = f.news_id
 GROUP BY u.user_id"""
 
 
@@ -974,43 +1023,14 @@ def ml_als_half_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes one alternation hash-verifiable against DuckDB. Per-user
     training RMSE comes from a second bounded pass with the solved
     factors joined back."""
-    from ..sources import events_raw
-    from ..sources.tables import NEWS_MOD
-
-    r = (
-        events_raw(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .groupBy("user_id", (F.col("event_id") % NEWS_MOD).alias("news_id"))
-        .agg(F.count("*").cast("double").alias("rating"))
-    )
-    items = r.select("news_id").distinct()
-    f = items.select(
-        "news_id",
-        F.expr(_als_item_factor_sql("news_id", 1)).alias("f0"),
-        F.expr(_als_item_factor_sql("news_id", 2)).alias("f1"),
-    )
-    rf = r.join(F.broadcast(f), "news_id")
-    m = rf.groupBy("user_id").agg(
-        F.count("*").alias("n_items"),
-        (F.sum(F.col("f0") * F.col("f0")) + ALS_LAMBDA).alias("m00"),
-        F.sum(F.col("f0") * F.col("f1")).alias("m01"),
-        (F.sum(F.col("f1") * F.col("f1")) + ALS_LAMBDA).alias("m11"),
-        F.sum(F.col("f0") * F.col("rating")).alias("b0"),
-        F.sum(F.col("f1") * F.col("rating")).alias("b1"),
-    )
-    det = F.col("m00") * F.col("m11") - F.col("m01") * F.col("m01")
-    u = m.select(
-        "user_id",
-        "n_items",
-        ((F.col("b0") * F.col("m11") - F.col("b1") * F.col("m01")) / det).alias("u0"),
-        ((F.col("m00") * F.col("b1") - F.col("m01") * F.col("b0")) / det).alias("u1"),
-    )
+    r, f = _als_ratings(spark, sf_dir)
+    u = _als_solve(r, f, "user_id", "news_id", "f0", "f1")
     pred = F.col("u0") * F.col("f0") + F.col("u1") * F.col("f1")
     return (
-        u.join(rf, "user_id")
+        u.join(r.join(F.broadcast(f), "news_id"), "user_id")
         .groupBy("user_id")
         .agg(
-            F.first("n_items").alias("n_items"),
+            F.count("*").alias("n_items"),
             F.round(F.first("u0"), 6).alias("u0"),
             F.round(F.first("u1"), 6).alias("u1"),
             F.round(
@@ -1018,7 +1038,7 @@ def ml_als_half_step(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(
                         (F.col("rating") - pred) * (F.col("rating") - pred)
                     )
-                    / F.first("n_items")
+                    / F.count("*")
                 ),
                 6,
             ).alias("rmse"),
@@ -1034,29 +1054,6 @@ def _als_sweep_oracle() -> str:
     per-entity 2×2 ridge solve as ml_als_half_step, plus the global
     regularized objective after each — the whole alternating loop as
     one verifiable SQL expression."""
-    f0 = _als_item_factor_sql("news_id", 1)
-    f1 = _als_item_factor_sql("news_id", 2)
-
-    def solve(ent: str, src_fac: str, fac_ent: str, fa: str, fb: str) -> str:
-        """CTE body solving ``ent`` factors (output cols u0, u1)
-        against ``src_fac`` (entity col ``fac_ent``, factor cols
-        ``fa``/``fb``)."""
-        return f"""(
-  SELECT {ent},
-         (sb0 * sm11 - sb1 * sm01) / (sm00 * sm11 - sm01 * sm01) AS u0,
-         (sm00 * sb1 - sm01 * sb0) / (sm00 * sm11 - sm01 * sm01) AS u1
-  FROM (
-    SELECT r.{ent},
-           SUM(g.{fa} * g.{fa}) + {ALS_LAMBDA} AS sm00,
-           SUM(g.{fa} * g.{fb}) AS sm01,
-           SUM(g.{fb} * g.{fb}) + {ALS_LAMBDA} AS sm11,
-           SUM(g.{fa} * r.rating) AS sb0,
-           SUM(g.{fb} * r.rating) AS sb1
-    FROM r JOIN {src_fac} g ON r.{fac_ent} = g.{fac_ent}
-    GROUP BY r.{ent}
-  )
-)"""
-
     def obj(ucte: str, fcte: str) -> str:
         return f"""(
   SELECT SUM((r.rating - (u.u0 * f.f0 + u.u1 * f.f1))
@@ -1066,19 +1063,11 @@ def _als_sweep_oracle() -> str:
          JOIN {fcte} f ON r.news_id = f.news_id
 )"""
 
-    return f"""WITH r AS (
-  SELECT user_id, event_id % {_NEWS_MOD} AS news_id,
-         CAST(COUNT(*) AS DOUBLE) AS rating
-  FROM events WHERE event_type = 'click' GROUP BY user_id, event_id % {_NEWS_MOD}
-),
-fac0 AS (
-  SELECT news_id, {f0} AS f0, {f1} AS f1
-  FROM (SELECT DISTINCT news_id FROM r)
-),
-u1 AS {solve("user_id", "fac0", "news_id", "f0", "f1")},
-fac1raw AS {solve("news_id", "u1", "user_id", "u0", "u1")},
+    return f"""WITH {_ALS_RATINGS_SQL},
+u1 AS {_als_solve_sql("user_id", "fac0", "news_id", "f0", "f1")},
+fac1raw AS {_als_solve_sql("news_id", "u1", "user_id", "u0", "u1")},
 fac1 AS (SELECT news_id, u0 AS f0, u1 AS f1 FROM fac1raw),
-u2 AS {solve("user_id", "fac1", "news_id", "f0", "f1")},
+u2 AS {_als_solve_sql("user_id", "fac1", "news_id", "f0", "f1")},
 nu1 AS (SELECT SUM(u0 * u0 + u1 * u1) AS nrm FROM u1),
 nu2 AS (SELECT SUM(u0 * u0 + u1 * u1) AS nrm FROM u2),
 nf0 AS (SELECT SUM(f0 * f0 + f1 * f1) AS nrm FROM fac0),
@@ -1112,49 +1101,19 @@ def ml_als_two_sweeps(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast of the smaller factor side into one groupBy on the
     solved entity — so K alternations cost K shuffles of the ratings,
     no driver linear algebra, no state beyond the factor tables."""
-    from ..sources import events_raw
-
-    r = (
-        events_raw(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .groupBy("user_id", (F.col("event_id") % _NEWS_MOD).alias("news_id"))
-        .agg(F.count("*").cast("double").alias("rating"))
-    )
-    fac0 = r.select("news_id").distinct().select(
-        "news_id",
-        F.expr(_als_item_factor_sql("news_id", 1)).alias("f0"),
-        F.expr(_als_item_factor_sql("news_id", 2)).alias("f1"),
-    )
-
-    def solve(ratings: DataFrame, fac: DataFrame, ent: str, fac_ent: str,
-              fa: str, fb: str) -> DataFrame:
-        joined = ratings.join(F.broadcast(fac), fac_ent)
-        m = joined.groupBy(ent).agg(
-            (F.sum(F.col(fa) * F.col(fa)) + ALS_LAMBDA).alias("sm00"),
-            F.sum(F.col(fa) * F.col(fb)).alias("sm01"),
-            (F.sum(F.col(fb) * F.col(fb)) + ALS_LAMBDA).alias("sm11"),
-            F.sum(F.col(fa) * F.col("rating")).alias("sb0"),
-            F.sum(F.col(fb) * F.col("rating")).alias("sb1"),
-        )
-        det = F.col("sm00") * F.col("sm11") - F.col("sm01") * F.col("sm01")
-        return m.select(
-            ent,
-            ((F.col("sb0") * F.col("sm11") - F.col("sb1") * F.col("sm01")) / det).alias("u0"),
-            ((F.col("sm00") * F.col("sb1") - F.col("sm01") * F.col("sb0")) / det).alias("u1"),
-        )
-
+    r, fac0 = _als_ratings(spark, sf_dir)
     # Each factor table feeds 2-3 downstream legs (the next solve and
     # the objective rows); persist them so the executed job reuses one
     # materialization instead of re-deriving the whole chain per leg
     # (Catalyst has no cross-subtree CSE — see scripts/audit_plans.py).
     bsp.persist(r)
-    u1 = bsp.persist(solve(r, fac0, "user_id", "news_id", "f0", "f1"))
+    u1 = bsp.persist(_als_solve(r, fac0, "user_id", "news_id", "f0", "f1"))
     fac1 = bsp.persist(
-        solve(r, u1, "news_id", "user_id", "u0", "u1").select(
+        _als_solve(r, u1, "news_id", "user_id", "u0", "u1").select(
             "news_id", F.col("u0").alias("f0"), F.col("u1").alias("f1")
         )
     )
-    u2 = bsp.persist(solve(r, fac1, "user_id", "news_id", "f0", "f1"))
+    u2 = bsp.persist(_als_solve(r, fac1, "user_id", "news_id", "f0", "f1"))
 
     def norm(df: DataFrame, a: str, b: str) -> DataFrame:
         return df.agg(F.sum(F.col(a) * F.col(a) + F.col(b) * F.col(b)).alias("nrm"))

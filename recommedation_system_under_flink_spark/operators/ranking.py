@@ -61,7 +61,7 @@ def top_k_rows(df: DataFrame, key: str, order: list, k: int | None) -> DataFrame
 
 
 def global_top_k(df: DataFrame, order: list, k: int) -> DataFrame:
-    """GLOBAL top-K with a distributed pre-limit (round-10 plan-audit
+    """GLOBAL top-K with a distributed pre-limit (round-10 executed-plan
     finding): Spark's ``InferWindowGroupLimit`` rank-pushdown fires
     only for windows WITH a partition spec — a bare global
     ``row_number() <= K`` filter moves the ENTIRE relation to one
@@ -108,18 +108,10 @@ def t1_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     K=scene.num_recommendations. Registered in the FLAT ranked-rows
     shape (user_id, news_id, score, rank) — the driver's canonicalizer
     cannot hash the reference's nested list shape (round-2 err);
-    :func:`t1_user_topk_lists` keeps the nested API form."""
+    :func:`ranked_list` folds these rows into it."""
     return top_k_rows(
         _scores(spark, sf_dir), "user_id", [F.desc("score"), F.asc("news_id")], K
     )
-
-
-def t1_user_topk_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 in the reference's output shape — ``(user_id, news
-    array<long>)`` ordered by rank (TextRank.java:289-293). NOT
-    registered (array column); the flat twin above is the compared
-    form."""
-    return ranked_list(t1_user_topk(spark, sf_dir), "user_id")
 
 
 @register(

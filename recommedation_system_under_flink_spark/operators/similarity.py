@@ -922,9 +922,7 @@ def hash_min_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
         # analysis (measured 9s → 56s per round at sf0.1 before this).
         # The eager localCheckpoint is one tiny job over O(near-dup
         # vertices) rows — the standard per-round truncation for
-        # multi-reference BSP updates (operators/bsp.py discusses the
-        # cadence trade; CHECKPOINT_EVERY applies to single-reference
-        # loops only).
+        # multi-reference BSP updates.
         new_labels = hop.select(
             "node",
             F.least(

@@ -35,12 +35,12 @@ from ..registry import register
 from ..sources import CLICKS_CTE, clicks, news, tweets, with_ctes
 from ..operators.joins import (
     _EUCLID_SCENE,
-    _J3_BODY,
-    _J3_DOT_BODY,
     _NEWS_KW_CHAIN,
     _USER_KW_CHAIN,
+    _j3_scored_sql,
     j3_scored_join,
     scored_pairs,
+    scored_pairs_sql,
     today_clickers,
 )
 from ..operators.filters import leading_zone
@@ -100,19 +100,20 @@ def hot_topics_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- TF_IDF
 
-_TFIDF_PIPE_ORACLE = with_ctes(
-    f"""SELECT user_id, DATE '{TODAY}' AS date, news_id, score,
+def _tfidf_pipe_oracle(scene: Scene = DEFAULT_SCENE) -> str:
+    return with_ctes(
+        f"""SELECT user_id, DATE '{TODAY}' AS date, news_id, score,
        ROW_NUMBER() OVER (PARTITION BY user_id
                           ORDER BY score DESC, news_id ASC) AS rank
 FROM scored""",
-    CLICKS_CTE,
-    *_NEWS_KW_CHAIN,
-    *_USER_KW_CHAIN,
-    f"scored AS ({_J3_BODY})",
-)
+        CLICKS_CTE,
+        *_NEWS_KW_CHAIN,
+        *_USER_KW_CHAIN,
+        f"scored AS ({_j3_scored_sql(scene)})",
+    )
 
 
-@register("tfidf_pipeline", _TFIDF_PIPE_ORACLE)
+@register("tfidf_pipeline", _tfidf_pipe_oracle())
 def tfidf_pipeline(
     spark: SparkSession, sf_dir: str, scene: Scene = DEFAULT_SCENE
 ) -> DataFrame:
@@ -122,8 +123,8 @@ def tfidf_pipeline(
     the reference's dispatch (TF_IDF.java:195-200); the registered
     entry is the default (cosine) scene, ``tfidf_pipeline_dot`` the
     EUCLIDEAN_DISTANCE one. Registered FLAT (user_id, date, news_id,
-    score, rank); the reference's nested recommendations shape is
-    :func:`tfidf_recommendations`."""
+    score, rank); ``ranking.ranked_list`` folds it into the reference's
+    nested recommendations shape."""
     scored = j3_scored_join(spark, sf_dir, scene=scene)
     ranked = top_k_rows(scored, "user_id", [F.desc("score"), F.asc("news_id")], None)
     return ranked.select(
@@ -135,19 +136,7 @@ def tfidf_pipeline(
     )
 
 
-_TFIDF_PIPE_DOT_ORACLE = with_ctes(
-    f"""SELECT user_id, DATE '{TODAY}' AS date, news_id, score,
-       ROW_NUMBER() OVER (PARTITION BY user_id
-                          ORDER BY score DESC, news_id ASC) AS rank
-FROM scored""",
-    CLICKS_CTE,
-    *_NEWS_KW_CHAIN,
-    *_USER_KW_CHAIN,
-    f"scored AS ({_J3_DOT_BODY})",
-)
-
-
-@register("tfidf_pipeline_dot", _TFIDF_PIPE_DOT_ORACLE)
+@register("tfidf_pipeline_dot", _tfidf_pipe_oracle(_EUCLID_SCENE))
 def tfidf_pipeline_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF_IDF recommend() with the reference's one config knob flipped:
     ``Scene(similarity_algorithm=EUCLIDEAN_DISTANCE)`` routes F8 (the
@@ -155,17 +144,6 @@ def tfidf_pipeline_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pipeline a cosine scene takes (TF_IDF.java:195-200) — the
     end-to-end proof that the Scene enum is live, not dead config."""
     return tfidf_pipeline(spark, sf_dir, scene=_EUCLID_SCENE)
-
-
-def tfidf_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF_IDF recommend() in the reference's ``RecommendationModel``
-    shape — ``(user_id, date, news array<long>)`` (TF_IDF.java:206-221).
-    NOT registered (array column); the flat twin above is the compared
-    form."""
-    ranked = tfidf_pipeline(spark, sf_dir)
-    return ranked_list(ranked, "user_id").select(
-        "user_id", F.lit(TODAY).cast("date").alias("date"), "news"
-    )
 
 
 # -------------------------------------------------------------- TextRank
@@ -222,19 +200,7 @@ QUALIFY rank <= {K}""",
     CLICKS_CTE,
     *_NEWS_KW_CHAIN,
     *_USER_KW_CHAIN,
-    f"""scored AS (
-  SELECT i.user_id, i.news_id,
-         CAST(i.inter AS DOUBLE) / (su.n * sn.n) AS score
-  FROM (
-    SELECT u.user_id, n.news_id, COUNT(*) AS inter
-    FROM user_kw u JOIN news_kw n ON u.term = n.term
-    GROUP BY u.user_id, n.news_id
-  ) i
-  JOIN (SELECT user_id, COUNT(*) AS n FROM user_kw GROUP BY user_id) su
-    ON i.user_id = su.user_id
-  JOIN (SELECT news_id, COUNT(*) AS n FROM news_kw GROUP BY news_id) sn
-    ON i.news_id = sn.news_id
-)""",
+    f"scored AS ({scored_pairs_sql('user_kw', 'news_kw')})",
 )
 
 
@@ -324,44 +290,15 @@ def s5_seed_row(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------- TextRank pipeline, distributed (oracle twin)
 
-def _tr_pipe_dist_oracle(dot: bool = False) -> str:
+def _tr_pipe_dist_oracle(scene: Scene = DEFAULT_SCENE) -> str:
     """Full-pipeline DuckDB twin: BOTH distributed keyword chains
     (prefixed so they share one WITH clause) + semi-join + scored join
-    + ranked list — the whole TextRank recommend() hash-compared.
-    ``dot=True`` swaps F5's count/divide CTE for F8's weight-product
-    SUM (the TextRank.java:267-274 EUCLIDEAN_DISTANCE branch)."""
+    under ``scene`` + ranked list — the whole TextRank recommend()
+    hash-compared. The vote score is the keyword weight F8 multiplies."""
     from ..operators.keywords import _a3_kw_ctes, _p1_kw_ctes
     from ..sources import NEWS_CTE, TWEETS_CTE
 
     lead_end = TODAY + dt.timedelta(days=NUM_DAYS - 1)
-    if dot:
-        # micro-unit term quantization (round-10 review): a raw double
-        # SUM is partition-order-dependent, and the ROUND(,6)-gridded
-        # vote scores make exact cross-pair ties COMMON — an ulp-
-        # unequal Spark sum vs an exactly-equal DuckDB sum would flip
-        # the news_id tiebreak and the hashed rank column.
-        scored_cte = """scored AS (
-  SELECT user_id, news_id, score FROM (
-    SELECT u.user_id, k.news_id,
-           CAST(SUM(CAST(FLOOR((u.score * k.score) * 1000000.0 + 0.5)
-                    AS BIGINT)) AS DOUBLE) / 1000000.0 AS score
-    FROM user_kw u JOIN news_kw k ON u.term = k.term
-    GROUP BY 1, 2
-  ) WHERE score > 0
-)"""
-    else:
-        scored_cte = """scored AS (
-  SELECT i.user_id, i.news_id, CAST(i.inter AS DOUBLE) / (su.n * sn.n) AS score
-  FROM (
-    SELECT u.user_id, k.news_id, COUNT(*) AS inter
-    FROM user_kw u JOIN news_kw k ON u.term = k.term
-    GROUP BY 1, 2
-  ) i
-  JOIN (SELECT user_id, COUNT(*) AS n FROM user_kw GROUP BY 1) su
-    ON i.user_id = su.user_id
-  JOIN (SELECT news_id, COUNT(*) AS n FROM news_kw GROUP BY 1) sn
-    ON i.news_id = sn.news_id
-)"""
     ctes = [
         CLICKS_CTE,
         NEWS_CTE,
@@ -369,15 +306,15 @@ def _tr_pipe_dist_oracle(dot: bool = False) -> str:
         *_p1_kw_ctes("n_"),
         *_a3_kw_ctes("u_"),
         f"""user_kw AS (
-  SELECT user_id, term, score FROM u_kw
+  SELECT user_id, term, score AS weight FROM u_kw
   WHERE user_id IN (SELECT DISTINCT user_id FROM clicks
                     WHERE date = DATE '{TODAY}')
 )""",
         f"""news_kw AS (
-  SELECT k.news_id, k.term, k.score FROM n_kw k JOIN news n ON k.news_id = n.news_id
+  SELECT k.news_id, k.term, k.score AS weight FROM n_kw k JOIN news n ON k.news_id = n.news_id
   WHERE n.date BETWEEN DATE '{TODAY}' AND DATE '{lead_end}'
 )""",
-        scored_cte,
+        f"scored AS ({scored_pairs_sql('user_kw', 'news_kw', scene)})",
     ]
     return with_ctes(
         f"""SELECT user_id, DATE '{TODAY}' AS date, news_id, score,
@@ -436,7 +373,7 @@ def textrank_pipeline_distributed(
     )
 
 
-@register("textrank_pipeline_distributed_dot", _tr_pipe_dist_oracle(dot=True))
+@register("textrank_pipeline_distributed_dot", _tr_pipe_dist_oracle(_EUCLID_SCENE))
 def textrank_pipeline_distributed_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed TextRank pipeline under the EUCLIDEAN_DISTANCE
     scene — the TextRank.java:267-274 branch end-to-end (F8 dot product
@@ -468,7 +405,7 @@ def _hybrid_rrf_oracle() -> str:
         CLICKS_CTE,
         *_NEWS_KW_CHAIN,
         *_USER_KW_CHAIN,
-        f"content_scored AS ({_J3_BODY})",
+        f"content_scored AS ({_j3_scored_sql()})",
         f"""content_ranked AS (
   SELECT user_id, news_id,
          ROW_NUMBER() OVER (PARTITION BY user_id

@@ -491,119 +491,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(sessions, "complete")
 
 
-def _tws_available() -> bool:
-    """``transformWithStateInPandas`` needs protobuf on the Python
-    side (pyspark's StateMessage proto); absent in this container, so
-    the query registers only where the dependency exists — the code
-    path stays shippable for real deployments without failing the
-    driver gate here. Re-probed each round per the round-2 verdict:
-    round 2 (2026-08-13) absent, round 3 (2026-08-14) absent,
-    round 4 (2026-08-14) absent, round 5 (2026-08-15) absent,
-    round 6 (2026-08-15) absent, round 7 (2026-08-15) absent,
-    round 8 (2026-08-15) absent
-    (``import google.protobuf`` → ModuleNotFoundError)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _register_tws(fn):
-    if _tws_available():
-        return register(
-            "stream_user_totals_tws",
-            # settled per-user totals == batch click aggregate (count
-            # exact, value sum quantized: both engines sum doubles in
-            # different orders; ~1e5 magnitudes agree far below 1e-3)
-            """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_clicks,
-       ROUND(SUM(value), 3) AS value_sum
-FROM events WHERE event_type = 'click' GROUP BY user_id""",
-        )(fn)
-    return fn
-
-
-@_register_tws
-def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running click totals via **transformWithStateInPandas**
-    — Spark 4's arbitrary-stateful-processing API (the successor to
-    ``applyInPandasWithState``, cf. ``stream_news_running_totals``):
-    an explicit ``StatefulProcessor`` with typed ``ValueState``, run on
-    the RocksDB state store provider. The bounded availableNow replay
-    emits each key's totals once per micro-batch; settled output equals
-    the batch aggregate (the oracle).
-
-    Scale: state lives in per-partition RocksDB instances keyed by
-    user — memory-bounded with spill-to-disk, incremental checkpoints
-    to the checkpoint location; the processor sees Arrow record
-    batches per key, so the Python boundary is amortized exactly like
-    any pandas UDF."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_clicks BIGINT, value_sum DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = 0
-            s = 0.0
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            if self._totals.exists():
-                prev_n, prev_s = self._totals.get()
-                n += prev_n
-                s += prev_s
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_clicks": [n],
-                    "value_sum": [round(s, 3)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream_dir = os.path.join(
-        "/tmp", "spark_stream_src", sf_dir.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    ev = _canon_ts(
-        spark.readStream.schema(_events_stream_schema(spark, sf_dir)).parquet(
-            stream_dir
-        )
-    )
-    totals = (
-        ev.filter(F.col("event_type") == "click")
-        .select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            "user_id BIGINT, n_clicks BIGINT, value_sum DOUBLE",
-            "Update",
-            "None",
-        )
-    )
-    return _run_to_memory(totals, "update")
-
-
 # ------------------------------------------- streaming decayed popularity
 
 def _stream_decay_oracle() -> str:

@@ -122,7 +122,6 @@ def _oracle_frame(con, sql):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    bsp.refuse_plan_audit("check.py")
 
     con = duckdb.connect()
     for t in TABLES:

@@ -47,7 +47,6 @@ def main() -> int:
     from recommedation_system_under_flink_spark.operators import bsp
     from recommedation_system_under_flink_spark.session import get_spark
 
-    bsp.refuse_plan_audit("empty_sweep.py")
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     dst = make_empty_fixture(src)
 

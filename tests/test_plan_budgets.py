@@ -181,3 +181,30 @@ def test_plan_budget(name, spark, queries):
         assert re.findall(
             r"PushedFilters: \[\s*[A-Za-z]", plan
         ), f"{name}: events scan lost its PushedFilters"
+
+
+def test_status_store_keeps_checkpointed_lineage(spark, queries):
+    """A checkpointed result's own plan is a ``Scan ExistingRDD`` stub;
+    the SQL status store (read by ``scripts/plan_probe.py --tag``) still
+    holds the lineage its ``localCheckpoint`` ran, and reading it keeps
+    no cache alive."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
+    )
+    from plan_probe import executed_plans, last_execution_id
+
+    since = last_execution_id(spark)
+    queries["graph_hits_clicks"](spark, SF_DIR).count()
+    checkpoints = [
+        plan
+        for _, desc, plan in executed_plans(spark, since)
+        if desc.startswith("localCheckpoint")
+    ]
+    assert any(
+        "Scan parquet" in plan and "InMemoryTableScan" in plan
+        for plan in checkpoints
+    ), f"no localCheckpoint execution shows its lineage: {len(checkpoints)}"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
