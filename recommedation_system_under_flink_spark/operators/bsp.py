@@ -19,15 +19,29 @@ un-cached lineage (and a nondeterministic or corrupt-record read may
 see different rows).
 
 **BSP loops.** Every iterative operator here (PageRank, BFS, PPR,
-hash-min connected components, distributed TextRank) has the same
-shape: persist the loop invariants (edges, degrees, vocab), iterate K
-join+aggregate rounds, emit a SMALL result (per-node labels/ranks —
-O(|keys|), not O(|input|)). Each round's DataFrame references the
-previous round's plan; after K rounds the plan is K levels deep, and
-anything that recomputes it (a retry, a second action) replays the
-whole chain. ``checkpoint_result`` truncates the final lineage with an
-eager ``localCheckpoint()``, which stores partitions on executors (not
-a reliable FS): right for these small results on one host.
+HITS, k-core, hash-min connected components, distributed TextRank) has
+the same shape: persist the loop invariants (edges, degrees, vocab),
+iterate K join+aggregate rounds, emit a SMALL result (per-node
+labels/ranks — O(|keys|), not O(|input|)). Each round's DataFrame
+references the previous round's plan; after K rounds the plan is K
+levels deep, and anything that recomputes it (a retry, a second action)
+replays the whole chain. ``checkpoint_result`` truncates the final
+lineage with an eager ``localCheckpoint()``, which stores partitions on
+executors (not a reliable FS): right for these small results on one
+host.
+
+The loop rule: a round that references its predecessor once stays
+lazy — the plan grows linearly and ``checkpoint_result`` truncates it
+once. A round that references its predecessor more than once (or whose
+state is also kept for later, like BFS levels) truncates with an eager
+``localCheckpoint`` every round. No round persists inside the previous
+round's persisted frame: each persisted frame embeds the plans of the
+ones it reads, so the executed-plan descriptions Spark formats for
+every SQL execution grow with every round. Measured at sf0.001
+(``scripts/plan_probe.py --tag``) when HITS and k-core still did that:
+``graph_hits_clicks``' grew 6 → 26 → 60 → … → 1,445 KB over 9 SQL
+executions and ``graph_kcore``'s 8 → 38 → 161 → 464 → 1,367 KB; both
+now stay under 256 KB (``tests/test_plan_budgets.py``).
 
 **Executed plans.** A checkpointed result's own plan is a ``Scan
 ExistingRDD`` stub. The lineage it ran is not lost: Spark's SQL status

@@ -17,6 +17,11 @@ computation bit-reproducible across engines, so the whole loop is
 hash-compared against a DuckDB twin that unrolls the same iterations
 as chained CTEs.
 
+Every builder here reads the click graph through one pair of builders:
+:func:`_click_pairs` / :func:`_click_edges` in Spark and
+``_CLICK_GRAPH_CTES`` in the DuckDB twins (the item co-click projection
+likewise through :func:`_cooc_edges` / ``_COOC_CTES``).
+
 Scale notes (100 TB): each iteration is one edges⋈ranks equi-join plus
 one sum-aggregation, both shuffling on node id — the standard BSP
 PageRank layout (identical plan shape to the hash-min components loop,
@@ -28,17 +33,70 @@ it fixed, not adaptive.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
 from .quantize import ppm_value
-from ..sources import CLICKS_CTE, with_ctes
+from ..sources import CLICKS_CTE, clicks, with_ctes
 from . import bsp
 
 #: Damping factor and fixed iteration count (pinned for oracle parity).
 PAGERANK_D = 0.85
 PAGERANK_ITERS = 3
+
+#: DuckDB twin of the click graph: the clicks, their distinct (user,
+#: news) pairs, and the symmetric edge list in node space.
+_CLICK_GRAPH_CTES = (
+    CLICKS_CTE,
+    "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
+    """edges AS (
+  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
+  UNION ALL
+  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
+)""",
+)
+
+
+def _click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (user_id, news_id) click pairs: the bipartite graph."""
+    return clicks(spark, sf_dir).select("user_id", "news_id").distinct()
+
+
+def _click_edges(pairs: DataFrame) -> DataFrame:
+    """The symmetric (src, dst) click graph in one node space — users
+    ``2·user_id``, news ``2·news_id + 1`` — both directions of every
+    pair. Lazy: a caller that loops over it persists it."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    (F.col("user_id") * 2).alias("src"),
+                    (F.col("news_id") * 2 + 1).alias("dst"),
+                ),
+                F.struct(
+                    (F.col("news_id") * 2 + 1).alias("src"),
+                    (F.col("user_id") * 2).alias("dst"),
+                ),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+def _walk_step(edges: DataFrame, deg: DataFrame, ranks: DataFrame) -> DataFrame:
+    """One random-walk contribution step shared by PageRank and PPR:
+    ``w(dst) = Σ_{src→dst} r(src) / d(src)`` as (src, w) keyed by the
+    receiving node. r/d is a function of the NODE, so it divides on
+    the node-sized ranks⋈deg relation and joins edges once (guide §2.3:
+    shuffle/probe fewer rows)."""
+    contrib = ranks.join(deg, "src").select(
+        "src", (F.col("r") / F.col("d")).alias("c")
+    )
+    return (
+        edges.join(contrib, "src")
+        .groupBy(F.col("dst").alias("src"))
+        .agg(F.sum("c").alias("w"))
+    )
 
 
 def _pagerank_oracle(iters: int = PAGERANK_ITERS, d: float = PAGERANK_D) -> str:
@@ -48,13 +106,7 @@ def _pagerank_oracle(iters: int = PAGERANK_ITERS, d: float = PAGERANK_D) -> str:
     all contributions are positive (no cancellation), so sums agree to
     ~13 significant digits — far inside the compare's 9."""
     ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """edges AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
+        *_CLICK_GRAPH_CTES,
         "deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src)",
         "nn AS (SELECT COUNT(*) AS n FROM deg)",
         "r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM deg)",
@@ -82,26 +134,7 @@ def graph_pagerank_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (node, rank) for every node; news nodes are odd ids
     (``2·news_id + 1``), so a popularity recommender is one filter +
     top-K away."""
-    from ..sources import clicks
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
+    edges = bsp.persist(_click_edges(_click_pairs(spark, sf_dir)))
     deg = bsp.persist(
         edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
     )
@@ -110,26 +143,10 @@ def graph_pagerank_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "node long, rank double")
 
     teleport = (1.0 - PAGERANK_D) / n_nodes
-    # Contributions ride on the degree table: src rank / src degree.
     ranks = deg.select("src", F.lit(1.0 / n_nodes).alias("r"))
     for _ in range(PAGERANK_ITERS):
-        # r/d is a function of the NODE, so divide on the node-sized
-        # ranks⋈deg relation and join edges once — the old
-        # edges⋈ranks⋈deg chain ran its second join over the already
-        # edge-sized intermediate (guide §2.3: shuffle/probe fewer
-        # rows). Same fl(r/d) per contribution, same aggregate.
-        contrib = ranks.join(deg, "src").select(
-            "src", (F.col("r") / F.col("d")).alias("c")
-        )
-        ranks = (
-            edges.join(contrib, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                (
-                    F.lit(teleport) + F.lit(PAGERANK_D) * F.sum("c")
-                ).alias("r")
-            )
-            .withColumnRenamed("node", "src")
+        ranks = _walk_step(edges, deg, ranks).select(
+            "src", (F.lit(teleport) + F.lit(PAGERANK_D) * F.col("w")).alias("r")
         )
     # Materialize the small (node, rank) result, truncating the K-round
     # lineage before the scope releases edges/deg (operators/bsp.py).
@@ -147,13 +164,7 @@ def _bfs_oracle(hops: int = BFS_MAX_HOPS) -> str:
     (node, dist) pairs, so the recursion is bounded by nodes×hops even
     on the cyclic bipartite graph), then MIN(dist) per node."""
     ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """edges AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
+        *_CLICK_GRAPH_CTES,
         "seed AS (SELECT MIN(news_id) * 2 + 1 AS node FROM pairs)",
     ]
     body = f""",
@@ -183,29 +194,14 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     The recursive-CTE oracle mirrors exactly this per-level dedup.
 
     Scale: frontier size is bounded by |nodes|; each round is one
-    shuffle join against the (persisted) edge list. Horizon fixed for
+    shuffle join against the (persisted) edge list, and each level is
+    truncated with an eager ``localCheckpoint`` because it feeds both
+    the next expansion and the final union (the loop rule in
+    operators/bsp.py). Horizon fixed for
     engine parity — at 100 TB the horizon is also the cost cap, since
     round h touches only the h-hop neighborhood."""
-    from ..sources import clicks
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
+    pairs = _click_pairs(spark, sf_dir)
+    edges = bsp.persist(_click_edges(pairs))
     seed_row = pairs.agg(F.min("news_id").alias("m")).first()
     if seed_row is None or seed_row["m"] is None:
         return spark.createDataFrame([], "node long, dist int")
@@ -214,14 +210,12 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = spark.createDataFrame([(seed, 0)], "node long, dist int")
     levels = [frontier]
     for h in range(1, BFS_MAX_HOPS + 1):
-        # persist: each level feeds BOTH the next expansion and the
-        # final union — uncached, level h would be recomputed
-        # (BFS_MAX_HOPS - h) extra times through the union's lineage.
-        frontier = bsp.persist(
+        frontier = (
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .withColumn("dist", F.lit(h).cast("int"))
+            .localCheckpoint(eager=True)
         )
         levels.append(frontier)
     out = levels[0]
@@ -241,13 +235,7 @@ def _ppr_oracle(iters: int = PPR_ITERS, d: float = PAGERANK_D) -> str:
     unrolled restart-walk iterations, same exclusion + quantized
     top-K."""
     ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """edges AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
+        *_CLICK_GRAPH_CTES,
         "deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src)",
         "seed AS (SELECT MIN(user_id) * 2 AS node FROM pairs)",
         "r0 AS (SELECT node, 1.0 AS r FROM seed)",
@@ -299,26 +287,8 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes stay at 0 (mass spreads outward from the seed). At 100 TB a
     per-user serving path would batch many seeds as one (seed, node)
     keyed loop — same plan, one more key column."""
-    from ..sources import clicks as clicks_table
-
-    pairs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
+    pairs = _click_pairs(spark, sf_dir)
+    edges = bsp.persist(_click_edges(pairs))
     deg = bsp.persist(
         edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
     )
@@ -331,17 +301,7 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = spark.createDataFrame([(seed, 1.0)], "src long, r double")
     nodes = deg.select("src")
     for _ in range(PPR_ITERS):
-        # node-sized divide before the edge join — see the PageRank
-        # loop note (guide §2.3)
-        contrib = ranks.join(deg, "src").select(
-            "src", (F.col("r") / F.col("d")).alias("c")
-        )
-        walk = (
-            edges.join(contrib, "src")
-            .groupBy(F.col("dst").alias("src"))
-            .agg(F.sum("c").alias("w"))
-        )
-        ranks = nodes.join(walk, "src", "left").select(
+        ranks = nodes.join(_walk_step(edges, deg, ranks), "src", "left").select(
             "src",
             (
                 F.when(F.col("src") == seed, F.lit(1.0 - d)).otherwise(F.lit(0.0))
@@ -349,8 +309,6 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r"),
         )
     clicked = pairs.filter(F.col("user_id") * 2 == seed).select("news_id")
-    from pyspark.sql import Window
-
     out = (
         ranks.filter((F.col("src") % 2 == 1) & (F.col("r") > 0))
         .select(
@@ -378,40 +336,35 @@ HITS_ITERS = 3
 
 
 def _hits_oracle(iters: int = HITS_ITERS) -> str:
-    """DuckDB twin: fixed-iteration HITS unrolled as chained CTEs with
-    scalar-subquery L1 normalizations. All contributions are positive
-    (no cancellation), so double sums agree across engines to ~13
-    significant digits — same float-parity argument as PageRank."""
+    """DuckDB twin: the same unnormalized rounds unrolled as chained
+    CTEs, then one per-kind L1 division — exact integer sums, so both
+    engines agree bit for bit (see :func:`graph_hits_clicks`)."""
     ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
+        *_CLICK_GRAPH_CTES,
         "h0 AS (SELECT DISTINCT user_id AS u, 1.0 AS s FROM pairs)",
     ]
-    prev_h = "h0"
     for i in range(1, iters + 1):
         ctes.append(
-            f"""a{i}raw AS (
+            f"""a{i} AS (
   SELECT p.news_id AS n, SUM(h.s) AS s
-  FROM pairs p JOIN {prev_h} h ON p.user_id = h.u GROUP BY p.news_id
+  FROM pairs p JOIN h{i - 1} h ON p.user_id = h.u GROUP BY p.news_id
 )"""
         )
         ctes.append(
-            f"a{i} AS (SELECT n, s / (SELECT SUM(s) FROM a{i}raw) AS s FROM a{i}raw)"
-        )
-        ctes.append(
-            f"""h{i}raw AS (
+            f"""h{i} AS (
   SELECT p.user_id AS u, SUM(a.s) AS s
   FROM pairs p JOIN a{i} a ON p.news_id = a.n GROUP BY p.user_id
 )"""
         )
-        ctes.append(
-            f"h{i} AS (SELECT u, s / (SELECT SUM(s) FROM h{i}raw) AS s FROM h{i}raw)"
-        )
-        prev_h = f"h{i}"
+    ctes.append(
+        f"""raw AS (
+  SELECT 'hub' AS kind, u AS id, s FROM h{iters}
+  UNION ALL
+  SELECT 'auth' AS kind, n AS id, s FROM a{iters}
+)"""
+    )
     return with_ctes(
-        f"""SELECT 'hub' AS kind, u AS id, s AS score FROM h{iters}
-UNION ALL
-SELECT 'auth' AS kind, n AS id, s AS score FROM a{iters}""",
+        "SELECT kind, id, s / SUM(s) OVER (PARTITION BY kind) AS score FROM raw",
         *ctes,
     )
 
@@ -421,63 +374,58 @@ def graph_hits_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**HITS** over the user→news click bipartite graph — users are
     hubs (they point at news), news are authorities. ``HITS_ITERS``
     fixed rounds of the mutual recurrence ``auth(n) = Σ_{u→n} hub(u)``,
-    ``hub(u) = Σ_{u→n} auth(n)``, L1-normalized after each half-step
-    (the normalization is what PageRank's damping does for free — HITS
+    ``hub(u) = Σ_{u→n} auth(n)``, each side L1-normalized (the
+    normalization is what PageRank's damping does for free — HITS
     diverges without it). Complements PageRank: PageRank mixes the two
     roles through the symmetrized graph, HITS keeps them separate, so
     a heavy READER (hub) and a heavily-READ article (authority) rank
     on different axes.
 
-    Scale: each half-step is one edges⋈scores hash join + partition-
-    keyed aggregate (same shuffle shape as a PageRank round); the L1
-    sums are 1-row aggregates broadcast back (intentional scalar
-    cross — see scripts/audit_plans.py allowlist). Fixed K rounds →
-    bounded lineage; edges persist across rounds and are released by
-    the query scope after checkpoint_result (operators/bsp.py)."""
-    from ..sources import clicks
+    Normalize once, at the end. Each per-half-step L1 normalization
+    divides by a positive scalar, so they cancel: the rounds carry the
+    unnormalized sums from ``h0 = 1.0``, which are integer path counts
+    held in doubles, and the result is divided by its per-kind total.
+    Every intermediate stays an integer below 2^53 — the largest, the
+    hub total, is 83,103 at sf0.001, 41,689,547 at sf0.01 and
+    245,935,567,759 (about 2^38) at sf0.1 — so every sum is exact in
+    any order and the one divide is a single correctly rounded IEEE
+    operation: Spark and the DuckDB twin agree bit for bit.
 
-    pairs = bsp.persist(
-        clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    )
+    Scale: each half-step is one pairs⋈scores hash join + partition-
+    keyed aggregate (same shuffle shape as a PageRank round). Each
+    round references the previous one once, so the K-round lineage
+    stays lazy and linear (operators/bsp.py); the pairs persist across
+    rounds and are released by the query scope after
+    checkpoint_result. The per-kind totals are a 2-row aggregate over
+    the checkpointed result, broadcast back."""
+    pairs = bsp.persist(_click_pairs(spark, sf_dir))
     if pairs.count() == 0:  # materializes pairs before the loop
         return spark.createDataFrame([], "kind string, id long, score double")
 
     hub = pairs.select(F.col("user_id").alias("u")).distinct().select(
         "u", F.lit(1.0).alias("s")
     )
-    auth = None
-    # Each round's raw table feeds BOTH its normalization sum and the
-    # next half-step — persist it, or the doubled reference re-derives
-    # the whole chain per use (2^rounds blowup). The L1 total comes
-    # back as a driver scalar (one tiny action per half-step against
-    # the cache, the BSP-convergence-check idiom) and re-enters the
-    # plan as a literal — a lit divide, not a broadcast-nested-loop
-    # cross per round. Caches release after the final materialization.
     for _ in range(HITS_ITERS):
-        a_raw = bsp.persist(
+        auth = (
             pairs.join(hub, pairs.user_id == hub.u)
             .groupBy(F.col("news_id").alias("n"))
             .agg(F.sum("s").alias("s"))
         )
-        a_tot = a_raw.agg(F.sum("s")).collect()[0][0]
-        auth = a_raw.select("n", (F.col("s") / F.lit(a_tot)).alias("s"))
-        h_raw = bsp.persist(
+        hub = (
             pairs.join(auth, pairs.news_id == auth.n)
             .groupBy(F.col("user_id").alias("u"))
             .agg(F.sum("s").alias("s"))
         )
-        h_tot = h_raw.agg(F.sum("s")).collect()[0][0]
-        hub = h_raw.select("u", (F.col("s") / F.lit(h_tot)).alias("s"))
-    out = hub.select(
-        F.lit("hub").alias("kind"), F.col("u").alias("id"), F.col("s").alias("score")
-    ).unionAll(
-        auth.select(
-            F.lit("auth").alias("kind"),
-            F.col("n").alias("id"),
-            F.col("s").alias("score"),
-        )
+    # The last authority table is read twice, by the last hub half-step
+    # and by the result; cached, the chain runs once, not once per read.
+    bsp.persist(auth)
+    hubs = hub.select(F.lit("hub").alias("kind"), F.col("u").alias("id"), "s")
+    auths = auth.select(F.lit("auth").alias("kind"), F.col("n").alias("id"), "s")
+    raw = bsp.checkpoint_result(hubs.unionAll(auths))
+    tot = raw.groupBy("kind").agg(F.sum("s").alias("tot"))
+    return raw.join(F.broadcast(tot), "kind").select(
+        "kind", "id", (F.col("s") / F.col("tot")).alias("score")
     )
-    return bsp.checkpoint_result(out)
 
 
 @register("graph_bfs_recursive", _bfs_oracle())
@@ -498,10 +446,7 @@ def graph_bfs_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     list is re-derived per step rather than pinned in cache — so the
     BSP form stays the scale path and this one documents the engine-
     native alternative."""
-    from ..sources import clicks
-
-    clicks(spark, sf_dir).select("user_id", "news_id").distinct(
-    ).createOrReplaceTempView("bfs_pairs_v")
+    _click_pairs(spark, sf_dir).createOrReplaceTempView("bfs_pairs_v")
     return spark.sql(
         f"""WITH RECURSIVE edges AS (
   SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM bfs_pairs_v
@@ -526,37 +471,51 @@ FROM walk WHERE node IS NOT NULL GROUP BY node"""
 TRI_MIN_COOC = 2
 
 
+#: DuckDB twin of :func:`_cooc_edges`: the click graph plus the
+#: id-oriented co-click projection ``e(x, y)``.
+_COOC_CTES = (
+    *_CLICK_GRAPH_CTES,
+    f"""e AS (
+  SELECT a.news_id AS x, b.news_id AS y
+  FROM pairs a JOIN pairs b
+    ON a.user_id = b.user_id AND a.news_id < b.news_id
+  GROUP BY 1, 2 HAVING COUNT(*) >= {TRI_MIN_COOC}
+)""",
+)
+
+
+def _cooc_edges(pairs: DataFrame) -> DataFrame:
+    """The item co-click projection: id-oriented (x < y) news pairs
+    co-clicked by at least ``TRI_MIN_COOC`` users. Lazy: callers that
+    reuse it persist it."""
+    a = pairs.select("user_id", F.col("news_id").alias("x"))
+    b = pairs.select(F.col("user_id").alias("u2"), F.col("news_id").alias("y"))
+    return (
+        a.join(b, (F.col("user_id") == F.col("u2")) & (F.col("x") < F.col("y")))
+        .groupBy("x", "y")
+        .agg(F.count("*").alias("cooc"))
+        .filter(F.col("cooc") >= TRI_MIN_COOC)
+        .select("x", "y")
+    )
+
+
 @register(
     "graph_triangle_stats",
     with_ctes(
-        f"""SELECT CAST((SELECT COUNT(DISTINCT v) FROM
-         (SELECT x AS v FROM e UNION SELECT y FROM e)) AS BIGINT) AS n_nodes,
+        """SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
        CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
-       CAST((SELECT COALESCE(SUM(d * (d - 1) / 2), 0) FROM
-         (SELECT v, COUNT(*) AS d FROM
-           (SELECT x AS v FROM e UNION ALL SELECT y FROM e) GROUP BY v))
-         AS BIGINT) AS n_wedges,
-       CAST((SELECT COUNT(*)
-         FROM e e1 JOIN e e2 ON e2.x = e1.y JOIN e e3
-           ON e3.x = e1.x AND e3.y = e2.y) AS BIGINT) AS n_triangles,
-       ROUND(CASE WHEN (SELECT SUM(d * (d - 1) / 2) FROM
-           (SELECT v, COUNT(*) AS d FROM
-             (SELECT x AS v FROM e UNION ALL SELECT y FROM e) GROUP BY v))
-           > 0
-         THEN 3.0 * (SELECT COUNT(*)
-           FROM e e1 JOIN e e2 ON e2.x = e1.y JOIN e e3
-             ON e3.x = e1.x AND e3.y = e2.y)
-           / (SELECT SUM(d * (d - 1) / 2) FROM
-             (SELECT v, COUNT(*) AS d FROM
-               (SELECT x AS v FROM e UNION ALL SELECT y FROM e) GROUP BY v))
-         ELSE 0.0 END, 6) AS clustering_coeff""",
-        CLICKS_CTE,
-        "prefs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        f"""e AS (
-  SELECT a.news_id AS x, b.news_id AS y
-  FROM prefs a JOIN prefs b
-    ON a.user_id = b.user_id AND a.news_id < b.news_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= {TRI_MIN_COOC}
+       CAST(COALESCE(w.s, 0) AS BIGINT) AS n_wedges,
+       CAST(t.n AS BIGINT) AS n_triangles,
+       ROUND(CASE WHEN w.s > 0 THEN 3.0 * t.n / w.s ELSE 0.0 END, 6)
+         AS clustering_coeff
+FROM (SELECT SUM(d * (d - 1) / 2) AS s FROM deg) w,
+     (SELECT COUNT(*) AS n
+      FROM e e1 JOIN e e2 ON e2.x = e1.y JOIN e e3
+        ON e3.x = e1.x AND e3.y = e2.y) t""",
+        *_COOC_CTES,
+        """deg AS (
+  SELECT v, COUNT(*) AS d
+  FROM (SELECT x AS v FROM e UNION ALL SELECT y FROM e) GROUP BY v
 )""",
     ),
 )
@@ -574,18 +533,7 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One row: nodes, edges, wedges (Σ d(d−1)/2 — exact integers),
     triangles, and the quantized coefficient."""
-    from ..sources import clicks as clicks_table
-
-    prefs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
-    a = prefs.select("user_id", F.col("news_id").alias("x"))
-    b = prefs.select(F.col("user_id").alias("u2"), F.col("news_id").alias("y"))
-    e = bsp.persist(
-        a.join(b, (F.col("user_id") == F.col("u2")) & (F.col("x") < F.col("y")))
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("cooc"))
-        .filter(F.col("cooc") >= TRI_MIN_COOC)
-        .select("x", "y")
-    )
+    e = bsp.persist(_cooc_edges(_click_pairs(spark, sf_dir)))
     n_edges = e.count()  # materializes the projection once for all uses
     deg = (
         e.select(F.col("x").alias("v"))
@@ -638,16 +586,8 @@ KCORE_PEEL_ROUNDS = 4
 
 
 def _kcore_oracle(k: int = KCORE_K, rounds: int = KCORE_PEEL_ROUNDS) -> str:
-    ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """e0 AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
-    ]
-    prev = "e0"
+    ctes = list(_CLICK_GRAPH_CTES)
+    prev = "edges"
     for r in range(1, rounds + 1):
         ctes.append(
             f"s{r} AS (SELECT src FROM {prev} GROUP BY src HAVING COUNT(*) >= {k})"
@@ -683,29 +623,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree inside the surviving subgraph. Scale: each round is one
     degree aggregation + two semi-joins, all shuffling on node id;
     the edge set only shrinks, each round's survivor relation is
-    O(nodes), and per-round persist/unpersist keeps the lineage depth
-    at 1 (edge sets are materialized state, not plan chains)."""
-    from ..sources import clicks
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
-    edges.count()
+    O(nodes). A round references the previous edge set three times,
+    so each round truncates its lineage with an eager
+    ``localCheckpoint`` (the loop rule in operators/bsp.py): the plan
+    stays one round deep and no round's cache nests inside the
+    next."""
+    edges = bsp.persist(_click_edges(_click_pairs(spark, sf_dir)))
     for _ in range(KCORE_PEEL_ROUNDS):
         surv = (
             edges.groupBy("src")
@@ -713,14 +636,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n") >= KCORE_K)
             .select("src")
         )
-        nxt = bsp.persist(
+        edges = (
             edges.join(surv, "src", "left_semi")
             .join(surv.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")
+            .localCheckpoint(eager=True)
         )
-        nxt.count()
-        edges.unpersist()
-        edges = nxt
     out = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("core_deg")
     )
@@ -746,14 +667,7 @@ def _adamic_adar_oracle() -> str:
   ORDER BY ROUND(c.aa, 6) DESC, c.x, c.y
   LIMIT {AA_TOP_N}
 )""",
-        CLICKS_CTE,
-        "prefs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        f"""e AS (
-  SELECT a.news_id AS x, b.news_id AS y
-  FROM prefs a JOIN prefs b
-    ON a.user_id = b.user_id AND a.news_id < b.news_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= {TRI_MIN_COOC}
-)""",
+        *_COOC_CTES,
         """adj AS (
   SELECT x AS v, y AS w FROM e UNION ALL SELECT y, x FROM e
 )""",
@@ -795,18 +709,7 @@ def graph_link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, which bounds fan-out by d_max² per node while keeping
     the high-signal pairs. The pair aggregation is map-side combinable;
     nothing materializes per-node state."""
-    from ..sources import clicks as clicks_table
-
-    prefs = clicks_table(spark, sf_dir).select("user_id", "news_id").distinct()
-    a = prefs.select("user_id", F.col("news_id").alias("x"))
-    b = prefs.select(F.col("user_id").alias("u2"), F.col("news_id").alias("y"))
-    e = bsp.persist(
-        a.join(b, (F.col("user_id") == F.col("u2")) & (F.col("x") < F.col("y")))
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("cooc"))
-        .filter(F.col("cooc") >= TRI_MIN_COOC)
-        .select("x", "y")
-    )
+    e = bsp.persist(_cooc_edges(_click_pairs(spark, sf_dir)))
     e.count()
     adj = e.select(F.col("x").alias("v"), F.col("y").alias("w")).unionAll(
         e.select(F.col("y").alias("v"), F.col("x").alias("w"))
@@ -841,13 +744,7 @@ def _lpa_ctes(iters: int = LPA_ITERS) -> tuple[list[str], str]:
     """The unrolled LPA CTE chain and the name of its final labels CTE
     — shared by the LPA oracle and the modularity report built on it."""
     ctes = [
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """edges AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
+        *_CLICK_GRAPH_CTES,
         "l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)",
     ]
     prev = "l0"
@@ -902,26 +799,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank/k-core. Labels are referenced once per round
     (single-reference loop), so lineage stays linear in the K=3
     rounds; edges persist across rounds and release on exit."""
-    from ..sources import clicks
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
+    edges = bsp.persist(_click_edges(_click_pairs(spark, sf_dir)))
     if edges.limit(1).count() == 0:
         return spark.createDataFrame([], "node long, label long")
 
@@ -1025,30 +903,11 @@ def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|communities|) rows; the directed-edge total is a 1-row scalar
     broadcast. All masses are exact integers — cross-engine parity is
     pure integer arithmetic until the final 6-dp division."""
-    from ..sources import clicks
-
     # Labels first: LPA persists (and releases) its own copy of the
     # edge relation — building ours afterwards avoids sharing a cache
     # entry that LPA's exit would unpersist out from under us.
     labels = graph_lpa_communities(spark, sf_dir)  # checkpointed, small
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = bsp.persist(
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        (F.col("user_id") * 2).alias("src"),
-                        (F.col("news_id") * 2 + 1).alias("dst"),
-                    ),
-                    F.struct(
-                        (F.col("news_id") * 2 + 1).alias("src"),
-                        (F.col("user_id") * 2).alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
+    edges = bsp.persist(_click_edges(_click_pairs(spark, sf_dir)))
     if edges.limit(1).count() == 0:
         return spark.createDataFrame(
             [],
@@ -1111,13 +970,7 @@ FROM (
          CAST(COUNT(*) AS BIGINT) AS n_nodes
   FROM deg GROUP BY 1, 2, 3, 4
 )""",
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
-        """edges AS (
-  SELECT user_id * 2 AS src, news_id * 2 + 1 AS dst FROM pairs
-  UNION ALL
-  SELECT news_id * 2 + 1, user_id * 2 FROM pairs
-)""",
+        *_CLICK_GRAPH_CTES,
         """deg AS (
   SELECT src,
          CASE WHEN src % 2 = 0 THEN 'user' ELSE 'news' END AS side,
@@ -1143,24 +996,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY over O(|nodes|) degree rows, a side-partitioned window
     over O(buckets) rows for shares. Nothing data-sized after the
     degree aggregate."""
-    from ..sources import clicks
-    from pyspark.sql import Window
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    (F.col("user_id") * 2).alias("src"),
-                    (F.col("news_id") * 2 + 1).alias("dst"),
-                ),
-                F.struct(
-                    (F.col("news_id") * 2 + 1).alias("src"),
-                    (F.col("user_id") * 2).alias("dst"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = _click_edges(_click_pairs(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("d"))
     blen = F.length(F.bin(F.col("d")))
     hist = (
@@ -1209,8 +1045,7 @@ FROM (
   JOIN (SELECT news_id, COUNT(*) AS d FROM pairs GROUP BY news_id) cn
     ON p.news_id = cn.news_id
 )""",
-        CLICKS_CTE,
-        "pairs AS (SELECT DISTINCT user_id, news_id FROM clicks)",
+        *_CLICK_GRAPH_CTES,
     ),
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1232,9 +1067,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the news side reuses ``NEWS_MOD``-bounded keys and could
     broadcast); the moment aggregate is map-side combinable. Same
     single-pass-over-edges class as the modularity report."""
-    from ..sources import clicks
-
-    pairs = clicks(spark, sf_dir).select("user_id", "news_id").distinct()
+    pairs = _click_pairs(spark, sf_dir)
     du = pairs.groupBy("user_id").agg(F.count("*").alias("du"))
     dn = pairs.groupBy("news_id").agg(F.count("*").alias("dn"))
     e = (

@@ -208,3 +208,34 @@ def test_status_store_keeps_checkpointed_lineage(spark, queries):
         for plan in checkpoints
     ), f"no localCheckpoint execution shows its lineage: {len(checkpoints)}"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+#: Ceiling on any one SQL execution's physical-plan description for the
+#: fixed-round graph loops, and HITS' execution count (its pairs count,
+#: its localCheckpoint, the action). A loop that persists each round
+#: inside the next re-embeds every earlier round: at sf0.001 HITS once
+#: reached 1,445 KB over 9 executions and k-core 1,367 KB.
+FLAT_PLAN_KB = 256
+FLAT_PLAN_MAX_EXECUTIONS = {"graph_hits_clicks": 3, "graph_kcore": None}
+
+
+@pytest.mark.parametrize("name", sorted(FLAT_PLAN_MAX_EXECUTIONS))
+def test_iterative_graph_plans_stay_flat(name, spark, queries):
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
+    )
+    from plan_probe import executed_plans, last_execution_id
+
+    since = last_execution_id(spark)
+    queries[name](spark, SF_DIR).count()
+    plans = executed_plans(spark, since)
+    sizes = [len(plan) for _, _, plan in plans]
+    assert max(sizes) <= FLAT_PLAN_KB * 1024, (
+        f"{name}: executed-plan sizes {[n // 1024 for n in sizes]} KB"
+    )
+    max_execs = FLAT_PLAN_MAX_EXECUTIONS[name]
+    if max_execs is not None:
+        assert len(plans) <= max_execs, f"{name}: {len(plans)} executions"

@@ -626,6 +626,21 @@ def test_hits_normalized_and_bipartite(queries, spark):
     assert set(hubs) == users
     assert set(auths) == news
 
+    # Bit identity with the DuckDB twin on the same parquet: every
+    # intermediate is an exact integer, so only the final divide
+    # rounds, once, identically in both engines.
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_DIR}/events.parquet')"
+    )
+    duck = con.sql(entrymod.oracle_sql()["graph_hits_clicks"]).fetchall()
+    con.close()
+    assert sorted(repr(tuple(r)) for r in rows) == sorted(repr(r) for r in duck)
+
 
 def test_mrl_rerank_recall_and_rerank_exactness(queries, spark):
     """The prefix-filter funnel must (a) rerank with EXACT full-dim
