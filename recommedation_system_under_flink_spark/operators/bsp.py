@@ -38,10 +38,12 @@ state is also kept for later, like BFS levels) truncates with an eager
 round's persisted frame: each persisted frame embeds the plans of the
 ones it reads, so the executed-plan descriptions Spark formats for
 every SQL execution grow with every round. Measured at sf0.001
-(``scripts/plan_probe.py --tag``) when HITS and k-core still did that:
-``graph_hits_clicks``' grew 6 → 26 → 60 → … → 1,445 KB over 9 SQL
-executions and ``graph_kcore``'s 8 → 38 → 161 → 464 → 1,367 KB; both
-now stay under 256 KB (``tests/test_plan_budgets.py``).
+(``scripts/plan_probe.py --tag``) when HITS, k-core and NN-descent
+still did that: ``graph_hits_clicks``' grew 6 → 26 → 60 → … → 1,445 KB
+over 9 SQL executions, ``graph_kcore``'s 8 → 38 → 161 → 464 →
+1,367 KB, and ``sim_nndescent_round``'s four chained stages reached
+2,687 KB (38 KB with a checkpoint per stage, over 6 executions); all
+three now stay under 256 KB (``tests/test_plan_budgets.py``).
 
 **Executed plans.** A checkpointed result's own plan is a ``Scan
 ExistingRDD`` stub. The lineage it ran is not lost: Spark's SQL status

@@ -600,6 +600,149 @@ def _ivf_centroids(
     return [list(map(float, c)) for c in cents]
 
 
+# ------------------------------------------------ pinned-IVF index core
+#
+# The one index core of the IVF family: flat, SQ8, PQ, SemDeDup,
+# silhouette, cell balance and the nprobe curve all read their
+# centroids, cells and probes from these helpers, and their DuckDB
+# twins read ``proj``/``cents``/``ranked_cells`` from
+# ``_PINNED_CELLS_CTES``. The PQ build is ``_pq_topk`` / ``_PQ_CTES``.
+# "Pinned" centroids are the first ``IVF_K`` corpus vectors by vec_id:
+# data-independent given the id order, so the whole index is
+# reproducible in SQL.
+
+#: The up-cast corpus projection every twin starts from.
+_PROJ_CTE = f"""proj AS (
+  SELECT vec_id, {_EMB_CAST} AS e FROM embeddings
+)"""
+
+#: Cosine of vector ``v`` to centroid ``c``.
+_CELL_COS = """list_dot_product(v.e, c.e)
+             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
+
+#: DuckDB form of the index core: ``ranked_cells`` ranks every
+#: (vector, centroid) pair by raw cosine ``c_cos`` with ties to the
+#: lower cid (``cell_rank`` 1 = nearest), and ``cells`` keeps each
+#: vector's nearest cell.
+_PINNED_CELLS_CTES = f"""{_PROJ_CTE}, cents AS (
+  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
+), ranked_cells AS (
+  SELECT v.vec_id, c.cid, {_CELL_COS} AS c_cos,
+         ROW_NUMBER() OVER (
+           PARTITION BY v.vec_id ORDER BY {_CELL_COS} DESC, c.cid ASC
+         ) AS cell_rank
+  FROM proj v CROSS JOIN cents c
+), cells AS (
+  SELECT vec_id, cid, c_cos FROM ranked_cells WHERE cell_rank = 1
+)"""
+
+
+def _ivf_cand_ctes(nprobe: int) -> str:
+    """``probes``/``cand`` CTEs over ``_PINNED_CELLS_CTES``: each
+    query's ``nprobe`` nearest cells, and every other vector in them as
+    ``(query_id, corpus_id, cell_rank)``. A vector sits in one cell and
+    a query's probes are distinct cells, so no pair repeats."""
+    return f"""probes AS (
+  SELECT vec_id AS query_id, cid, cell_rank FROM ranked_cells
+  WHERE vec_id < {N_QUERIES} AND cell_rank <= {nprobe}
+), cand AS (
+  SELECT p.query_id, c.vec_id AS corpus_id, p.cell_rank
+  FROM probes p JOIN cells c ON p.cid = c.cid
+  WHERE c.vec_id <> p.query_id
+)"""
+
+
+def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, emb, nrm)``: the corpus up-cast to double, with norms."""
+    emb = load_raw(spark, sf_dir, "embeddings")
+    return emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
+        "nrm", _norm(F.col("emb"))
+    )
+
+
+def _pinned_centroids(base: DataFrame) -> list[list[float]]:
+    """The pinned centroids, in cid order, from the UNFILTERED corpus
+    projection (as every twin takes them). Empty only when no vector
+    has ``vec_id < IVF_K``; each caller then returns its empty result,
+    as its twin does."""
+    pinned = base.filter(F.col("vec_id") < IVF_K).orderBy("vec_id")
+    return [list(r["emb"]) for r in pinned.select("emb").collect()]
+
+
+def _centroid_table(spark: SparkSession, cents: list[list[float]]) -> DataFrame:
+    """The centroids as a broadcastable ``(cid long, cemb, cnrm)`` frame."""
+    return spark.createDataFrame(
+        list(enumerate(cents)), "cid long, cemb array<double>"
+    ).withColumn("cnrm", _norm(F.col("cemb")))
+
+
+def _with_cell(base: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """``base`` plus ``cid int``: each vector's nearest centroid."""
+    nearest = _probe_udf(cents, 1)(F.col("emb"))
+    return base.withColumn("cid", F.element_at(nearest, 1))
+
+
+def _ivf_candidates(
+    base: DataFrame, cents: list[list[float]], nprobe: int, *query_cols: Column
+) -> DataFrame:
+    """IVF candidate pairs: every vector of ``base`` in one of a query's
+    ``nprobe`` nearest cells, the query itself excluded. Rows carry the
+    corpus vector's ``base`` columns, ``query_id``, ``cell_rank`` (1 =
+    the query's nearest cell) and ``query_cols`` read from the query's
+    row. No pair repeats (see ``_ivf_cand_ctes``), so no distinct."""
+    probes = base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        *query_cols,
+        F.posexplode(_probe_udf(cents, nprobe)(F.col("emb"))).alias("pos", "cid"),
+    )
+    return (
+        _with_cell(base, cents)
+        .join(F.broadcast(probes), "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("cell_rank", F.col("pos") + 1)
+    )
+
+
+def _ivf_flat_scored(
+    base: DataFrame, cents: list[list[float]], nprobe: int
+) -> DataFrame:
+    """``(query_id, corpus_id, cell_rank, cosine)``: exact cosine over
+    the IVF candidates of ``_emb_base`` rows (IVF-flat)."""
+    return _ivf_candidates(
+        base, cents, nprobe, F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm")
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("corpus_id"),
+        "cell_rank",
+        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
+            "cosine"
+        ),
+    )
+
+
+def _ivf_flat_topk(
+    spark: SparkSession, base: DataFrame, cents: list[list[float]]
+) -> DataFrame:
+    """IVF-flat top-k over ``_emb_base`` rows: probe ``IVF_NPROBE``
+    cells per query, exact cosine over their members, quantized-rank
+    top-k. The fitted and the pinned index differ only in ``cents``."""
+    if not cents:  # empty corpus → nothing to index or search
+        return spark.createDataFrame(
+            [], "query_id long, corpus_id long, cosine double, rank int"
+        )
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
+    )
+    return (
+        _ivf_flat_scored(base, cents, IVF_NPROBE)
+        .drop("cell_rank")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+    )
+
+
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-k: corpus vectors live in their nearest
     centroid cell; each query searches its ``IVF_NPROBE`` nearest cells
@@ -609,64 +752,15 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path when embeddings are clustered (real corpora), LSH when they
     are adversarially uniform.
 
-    UNREGISTERED pytest diagnostic (round 10): the certified form of
-    the IVF probe chain is :func:`sim_ivf_topk_pinned` — identical
-    cell-assign → probe → top-k plan with the Lloyd fit replaced by
-    pinned centroids, fully DuckDB-oracle-backed. The Lloyd fit itself
-    is separately oracle-verified round-by-round as
-    ``sim_kmeans_lloyd``, so this fitted-index composition keeps only
-    its recall-vs-bruteforce pytest and drops out of the registry
-    (it added a rows-only row without adding unverified surface)."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    cents = _ivf_centroids(base)
-    if not cents:  # empty corpus → nothing to index or search
-        return spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    corpus = base.withColumn(
-        "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1)
-    )
-    queries = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode(
-                _probe_udf(cents, IVF_NPROBE)(F.col("emb"))
-            ).alias("cid"),
-        )
-    )
-    cands = (
-        corpus.join(F.broadcast(queries), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            F.col("vec_id").alias("corpus_id"),
-            "emb",
-            "nrm",
-        )
-    )
-    scored = cands.select(
-        "query_id",
-        "corpus_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    UNREGISTERED pytest diagnostic: the certified form of the IVF probe
+    chain is :func:`sim_ivf_topk_pinned` — the same
+    :func:`_ivf_flat_topk` with the Lloyd fit replaced by pinned
+    centroids, fully DuckDB-oracle-backed. The Lloyd fit itself is
+    separately oracle-verified round-by-round as ``sim_kmeans_lloyd``,
+    so this fitted-index composition keeps only its
+    recall-vs-bruteforce pytest and stays out of the registry."""
+    base = _emb_base(spark, sf_dir)
+    return _ivf_flat_topk(spark, base, _ivf_centroids(base))
 
 
 def _lsh_oracle(tables: int, bits: int, threshold: float) -> str:
@@ -939,34 +1033,10 @@ def hash_min_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
 
 
 def _ivf_pinned_oracle() -> str:
-    """DuckDB twin of :func:`sim_ivf_topk_pinned`: centroids are the
-    first ``IVF_K`` corpus vectors (pinned, data-independent given the
-    id order), cell assignment is argmax cosine with ties to the lower
-    centroid id, probing takes the top ``IVF_NPROBE`` cells the same
-    way, and the final top-k uses the quantized-rank ordering."""
-    cos = """list_dot_product(v.e, c.e)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
-    return f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), ranked_cells AS (
-  SELECT v.vec_id, c.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY {cos} DESC, c.cid ASC
-         ) AS cell_rank
-  FROM proj v CROSS JOIN (SELECT cid, e FROM cents) c
-), corpus AS (
-  SELECT vec_id, cid FROM ranked_cells WHERE cell_rank = 1
-), queries AS (
-  SELECT vec_id AS query_id, cid FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND cell_rank <= {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT q.query_id, co.vec_id AS corpus_id
-  FROM queries q JOIN corpus co ON q.cid = co.cid
-  WHERE co.vec_id <> q.query_id
-), scored AS (
+    """DuckDB twin of :func:`sim_ivf_topk_pinned`: the pinned cells and
+    probes of ``_PINNED_CELLS_CTES``, exact cosine over the candidates,
+    and the quantized-rank top-k."""
+    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}, scored AS (
   SELECT c.query_id, c.corpus_id,
          list_dot_product(pq.e, pc.e)
            / (sqrt(list_dot_product(pq.e, pq.e)) * sqrt(list_dot_product(pc.e, pc.e)))
@@ -988,63 +1058,14 @@ def sim_ivf_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k with **pinned** centroids (the first ``IVF_K`` corpus
     vectors, no Lloyd refinement): the index structure — cell
     assignment, nprobe probing, candidate generation, quantized top-k —
-    is identical to :func:`sim_ivf_topk`, but with the model parameters
-    data-independent the whole chain becomes DuckDB-reproducible and
-    hash-verified. The Lloyd-fitted variant keeps the better recall and
-    stays rows-only (fitted parameters are what make real ANN indexes
-    non-portable); this twin proves the *machinery* correct."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
-    if not cents:
-        return spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    corpus = base.withColumn(
-        "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1)
-    )
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(_probe_udf(cents, IVF_NPROBE)(F.col("emb"))).alias("cid"),
-    )
-    cands = (
-        corpus.join(F.broadcast(queries), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            F.col("vec_id").alias("corpus_id"),
-            "emb",
-            "nrm",
-        )
-        .distinct()
-    )
-    scored = cands.select(
-        "query_id",
-        "corpus_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    is :func:`sim_ivf_topk`'s :func:`_ivf_flat_topk`, but with the model
+    parameters data-independent the whole chain becomes
+    DuckDB-reproducible and hash-verified. The Lloyd-fitted variant
+    keeps the better recall and stays rows-only (fitted parameters are
+    what make real ANN indexes non-portable); this twin proves the
+    *machinery* correct."""
+    base = _emb_base(spark, sf_dir)
+    return _ivf_flat_topk(spark, base, _pinned_centroids(base))
 
 
 # ------------------------------------------- scalar-quantized (int8) ANN
@@ -1149,33 +1170,10 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- IVF-SQ8 composed index
 
 def _ivfsq8_oracle() -> str:
-    """DuckDB twin of :func:`sim_ivfsq8_topk_pinned`: the pinned-IVF
-    cell machinery (cf. ``_ivf_pinned_oracle``) with the int8
-    quantized scoring chain (cf. ``sim_sq8_topk``) — both rebuilt in
-    SQL and composed."""
-    cos = """list_dot_product(v.e, c.e)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
-    return f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), ranked_cells AS (
-  SELECT v.vec_id, c.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY {cos} DESC, c.cid ASC
-         ) AS cell_rank
-  FROM proj v CROSS JOIN (SELECT cid, e FROM cents) c
-), corpus AS (
-  SELECT vec_id, cid FROM ranked_cells WHERE cell_rank = 1
-), queries AS (
-  SELECT vec_id AS query_id, cid FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND cell_rank <= {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT q.query_id, co.vec_id AS corpus_id
-  FROM queries q JOIN corpus co ON q.cid = co.cid
-  WHERE co.vec_id <> q.query_id
-), q8 AS (
+    """DuckDB twin of :func:`sim_ivfsq8_topk_pinned`: the pinned cells
+    and probes of ``_PINNED_CELLS_CTES`` composed with the int8
+    quantized scoring chain (cf. ``sim_sq8_topk``)."""
+    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}, q8 AS (
   SELECT vec_id, {_SQ8_Q_SQL} AS qv FROM embeddings
 ), s8 AS (
   SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS qn FROM q8
@@ -1198,59 +1196,35 @@ SELECT query_id, corpus_id, cosine_q, rank FROM (
 def sim_ivfsq8_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**IVF-SQ8**: the production ANN index layout — IVF cells bound
     the candidate set (touch nprobe cells, not the corpus), int8
-    scalar quantization shrinks what each cell stores 4× — composed
-    from the two independently-verified pieces
-    (:func:`sim_ivf_topk_pinned` cells, :func:`sim_sq8_topk` scoring).
+    scalar quantization shrinks what each cell stores 4× — the
+    pinned-IVF core's candidates (:func:`_ivf_candidates`) scored by
+    the :func:`sim_sq8_topk` quantization.
     Pinned centroids + pinned quantization arithmetic keep the ENTIRE
-    composed index hash-verified in SQL.
+    composed index hash-verified in SQL. Zero vectors (after
+    quantization) are neither queries nor candidates, but the
+    centroids come from the unfiltered corpus, like every pinned index.
 
     Scale: memory per cell = dim bytes/vector + one scale; probing
     cost = nprobe/K of the corpus per query. The Lloyd-fitted,
     unpinned deployment form swaps only the centroid source —
     machinery identical."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = (
-        emb.select("vec_id", _as_double("embedding").alias("emb"))
-        .withColumn("qv", _sq8_quantize(F.col("emb")))
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
-    )
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "query_id long, corpus_id long, cosine_q double, rank int"
         )
-    corpus = base.withColumn(
-        "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1)
+    sized = (
+        base.withColumn("qv", _sq8_quantize(F.col("emb")))
+        .withColumn("qn", _norm(F.col("qv")))
+        .filter(F.col("qn") > 0)
     )
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("qn").alias("q_qn"),
-        F.explode(_probe_udf(cents, IVF_NPROBE)(F.col("emb"))).alias("cid"),
-    )
-    cands = (
-        corpus.join(F.broadcast(queries), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_qv",
-            "q_qn",
-            F.col("vec_id").alias("corpus_id"),
-            "qv",
-            "qn",
-        )
-        .distinct()
+    cands = _ivf_candidates(
+        sized, cents, IVF_NPROBE, F.col("qv").alias("q_qv"), F.col("qn").alias("q_qn")
     )
     scored = cands.select(
         "query_id",
-        "corpus_id",
+        F.col("vec_id").alias("corpus_id"),
         F.round(
             _dot(F.col("q_qv"), F.col("qv")) / (F.col("q_qn") * F.col("qn")), 6
         ).alias("cosine_q"),
@@ -1343,18 +1317,15 @@ PQ_SUB = 16  # EMB_DIM // PQ_M
 PQ_K = 16
 
 
-def _pq_pinned_oracle() -> str:
-    """DuckDB twin of :func:`sim_pq_topk_pinned`. Subspace s of vector
-    e is the 1-based slice [s*PQ_SUB+1 .. (s+1)*PQ_SUB]; encoding is
-    argmax of ``2·<x,c> − <c,c>`` (equivalent to argmin L2, constant
-    ||x||² dropped) with ties to the lower codeword id — every term is
-    a sequential 16-element dot product, bit-identical across engines."""
-    sub = f"""SELECT vec_id, s, e[s * {PQ_SUB} + 1 : (s + 1) * {PQ_SUB}] AS sv
-  FROM proj, LATERAL (SELECT unnest(generate_series(0, {PQ_M - 1})) AS s)"""
-    return f"""WITH proj AS (
-  SELECT vec_id, {_EMB_CAST} AS e FROM embeddings
-), subs AS ({sub}),
-codebook AS (
+#: DuckDB form of the PQ index over ``proj``. Subspace s of vector e is
+#: the 1-based slice [s*PQ_SUB+1 .. (s+1)*PQ_SUB]; encoding is argmax of
+#: ``2·<x,c> − <c,c>`` (equivalent to argmin L2, constant ||x||²
+#: dropped) with ties to the lower codeword id — every term is a
+#: sequential 16-element dot product, bit-identical across engines.
+_PQ_CTES = f"""subs AS (
+  SELECT vec_id, s, e[s * {PQ_SUB} + 1 : (s + 1) * {PQ_SUB}] AS sv
+  FROM proj, LATERAL (SELECT unnest(generate_series(0, {PQ_M - 1})) AS s)
+), codebook AS (
   SELECT vec_id AS cw, s, sv AS cv, list_dot_product(sv, sv) AS cc
   FROM subs WHERE vec_id < {PQ_K}
 ), encoded AS (
@@ -1376,11 +1347,15 @@ codebook AS (
 ), qn AS (
   SELECT vec_id, sqrt(list_dot_product(e, e)) AS qn FROM proj
   WHERE vec_id < {N_QUERIES}
-), adot AS (
-  SELECT l.query_id, x.vec_id AS corpus_id, SUM(l.pdot) AS ad
-  FROM encoded x JOIN lut l ON x.s = l.s AND x.cw = l.cw
-  WHERE x.vec_id <> l.query_id
-  GROUP BY l.query_id, x.vec_id
+)"""
+
+
+def _pq_topk_sql(ctes: str, adot: str) -> str:
+    """DuckDB twin of :func:`_pq_topk`: ``_PQ_CTES`` after ``ctes``
+    (which define ``proj``), then the ranking of ``adot``'s ``(query_id,
+    corpus_id, ad)`` ADC sums by approximate cosine."""
+    return f"""WITH {ctes}, {_PQ_CTES}, adot AS (
+{adot}
 )
 SELECT query_id, corpus_id, cosine_pq, rank FROM (
   SELECT a.query_id, a.corpus_id,
@@ -1394,6 +1369,94 @@ SELECT query_id, corpus_id, cosine_pq, rank FROM (
   JOIN rec_norm r ON a.corpus_id = r.vec_id
   WHERE q.qn > 0 AND r.rn > 0
 ) WHERE rank <= {TOP_K}"""
+
+
+def _pq_topk(base: DataFrame, adc) -> DataFrame:
+    """The one PQ index build (subvectors, pinned codebook, codes,
+    code-reconstructed norms, the query set's lookup table) and the
+    approximate-cosine top-k over ``_emb_base`` rows. ``adc(encoded,
+    lut)`` returns the ``(query_id, corpus_id, ad)`` ADC sums over the
+    caller's candidates: every corpus vector for PQ, the probed cells'
+    members for IVF-PQ."""
+    from pyspark.sql import Window
+
+    subs = base.select(
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("s"),
+                        F.slice("emb", s * PQ_SUB + 1, PQ_SUB).alias("sv"),
+                    )
+                    for s in range(PQ_M)
+                ]
+            )
+        ).alias("x"),
+    ).select("vec_id", "x.s", "x.sv")
+    # Not persisted: subs and encoded each feed 2-3 subtrees (7 duplicate
+    # scans in sim_pq_topk_pinned), but persisting them measured ~1.5×
+    # slower there — caching four subvector rows per corpus vector costs
+    # more than the narrow re-scans (OPTIMIZATION_r12.md).
+    codebook = subs.filter(F.col("vec_id") < PQ_K).select(
+        F.col("vec_id").alias("cw"),
+        "s",
+        F.col("sv").alias("cv"),
+        _dot(F.col("sv"), F.col("sv")).alias("cc"),
+    )
+    enc_w = Window.partitionBy("vec_id", "s").orderBy(
+        F.desc(2 * _dot(F.col("sv"), F.col("cv")) - F.col("cc")), F.asc("cw")
+    )
+    encoded = (
+        subs.join(F.broadcast(codebook), "s")
+        .withColumn("rn", F.row_number().over(enc_w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "s", "cw", "cc")
+    )
+    rec_norm = encoded.groupBy("vec_id").agg(F.sqrt(F.sum("cc")).alias("rnm"))
+    lut = (
+        subs.filter(F.col("vec_id") < N_QUERIES)
+        .join(F.broadcast(codebook), "s")
+        .select(
+            F.col("vec_id").alias("query_id"),
+            "s",
+            "cw",
+            _dot(F.col("sv"), F.col("cv")).alias("pdot"),
+        )
+    )
+    qn = base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn")
+    )
+    rank_w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_pq"), F.asc("corpus_id")
+    )
+    return (
+        adc(encoded, lut)
+        .join(F.broadcast(qn), "query_id")
+        .join(rec_norm, F.col("corpus_id") == rec_norm.vec_id)
+        .filter((F.col("qn") > 0) & (F.col("rnm") > 0))
+        .select(
+            "query_id",
+            "corpus_id",
+            F.round(F.col("ad") / (F.col("qn") * F.col("rnm")), 6).alias(
+                "cosine_pq"
+            ),
+        )
+        .withColumn("rank", F.row_number().over(rank_w))
+        .filter(F.col("rank") <= TOP_K)
+    )
+
+
+def _pq_pinned_oracle() -> str:
+    """DuckDB twin of :func:`sim_pq_topk_pinned`: every corpus vector's
+    ADC sum against each query."""
+    return _pq_topk_sql(
+        _PROJ_CTE,
+        """  SELECT l.query_id, x.vec_id AS corpus_id, SUM(l.pdot) AS ad
+  FROM encoded x JOIN lut l ON x.s = l.s AND x.cw = l.cw
+  WHERE x.vec_id <> l.query_id
+  GROUP BY l.query_id, x.vec_id""",
+    )
 
 
 @register("sim_pq_topk_pinned", _pq_pinned_oracle())
@@ -1418,82 +1481,16 @@ def sim_pq_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``PQ_K`` corpus vectors (Lloyd-fitting them is the rows-only
     variant's job); encoding, LUT, scores, and ranks are hash-verified
     against DuckDB. Recall vs float brute force is pytest-bounded."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    proj = emb.select("vec_id", _as_double("embedding").alias("e"))
-    subs = proj.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice("e", s * PQ_SUB + 1, PQ_SUB).alias("sv"),
-                    )
-                    for s in range(PQ_M)
-                ]
-            )
-        ).alias("x"),
-    ).select("vec_id", "x.s", "x.sv")
-    # NOTE (r12): subs/encoded each feed 2-3 subtrees (7 dup scans),
-    # but the persist+checkpoint variant MEASURED ~1.5x slower on this
-    # 1.2s-class query (caching 4x corpus rows of subvector arrays
-    # costs more than the narrow re-scans) - reverted; see
-    # OPTIMIZATION_r12.md.
-    codebook = subs.filter(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("cw"),
-        "s",
-        F.col("sv").alias("cv"),
-        _dot(F.col("sv"), F.col("sv")).alias("cc"),
-    )
-    from pyspark.sql import Window
 
-    enc_w = Window.partitionBy("vec_id", "s").orderBy(
-        F.desc(2 * _dot(F.col("sv"), F.col("cv")) - F.col("cc")), F.asc("cw")
-    )
-    encoded = (
-        subs.join(F.broadcast(codebook), "s")
-        .withColumn("rn", F.row_number().over(enc_w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "cw", "cc")
-    )
-    rec_norm = encoded.groupBy("vec_id").agg(F.sqrt(F.sum("cc")).alias("rnm"))
-    lut = (
-        subs.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(codebook), "s")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "s",
-            "cw",
-            _dot(F.col("sv"), F.col("cv")).alias("pdot"),
+    def adc(encoded: DataFrame, lut: DataFrame) -> DataFrame:
+        return (
+            encoded.join(F.broadcast(lut), ["s", "cw"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .groupBy("query_id", F.col("vec_id").alias("corpus_id"))
+            .agg(F.sum("pdot").alias("ad"))
         )
-    )
-    qn = proj.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _norm(F.col("e")).alias("qn")
-    )
-    adot = (
-        encoded.join(F.broadcast(lut), ["s", "cw"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("corpus_id"))
-        .agg(F.sum("pdot").alias("ad"))
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_pq"), F.asc("corpus_id")
-    )
-    out = (
-        adot.join(F.broadcast(qn), "query_id")
-        .join(rec_norm, F.col("corpus_id") == rec_norm.vec_id)
-        .filter((F.col("qn") > 0) & (F.col("rnm") > 0))
-        .select(
-            "query_id",
-            "corpus_id",
-            F.round(F.col("ad") / (F.col("qn") * F.col("rnm")), 6).alias(
-                "cosine_pq"
-            ),
-        )
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= TOP_K)
-    )
-    return out
+
+    return _pq_topk(_emb_base(spark, sf_dir), adc)
 
 
 # ---------------------------- prefix-dimension two-stage (Matryoshka)
@@ -1771,75 +1768,17 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------- IVF-PQ composition
 
 def _ivfpq_oracle() -> str:
-    """DuckDB twin of :func:`sim_ivfpq_topk_pinned`: the pinned-IVF
-    cell machinery (cf. ``_ivf_pinned_oracle``) composed with the PQ
-    encode/LUT/ADC chain (cf. ``_pq_pinned_oracle``)."""
-    cos = """list_dot_product(v.e, c.e)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
-    return f"""WITH proj AS (
-  SELECT vec_id, {_EMB_CAST} AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), ranked_cells AS (
-  SELECT v.vec_id, c.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY {cos} DESC, c.cid ASC
-         ) AS cell_rank
-  FROM proj v CROSS JOIN (SELECT cid, e FROM cents) c
-), cellmap AS (
-  SELECT vec_id, cid FROM ranked_cells WHERE cell_rank = 1
-), probes AS (
-  SELECT vec_id AS query_id, cid FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND cell_rank <= {IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT p.query_id, cm.vec_id AS corpus_id
-  FROM probes p JOIN cellmap cm ON p.cid = cm.cid
-  WHERE cm.vec_id <> p.query_id
-), subs AS (
-  SELECT vec_id, s, e[s * {PQ_SUB} + 1 : (s + 1) * {PQ_SUB}] AS sv
-  FROM proj, LATERAL (SELECT unnest(generate_series(0, {PQ_M - 1})) AS s)
-), codebook AS (
-  SELECT vec_id AS cw, s, sv AS cv, list_dot_product(sv, sv) AS cc
-  FROM subs WHERE vec_id < {PQ_K}
-), encoded AS (
-  SELECT vec_id, s, cw, cc FROM (
-    SELECT x.vec_id, x.s, c.cw, c.cc,
-           ROW_NUMBER() OVER (
-             PARTITION BY x.vec_id, x.s
-             ORDER BY 2 * list_dot_product(x.sv, c.cv) - c.cc DESC, c.cw ASC
-           ) AS rn
-    FROM subs x JOIN codebook c ON x.s = c.s
-  ) WHERE rn = 1
-), rec_norm AS (
-  SELECT vec_id, sqrt(SUM(cc)) AS rn FROM encoded GROUP BY vec_id
-), lut AS (
-  SELECT q.vec_id AS query_id, c.s, c.cw,
-         list_dot_product(q.sv, c.cv) AS pdot
-  FROM subs q JOIN codebook c ON q.s = c.s
-  WHERE q.vec_id < {N_QUERIES}
-), qn AS (
-  SELECT vec_id, sqrt(list_dot_product(e, e)) AS qn FROM proj
-  WHERE vec_id < {N_QUERIES}
-), adot AS (
-  SELECT cd.query_id, cd.corpus_id, SUM(l.pdot) AS ad
+    """DuckDB twin of :func:`sim_ivfpq_topk_pinned`: the pinned cells
+    and probes of ``_PINNED_CELLS_CTES`` composed with the PQ
+    encode/LUT/ADC chain of ``_PQ_CTES``."""
+    return _pq_topk_sql(
+        f"{_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}",
+        """  SELECT cd.query_id, cd.corpus_id, SUM(l.pdot) AS ad
   FROM cand cd
   JOIN encoded x ON x.vec_id = cd.corpus_id
   JOIN lut l ON l.query_id = cd.query_id AND l.s = x.s AND l.cw = x.cw
-  GROUP BY cd.query_id, cd.corpus_id
-)
-SELECT query_id, corpus_id, cosine_pq, rank FROM (
-  SELECT a.query_id, a.corpus_id,
-         ROUND(a.ad / (q.qn * r.rn), 6) AS cosine_pq,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY a.query_id
-           ORDER BY ROUND(a.ad / (q.qn * r.rn), 6) DESC, a.corpus_id ASC
-         ) AS INTEGER) AS rank
-  FROM adot a
-  JOIN qn q ON a.query_id = q.vec_id
-  JOIN rec_norm r ON a.corpus_id = r.vec_id
-  WHERE q.qn > 0 AND r.rn > 0
-) WHERE rank <= {TOP_K}"""
+  GROUP BY cd.query_id, cd.corpus_id""",
+    )
 
 
 @register("sim_ivfpq_topk_pinned", _ivfpq_oracle())
@@ -1847,114 +1786,36 @@ def sim_ivfpq_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**IVF-PQ**: the other canonical ANN index layout (FAISS
     ``IVFx,PQy``) — IVF cells bound the candidate set, PQ codes shrink
     what each cell stores to ``PQ_M`` bytes/vector (16×), and scoring
-    is the LUT-addressed asymmetric sum over candidates only. Composed
-    from the two independently-verified pieces
-    (:func:`sim_ivf_topk_pinned` cells, :func:`sim_pq_topk_pinned`
-    encode/LUT/ADC); pinned centroids and codebooks keep the whole
-    composed index hash-verified in SQL at all three scale factors.
+    is the LUT-addressed asymmetric sum over candidates only: the
+    pinned-IVF core's candidates (:func:`_ivf_candidates`) scored by
+    the PQ build of :func:`sim_pq_topk_pinned` (:func:`_pq_topk`);
+    pinned centroids and codebooks keep the whole composed index
+    hash-verified in SQL at all three scale factors.
 
     Scale: memory per cell = M bytes/vector + the shared M×K codebook;
     probe cost = (nprobe/K of the corpus) × M LUT lookups — the layout
     serving billion-vector indexes from RAM. IVF-SQ8 keeps 4× at
     higher fidelity; IVF-PQ trades fidelity for another 4× — the
     recall step-down is pytest-pinned against brute force."""
-    from pyspark.sql import Window
-
-    emb = load_raw(spark, sf_dir, "embeddings")
-    proj = emb.select("vec_id", _as_double("embedding").alias("e"))
-    cents = [
-        list(r["e"])
-        for r in proj.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("e")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "query_id long, corpus_id long, cosine_pq double, rank int"
         )
-    cellmap = proj.select(
-        "vec_id", F.element_at(_probe_udf(cents, 1)(F.col("e")), 1).alias("cid")
+    cand = _ivf_candidates(base, cents, IVF_NPROBE).select(
+        "query_id", F.col("vec_id").alias("corpus_id")
     )
-    probes = proj.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(_probe_udf(cents, IVF_NPROBE)(F.col("e"))).alias("cid"),
-    )
-    cand = (
-        cellmap.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("corpus_id"))
-        .distinct()
-    )
-    # NOTE (r12): same measured verdict as sim_pq_topk_pinned - the
-    # subvector persists cost more than the re-scans; reverted.
-    subs = proj.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice("e", s * PQ_SUB + 1, PQ_SUB).alias("sv"),
-                    )
-                    for s in range(PQ_M)
-                ]
-            )
-        ).alias("x"),
-    ).select("vec_id", "x.s", "x.sv")
-    codebook = subs.filter(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("cw"),
-        "s",
-        F.col("sv").alias("cv"),
-        _dot(F.col("sv"), F.col("sv")).alias("cc"),
-    )
-    enc_w = Window.partitionBy("vec_id", "s").orderBy(
-        F.desc(2 * _dot(F.col("sv"), F.col("cv")) - F.col("cc")), F.asc("cw")
-    )
-    encoded = (
-        subs.join(F.broadcast(codebook), "s")
-        .withColumn("rn", F.row_number().over(enc_w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "cw", "cc")
-    )
-    rec_norm = encoded.groupBy("vec_id").agg(F.sqrt(F.sum("cc")).alias("rnm"))
-    lut = (
-        subs.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(codebook), "s")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "s",
-            "cw",
-            _dot(F.col("sv"), F.col("cv")).alias("pdot"),
+
+    def adc(encoded: DataFrame, lut: DataFrame) -> DataFrame:
+        return (
+            cand.join(encoded, cand.corpus_id == encoded.vec_id)
+            .join(F.broadcast(lut), ["query_id", "s", "cw"])
+            .groupBy("query_id", "corpus_id")
+            .agg(F.sum("pdot").alias("ad"))
         )
-    )
-    qn = proj.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), _norm(F.col("e")).alias("qn")
-    )
-    adot = (
-        cand.join(encoded, cand.corpus_id == encoded.vec_id)
-        .join(F.broadcast(lut), ["query_id", "s", "cw"])
-        .groupBy("query_id", "corpus_id")
-        .agg(F.sum("pdot").alias("ad"))
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_pq"), F.asc("corpus_id")
-    )
-    out = (
-        adot.join(F.broadcast(qn), "query_id")
-        .join(rec_norm, F.col("corpus_id") == rec_norm.vec_id)
-        .filter((F.col("qn") > 0) & (F.col("rnm") > 0))
-        .select(
-            "query_id",
-            "corpus_id",
-            F.round(F.col("ad") / (F.col("qn") * F.col("rnm")), 6).alias(
-                "cosine_pq"
-            ),
-        )
-        .withColumn("rank", F.row_number().over(rank_w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
-    return out
+
+    return _pq_topk(base, adc)
 
 
 # --------------------------------------------------------- SemDeDup
@@ -1965,31 +1826,15 @@ SEMDEDUP_THRESHOLD = COSINE_THRESHOLD
 
 
 def _semdedup_oracle() -> str:
-    """DuckDB twin of :func:`sim_semdedup`: pinned centroids (first
-    ``IVF_K`` corpus vectors), argmax-cosine cell assignment with the
-    lower-cid tiebreak, then the keep rule evaluated as a relational
-    EXISTS over intra-cluster pairs."""
-    cos_vc = (
-        "list_dot_product(v.e, c.e) / (sqrt(list_dot_product(v.e, v.e))"
-        " * sqrt(list_dot_product(c.e, c.e)))"
-    )
+    """DuckDB twin of :func:`sim_semdedup`: the pinned cells of
+    ``_PINNED_CELLS_CTES``, then the keep rule evaluated as a
+    relational EXISTS over intra-cluster pairs."""
     cos_me = (
         "list_dot_product(pm.e, pe.e) / (sqrt(list_dot_product(pm.e, pm.e))"
         " * sqrt(list_dot_product(pe.e, pe.e)))"
     )
-    return f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), ranked_cells AS (
-  SELECT v.vec_id, c.cid, {cos_vc} AS c_cos,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id ORDER BY {cos_vc} DESC, c.cid ASC
-         ) AS cell_rank
-  FROM proj v CROSS JOIN cents c
-), mem AS (
-  SELECT vec_id, cid, ROUND(c_cos, 6) AS c_cos
-  FROM ranked_cells WHERE cell_rank = 1
+    return f"""WITH {_PINNED_CELLS_CTES}, mem AS (
+  SELECT vec_id, cid, ROUND(c_cos, 6) AS c_cos FROM cells
 ), dropped AS (
   SELECT DISTINCT m.vec_id
   FROM mem m
@@ -2014,7 +1859,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. **cluster**: assign every vector to its nearest pinned centroid
        (first ``IVF_K`` corpus vectors, argmax cosine, lower-cid
-       tiebreak — the same portable index core as
+       tiebreak — the pinned-IVF core's :func:`_with_cell`, as in
        :func:`sim_ivf_topk_pinned`);
     2. **pair within cluster**: intra-cluster cosine ≥
        ``SEMDEDUP_THRESHOLD`` marks a semantic-dup edge — pairs are
@@ -2034,29 +1879,16 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (cf. ``dedup_neardup_canonical`` for the lexical analogue).
     Scale: one centroid probe (Arrow-batched matmul) + one
     cell-keyed self-join; no global shuffle beyond the cell key."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "vec_id long, cid long, centroid_cos double, kept boolean"
         )
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid long, cemb array<double>"
-    ).withColumn("cnrm", _norm(F.col("cemb")))
     mem = (
-        base.withColumn(
-            "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1).cast("long")
-        )
-        .join(F.broadcast(cent_df), "cid")
+        _with_cell(base, cents)
+        .withColumn("cid", F.col("cid").cast("long"))
+        .join(F.broadcast(_centroid_table(spark, cents)), "cid")
         .select(
             "vec_id",
             "cid",
@@ -2498,22 +2330,12 @@ def sim_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_silhouette_simplified",
-    f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), dists AS (
-  SELECT v.vec_id, c.cid,
-         ROUND(1 - list_dot_product(v.e, c.e)
-               / (sqrt(list_dot_product(v.e, v.e))
-                  * sqrt(list_dot_product(c.e, c.e))), 6) AS d,
+    f"""WITH {_PINNED_CELLS_CTES}, dists AS (
+  SELECT vec_id, cid, ROUND(1 - c_cos, 6) AS d,
          ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id ORDER BY
-             ROUND(1 - list_dot_product(v.e, c.e)
-                   / (sqrt(list_dot_product(v.e, v.e))
-                      * sqrt(list_dot_product(c.e, c.e))), 6) ASC, c.cid ASC
+           PARTITION BY vec_id ORDER BY ROUND(1 - c_cos, 6) ASC, cid ASC
          ) AS rk
-  FROM proj v CROSS JOIN cents c
+  FROM ranked_cells
 ), ab AS (
   SELECT o.vec_id, o.cid, o.d AS a, n.d AS b
   FROM (SELECT * FROM dists WHERE rk = 1) o
@@ -2537,31 +2359,19 @@ def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     family. Per-cell member counts and mean silhouette; cells near 0
     are boundaries, negative means misassignment pressure.
 
-    All distances quantized to 6 dp with cid tiebreaks (assignment
-    identical to the other pinned-centroid operators); one
+    All distances quantized to 6 dp with cid tiebreaks (centroids from
+    the pinned-IVF core, :func:`_pinned_centroids`); one
     corpus × K broadcast distance computation, one row per vector, a
     K-row result."""
     from pyspark.sql import Window
 
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "cid long, n_members long, mean_silhouette double"
         )
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid long, cemb array<double>"
-    ).withColumn("cnrm", _norm(F.col("cemb")))
-    dists = base.crossJoin(F.broadcast(cent_df)).select(
+    dists = base.crossJoin(F.broadcast(_centroid_table(spark, cents))).select(
         "vec_id",
         "cid",
         F.round(
@@ -3002,26 +2812,12 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- IVF cell-balance report
 
-_CELL_BALANCE_ORACLE = f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), assigned AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.e, c.e)
-               / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e))) DESC,
-               c.cid ASC
-           ) AS cell_rank
-    FROM proj v CROSS JOIN (SELECT cid, e FROM cents) c
-  ) WHERE cell_rank = 1
-), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM assigned)
+_CELL_BALANCE_ORACLE = f"""WITH {_PINNED_CELLS_CTES},
+tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM cells)
 SELECT a.cid, CAST(COUNT(*) AS BIGINT) AS n,
        ROUND(CAST(COUNT(*) AS DOUBLE) / t.total, 6) AS share,
        ROUND(CAST(COUNT(*) AS DOUBLE) * {IVF_K} / t.total, 6) AS skew
-FROM assigned a, tot t GROUP BY a.cid, t.total"""
+FROM cells a, tot t GROUP BY a.cid, t.total"""
 
 
 @register("sim_ivf_cell_balance", _CELL_BALANCE_ORACLE)
@@ -3038,23 +2834,15 @@ def sim_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: assignment is the broadcast-centroid map-side argmax (no
     shuffle); the report aggregates into exactly IVF_K groups."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb"))
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "cid int, n long, share double, skew double"
         )
-    assigned = base.withColumn(
-        "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1)
-    ).select("vec_id", "cid")
-    counts = assigned.groupBy("cid").agg(F.count("*").cast("long").alias("n"))
+    counts = (
+        _with_cell(base, cents).groupBy("cid").agg(F.count("*").cast("long").alias("n"))
+    )
     tot = counts.agg(F.sum("n").alias("total"))
     return (
         counts.crossJoin(F.broadcast(tot))
@@ -3541,8 +3329,6 @@ def _nprobe_curve_oracle() -> str:
     from ..registry import _REGISTRY
 
     bf = _REGISTRY["sim_bruteforce_topk"].oracle
-    cos = """list_dot_product(v.e, c.e)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
     per_n = []
     for n in NPROBE_SWEEP:
         per_n.append(
@@ -3553,7 +3339,7 @@ def _nprobe_curve_oracle() -> str:
              PARTITION BY query_id
              ORDER BY ROUND(cosine, 6) DESC, corpus_id ASC
            ) AS r
-    FROM cand WHERE cell_rank <= {n}
+    FROM scored WHERE cell_rank <= {n}
   ) WHERE r <= {TOP_K}
 ), hits_{n} AS (
   SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS h
@@ -3571,32 +3357,14 @@ FROM spine s LEFT JOIN hits_{n} h ON h.query_id = s.query_id"""
     )
     return f"""WITH bf AS (
 {bf}
-), proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-), cents AS (
-  SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
-), ranked_cells AS (
-  SELECT v.vec_id, c.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY {cos} DESC, c.cid ASC
-         ) AS cell_rank
-  FROM proj v CROSS JOIN (SELECT cid, e FROM cents) c
-), corpus AS (
-  SELECT vec_id, cid FROM ranked_cells WHERE cell_rank = 1
-), queries AS (
-  SELECT vec_id AS query_id, cid, cell_rank FROM ranked_cells
-  WHERE vec_id < {N_QUERIES} AND cell_rank <= {max(NPROBE_SWEEP)}
-), cand AS (
-  SELECT q.query_id, co.vec_id AS corpus_id, q.cell_rank,
+), {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(max(NPROBE_SWEEP))}, scored AS (
+  SELECT c.query_id, c.corpus_id, c.cell_rank,
          list_dot_product(pq.e, pc.e)
            / (sqrt(list_dot_product(pq.e, pq.e)) * sqrt(list_dot_product(pc.e, pc.e)))
            AS cosine
-  FROM queries q
-  JOIN corpus co ON q.cid = co.cid
-  JOIN proj pq ON pq.vec_id = q.query_id
-  JOIN proj pc ON pc.vec_id = co.vec_id
-  WHERE co.vec_id <> q.query_id
+  FROM cand c
+  JOIN proj pq ON pq.vec_id = c.query_id
+  JOIN proj pc ON pc.vec_id = c.corpus_id
 ), spine AS (
   SELECT query_id, CAST(COUNT(*) AS BIGINT) AS k_eff FROM bf GROUP BY query_id
 ), {", ".join(per_n)}
@@ -3622,43 +3390,13 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-partitioned top-K window over O(queries · corpus/IVF_K ·
     nprobe) rows and a count join against the O(queries·K) exact set.
     At 100 TB the sweep cost is candidate generation, paid once."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
-    cents = [
-        list(r["emb"])
-        for r in base.filter(F.col("vec_id") < IVF_K)
-        .orderBy("vec_id")
-        .select("emb")
-        .collect()
-    ]
+    base = _emb_base(spark, sf_dir)
+    cents = _pinned_centroids(base)
     if not cents:
         return spark.createDataFrame(
             [], "nprobe int, query_id long, k_eff long, n_hits long, recall double"
         )
-    max_n = max(NPROBE_SWEEP)
-    corpus = base.withColumn(
-        "cid", F.element_at(_probe_udf(cents, 1)(F.col("emb")), 1)
-    )
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.posexplode(_probe_udf(cents, max_n)(F.col("emb"))).alias("pos", "cid"),
-    )
-    cands = bsp.persist(
-        corpus.join(F.broadcast(queries), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("corpus_id"),
-            (F.col("pos") + 1).alias("cell_rank"),
-            (
-                _dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-        )
-    )
+    cands = bsp.persist(_ivf_flat_scored(base, cents, max(NPROBE_SWEEP)))
     bf = bsp.persist(
         sim_bruteforce_topk(spark, sf_dir)
         .select("query_id", "corpus_id")
@@ -4125,8 +3863,8 @@ def _nnd_topk_sql(src: str, name: str) -> str:
     DuckDB inlines CTEs by default, and g0 feeds undir (twice),
     cand1, and the final recall join — without materialization the
     million-row cosine window re-executes per reference (measured 6×
-    at sf0.1, 52 s → 4 s). The Spark side persists g0 for the same
-    reason."""
+    at sf0.1, 52 s → 4 s). The Spark side localCheckpoints g0 for the
+    same reason."""
     return f"""{name} AS MATERIALIZED (
   SELECT u, v FROM (
     SELECT s.u, s.v,
@@ -4238,24 +3976,26 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work of the dominant leg) and mirror: the scorer's per-pair sum is
     # element-ordered, so cos(u,v) and cos(v,u) are bit-identical.
     cand0_lt = _lsh_pairs(emb, LSH_TABLES, LSH_BITS)
-    # Persisted: the mirror union references this subtree TWICE, and
-    # Catalyst has no cross-subtree CSE — unpersisted, the dominant
-    # cosine leg would execute once per branch (the ml_als_two_sweeps
-    # lesson; released by the query scope after checkpoint_result).
-    sc_lt = score(cand0_lt)
-    bsp.persist(sc_lt)
+    # Each stage below is read more than once downstream (sc_lt by both
+    # mirror halves, g0 by undir, cand1 and the recall join, undir by
+    # its self-join, g1 by the recall join), and each is built from the
+    # one before, so each truncates with an eager localCheckpoint (the
+    # loop rule in operators/bsp.py). Persisting them instead nests
+    # every earlier stage in each later one's plan: at sf0.001 the
+    # final execution's plan description was 2,685 KB.
+    sc_lt = score(cand0_lt).localCheckpoint(eager=True)
     g0 = rank_topk(
         sc_lt.unionByName(
             sc_lt.select(
                 F.col("v").alias("u"), F.col("u").alias("v"), "cosine"
             )
         )
+    ).localCheckpoint(eager=True)
+    undir = (
+        g0.unionByName(g0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    bsp.persist(g0)
-    undir = g0.unionByName(
-        g0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-    bsp.persist(undir)
     cand1 = (
         undir.alias("x")
         .join(undir.alias("y"), F.col("x.v") == F.col("y.u"))
@@ -4264,8 +4004,7 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(g0)
         .distinct()
     )
-    g1 = topk(cand1)
-    bsp.persist(g1)
+    g1 = topk(cand1).localCheckpoint(eager=True)
 
     ids = emb.select("vec_id")
     exact = topk(

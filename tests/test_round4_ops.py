@@ -246,31 +246,6 @@ def test_referential_integrity_covers_every_fk_edge(spark):
         assert 0 <= r.n_null_fk <= r.n_child
 
 
-# --------------------------------------------------- ANN recall@K
-
-def test_ann_recall_report_matches_set_overlap(spark):
-    """recall = |IVF∩BF| / |BF| per query, recomputed from the two
-    component rankings' collected sets; one row per brute-force query,
-    recall within [0, 1]."""
-    bf_rows = _q("sim_bruteforce_topk")(spark, SF_DIR).collect()
-    ivf_rows = _q("sim_ivf_topk_pinned")(spark, SF_DIR).collect()
-    bf, ivf = {}, {}
-    for r in bf_rows:
-        bf.setdefault(r.query_id, set()).add(r.corpus_id)
-    for r in ivf_rows:
-        ivf.setdefault(r.query_id, set()).add(r.corpus_id)
-
-    report = {r.query_id: r for r in _q("sim_ann_recall_report")(spark, SF_DIR).collect()}
-    assert set(report) == set(bf)
-    for qid, want in bf.items():
-        r = report[qid]
-        hits = len(want & ivf.get(qid, set()))
-        assert r.k_eff == len(want)
-        assert r.n_hits == hits
-        assert abs(r.recall - hits / len(want)) < 1e-6
-        assert 0.0 <= r.recall <= 1.0
-
-
 # ------------------------------------------------ growth accounting
 
 def test_growth_accounting_flux_identities(spark):
@@ -337,42 +312,6 @@ def test_lpa_matches_python_replay(spark):
     got = {r.node: r.label for r in _q("graph_lpa_communities")(spark, SF_DIR).collect()}
     assert got == labels
     assert set(got.values()) <= set(edges)
-
-
-# ------------------------------------------------ nprobe recall curve
-
-def test_nprobe_recall_curve_monotone_and_consistent(spark):
-    """Recall is monotone non-decreasing in nprobe per query (the
-    candidate set only grows, and under the shared total order any
-    displacing item is itself a brute-force hit), and the curve at the
-    production point must equal the point audit exactly."""
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        IVF_NPROBE,
-        NPROBE_SWEEP,
-    )
-
-    rows = _q("sim_nprobe_recall_curve")(spark, SF_DIR).collect()
-    assert rows
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, {})[r.nprobe] = r
-    for qid, pts in by_q.items():
-        assert set(pts) == set(NPROBE_SWEEP)
-        ordered = [pts[n] for n in sorted(pts)]
-        for a, b in zip(ordered, ordered[1:]):
-            assert b.n_hits >= a.n_hits, (qid, a.nprobe, b.nprobe)
-        for r in ordered:
-            assert 0.0 <= r.recall <= 1.0 and r.k_eff > 0
-
-    point = {
-        r.query_id: (r.k_eff, r.n_hits, r.recall)
-        for r in _q("sim_ann_recall_report")(spark, SF_DIR).collect()
-    }
-    curve_at_prod = {
-        qid: (p[IVF_NPROBE].k_eff, p[IVF_NPROBE].n_hits, p[IVF_NPROBE].recall)
-        for qid, p in by_q.items()
-    }
-    assert curve_at_prod == point
 
 
 # ---------------------------------------------------- modularity
