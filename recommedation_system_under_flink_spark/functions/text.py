@@ -13,7 +13,10 @@ Pinned specs replacing reference code that is absent from the snapshot
   (TextRank.java:9) but absent. Pin: lowercase → split on
   ``[^a-z0-9]+`` → drop empties → drop STOPWORDS. The same regex +
   stop list is used verbatim by the SQL twins (operators/*.py oracles),
-  so UDF and relational paths tokenize identically.
+  so UDF and relational paths tokenize identically. The document form
+  (stop words kept) is :func:`doc_tokens` in Spark and
+  ``DOC_TOKENS_SQL`` in DuckDB — the one copy every relational builder
+  and oracle reads.
 - **F2 window clamp** — the reference has an off-by-one: when the
   right window edge passes the end of the token list it is reset to
   ``0`` instead of ``size-1`` (TextRank.java:183-184), silently
@@ -25,6 +28,10 @@ Pinned specs replacing reference code that is absent from the snapshot
 from __future__ import annotations
 
 import heapq
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 #: Pinned stop list (F1). Kept deliberately small and explicit — it is
 #: part of the engine spec, mirrored into every SQL oracle.
@@ -38,6 +45,22 @@ STOPWORDS: tuple[str, ...] = (
 TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 
 _STOPSET = frozenset(STOPWORDS)
+
+#: DuckDB twin of :func:`doc_tokens` over a ``text`` column.
+DOC_TOKENS_SQL = (
+    f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), t -> t <> '')"
+)
+
+
+def doc_tokens(text: Column) -> Column:
+    """Document tokens as a Spark array column: lowercase → split on
+    ``TOKEN_SPLIT_REGEX`` → drop empties. Stop words are kept (dedup
+    and corpus statistics want the surface text)."""
+    # imported here: the keyword UDF workers import this module and
+    # need none of the DataFrame API
+    from pyspark.sql import functions as F
+
+    return F.filter(F.split(F.lower(text), TOKEN_SPLIT_REGEX), lambda t: t != "")
 
 
 def tokenize(text: str | None) -> list[str]:

@@ -9,9 +9,10 @@ chunk), which is the only shape that survives 100 TB:
 - **n-gram Jaccard** — 3-token shingles, inverted-index equi-join on
   shingle, exact Jaccard from intersection counts (same algebra as the
   inverted-index J3, operators/joins.py).
-- **MinHash + LSH** — per-doc signature of H murmur3 min-hashes, banded
-  into B buckets; candidates = docs sharing a band bucket; verified
-  against exact Jaccard. Candidate cost is O(docs·B), never O(docs²).
+- **MinHash + LSH** — per-doc signature of H min-hashes (2-universal
+  hashes over one md5 digest per shingle), banded into B buckets;
+  candidates = docs sharing a band bucket; verified against exact
+  Jaccard. Candidate cost is O(docs·B), never O(docs²).
 - **SimHash** — 64-bit weighted token-hash signature via a pandas UDF;
   near-dup candidates share one of four 16-bit chunks (hamming-LSH),
   verified by ``bit_count`` hamming distance.
@@ -22,6 +23,15 @@ except stop-shingles, which the distinct-per-doc step bounds. MinHash
 signatures are 8·H bytes/doc regardless of doc length; banding keeps
 the bucket join selective (P[candidate] ≈ 1-(1-j^r)^b). The exact
 verify stage only ever sees candidate pairs.
+
+Every near-dup builder reads one core, in Spark and again in the DuckDB
+twins: token arrays (:func:`_token_arrays` / ``_TOKENS_CTE``) →
+shingles (:func:`shingles` / :func:`_shingles_sql`) → signatures
+(:func:`minhash_signatures` / ``_SIG_CTES``) → band buckets and
+candidates (:func:`_band_buckets`, :func:`_band_candidates` /
+:func:`_band_cand_sql`) → exact Jaccard verify (:func:`_verify_jaccard`
+/ :func:`_verify_sql`). The twins are independent SQL; they share no
+code with the Spark side.
 """
 
 from __future__ import annotations
@@ -32,7 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_SPLIT_REGEX
+from ..functions.text import DOC_TOKENS_SQL, STOPWORDS, doc_tokens
 from . import bsp
 from ..registry import register
 from .quantize import ppm_value
@@ -56,45 +66,148 @@ SIMHASH_MAX_HAMMING = 8
 
 # --------------------------------------------------------------- shingles
 
-def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """Distinct n-token shingles per doc: tokenize (raw split — dedup
-    wants surface text, stopwords included), slide an n-window via
-    ``transform`` over token indices, explode, distinct.
+def _token_arrays(docs: DataFrame) -> DataFrame:
+    """``(doc_id, ts)``: each document's token array (raw split — dedup
+    wants surface text, stopwords included).
 
-    The token array is projected into its own column BEFORE the window
-    ``transform``: an expression referenced inside a higher-order-
-    function lambda is re-evaluated per element, so inlining the regex
-    split there makes tokenization O(tokens²) per doc (measured 6-10×
-    slower at sf0.1)."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    tok_df = docs.select("doc_id", toks.alias("ts"))
-    # sequence(0, size-n) is inclusive → size-n+1 shingles; guard short
-    # docs (sequence with start > stop would count DOWN, not be empty)
-    sh = F.when(
-        F.size("ts") >= n,
+    The array is projected into its own column BEFORE any ``transform``
+    over it: an expression referenced inside a higher-order-function
+    lambda is re-evaluated per element, so inlining the regex split
+    there makes tokenization O(tokens²) per doc (measured 6-10× slower
+    at sf0.1)."""
+    return docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
+
+
+def _shingle_window(ts: Column, n: int) -> Column:
+    """The n-token shingles of token array ``ts``, in order: an n-window
+    slid by ``transform`` over token indices. ``sequence(0, size-n)``
+    is inclusive → size-n+1 shingles; short docs get an empty array
+    (``sequence`` with start > stop would count DOWN, not be empty)."""
+    return F.when(
+        F.size(ts) >= n,
         F.transform(
-            F.sequence(F.lit(0), F.size("ts") - n),
+            F.sequence(F.lit(0), F.size(ts) - n),
             lambda i: F.concat_ws(
-                " ", *[F.element_at(F.col("ts"), i + k + 1) for k in range(n)]
+                " ", *[F.element_at(ts, i + k + 1) for k in range(n)]
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return tok_df.select("doc_id", F.explode(sh).alias("shingle")).distinct()
 
 
-#: DuckDB twin of :func:`shingles` (3-token shingles, distinct per doc).
-_SHINGLES_CTE = f"""sh AS (
-  SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
-  FROM (
-    SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM (
-      SELECT doc_id, list_filter(
-        string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'),
-        t -> t <> '') AS ts
-      FROM documents
+def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """Distinct n-token shingles per doc: token arrays → shingle window
+    → explode → distinct."""
+    return (
+        _token_arrays(docs)
+        .select("doc_id", F.explode(_shingle_window(F.col("ts"), n)).alias("shingle"))
+        .distinct()
     )
-  ) WHERE i <= len(ts) - {SHINGLE_N - 1}
+
+
+def _jaccard() -> Column:
+    """``|A∩B| / |A∪B|`` from the ``inter``, ``n1``, ``n2`` columns."""
+    return F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter"))
+
+
+def _with_sizes(inter: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """Attach both docs' distinct-shingle counts to an ``(a, b, inter)``
+    pair relation as ``n1``/``n2`` — two broadcast joins against the
+    per-doc sizes (one row per doc, 8 bytes of payload)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    return inter.join(
+        F.broadcast(sizes.select(F.col("doc_id").alias(a), F.col("n").alias("n1"))), a
+    ).join(
+        F.broadcast(sizes.select(F.col("doc_id").alias(b), F.col("n").alias("n2"))), b
+    )
+
+
+def _shingle_overlaps(sh: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, inter, n1, n2)`` for every doc pair sharing ≥1
+    shingle: the inverted-index self-join on shingle → intersection
+    counts → both set sizes. Only docs sharing a shingle ever pair."""
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
+    )
+    return _with_sizes(inter, sh, "doc_a", "doc_b")
+
+
+def _verify_jaccard(
+    cand: DataFrame, sh: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``cand(a, b)``: cand ⋈ sh
+    ⋈ sh on shingle → intersection count → sizes → ``(a, b, jaccard)``
+    with jaccard ≥ ``JACCARD_THRESHOLD``, unrounded. Cost scales with
+    candidates, not with every colliding pair."""
+    inter = (
+        cand.alias("c")
+        .join(sh.alias("sa"), F.col(f"c.{a}") == F.col("sa.doc_id"))
+        .join(
+            sh.alias("sb"),
+            (F.col(f"c.{b}") == F.col("sb.doc_id"))
+            & (F.col("sa.shingle") == F.col("sb.shingle")),
+        )
+        .groupBy(F.col(f"c.{a}").alias(a), F.col(f"c.{b}").alias(b))
+        .agg(F.count("*").alias("inter"))
+    )
+    return (
+        _with_sizes(inter, sh, a, b)
+        .select(a, b, _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
+#: DuckDB twin of :func:`_token_arrays`.
+_TOKENS_CTE = f"""toks AS (
+  SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents
+)"""
+
+
+def _shingles_sql(n: int = SHINGLE_N) -> str:
+    """DuckDB twin of :func:`shingles`: CTEs ``toks`` → ``possh``
+    (doc_id, 1-based pos, shingle) → ``sh`` (distinct per doc)."""
+    gram = " || ' ' || ".join(f"ts[i+{k}]" for k in range(n))
+    return f"""{_TOKENS_CTE}, possh AS (
+  SELECT doc_id, i AS pos, {gram} AS shingle
+  FROM (SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM toks)
+  WHERE i <= len(ts) - {n - 1}
+), sh AS (
+  SELECT DISTINCT doc_id, shingle FROM possh
+)"""
+
+
+#: DuckDB twin of :func:`_shingle_overlaps` over ``sh``: CTE ``ov``.
+_OVERLAPS_CTE = """ov AS (
+  SELECT i.d1 AS doc_a, i.d2 AS doc_b, i.inter, s1.n AS n1, s2.n AS n2
+  FROM (
+    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
+    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+    GROUP BY 1, 2
+  ) i
+  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s1 ON i.d1 = s1.doc_id
+  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s2 ON i.d2 = s2.doc_id
+)"""
+
+
+def _verify_sql(name: str, cand: str) -> str:
+    """DuckDB twin of :func:`_verify_jaccard`: CTE ``name`` holding the
+    (doc_a, doc_b, jaccard) rows of candidate CTE ``cand`` that reach
+    ``JACCARD_THRESHOLD``, unrounded."""
+    return f"""{name} AS (
+  SELECT i.doc_a, i.doc_b,
+         CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) AS jaccard
+  FROM (
+    SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
+    FROM {cand} c
+    JOIN sh a ON a.doc_id = c.doc_a
+    JOIN sh b ON b.doc_id = c.doc_b AND a.shingle = b.shingle
+    GROUP BY c.doc_a, c.doc_b
+  ) i
+  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s1 ON i.doc_a = s1.doc_id
+  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s2 ON i.doc_b = s2.doc_id
+  WHERE CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) >= {JACCARD_THRESHOLD}
 )"""
 
 
@@ -123,19 +236,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------- n-gram Jaccard dedup
 
-_JACCARD_BODY = f"""SELECT i.d1 AS doc_a, i.d2 AS doc_b,
-       CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) AS jaccard
-FROM (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-) i
-JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s1 ON i.d1 = s1.doc_id
-JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s2 ON i.d2 = s2.doc_id
-WHERE CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) >= {JACCARD_THRESHOLD}"""
+_JACCARD_BODY = f"""SELECT doc_a, doc_b,
+       CAST(inter AS DOUBLE) / (n1 + n2 - inter) AS jaccard
+FROM ov WHERE CAST(inter AS DOUBLE) / (n1 + n2 - inter) >= {JACCARD_THRESHOLD}"""
 
 
-@register("dedup_ngram_jaccard", f"WITH {_SHINGLES_CTE}\n{_JACCARD_BODY}")
+@register("dedup_ngram_jaccard", f"WITH {_shingles_sql()}, {_OVERLAPS_CTE}\n{_JACCARD_BODY}")
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact shingle Jaccard ≥ threshold, computed via
     the inverted-index pattern: equi-join on shingle → intersection
@@ -145,27 +251,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (sizes + both join sides) each re-derive the
     # shingle chain (no cross-subtree CSE in Catalyst): sh is NOT
     # persisted; only the small pair result is checkpointed
-    sh = shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = (
-        inter.join(F.broadcast(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n1")), "doc_a")
-        .join(F.broadcast(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "n2")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
+    jac = _shingle_overlaps(shingles(docs)).select("doc_a", "doc_b", _jaccard().alias("jaccard"))
     return bsp.checkpoint_result(jac.filter(F.col("jaccard") >= JACCARD_THRESHOLD))
 
 
@@ -213,53 +299,83 @@ def minhash_signatures(sh: DataFrame, h: int = MINHASH_H) -> DataFrame:
     return based.groupBy("doc_id").agg(*aggs)
 
 
+def _band_buckets(sig: DataFrame, bands: int, rpb: int) -> DataFrame:
+    """``(doc_id, band, bucket)``: signature columns ``h0..`` cut into
+    ``bands`` bands of ``rpb`` rows; a band's bucket is the md5 of its
+    values joined by commas (a 32-byte uniform join key)."""
+    arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat_ws(",", *[F.col(f"h{b * rpb + r}").cast("string") for r in range(rpb)])
+                ).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select("doc_id", F.explode(arr).alias("bb")).select(
+        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)``, ``doc_a < doc_b``, sharing a
+    (band, bucket): the LSH candidate self-join."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+#: DuckDB twin of :func:`minhash_signatures` over ``sh``.
+_SIG_COLS = ",\n         ".join(
+    f"MIN(({_mh_a(i)} * xm + {_mh_b(i)}) % {_MH_P}) AS h{i}" for i in range(MINHASH_H)
+)
+_SIG_CTES = f"""sigsrc AS (
+  SELECT doc_id, {_SHINGLE_X_SQL} AS xm FROM sh
+), sig AS (
+  SELECT doc_id,
+         {_SIG_COLS}
+  FROM sigsrc GROUP BY doc_id
+)"""
+
+
+def _band_cand_sql(bands: int, rpb: int) -> str:
+    """DuckDB twin of :func:`_band_buckets` + :func:`_band_candidates`
+    over ``sig``: CTEs ``banded_{bands}`` and ``cand_{bands}``."""
+
+    def key(b: int) -> str:
+        return " || ',' || ".join(f"CAST(h{b * rpb + r} AS VARCHAR)" for r in range(rpb))
+
+    selects = "\n    UNION ALL\n    ".join(
+        f"SELECT doc_id, {b} AS band, md5({key(b)}) AS bucket FROM sig" for b in range(bands)
+    )
+    return f"""banded_{bands} AS (
+    {selects}
+), cand_{bands} AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM banded_{bands} a JOIN banded_{bands} b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+)"""
+
+
 def _minhash_ctes() -> str:
     """CTE chain rebuilding the MinHash/LSH pipeline in DuckDB SQL:
     shingles → signatures (same seeded portable hashes) → 2-row band
     buckets → candidate pairs → Jaccard-verified pairs (``mh_pairs``).
     Shared by the pair oracle and the canonical-verdict oracle."""
-    rpb = MINHASH_H // MINHASH_BANDS
-    sig_cols = ",\n         ".join(
-        f"MIN(({_mh_a(i)} * xm + {_mh_b(i)}) % {_MH_P}) AS h{i}"
-        for i in range(MINHASH_H)
-    )
-    band_selects = "\n    UNION ALL\n    ".join(
-        "SELECT doc_id, {b} AS band, md5({key}) AS bucket FROM sig".format(
-            b=b,
-            key=" || ',' || ".join(
-                f"CAST(h{b * rpb + r} AS VARCHAR)" for r in range(rpb)
-            ),
-        )
-        for b in range(MINHASH_BANDS)
-    )
-    return f"""{_SHINGLES_CTE},
-sigsrc AS (
-  SELECT doc_id, {_SHINGLE_X_SQL} AS xm FROM sh
-),
-sig AS (
-  SELECT doc_id,
-         {sig_cols}
-  FROM sigsrc GROUP BY doc_id
-), banded AS (
-    {band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-), mh_pairs AS (
-  SELECT i.doc_a, i.doc_b,
-         CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) AS jaccard
-  FROM (
-    SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-    FROM cand c
-    JOIN sh a ON a.doc_id = c.doc_a
-    JOIN sh b ON b.doc_id = c.doc_b AND a.shingle = b.shingle
-    GROUP BY c.doc_a, c.doc_b
-  ) i
-  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s1 ON i.doc_a = s1.doc_id
-  JOIN (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id) s2 ON i.doc_b = s2.doc_id
-  WHERE CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter) >= {JACCARD_THRESHOLD}
-)"""
+    return f"""{_shingles_sql()},
+{_SIG_CTES},
+{_band_cand_sql(MINHASH_BANDS, MINHASH_H // MINHASH_BANDS)},
+{_verify_sql("mh_pairs", f"cand_{MINHASH_BANDS}")}"""
 
 
 def _minhash_oracle() -> str:
@@ -276,88 +392,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures → band into ``MINHASH_BANDS`` buckets (band key =
     md5 of the band's rows) → equi-join on (band, bucket) → distinct
     candidate pairs → verify with exact shingle Jaccard ≥ threshold.
-    The hash is the pinned portable one (:func:`_portable_hash`), so
-    the ENTIRE sketch chain — signatures, banding, candidates, verify —
-    is hash-compared against the DuckDB oracle, not just rows-counted.
+    The signatures are the pinned portable 2-universal hashes
+    (:func:`minhash_signatures`), so the ENTIRE sketch chain —
+    signatures, banding, candidates, verify — is hash-compared against
+    the DuckDB oracle, not just rows-counted.
 
     Correctness containment vs :func:`dedup_ngram_jaccard` is pytest-
-    checked (tests/test_llm_ops.py): LSH output ⊆ exact output, with
+    checked (tests/test_dedup.py): LSH output ⊆ exact output, with
     recall ≈ 1 at the fixture's threshold (2-row bands:
     P[candidate] = 1-(1-j²)^16 ≈ 0.999 at j=0.5)."""
-    docs = load_raw(spark, sf_dir, "documents")
-    # NOTE (r13): the shingle relation feeds FOUR independent subtrees
-    # (signatures, sizes, both verify sides; 12 scans un-persisted — r12
-    # scan audit) and r12 persisted it. Re-adjudicated paired in r13:
-    # the persist MEASURED 1.8x slower (6.48 vs 3.58 s min-of-5) — the
-    # cache write of the exploded shingle strings costs more than four
-    # pruned re-runs of the cheap scan+explode chain. Reverted; at
-    # 100 TB the fix is pipeline-level shingle/token-table reuse
-    # (s19_token_table_reuse), not an in-query cache. OPTIMIZATION_r13.md.
-    sh = shingles(docs)
-    sig = minhash_signatures(sh)
-
-    rows_per_band = MINHASH_H // MINHASH_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"h{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(bands).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-    # verify candidates with exact Jaccard (candidate set is tiny)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a_sh = sh.alias("sa")
-    b_sh = sh.alias("sb")
-    inter = (
-        candidates.join(a_sh, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            b_sh,
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(F.broadcast(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n1"))), "doc_a")
-        .join(F.broadcast(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n2"))), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-    return out
+    # sh is not persisted: caching the exploded shingle strings measured
+    # slower than re-running the scan+explode chain for its four consumers
+    sh = shingles(load_raw(spark, sf_dir, "documents"))
+    banded = _band_buckets(minhash_signatures(sh), MINHASH_BANDS, MINHASH_H // MINHASH_BANDS)
+    return _verify_jaccard(_band_candidates(banded), sh)
 
 
 # ---------------------------------------------------------- SimHash dedup
@@ -396,13 +444,8 @@ def _simhash_oracle() -> str:
     sign sums), so the oracle rebuilds it bit by bit in SQL: 64 sign-sum
     columns → 4 16-bit chunk values → OR-of-chunk-equality candidates →
     hamming as the count of disagreeing sign bits."""
-    from ..functions.text import STOPWORDS
-
     stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    toks_sql = (
-        f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), "
-        f"t -> t <> '' AND t NOT IN ({stop}))"
-    )
+    toks_sql = f"list_filter({DOC_TOKENS_SQL}, t -> t NOT IN ({stop}))"
     v_cols = ",\n         ".join(
         f"COALESCE(SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN cnt ELSE -cnt END), 0) AS v{j}"
         for j in range(64)
@@ -567,22 +610,10 @@ CONTAM_N = 5
 CONTAM_BENCH_DOCS = 25
 CONTAM_MIN_HITS = 2
 
-_CONTAM_SHINGLE_JOIN = " || ' ' || ".join(
-    f"ts[i+{k}]" for k in range(CONTAM_N)
-)
-
 
 @register(
     "dedup_contamination_flag",
-    f"""WITH t AS (
-  SELECT doc_id, list_filter(
-    string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), t -> t <> '') AS ts
-  FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, {_CONTAM_SHINGLE_JOIN} AS shingle
-  FROM (SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM t)
-  WHERE i <= len(ts) - {CONTAM_N - 1}
-), bench AS (
+    f"""WITH {_shingles_sql(CONTAM_N)}, bench AS (
   SELECT DISTINCT shingle FROM sh WHERE doc_id < {CONTAM_BENCH_DOCS}
 )
 SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits,
@@ -737,17 +768,14 @@ def dedup_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_chunk_ratio",
-    """WITH chunks AS (
+    f"""WITH {_TOKENS_CTE}, chunks AS (
   SELECT doc_id, md5(chunk_text) AS h
   FROM (
     SELECT doc_id,
            array_to_string(ts[s + 1 : s + 64], ' ') AS chunk_text
     FROM (
       SELECT doc_id, ts, unnest(generate_series(0, len(ts) - 1, 48)) AS s
-      FROM (SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                               t -> t <> '') AS ts
-            FROM documents)
+      FROM toks
       WHERE len(ts) > 0
     )
   )
@@ -778,16 +806,8 @@ def dedup_chunk_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_incremental_exact` maintains, so the ratio can be computed
     incrementally against yesterday's corpus."""
     from .textstats import CHUNK_SIZE, CHUNK_STRIDE  # pinned geometry
-    from ..functions.text import TOKEN_SPLIT_REGEX
 
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    base = (
-        load_raw(spark, sf_dir, "documents")
-        .select("doc_id", toks.alias("ts"))
-        .filter(F.size("ts") > 0)
-    )
+    base = _token_arrays(load_raw(spark, sf_dir, "documents")).filter(F.size("ts") > 0)
     chunks = base.select(
         "doc_id",
         F.explode(
@@ -882,24 +902,12 @@ def sim_neardup_pairs_exact_pairs_view(
 # -------------------------------------- effective-token dedup report
 
 def _effective_tokens_oracle() -> str:
-    from .textstats import _TOKENS_SQL
-
-    return f"""WITH RECURSIVE {_minhash_ctes()},
-mh_edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM mh_pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM mh_pairs
-),
-reach AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN mh_edges e ON r.dst = e.src
-),
-verdict AS (
-  SELECT src AS doc_id, (src = MIN(dst)) AS keep FROM reach GROUP BY src
-),
-tok AS (
-  SELECT doc_id, source, CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens
+    return f"""WITH verdict AS (
+  SELECT doc_id, keep FROM (
+{_CANONICAL_ORACLE}
+  ) q
+), tok AS (
+  SELECT doc_id, source, CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS n_tokens
   FROM documents
 )
 SELECT t.source,
@@ -928,12 +936,9 @@ def dedup_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, rolled up per source (≤ |sources| groups). Oracle rebuilds
     the full chain independently (MinHash CTEs + recursive closure +
     DuckDB-side tokenization)."""
-    from ..sources import load_raw as _load
-    from .textstats import _tokens
-
-    docs = _load(spark, sf_dir, "documents")
+    docs = load_raw(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
+        "doc_id", "source", F.size(doc_tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
     verdict = dedup_neardup_canonical(spark, sf_dir).select("doc_id", "keep")
     kept_tokens = F.sum(F.when(F.col("keep"), F.col("n_tokens")).otherwise(F.lit(0)))
@@ -961,21 +966,15 @@ CONTAIN_THRESHOLD = 0.6
 
 @register(
     "dedup_containment",
-    f"""WITH {_SHINGLES_CTE},
-i AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-s AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
-SELECT i.d1 AS doc_a, i.d2 AS doc_b,
-       CASE WHEN s1.n <= s2.n THEN i.d1 ELSE i.d2 END AS contained_doc,
-       ROUND(CAST(i.inter AS DOUBLE) / LEAST(s1.n, s2.n), 6) AS containment,
-       ROUND(CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter), 6) AS jaccard,
-       CAST(CAST(i.inter AS DOUBLE) / (s1.n + s2.n - i.inter)
+    f"""WITH {_shingles_sql()}, {_OVERLAPS_CTE}
+SELECT doc_a, doc_b,
+       CASE WHEN n1 <= n2 THEN doc_a ELSE doc_b END AS contained_doc,
+       ROUND(CAST(inter AS DOUBLE) / LEAST(n1, n2), 6) AS containment,
+       ROUND(CAST(inter AS DOUBLE) / (n1 + n2 - inter), 6) AS jaccard,
+       CAST(CAST(inter AS DOUBLE) / (n1 + n2 - inter)
             < {JACCARD_THRESHOLD} AS BOOLEAN) AS jaccard_missed
-FROM i JOIN s s1 ON i.d1 = s1.doc_id JOIN s s2 ON i.d2 = s2.doc_id
-WHERE CAST(i.inter AS DOUBLE) / LEAST(s1.n, s2.n) >= {CONTAIN_THRESHOLD}""",
+FROM ov
+WHERE CAST(inter AS DOUBLE) / LEAST(n1, n2) >= {CONTAIN_THRESHOLD}""",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Containment dedup** — directed near-dup detection by
@@ -994,27 +993,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-LSH upgrade path as the Jaccard form (MinHash respects
     containment after the size-ratio correction), so candidate cost
     never becomes all-pairs."""
-    docs = load_raw(spark, sf_dir, "documents")
-    sh = shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n2"))
+    sh = shingles(load_raw(spark, sf_dir, "documents"))
     contain = F.col("inter") / F.least("n1", "n2")
-    jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
+    jac = _jaccard()
     return (
-        inter.join(s1, "doc_a")
-        .join(s2, "doc_b")
+        _shingle_overlaps(sh)
         .filter(contain >= CONTAIN_THRESHOLD)
         .select(
             "doc_a",
@@ -1047,24 +1030,7 @@ def _band_tuning_oracle() -> str:
     per_cfg = []
     selects = []
     for bands, rpb in BAND_SWEEP:
-        band_selects = "\n    UNION ALL\n    ".join(
-            "SELECT doc_id, {b} AS band, md5({key}) AS bucket FROM sig".format(
-                b=b,
-                key=" || ',' || ".join(
-                    f"CAST(h{b * rpb + r} AS VARCHAR)" for r in range(rpb)
-                ),
-            )
-            for b in range(bands)
-        )
-        per_cfg.append(
-            f"""banded_{bands} AS (
-    {band_selects}
-), cand_{bands} AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded_{bands} a JOIN banded_{bands} b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-)"""
-        )
+        per_cfg.append(_band_cand_sql(bands, rpb))
         per_cfg.append(
             f"""counts_{bands} AS (
   SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cand_{bands}) AS n_candidates,
@@ -1086,20 +1052,8 @@ def _band_tuning_oracle() -> str:
 FROM counts_{bands}"""
         )
     return (
-        f"""WITH {_SHINGLES_CTE},
-sigsrc AS (
-  SELECT doc_id, {_SHINGLE_X_SQL} AS xm FROM sh
-),
-sig AS (
-  SELECT doc_id,
-         """
-        + ",\n         ".join(
-            f"MIN(({_mh_a(i)} * xm + {_mh_b(i)}) % {_MH_P}) AS h{i}"
-            for i in range(MINHASH_H)
-        )
-        + f"""
-  FROM sigsrc GROUP BY doc_id
-), true_pairs AS (
+        f"""WITH {_shingles_sql()}, {_OVERLAPS_CTE},
+{_SIG_CTES}, true_pairs AS (
 {_JACCARD_BODY}
 ), """
         + ",\n".join(per_cfg)
@@ -1137,45 +1091,9 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_true")
     )
 
-    slices, cands = [], []
+    slices = []
     for bands, rpb in BAND_SWEEP:
-        band_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"h{b * rpb + r}").cast("string")
-                                for r in range(rpb)
-                            ],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-        banded = sig.select("doc_id", F.explode(band_arr).alias("bb")).select(
-            "doc_id",
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = bsp.persist(
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-        cands.append(cand)
+        cand = bsp.persist(_band_candidates(_band_buckets(sig, bands, rpb)))
         n_cand = cand.agg(F.count("*").cast("long").alias("n_candidates"))
         n_ver = cand.join(true_pairs, ["doc_a", "doc_b"]).agg(
             F.count("*").cast("long").alias("n_verified")
@@ -1214,7 +1132,7 @@ def dedup_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_novelty",
-    f"""WITH {_SHINGLES_CTE},
+    f"""WITH {_shingles_sql()},
 firsts AS (
   SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY shingle
 )
@@ -1285,17 +1203,7 @@ _WIN_POS_CAP = (1 << _WIN_POS_BITS) - 1
 
 @register(
     "dedup_winnowing",
-    f"""WITH toks AS (
-  SELECT doc_id, list_filter(
-    string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), t -> t <> '')
-    AS ts
-  FROM documents
-), possh AS (
-  SELECT doc_id, i AS pos, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
-           AS shingle
-  FROM (SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM toks)
-  WHERE i <= len(ts) - {SHINGLE_N - 1}
-), hashed AS (
+    f"""WITH {_shingles_sql()}, hashed AS (
   SELECT doc_id, pos,
          ({_SHINGLE_X_SQL}) * {1 << _WIN_POS_BITS}
            + ({_WIN_POS_CAP} - pos) AS key,
@@ -1355,26 +1263,9 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of the algorithm at 100 TB."""
     from pyspark.sql import Window
 
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    tok_df = docs.select("doc_id", toks.alias("ts"))
-    sh = F.when(
-        F.size("ts") >= SHINGLE_N,
-        F.transform(
-            F.sequence(F.lit(0), F.size("ts") - SHINGLE_N),
-            lambda i: F.concat_ws(
-                " ",
-                *[
-                    F.element_at(F.col("ts"), i + k + 1)
-                    for k in range(SHINGLE_N)
-                ],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tok_df = _token_arrays(load_raw(spark, sf_dir, "documents"))
     possh = tok_df.select(
-        "doc_id", F.posexplode(sh).alias("pos0", "shingle")
+        "doc_id", F.posexplode(_shingle_window(F.col("ts"), SHINGLE_N)).alias("pos0", "shingle")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "shingle")
     key = _shingle_x(F.col("shingle")) * (1 << _WIN_POS_BITS) + (
         _WIN_POS_CAP - F.col("pos")
@@ -1393,11 +1284,8 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins = hashed.withColumn("sel", F.min("key").over(wsel)).filter(
         F.col("pos") <= F.col("n_sh") - (WINNOW_W - 1)
     )
-    # four consumers (counts + the deduped hash relation feeding both
-    # pair sides) over the winnowed fingerprints, no cross-subtree CSE:
-    # un-persisted, the tokenize+shingle-hash+window chain executed 4x
-    # (4 scans in plans/r12/dedup_winnowing_before.txt). Released after
-    # the small pair result materializes (r12).
+    # fp feeds counts and both pair sides: persisted so the tokenize,
+    # shingle-hash and window chain runs once instead of per consumer
     fp = bsp.persist(
         wins.select(
             "doc_id",
@@ -1455,17 +1343,12 @@ STITCH_K = 3
 
 @register(
     "dedup_boundary_stitch",
-    f"""WITH t AS (
-  SELECT doc_id, list_filter(
-    string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x <> '')
-    AS ts
-  FROM documents
-), hs AS (
+    f"""WITH {_TOKENS_CTE}, hs AS (
   SELECT doc_id,
          CAST(len(ts) AS BIGINT) AS n_tokens,
          array_to_string(ts[1:{STITCH_K}], ' ') AS head,
          array_to_string(ts[len(ts)-{STITCH_K}+1:len(ts)], ' ') AS tail
-  FROM t WHERE len(ts) >= {STITCH_K}
+  FROM toks WHERE len(ts) >= {STITCH_K}
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        a.tail AS boundary,
@@ -1486,13 +1369,7 @@ def dedup_boundary_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     string — hash-partitioned by boundary gram, never all-pairs. At
     100 TB the gram would be a 50-token md5; the join shape is
     unchanged."""
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    t = docs.select("doc_id", toks.alias("ts")).filter(
-        F.size("ts") >= STITCH_K
-    )
+    t = _token_arrays(load_raw(spark, sf_dir, "documents")).filter(F.size("ts") >= STITCH_K)
     hs = t.select(
         "doc_id",
         F.size("ts").cast("long").alias("n_tokens"),
@@ -1531,18 +1408,36 @@ def dedup_boundary_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: consecutive anchors whose interval union is exactly the span).
 SPAN_L = 6
 
-_SPAN_GRAMS_CTE = f"""g AS (
+#: DuckDB twin of :func:`_span_anchors`: CTEs ``toks`` and ``g``.
+_SPAN_GRAMS_CTE = f"""{_TOKENS_CTE}, g AS (
   SELECT doc_id, i AS pos,
          md5(array_to_string(ts[i:i+{SPAN_L}-1], ' ')) AS gh
-  FROM (
-    SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM (
-      SELECT doc_id, list_filter(
-        string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'),
-        t -> t <> '') AS ts
-      FROM documents
-    )
-  ) WHERE i <= len(ts) - {SPAN_L - 1}
+  FROM (SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM toks)
+  WHERE i <= len(ts) - {SPAN_L - 1}
 )"""
+
+
+def _span_anchors(t: DataFrame) -> DataFrame:
+    """``(doc_id, pos, gh)``: every ``SPAN_L``-token anchor of the token
+    arrays ``t(doc_id, ts)``, built per row by a ``transform`` over
+    1-based token indices and keyed by md5 (the shuffle carries 32-byte
+    digests, not L-token strings)."""
+    return (
+        t.filter(F.size("ts") >= SPAN_L)
+        .select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("ts") - SPAN_L + 1),
+                    lambda i: F.struct(
+                        i.alias("pos"),
+                        F.md5(F.array_join(F.slice("ts", i, SPAN_L), " ")).alias("gh"),
+                    ),
+                )
+            ).alias("a"),
+        )
+        .select("doc_id", "a.pos", "a.gh")
+    )
 
 
 @register(
@@ -1562,10 +1457,7 @@ merged AS (
   FROM hits
 ),
 n AS (
-  SELECT doc_id, CAST(len(list_filter(
-    string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'),
-    t -> t <> '')) AS BIGINT) AS n_tokens
-  FROM documents
+  SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens FROM toks
 )
 SELECT m.doc_id, n.n_tokens,
        CAST(SUM(m.covered) AS BIGINT) AS dup_tokens,
@@ -1597,31 +1489,9 @@ def dedup_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is ever formed — corpus-wide duplication is detected by
     counting, not joining, which is what lets the suffix-array method
     run on trillion-token corpora and this plan scale the same way."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    t = load_raw(spark, sf_dir, "documents").select(
-        "doc_id", toks.alias("ts")
-    )
+    t = _token_arrays(load_raw(spark, sf_dir, "documents"))
     n = t.select("doc_id", F.size("ts").cast("long").alias("n_tokens"))
-    grams = (
-        t.filter(F.size("ts") >= SPAN_L)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ts") - SPAN_L + 1),
-                    lambda i: F.struct(
-                        i.alias("pos"),
-                        F.md5(
-                            F.array_join(F.slice("ts", i, SPAN_L), " ")
-                        ).alias("gh"),
-                    ),
-                )
-            ).alias("a"),
-        )
-        .select("doc_id", "a.pos", "a.gh")
-    )
+    grams = _span_anchors(t)
     dup = (
         grams.groupBy("gh")
         .agg(F.count("*").alias("c"))
@@ -1673,7 +1543,7 @@ _PFX_ORDERED_CTE = f"""o AS (
 
 @register(
     "dedup_prefix_filter_join",
-    f"""WITH {_SHINGLES_CTE},
+    f"""WITH {_shingles_sql()},
 {_PFX_ORDERED_CTE},
 pfx AS (
   SELECT doc_id, shingle FROM o
@@ -1683,20 +1553,8 @@ cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM pfx a JOIN pfx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
 ),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-  FROM cand c
-  JOIN sh s1 ON s1.doc_id = c.doc_a
-  JOIN sh s2 ON s2.doc_id = c.doc_b AND s2.shingle = s1.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b,
-       ROUND(CAST(i.i AS DOUBLE) / (s1.n + s2.n - i.i), 6) AS jaccard
-FROM inter i
-JOIN sz s1 ON i.doc_a = s1.doc_id
-JOIN sz s2 ON i.doc_b = s2.doc_id
-WHERE CAST(i.i AS DOUBLE) / (s1.n + s2.n - i.i) >= {JACCARD_THRESHOLD}""",
+{_verify_sql("pairs", "cand")}
+SELECT doc_a, doc_b, ROUND(jaccard, 6) AS jaccard FROM pairs""",
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-set Jaccard similarity join at threshold
@@ -1727,13 +1585,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries) bounds the hottest bucket; AQE skew-join split covers
     the rest."""
     docs = load_raw(spark, sf_dir, "documents")
-    # sh feeds FIVE independent subtrees (df counts, sizes, the ordered
-    # ranking, both verify sides) with no cross-subtree CSE in Catalyst:
-    # un-persisted this plan held 20 parquet scans / 54 exchanges
-    # (plans/r12/dedup_prefix_filter_join_before.txt) — the whole
-    # tokenize+shingle+distinct chain re-ran per consumer. pfx likewise
-    # feeds both sides of the candidate self-join. The query scope
-    # releases both after the (small) pair result materializes.
+    # sh feeds five subtrees and pfx both candidate sides: persisted so
+    # the tokenize+shingle+distinct chain runs once, not per consumer
     sh = bsp.persist(shingles(docs))
     from pyspark.sql import Window
 
@@ -1759,7 +1612,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "shingle", "n")
     )
-    # PPJoin length filter (r13, guide §3 pre-filter): J(A,B) ≤
+    # PPJoin length filter: J(A,B) ≤
     # min(|A|,|B|)/max(|A|,|B|), so J ≥ t = p/q requires
     # q·least(n_a, n_b) ≥ p·greatest(n_a, n_b) — pure integer
     # arithmetic (no FP boundary risk). Pairs failing it can
@@ -1783,42 +1636,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sizes = sizes_pre
-    inter = (
-        cand.join(sh.alias("s1"), F.col("s1.doc_id") == F.col("doc_a"))
-        .join(
-            sh.alias("s2"),
-            (F.col("s2.doc_id") == F.col("doc_b"))
-            & (F.col("s2.shingle") == F.col("s1.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = (
-        inter.join(
-            F.broadcast(
-                sizes.select(
-                    F.col("doc_id").alias("doc_a"), F.col("n").alias("n1")
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("doc_id").alias("doc_b"), F.col("n").alias("n2")
-                )
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard_raw",
-            F.col("i").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("i")),
-        )
-    )
-    out = jac.filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard")
+    out = _verify_jaccard(cand, sh).select(
+        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
     return bsp.checkpoint_result(out)
 
@@ -1838,16 +1657,9 @@ removals AS (
   SELECT doc_id, pos, pos + {SPAN_L} AS fin_excl
   FROM occ WHERE c >= 2 AND rk > 1
 ),
-toks AS (
+trows AS (
   SELECT doc_id, i, ts[i] AS tok
-  FROM (
-    SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM (
-      SELECT doc_id, list_filter(
-        string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'),
-        t -> t <> '') AS ts
-      FROM documents
-    )
-  )
+  FROM (SELECT doc_id, ts, generate_subscripts(ts, 1) AS i FROM toks)
 ),
 sweep AS (
   SELECT doc_id, p, is_tok, tok,
@@ -1862,7 +1674,7 @@ sweep AS (
     SELECT doc_id, fin_excl AS p, 0 AS is_tok, -1 AS delta, NULL AS tok
       FROM removals
     UNION ALL
-    SELECT doc_id, i AS p, 1 AS is_tok, 0 AS delta, tok FROM toks
+    SELECT doc_id, i AS p, 1 AS is_tok, 0 AS delta, tok FROM trows
   )
 )
 SELECT doc_id,
@@ -1898,30 +1710,8 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     output-sized. Same no-pairwise-relation property as
     :func:`dedup_duplicated_spans` — duplication is resolved by
     ranking within gram-hash groups, not by joining documents."""
-    toks_arr = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    t = load_raw(spark, sf_dir, "documents").select(
-        "doc_id", toks_arr.alias("ts")
-    )
-    grams = (
-        t.filter(F.size("ts") >= SPAN_L)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ts") - SPAN_L + 1),
-                    lambda i: F.struct(
-                        i.alias("pos"),
-                        F.md5(
-                            F.array_join(F.slice("ts", i, SPAN_L), " ")
-                        ).alias("gh"),
-                    ),
-                )
-            ).alias("a"),
-        )
-        .select("doc_id", "a.pos", "a.gh")
-    )
+    t = _token_arrays(load_raw(spark, sf_dir, "documents"))
+    grams = _span_anchors(t)
     from pyspark.sql import Window
 
     wg = Window.partitionBy("gh")
@@ -2061,37 +1851,10 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     split = int((max_id + 1) * INCR_SPLIT_FRACTION)
 
-    # NOTE (r12): sh feeds signatures, sizes and both verify sides,
-    # but unlike dedup_minhash_lsh the persist+checkpoint variant
-    # MEASURED ~1.7x slower here (smaller batch-side work, same fixed
-    # cache cost) — reverted; see OPTIMIZATION_r12.md.
+    # sh is not persisted: a persist measured slower here (small
+    # batch-side work against a fixed cache-write cost)
     sh = shingles(docs)
-    sig = minhash_signatures(sh)
-    rows_per_band = MINHASH_H // MINHASH_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"h{b * rows_per_band + r}").cast(
-                                "string"
-                            )
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(MINHASH_BANDS)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(bands).alias("bb")).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
+    banded = _band_buckets(minhash_signatures(sh), MINHASH_BANDS, MINHASH_H // MINHASH_BANDS)
     idx_b = banded.filter(F.col("doc_id") < split).select(
         F.col("doc_id").alias("match_id"), "band", "bucket"
     )
@@ -2101,45 +1864,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "match_id")
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        candidates.alias("c")
-        .join(sh.alias("sa"), F.col("c.doc_id") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("c.match_id") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy(
-            F.col("c.doc_id").alias("doc_id"),
-            F.col("c.match_id").alias("match_id"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = (
-        inter.join(
-            F.broadcast(
-                sizes.select(
-                    F.col("doc_id").alias("did"), F.col("n").alias("n1")
-                )
-            ),
-            F.col("doc_id") == F.col("did"),
-        )
-        .join(
-            F.broadcast(
-                sizes.select(
-                    F.col("doc_id").alias("mid"), F.col("n").alias("n2")
-                )
-            ),
-            F.col("match_id") == F.col("mid"),
-        )
-        .withColumn(
-            "jraw",
-            F.col("inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-        .filter(F.col("jraw") >= JACCARD_THRESHOLD)
-        .select("doc_id", "match_id", F.round("jraw", 6).alias("j"))
+    jac = _verify_jaccard(candidates, sh, "doc_id", "match_id").select(
+        "doc_id", "match_id", F.round("jaccard", 6).alias("j")
     )
     from pyspark.sql import Window
 
@@ -2163,12 +1889,9 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ dedup funnel report
 
 def _funnel_oracle() -> str:
-    tok = (
-        "CAST(len(list_filter(string_split_regex(lower(text), "
-        f"'{TOKEN_SPLIT_REGEX}'), t -> t <> '')) AS BIGINT)"
-    )
     return f"""WITH toks AS (
-  SELECT doc_id, {tok} AS nt, md5(text) AS h FROM documents
+  SELECT doc_id, CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS nt, md5(text) AS h
+  FROM documents
 ), exact_keep AS (
   SELECT doc_id, nt,
          doc_id = MIN(doc_id) OVER (PARTITION BY h) AS keep
@@ -2205,13 +1928,9 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and three count aggregates."""
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
     base = load_raw(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(toks).cast("bigint").alias("nt"),
+        F.size(doc_tokens(F.col("text"))).cast("bigint").alias("nt"),
         F.md5("text").alias("h"),
     )
     exact = base.withColumn(
@@ -2254,13 +1973,8 @@ _CDC_HASH_SQL = (
     f"ts[e - {CDC_W - 1}:e], ' ')), 1, 15)) AS BIGINT) % {CDC_D} = 0"
 )
 
-_CDC_ORACLE = f"""WITH base AS (
-  SELECT doc_id, list_filter(
-           string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'),
-           t -> t <> '') AS ts
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, ts FROM base WHERE len(ts) > 0
+_CDC_ORACLE = f"""WITH {_TOKENS_CTE}, nonempty AS (
+  SELECT doc_id, ts FROM toks WHERE len(ts) > 0
 ), cut AS (
   SELECT doc_id, ts,
          list_sort(list_distinct(
@@ -2324,15 +2038,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: extends the reference's exact-text dedup
     semantics (no CDC exists there) — extension surface, not a port.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
-    base = (
-        load_raw(spark, sf_dir, "documents")
-        .select("doc_id", toks.alias("ts"))
-        .filter(F.size("ts") > 0)
-    )
+    base = _token_arrays(load_raw(spark, sf_dir, "documents")).filter(F.size("ts") > 0)
 
     def boundary(e: Column) -> Column:
         win = F.array_join(F.slice(F.col("ts"), e - (CDC_W - 1), CDC_W), " ")
@@ -2403,12 +2109,7 @@ BOILER_MIN_DOCS = 2
 
 @register(
     "dedup_line_level",
-    f"""WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '{{TOKEN_SPLIT_REGEX}}'),
-                     t -> t <> '') AS ts
-  FROM documents
-),
+    f"""WITH {_TOKENS_CTE},
 lines AS (
   SELECT doc_id, s,
          array_to_string(ts[s + 1 : s + {LINE_SIZE}], ' ') AS line,
@@ -2430,7 +2131,7 @@ SELECT doc_id,
        md5(COALESCE(string_agg(CASE WHEN nd < {BOILER_MIN_DOCS} THEN line END,
                                ' ' ORDER BY s), '')) AS kept_md5
 FROM lines l JOIN freq f ON l.h = f.h
-GROUP BY doc_id""".replace("{TOKEN_SPLIT_REGEX}", TOKEN_SPLIT_REGEX),
+GROUP BY doc_id""",
 )
 def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Line-level dedup** (the CCNet / RefinedWeb boilerplate
@@ -2454,14 +2155,7 @@ def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained state table as `dedup_incremental_exact`'s, so the
     filter runs incrementally per ingest batch; the reassembly
     shuffle is bounded by document length, never corpus size."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX), lambda t: t != ""
-    )
-    base = (
-        load_raw(spark, sf_dir, "documents")
-        .select("doc_id", toks.alias("ts"))
-        .filter(F.size("ts") > 0)
-    )
+    base = _token_arrays(load_raw(spark, sf_dir, "documents")).filter(F.size("ts") > 0)
     lines = base.select(
         "doc_id",
         F.posexplode(

@@ -1093,12 +1093,12 @@ def s18_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s19_oracle() -> str:
-    from .textstats import _TOKENS_SQL
+    from ..functions.text import DOC_TOKENS_SQL
 
     return (
         "SELECT term, CAST(COUNT(*) AS BIGINT) AS n_occurrences,\n"
         "       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs\n"
-        f"FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents)\n"
+        f"FROM (SELECT doc_id, unnest({DOC_TOKENS_SQL}) AS term FROM documents)\n"
         "GROUP BY term"
     )
 
@@ -1128,12 +1128,12 @@ def s19_token_table_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key of every consumer — TF-IDF, LM scoring, drift), making
     the downstream token-keyed joins shuffle-free (s8's bucketing
     pattern applied to text)."""
-    from .textstats import _tokens
+    from ..functions.text import doc_tokens
 
     tok_dir = _scratch_dir(spark, sf_dir, "s19_tokens")
     docs = load_raw(spark, sf_dir, "documents")
     tokens = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(doc_tokens(F.col("text"))).alias("term")
     )
     tokens.write.mode("overwrite").parquet(tok_dir)
     stored = spark.read.parquet(tok_dir)

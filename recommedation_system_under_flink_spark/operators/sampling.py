@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
+from ..functions.text import DOC_TOKENS_SQL, doc_tokens
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -491,14 +492,8 @@ DSIR_TARGET_LANG = "en"
 
 
 def _dsir_oracle() -> str:
-    from ..functions.text import TOKEN_SPLIT_REGEX
-
-    toks_sql = (
-        f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), "
-        "t -> t <> '')"
-    )
     return f"""WITH toks AS (
-  SELECT d.doc_id, d.lang, unnest({toks_sql}) AS term FROM documents d
+  SELECT d.doc_id, d.lang, unnest({DOC_TOKENS_SQL}) AS term FROM documents d
 ), raw AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS cr FROM toks GROUP BY term
 ), tgt AS (
@@ -545,8 +540,6 @@ def samp_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     token table (``s19_token_table_reuse``) so the corpus is tokenized
     once. Quantized to 6 dp (libm-vs-JVM log2 ulp)."""
     docs = load_raw(spark, sf_dir, "documents")
-    from .textstats import _tokens
-
     # NOTE (r12): the token stream feeds both LM legs, the totals and
     # the scoring join, but an in-query persist of the exploded token
     # strings was MEASURED ~1.6x slower on this sub-second query (cache
@@ -554,7 +547,7 @@ def samp_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized token table (s19_token_table_reuse), as this
     # docstring already documents. See OPTIMIZATION_r12.md.
     toks = docs.select(
-        "doc_id", "lang", F.explode(_tokens(F.col("text"))).alias("term")
+        "doc_id", "lang", F.explode(doc_tokens(F.col("text"))).alias("term")
     )
     raw = toks.groupBy("term").agg(F.count("*").alias("cr"))
     tgt = (
@@ -783,7 +776,7 @@ CURRICULUM_BUCKETS = 10
 
 
 def _curriculum_oracle() -> str:
-    from .textstats import _TOKENS_SQL, _STOP_SQL
+    from .textstats import _STOP_SQL
 
     n_cuts = CURRICULUM_BUCKETS - 1
     cut_cols = ", ".join(
@@ -806,7 +799,7 @@ def _curriculum_oracle() -> str:
               + 0.3 * (CASE WHEN len(ts) > 0 THEN
                     CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts)
                   ELSE 0.0 END) AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE) / 1000000.0 AS q6
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents)
 ),
 agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM q),
 th AS (SELECT {thresholds} FROM agg),
@@ -1118,12 +1111,7 @@ def samp_source_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: on the uniform fixture.
 WATERFILL_BUDGET_FRAC = 0.8
 
-from ..functions.text import TOKEN_SPLIT_REGEX as _WF_REGEX
-
-_WF_TOKENS_SQL = (
-    "CAST(len(list_filter(string_split_regex(lower(text), "
-    f"'{_WF_REGEX}'), t -> t <> '')) AS BIGINT)"
-)
+_WF_TOKENS_SQL = f"CAST(len({DOC_TOKENS_SQL}) AS BIGINT)"
 
 
 @register(
@@ -1188,14 +1176,7 @@ def samp_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB only the token-count aggregate touches data; the allocator
     is constant-time per domain regardless of corpus size."""
     docs = load_raw(spark, sf_dir, "documents")
-    from ..functions.text import TOKEN_SPLIT_REGEX
-
-    n_tok = F.size(
-        F.filter(
-            F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-            lambda t: t != "",
-        )
-    ).cast("bigint")
+    n_tok = F.size(doc_tokens(F.col("text"))).cast("bigint")
     avail = docs.groupBy("source").agg(
         F.sum(n_tok).cast("bigint").alias("c"),
         F.first(
@@ -1318,14 +1299,7 @@ def samp_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast over the O(|sources|) grid — identical cost envelope to
     the waterfill."""
     docs = load_raw(spark, sf_dir, "documents")
-    from ..functions.text import TOKEN_SPLIT_REGEX
-
-    n_tok = F.size(
-        F.filter(
-            F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-            lambda t: t != "",
-        )
-    ).cast("bigint")
+    n_tok = F.size(doc_tokens(F.col("text"))).cast("bigint")
     st = docs.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(n_tok).cast("bigint").alias("s1"),
@@ -1524,14 +1498,7 @@ def samp_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_raw(spark, sf_dir, "documents")
-    from ..functions.text import TOKEN_SPLIT_REGEX
-
-    n_tok = F.size(
-        F.filter(
-            F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-            lambda t: t != "",
-        )
-    ).cast("bigint")
+    n_tok = F.size(doc_tokens(F.col("text"))).cast("bigint")
     sizes = docs.select(
         "doc_id",
         n_tok.alias("s"),

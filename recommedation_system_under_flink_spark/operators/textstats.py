@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
+from ..functions.text import DOC_TOKENS_SQL, STOPWORDS, doc_tokens
 from . import bsp
 from ..registry import register
 from ..sources import load_raw
@@ -39,13 +39,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "les", "et", "est", "ne", "pas", "un", "une", "dans"),
     "es": ("el", "la", "los", "las", "es", "no", "un", "una", "que", "con"),
 }
-
-
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), TOKEN_SPLIT_REGEX), lambda t: t != "")
-
-
-_TOKENS_SQL = f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), t -> t <> '')"
 
 
 def quality_parts(ts: Column) -> tuple[Column, Column, Column, Column]:
@@ -86,7 +79,7 @@ def quality_parts(ts: Column) -> tuple[Column, Column, Column, Column]:
        CASE WHEN len(ts) > 0
             THEN CAST(list_sum(list_transform(ts, t -> length(t))) AS DOUBLE) / len(ts)
             ELSE 0.0 END AS avg_token_len
-FROM (SELECT doc_id, text, {_TOKENS_SQL} AS ts FROM documents)""",
+FROM (SELECT doc_id, text, {DOC_TOKENS_SQL} AS ts FROM documents)""",
 )
 def ts_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token counting: total, distinct, chars, mean token
@@ -99,7 +92,7 @@ def ts_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
-        _tokens(F.col("text")).alias("ts"),
+        doc_tokens(F.col("text")).alias("ts"),
     )
     ts = F.col("ts")
     total_len = F.aggregate(ts, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -133,7 +126,7 @@ FROM (
            1.0 - CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts)
          ELSE 1.0 END AS rep_ratio,
          LEAST(CAST(len(ts) AS DOUBLE) / 100.0, 1.0) AS len_score
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents)
 )""",
 )
 def ts_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,7 +142,7 @@ def ts_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pinned engine formula (the reference has no analogue; weights are
     the documented spec)."""
     docs = load_raw(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     stop_ratio, rep_ratio, len_score, quality = quality_parts(F.col("ts"))
     return base.select(
         "doc_id",
@@ -179,7 +172,7 @@ def _lang_markers_sql() -> str:
            PARTITION BY d.doc_id
            ORDER BY len(list_intersect(d.ts, langs.markers)) DESC, langs.lang_pri ASC
          ) AS rn
-  FROM (SELECT doc_id, list_distinct({_TOKENS_SQL}) AS ts FROM documents) d
+  FROM (SELECT doc_id, list_distinct({DOC_TOKENS_SQL}) AS ts FROM documents) d
   CROSS JOIN {_lang_markers_sql()}
 ) WHERE rn = 1""",
 )
@@ -189,7 +182,7 @@ def ts_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaration order (English first — the pinned prior). A 4-row
     broadcast cross join; the scan dominates."""
     docs = load_raw(spark, sf_dir, "documents")
-    base = docs.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("ts"))
+    base = docs.select("doc_id", F.array_distinct(doc_tokens(F.col("text"))).alias("ts"))
     langs = [
         (lang, pri, F.array(*[F.lit(w) for w in ws]))
         for pri, (lang, ws) in enumerate(LANG_MARKERS.items())
@@ -235,12 +228,12 @@ _FP_MOD = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
             % {_FP_MOD} AS BIGINT) AS fingerprint
 FROM (
   SELECT doc_id, unnest(ts) AS t, generate_subscripts(ts, 1) AS pos
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents)
 )
 GROUP BY doc_id
 UNION ALL
 SELECT doc_id, CAST(0 AS BIGINT) AS fingerprint
-FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents) WHERE len(ts) = 0""",
+FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents) WHERE len(ts) = 0""",
 )
 def ts_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional document fingerprint:
@@ -251,7 +244,7 @@ def ts_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling hash whose fold is order-dependent. Exact integer arithmetic
     end to end → oracle-checkable. Pinned engine spec."""
     docs = load_raw(spark, sf_dir, "documents")
-    ts = _tokens(F.col("text"))
+    ts = doc_tokens(F.col("text"))
     # posexplode gives 0-based pos; the pinned formula uses 1-based
     exploded = docs.select("doc_id", F.posexplode(ts).alias("pos0", "t")).select(
         "doc_id", (F.col("pos0") + 1).alias("pos"), "t"
@@ -261,7 +254,7 @@ def ts_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         exploded.groupBy("doc_id")
         .agg((F.coalesce(F.sum(contrib), F.lit(0)) % _FP_MOD).cast("long").alias("fingerprint"))
     )
-    empties = docs.select("doc_id", _tokens(F.col("text")).alias("ts")).filter(
+    empties = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts")).filter(
         F.size("ts") == 0
     ).select("doc_id", F.lit(0).cast("long").alias("fingerprint"))
     return fp.unionByName(empties)
@@ -329,7 +322,7 @@ TOP_TERMS_N = 10
          ) AS BIGINT) AS pos
   FROM (
     SELECT lang, t AS term, CAST(COUNT(*) AS BIGINT) AS n
-    FROM (SELECT lang, unnest({_TOKENS_SQL}) AS t FROM documents)
+    FROM (SELECT lang, unnest({DOC_TOKENS_SQL}) AS t FROM documents)
     WHERE t NOT IN ({_STOP_SQL})
     GROUP BY lang, t
   )
@@ -349,7 +342,7 @@ def ts_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_raw(spark, sf_dir, "documents")
     stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
     toks = docs.select(
-        "lang", F.explode(_tokens(F.col("text"))).alias("term")
+        "lang", F.explode(doc_tokens(F.col("text"))).alias("term")
     ).filter(~F.array_contains(stop_arr, F.col("term")))
     counts = toks.groupBy("lang", "term").agg(F.count("*").cast("long").alias("n"))
     w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("term"))
@@ -418,7 +411,7 @@ SELECT doc_id,
        CAST(c.start AS BIGINT) AS chunk_start,
        CAST(len(c.ck) AS BIGINT) AS n_tokens,
        array_to_string(c.ck, ' ') AS chunk_text
-FROM ex""".format(tokens=_TOKENS_SQL)
+FROM ex""".format(tokens=DOC_TOKENS_SQL)
 
 
 @register("ts_chunk_documents", _CHUNK_ORACLE)
@@ -432,7 +425,7 @@ def ts_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode fan-out is n_tokens/stride ≈ 1.3× rows, not quadratic.
     Empty docs emit no chunks (no empty training samples)."""
     docs = load_raw(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts")).filter(
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts")).filter(
         F.size("ts") > 0
     )
     chunk = base.select(
@@ -476,7 +469,7 @@ FROM (
            PARTITION BY source ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
   FROM (SELECT doc_id, source,
-               CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens
+               CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS n_tokens
         FROM documents)
 )""",
 )
@@ -499,7 +492,7 @@ def ts_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_raw(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
+        "doc_id", "source", F.size(doc_tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
     w = (
         Window.partitionBy("source")
@@ -521,7 +514,7 @@ def ts_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_unigram_logprob",
     f"""WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents
+  SELECT doc_id, unnest({DOC_TOKENS_SQL}) AS term FROM documents
 ), freq AS (
   SELECT term, COUNT(*) AS c FROM toks GROUP BY term
 ), total AS (
@@ -549,7 +542,7 @@ def ts_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     model by construction (it came from the corpus). Quantized to 6
     decimals: log2 may differ by ~1 ulp between libm and the JVM."""
     toks = load_raw(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(doc_tokens(F.col("text"))).alias("term")
     )
     freq = toks.groupBy("term").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("n"))
@@ -577,7 +570,7 @@ def ts_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
              PARTITION BY d.doc_id
              ORDER BY len(list_intersect(d.ts, langs.markers)) DESC, langs.lang_pri ASC
            ) AS rn
-    FROM (SELECT doc_id, list_distinct({_TOKENS_SQL}) AS ts FROM documents) d
+    FROM (SELECT doc_id, list_distinct({DOC_TOKENS_SQL}) AS ts FROM documents) d
     CROSS JOIN {_lang_markers_sql()}
   ) WHERE rn = 1
 )
@@ -615,7 +608,7 @@ DRIFT_TOP_N = 25
     "ts_term_drift",
     f"""WITH sides AS (
   SELECT CASE WHEN doc_id % 30 < {DRIFT_SPLIT_DAY} THEN 0 ELSE 1 END AS side,
-         unnest({_TOKENS_SQL}) AS term
+         unnest({DOC_TOKENS_SQL}) AS term
   FROM documents
 ), freq AS (
   SELECT term,
@@ -657,7 +650,7 @@ def ts_term_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.when(
         (F.col("doc_id") % DATE_MOD) < DRIFT_SPLIT_DAY, F.lit(0)
     ).otherwise(F.lit(1))
-    toks = docs.select(side.alias("side"), F.explode(_tokens(F.col("text"))).alias("term"))
+    toks = docs.select(side.alias("side"), F.explode(doc_tokens(F.col("text"))).alias("term"))
     freq = toks.groupBy("term").agg(
         F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("n_old"),
         F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).alias("n_new"),
@@ -713,7 +706,7 @@ def _ngram_sql(n: int) -> str:
 
 @register(
     "ts_repetition_score",
-    f"""WITH base AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH base AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 grams AS ({_ngram_sql(2)}),
 counts AS (SELECT doc_id, g, COUNT(*) AS n FROM grams GROUP BY doc_id, g),
 per_doc AS (
@@ -744,7 +737,7 @@ def ts_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     both keyed by doc_id, so at 100 TB this is two well-distributed
     hash aggregates at scan speed; no window, no Python."""
     docs = load_raw(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     grams = base.select("doc_id", F.explode(_ngram_expr(2)).alias("g"))
     counts = grams.groupBy("doc_id", "g").agg(F.count("*").alias("n"))
     per_doc = counts.groupBy("doc_id").agg(
@@ -784,7 +777,7 @@ BOILER_MIN_DOCS = 3
 
 @register(
     "ts_boilerplate_shingles",
-    f"""WITH base AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH base AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 grams AS ({_ngram_sql(BOILER_NGRAM)}),
 docfreq AS (SELECT g, COUNT(DISTINCT doc_id) AS d FROM grams GROUP BY g),
 per_doc AS (
@@ -818,7 +811,7 @@ def ts_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram key exactly like the TF-IDF term join, then one per-doc
     aggregate. AQE broadcasts the docfreq side when it fits."""
     docs = load_raw(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     grams = base.select("doc_id", F.explode(_ngram_expr(BOILER_NGRAM)).alias("g"))
     docfreq = grams.groupBy("g").agg(F.count_distinct("doc_id").alias("d"))
     per_doc = (
@@ -915,7 +908,7 @@ LM_LAMBDA = 0.9
 
 @register(
     "ts_bigram_lm_perplexity",
-    f"""WITH base AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH base AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 grams AS (
   SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2
   FROM base, LATERAL (SELECT unnest(generate_series(1, len(ts) - 1)) AS i)
@@ -980,7 +973,7 @@ def ts_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode+count chains it saves). At 100 TB the documented fix is
     # feeding the materialized token table (s19_token_table_reuse),
     # not an in-query cache - see OPTIMIZATION_r12.md.
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     grams = base.select(
         "doc_id",
         F.explode(
@@ -1037,7 +1030,7 @@ def ts_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_zipf_fit",
     f"""WITH freq AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT unnest({_TOKENS_SQL}) AS term FROM documents)
+  FROM (SELECT unnest({DOC_TOKENS_SQL}) AS term FROM documents)
   GROUP BY term
 ), ranked AS (
   SELECT log10(CAST(ROW_NUMBER() OVER (ORDER BY n DESC, term ASC) AS DOUBLE)) AS x,
@@ -1072,7 +1065,7 @@ def ts_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     toks = load_raw(spark, sf_dir, "documents").select(
-        F.explode(_tokens(F.col("text"))).alias("term")
+        F.explode(doc_tokens(F.col("text"))).alias("term")
     )
     freq = toks.groupBy("term").agg(F.count("*").cast("long").alias("n"))
     ranked = freq.select(
@@ -1200,7 +1193,7 @@ def _learn_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
     return the merge table as driver-side model state."""
     docs = load_raw(spark, sf_dir, "documents")
     words = bsp.persist(
-        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(doc_tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("wc"))
         .select(
@@ -1291,7 +1284,7 @@ def _bpe_sql_ctes() -> list[str]:
          regexp_replace(word, '(.)', {o} || '\\1' || {c}, 'g')
            || {o} || '</w>' || {c} AS s,
          COUNT(*) AS wc
-  FROM (SELECT unnest({_TOKENS_SQL}) AS word FROM documents)
+  FROM (SELECT unnest({DOC_TOKENS_SQL}) AS word FROM documents)
   GROUP BY 1, 2
 )"""
     ]
@@ -1346,7 +1339,7 @@ JOIN (SELECT word,
              (length(s) - length(replace(s, chr(31), ''))) AS n_sub
       FROM bpe_words_{BPE_MERGES}) seg
   ON d.word = seg.word
-GROUP BY d.doc_id""".format(toks=_TOKENS_SQL)
+GROUP BY d.doc_id""".format(toks=DOC_TOKENS_SQL)
 )
 
 
@@ -1407,7 +1400,7 @@ def ts_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = _learn_bpe(spark, sf_dir)
     docs = load_raw(spark, sf_dir, "documents")
     words = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("word"))
+        docs.select("doc_id", F.explode(doc_tokens(F.col("text"))).alias("word"))
     )
     vocab = words.select("word").distinct().select(
         "word",
@@ -1488,7 +1481,7 @@ PHRASE = ("table", "hash")
 
 @register(
     "ts_phrase_search",
-    f"""WITH t AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH t AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 p AS (
   SELECT doc_id, unnest(ts) AS term,
          generate_subscripts(ts, 1) AS pos
@@ -1518,7 +1511,7 @@ def ts_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_raw(spark, sf_dir, "documents")
     p = docs.select(
         "doc_id",
-        F.posexplode(_tokens(F.col("text"))).alias("pos0", "term"),
+        F.posexplode(doc_tokens(F.col("text"))).alias("pos0", "term"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "term")
     a = p.filter(F.col("term") == PHRASE[0]).select(
         "doc_id", F.col("pos").alias("pos_a")
@@ -1552,7 +1545,7 @@ BM25_TOP_K = 20
 
 @register(
     "ts_bm25_search",
-    f"""WITH t AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH t AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 toks AS (SELECT doc_id, unnest(ts) AS term FROM t),
 dl AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dlen FROM t WHERE len(ts) > 0),
 stats AS (
@@ -1610,7 +1603,7 @@ def ts_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reverted; the duplicated chains are pruned token scans that cost
     # less than their cache writes. At-scale fix: token-table reuse
     # (s19), not an in-query cache. OPTIMIZATION_r13.md.
-    t = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    t = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     dl = t.filter(F.size("ts") > 0).select(
         "doc_id", F.size("ts").cast("long").alias("dlen")
     )
@@ -1753,7 +1746,7 @@ PMI_TOP_K = 50
 @register(
     "ts_pmi_top_pairs",
     f"""WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents
+  SELECT DISTINCT doc_id, unnest({DOC_TOKENS_SQL}) AS term FROM documents
 ), n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM dt),
 df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM dt GROUP BY term),
 pairs AS (
@@ -1807,7 +1800,7 @@ def ts_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after the top-K result materializes (r12 scan audit: 5 dup scans)
     dt = bsp.persist(
         docs.select(
-            "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
+            "doc_id", F.explode(doc_tokens(F.col("text"))).alias("term")
         ).distinct()
     )
     n = dt.agg(F.count_distinct("doc_id").alias("n_docs"))
@@ -1868,7 +1861,7 @@ VOCAB_MAX = 5000
     f"""SELECT term, n, CAST(rnk - 1 AS BIGINT) AS token_id FROM (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS n,
          ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term ASC) AS rnk
-  FROM (SELECT unnest({_TOKENS_SQL}) AS term FROM documents)
+  FROM (SELECT unnest({DOC_TOKENS_SQL}) AS term FROM documents)
   GROUP BY term HAVING COUNT(*) >= {VOCAB_MIN_COUNT}
 ) WHERE rnk <= {VOCAB_MAX}""",
 )
@@ -1890,7 +1883,7 @@ def ts_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_raw(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("term"))
+        docs.select(F.explode(doc_tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("n"))
         .filter(F.col("n") >= VOCAB_MIN_COUNT)
@@ -1921,7 +1914,7 @@ NGRAM_MAX = 2000
              range(1, len(ts) - {NGRAM_N} + 2),
              i -> array_to_string(ts[i : i + {NGRAM_N} - 1], ' ')
            )) AS gram
-    FROM (SELECT {_TOKENS_SQL} AS ts FROM documents)
+    FROM (SELECT {DOC_TOKENS_SQL} AS ts FROM documents)
     WHERE len(ts) >= {NGRAM_N}
   )
   GROUP BY gram HAVING COUNT(*) >= {NGRAM_MIN_COUNT}
@@ -1943,7 +1936,7 @@ def ts_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_raw(spark, sf_dir, "documents")
     ts = F.col("ts")
-    grams = docs.select(_tokens(F.col("text")).alias("ts")).filter(
+    grams = docs.select(doc_tokens(F.col("text")).alias("ts")).filter(
         F.size(ts) >= NGRAM_N
     ).select(
         F.explode(
@@ -1985,7 +1978,7 @@ FROM (
                 t -> GREATEST(len(list_filter(
                        string_split_regex(t, '[^aeiouy]+'), g -> g <> '')), 1)))
            AS BIGINT) AS n_syllables
-  FROM (SELECT doc_id, text, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, text, {DOC_TOKENS_SQL} AS ts FROM documents)
   WHERE len(ts) > 0
 )""",
 )
@@ -2003,7 +1996,7 @@ def ts_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized score hash-matches."""
     docs = load_raw(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", "text", _tokens(F.col("text")).alias("ts")
+        "doc_id", "text", doc_tokens(F.col("text")).alias("ts")
     ).filter(F.size("ts") > 0)
     ts = F.col("ts")
     syl = lambda t: F.greatest(
@@ -2061,7 +2054,7 @@ FROM cov_{s} c CROSS JOIN tot t"""
     return (
         f"""WITH counts AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT unnest({_TOKENS_SQL}) AS term FROM documents)
+  FROM (SELECT unnest({DOC_TOKENS_SQL}) AS term FROM documents)
   GROUP BY term
 ), ranked AS (
   SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, term ASC) AS rnk
@@ -2096,7 +2089,7 @@ def ts_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_raw(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("term"))
+        docs.select(F.explode(doc_tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("n"))
     )
@@ -2145,7 +2138,7 @@ RAKE_TOP_N = 3
 
 _RAKE_ORACLE = f"""WITH toks AS (
   SELECT doc_id, unnest(ts) AS tok, generate_subscripts(ts, 1) AS pos
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents)
 ), flagged AS (
   SELECT doc_id, pos, tok,
          CASE WHEN tok IN ({_STOP_SQL}) THEN 1 ELSE 0 END AS is_stop
@@ -2216,7 +2209,7 @@ def ts_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_raw(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(_tokens(F.col("text"))).alias("pos0", "tok"),
+        F.posexplode(doc_tokens(F.col("text"))).alias("pos0", "tok"),
     ).select(
         "doc_id", (F.col("pos0") + 1).alias("pos"), "tok"
     )
@@ -2284,7 +2277,7 @@ KN_DISCOUNT = 0.75
 
 @register(
     "ts_kneser_ney_logprob",
-    f"""WITH base AS (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents),
+    f"""WITH base AS (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents),
 grams AS (
   SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2
   FROM base, LATERAL (SELECT unnest(generate_series(1, len(ts) - 1)) AS i)
@@ -2343,7 +2336,7 @@ def ts_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as ts_bigram_lm_perplexity - an in-query persist was SLOWER than
     # the duplicate cheap chains; the at-scale fix is the materialized
     # token table (s19), not a cache. See OPTIMIZATION_r12.md.
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("ts"))
+    base = docs.select("doc_id", doc_tokens(F.col("text")).alias("ts"))
     grams = base.select(
         "doc_id",
         F.explode(
@@ -2409,7 +2402,7 @@ def ts_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_lexical_diversity",
     f"""WITH tok AS (
   SELECT source, unnest(ts) AS tok
-  FROM (SELECT source, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT source, {DOC_TOKENS_SQL} AS ts FROM documents)
 ), per AS (
   SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok
 )
@@ -2440,10 +2433,7 @@ def ts_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, not corpus-sized; both aggregates are hash + combine.
     Skewed sources only skew their own partition's vocabulary."""
     docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
+    toks = doc_tokens(F.col("text"))
     per = (
         docs.select("source", F.explode(toks).alias("tok"))
         .groupBy("source", "tok")
@@ -2476,7 +2466,7 @@ def ts_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_length_outliers",
     f"""WITH lens AS (
   SELECT source, doc_id,
-         CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens
+         CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS n_tokens
   FROM documents
 ), med AS (
   SELECT source, n_tokens AS median_tokens FROM (
@@ -2540,10 +2530,7 @@ def ts_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_raw(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
+    toks = doc_tokens(F.col("text"))
     lens = docs.select(
         "source", "doc_id", F.size(toks).cast("bigint").alias("n_tokens")
     )
@@ -2606,7 +2593,7 @@ def ts_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_entropy_rate",
     f"""WITH t AS (
-  SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents
+  SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents
 ), uni AS (
   SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
   FROM (SELECT unnest(ts) AS tok FROM t) GROUP BY tok
@@ -2655,10 +2642,7 @@ def ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is bigram-type-sized. Same shape as the Kneser-Ney model
     build minus its continuation tables."""
     docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
+    toks = doc_tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("ts"))
     uni = (
         t.select(F.explode("ts").alias("tok"))
@@ -2715,7 +2699,7 @@ def ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_source_js_divergence",
     f"""WITH tok AS (
   SELECT source, unnest(ts) AS tok
-  FROM (SELECT source, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT source, {DOC_TOKENS_SQL} AS ts FROM documents)
 ), per AS (
   SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c
   FROM tok GROUP BY source, tok
@@ -2771,10 +2755,7 @@ def ts_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold the tail into an OTHER bucket (the standard JSD-at-scale
     move, unchanged shape)."""
     docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
+    toks = doc_tokens(F.col("text"))
     # per feeds the source totals, the corpus model and the grid's
     # left join; src_tot feeds the grid and the final join (no
     # cross-subtree CSE) — persist both, released after the |sources|-
@@ -2826,7 +2807,7 @@ HEAPS_CHECKPOINT_FRACS = (0.1, 0.2, 0.4, 0.6, 0.8, 1.0)
 def _heaps_oracle() -> str:
     fracs = ", ".join(f"({i}, {f!r})" for i, f in enumerate(HEAPS_CHECKPOINT_FRACS))
     return f"""WITH t AS (
-  SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents
+  SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents
 ), tok AS (
   SELECT doc_id, unnest(ts) AS tok FROM t
 ), firsts AS (
@@ -2883,10 +2864,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid. The OLS runs on ≤6 points driver-free, same closed-form
     normal equations as the daily trend."""
     docs = load_raw(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_SPLIT_REGEX),
-        lambda t: t != "",
-    )
+    toks = doc_tokens(F.col("text"))
     # t feeds both the first-occurrence and per-doc-count aggregates,
     # and the 6-row curve feeds both the OLS points and the output
     # join (no cross-subtree CSE) - persist both, released after the
@@ -2897,7 +2875,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.min("doc_id").cast("bigint").alias("first_doc"))
     )
-    doc_tokens = t.select(
+    doc_nt = t.select(
         "doc_id", F.size("ts").cast("bigint").alias("nt")
     )
     mx = docs.agg(F.max("doc_id").alias("m"))
@@ -2911,7 +2889,7 @@ def ts_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cut"),
     )
     n_per_cut = (
-        cuts.join(doc_tokens, doc_tokens.doc_id < cuts.cut, "left")
+        cuts.join(doc_nt, doc_nt.doc_id < cuts.cut, "left")
         .groupBy("i", "cut")
         .agg(F.coalesce(F.sum("nt"), F.lit(0)).cast("bigint").alias("n_tokens"))
     )
@@ -3014,7 +2992,7 @@ def _decon_oracle() -> str:
     from .sampling import TRAIN_BUCKETS, VAL_BUCKETS, split_hash_sql
 
     return f"""WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS ts,
+  SELECT doc_id, {DOC_TOKENS_SQL} AS ts,
          {split_hash_sql()} % 10 AS bucket
   FROM documents
 ),
@@ -3069,7 +3047,7 @@ def ts_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         split.alias("split"),
-        _tokens(F.col("text")).alias("ts"),
+        doc_tokens(F.col("text")).alias("ts"),
     ).filter(F.size("ts") >= DECON_N)
     grams = toks.select(
         "doc_id",
@@ -3115,7 +3093,7 @@ GOPHER_MIN_STOP_HITS = 2
 GOPHER_SYMBOL_RATIO = 0.1
 
 _GOPHER_ORACLE = f"""WITH toks AS (
-  SELECT doc_id, text, {_TOKENS_SQL} AS ts FROM documents
+  SELECT doc_id, text, {DOC_TOKENS_SQL} AS ts FROM documents
 ), feats AS (
   SELECT doc_id,
          len(ts) AS n,
@@ -3186,7 +3164,7 @@ def ts_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons cannot straddle); one scan, one aggregate, 6 output
     rows at any corpus size."""
     docs = load_raw(spark, sf_dir, "documents")
-    ts = _tokens(F.col("text"))
+    ts = doc_tokens(F.col("text"))
     n = F.size(ts)
     tok_len_sum = F.aggregate(
         F.transform(ts, lambda t: F.length(t).cast("long")),

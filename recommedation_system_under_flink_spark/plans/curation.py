@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import DOC_TOKENS_SQL, doc_tokens
 from ..operators.sampling import samp_split_assign
 from ..operators.textstats import quality_parts, ts_lang_id, ts_quality_score
 from ..operators.quantize import ppm_value
@@ -123,13 +124,13 @@ def llm_curation_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
         VAL_BUCKETS,
         split_hash,
     )
-    from ..operators.textstats import LANG_MARKERS, _tokens
+    from ..operators.textstats import LANG_MARKERS
 
     docs = load_raw(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         F.sha2(F.col("text"), 256).alias("content_hash"),
-        _tokens(F.col("text")).alias("ts"),
+        doc_tokens(F.col("text")).alias("ts"),
     )
     ts, n = F.col("ts"), F.size("ts")
     dts = F.array_distinct(ts)
@@ -177,15 +178,11 @@ def llm_curation_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: use (the "budget"); each source gets an equal share of it.
 MIX_BUDGET_FRAC = 0.5
 
-# Same tokenizer SQL as the quality stage (imported, not re-declared,
-# so a tokenizer change can never desynchronize the composed oracles).
-from ..operators.textstats import _TOKENS_SQL as _TOKENS_SQL_EXPR  # noqa: E402
-
 _MIX_ORACLE = f"""WITH qual AS (
 {_QUAL_SQL}
 ), toks AS (
   SELECT doc_id, source,
-         CAST(len({_TOKENS_SQL_EXPR}) AS BIGINT) AS n_tokens
+         CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS n_tokens
   FROM documents
 ), canon AS (
   SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text
@@ -235,14 +232,12 @@ def llm_curation_mix_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is |sources| rows — dashboard-sized at any corpus scale."""
     from pyspark.sql import Window
 
-    from ..operators.textstats import _tokens
-
     docs = load_raw(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         "source",
         F.sha2(F.col("text"), 256).alias("content_hash"),
-        _tokens(F.col("text")).alias("ts"),
+        doc_tokens(F.col("text")).alias("ts"),
     )
     ts, n = F.col("ts"), F.size("ts")
     # quality formula: the shared helper (see llm_curation_fused)
@@ -374,7 +369,6 @@ def llm_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _prep_oracle() -> str:
     from ..operators.textstats import (
-        _TOKENS_SQL,
         CHUNK_SIZE,
         CHUNK_STRIDE,
         PACK_BUDGET,
@@ -383,7 +377,7 @@ def _prep_oracle() -> str:
     return f"""WITH curated AS (
 {_CURATION_ORACLE}
 ), t AS (
-  SELECT d.doc_id, c.split, {_TOKENS_SQL} AS ts
+  SELECT d.doc_id, c.split, {DOC_TOKENS_SQL} AS ts
   FROM documents d JOIN curated c ON d.doc_id = c.doc_id
 ), ex AS (
   SELECT doc_id, split,
@@ -435,12 +429,11 @@ def llm_pretrain_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         CHUNK_SIZE,
         CHUNK_STRIDE,
         PACK_BUDGET,
-        _tokens,
     )
 
     curated = llm_curation_pipeline(spark, sf_dir).select("doc_id", "split")
     docs = load_raw(spark, sf_dir, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("ts")
+        "doc_id", doc_tokens(F.col("text")).alias("ts")
     )
     chunks = (
         docs.join(curated, "doc_id")
@@ -635,7 +628,7 @@ _CARD_ORACLE = f"""WITH qual AS (
 {_QUAL_SQL}
 ), base AS (
   SELECT d.doc_id, d.lang, d.source,
-         CAST(len({_TOKENS_SQL_EXPR}) AS BIGINT) AS n_tokens,
+         CAST(len({DOC_TOKENS_SQL}) AS BIGINT) AS n_tokens,
          md5(d.text) AS h, q.quality
   FROM documents d JOIN qual q ON d.doc_id = q.doc_id
 )
@@ -664,10 +657,8 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     legs — Catalyst expands multi-distinct into one Expand + two-level
     aggregate, still a single pass over the corpus at any scale.
     Quality algebra is verbatim the verified ts_quality_score stage."""
-    from ..operators.textstats import _tokens
-
     docs = load_raw(spark, sf_dir, "documents")
-    ts = _tokens(F.col("text"))
+    ts = doc_tokens(F.col("text"))
     n = F.size(ts)
     # quality formula: the shared helper (see llm_curation_fused)
     _, _, _, quality = quality_parts(ts)

@@ -1,5 +1,5 @@
-"""Invariants for the LLM-pipeline operators (dedup / similarity /
-textstats / multimodal) that the DuckDB oracle can't express —
+"""Invariants for the LLM-pipeline operators (similarity / textstats /
+multimodal) that the DuckDB oracle can't express —
 mostly recall properties of the approximate (LSH) paths against their
 exact twins, on the sf0.001 fixtures.
 """
@@ -17,44 +17,6 @@ from conftest import SF_DIR
 @pytest.fixture(scope="module")
 def queries():
     return registry.queries()
-
-
-# ----------------------------------------------------------------- dedup
-
-def test_minhash_lsh_subset_of_exact_with_high_recall(queries, spark):
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in queries["dedup_ngram_jaccard"](spark, SF_DIR).collect()
-    }
-    lsh = {
-        (r.doc_a, r.doc_b)
-        for r in queries["dedup_minhash_lsh"](spark, SF_DIR).collect()
-    }
-    assert lsh <= exact  # verified candidates can never add pairs
-    if exact:
-        assert len(lsh) / len(exact) >= 0.8  # 2-row bands at j>=0.5
-
-
-def test_simhash_identical_text_same_signature(spark):
-    from recommedation_system_under_flink_spark.operators.dedup import simhash_udf
-
-    df = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "spark shuffles data"), (3, "other words")],
-        "doc_id long, text string",
-    )
-    rows = df.select("doc_id", simhash_udf()(F.col("text")).alias("sig")).collect()
-    sigs = {r.doc_id: r.sig for r in rows}
-    assert sigs[1] == sigs[2]
-    assert sigs[1] != sigs[3]
-
-
-def test_exact_dedup_flags_planted_duplicates(queries, spark):
-    df = queries["dedup_exact"](spark, SF_DIR)
-    # canonical count == distinct hash count; every hash has exactly one canonical
-    agg = df.groupBy("text_hash").agg(
-        F.sum(F.col("canonical").cast("int")).alias("n_canon")
-    )
-    assert agg.filter(F.col("n_canon") != 1).count() == 0
 
 
 # ------------------------------------------------------------ similarity
@@ -249,25 +211,6 @@ def test_binary_stats_bounds_and_text_signature(queries, spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_neardup_canonical_verdict(queries, spark):
-    """Canonical verdict invariants: one row per doc; canonical_id ≤
-    doc_id never violated for keepers... precisely: keep iff doc is its
-    cluster's min; near-dup pairs always share a canonical."""
-    rows = queries["dedup_neardup_canonical"](spark, SF_DIR).collect()
-    canon = {r["doc_id"]: r["canonical_id"] for r in rows}
-    keeps = {r["doc_id"] for r in rows if r["keep"]}
-    assert len(rows) == len(canon)  # one verdict per doc
-    # keep iff doc IS its canonical
-    for r in rows:
-        assert r["keep"] == (r["doc_id"] == r["canonical_id"])
-        assert r["canonical_id"] <= r["doc_id"]
-        assert canon[r["canonical_id"]] == r["canonical_id"]  # canonical is kept
-    assert keeps == set(canon.values())
-    # every verified near-dup pair collapses to one canonical
-    for p in queries["dedup_minhash_lsh"](spark, SF_DIR).collect():
-        assert canon[p["doc_a"]] == canon[p["doc_b"]]
-
-
 def test_pii_scrub_semantics(spark):
     """The fixture corpus has no PII, so the oracle only proves
     plumbing; these synthetic strings pin the masking semantics and
@@ -316,10 +259,8 @@ def test_repetition_score_invariants(queries, spark):
     = 1.0 through the same expression chain."""
     from pyspark.sql import functions as F
 
-    from recommedation_system_under_flink_spark.operators.textstats import (
-        _ngram_expr,
-        _tokens,
-    )
+    from recommedation_system_under_flink_spark.functions.text import doc_tokens
+    from recommedation_system_under_flink_spark.operators.textstats import _ngram_expr
 
     rows = queries["ts_repetition_score"](spark, SF_DIR).collect()
     assert rows
@@ -335,7 +276,7 @@ def test_repetition_score_invariants(queries, spark):
             assert r["top_bigram_n"] >= 1
     # degenerate repeated text → every bigram is the same
     df = spark.createDataFrame([("spam spam spam spam",), ("a b c d",)], "text string")
-    base = df.select("text", _tokens(F.col("text")).alias("ts"))
+    base = df.select("text", doc_tokens(F.col("text")).alias("ts"))
     out = base.select("text", _ngram_expr(2).alias("g")).collect()
     by_text = {r["text"]: list(r["g"]) for r in out}
     assert by_text["spam spam spam spam"] == ["spam spam"] * 3
@@ -575,22 +516,6 @@ def test_zipf_fit_recovers_planted_power_law(spark, tmp_path):
     assert row["n_terms"] == vocab
     assert abs(row["slope"] - (-0.8)) < 0.02, row
     assert row["r2"] > 0.999
-
-
-def test_method_agreement_consistent_with_components(queries, spark):
-    """The agreement row's counts must equal the component pair
-    queries' row counts, with n_both <= min of the two and the method
-    Jaccard in [0, 1]."""
-    from conftest import SF_DIR
-
-    r = queries["dedup_method_agreement"](spark, SF_DIR).collect()[0]
-    n_text = queries["dedup_ngram_jaccard"](spark, SF_DIR).count()
-    n_emb = queries["sim_neardup_pairs_exact"](spark, SF_DIR).count()
-    assert r["n_text"] == n_text
-    assert r["n_embedding"] == n_emb
-    assert r["n_both"] <= min(n_text, n_emb)
-    if r["method_jaccard"] is not None:
-        assert 0.0 <= r["method_jaccard"] <= 1.0
 
 
 def test_funnel_by_source_sums_to_global(queries, spark):

@@ -34,7 +34,10 @@ BUDGETS = {
     "hot_topics_pipeline": (2, 3, False, True),
     "tfidf_pipeline": (10, 28, True, True),
     "j3_scored_join": (10, 27, True, True),
-    "dedup_minhash_lsh": (8, 17, False, False),
+    # measured 6/13 at sf0.001 and sf0.01; incremental LSH, the lazy
+    # caller of the same band and verify helpers, measured 7/14
+    "dedup_minhash_lsh": (7, 14, False, False),
+    "dedup_incremental_lsh": (8, 15, False, False),
     # measured 2/2 at sf0.001 once the candidate distinct was dropped
     # (a vector sits in one cell, a query's probes are distinct cells)
     "sim_ivf_topk_pinned": (3, 3, False, False),
@@ -73,12 +76,14 @@ BUDGETS = {
     "mm_scene_cuts": (2, 2, False, False),
     "prof_dp_release": (2, 3, False, False),
     # round 9: the remaining top-6 cost centers (r8 verdict ask #6),
-    # measured at sf0.001: prefix-filter 10/27; markov 0/12 with the
-    # 1-row total-journeys scalar broadcast as its only cartesian;
-    # p1-distributed and HITS end in a checkpoint, so their
-    # executed plans must STAY trivial — a regression that drops the
-    # checkpoint shows up as reappearing scans/exchanges
-    "dedup_prefix_filter_join": (12, 32, False, False),
+    # measured at sf0.001: markov 0/12 with the 1-row total-journeys
+    # scalar broadcast as its only cartesian; p1-distributed and HITS
+    # end in a checkpoint, so their executed plans must STAY trivial —
+    # a regression that drops the checkpoint shows up as reappearing
+    # scans/exchanges
+    # the prefix-filter join ends in a checkpoint too: any
+    # scan/exchange means the checkpoint was dropped
+    "dedup_prefix_filter_join": (0, 0, False, False),
     # round 11: the matrix powers moved to exact bounded driver
     # arithmetic (the ≤(M+3)²-cell relation is collected once; the
     # r10-verdict watch item on this query's micro-job floor), so the

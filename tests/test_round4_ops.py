@@ -152,34 +152,6 @@ def test_readability_bounds_and_monotonicity(spark):
         assert abs(want - r.flesch) <= 1e-6
 
 
-# --------------------------------------------------- containment dedup
-
-def test_containment_dominates_jaccard_and_direction(spark):
-    """containment ≥ jaccard always; contained_doc is the smaller
-    shingle set; every symmetric near-dup pair (jaccard ≥ threshold)
-    must also appear in the containment output."""
-    from recommedation_system_under_flink_spark.operators.dedup import (
-        CONTAIN_THRESHOLD,
-        JACCARD_THRESHOLD,
-    )
-
-    out = _q("dedup_containment")(spark, SF_DIR).collect()
-    assert out
-    # containment ≥ jaccard, so any pair at jaccard ≥ CONTAIN_THRESHOLD
-    # is guaranteed to appear in the containment output
-    jpairs = {
-        (r.doc_a, r.doc_b)
-        for r in _q("dedup_ngram_jaccard")(spark, SF_DIR).collect()
-        if r.jaccard >= CONTAIN_THRESHOLD
-    }
-    cpairs = {(r.doc_a, r.doc_b) for r in out}
-    assert jpairs and jpairs <= cpairs, jpairs - cpairs
-    for r in out:
-        assert r.containment >= r.jaccard - 1e-9
-        assert r.contained_doc in (r.doc_a, r.doc_b)
-        assert r.jaccard_missed == (r.jaccard < JACCARD_THRESHOLD)
-
-
 # ----------------------------------------------------- CUSUM recursion
 
 def test_cusum_closed_form_matches_textbook_recursion(spark):
@@ -412,42 +384,6 @@ def test_group_safe_split_has_zero_neardup_leakage(spark):
             assert gs[d].split == plain[d], d
 
 
-# ------------------------------------------------ LSH band tuning
-
-def test_band_tuning_nested_candidates_and_prod_consistency(spark):
-    """Band boundaries nest (a 4-row band collision implies its two
-    2-row band collisions, which imply four 1-row collisions), so both
-    candidate and verified counts must be monotone non-increasing as
-    rows-per-band grows; the production (16, 2) point's verified count
-    must equal the registered LSH pair relation; the pinned S-curve
-    capture values must be monotone the same way."""
-    from recommedation_system_under_flink_spark.operators.dedup import (
-        BAND_SWEEP,
-        MINHASH_BANDS,
-        dedup_minhash_lsh,
-    )
-
-    rows = {
-        (r.bands, r.rows_per_band): r
-        for r in _q("dedup_band_tuning_curve")(spark, SF_DIR).collect()
-    }
-    assert set(rows) == set(BAND_SWEEP)
-    ordered = [rows[cfg] for cfg in sorted(BAND_SWEEP, key=lambda c: c[1])]
-    for a, b in zip(ordered, ordered[1:]):
-        assert a.n_candidates >= b.n_candidates
-        assert a.n_verified >= b.n_verified
-        assert a.capture_at_threshold >= b.capture_at_threshold
-    n_true = {r.n_true for r in rows.values()}
-    assert len(n_true) == 1
-    for r in rows.values():
-        assert 0 <= r.n_verified <= min(r.n_candidates, r.n_true)
-        if r.n_true:
-            assert abs(r.recall - r.n_verified / r.n_true) < 1e-6
-
-    prod = rows[(MINHASH_BANDS, 32 // MINHASH_BANDS)]
-    assert prod.n_verified == dedup_minhash_lsh(spark, SF_DIR).count()
-
-
 # ------------------------------------------------ column entropy
 
 def test_column_entropy_matches_scipy_style_recompute(spark):
@@ -626,29 +562,6 @@ def test_stream_decayed_popularity_equals_batch(spark):
     assert stream == batch and batch
 
 
-# --------------------------------------------------- n-gram novelty
-
-def test_ngram_novelty_conservation_and_first_doc(spark):
-    """Novel shingles partition the corpus vocabulary: Σ n_novel =
-    |distinct shingles|; the smallest doc with any shingles has
-    novelty exactly 1; every ratio matches its counts."""
-    from recommedation_system_under_flink_spark.operators.dedup import (
-        shingles,
-    )
-    from recommedation_system_under_flink_spark.sources.tables import load_raw
-
-    rows = _q("dedup_ngram_novelty")(spark, SF_DIR).collect()
-    assert rows
-    sh = shingles(load_raw(spark, SF_DIR, "documents"))
-    vocab = sh.select("shingle").distinct().count()
-    assert sum(r.n_novel for r in rows) == vocab
-    first = min(rows, key=lambda r: r.doc_id)
-    assert first.n_novel == first.n_shingles and first.novelty == 1.0
-    for r in rows:
-        assert 0 <= r.n_novel <= r.n_shingles
-        assert abs(r.novelty - r.n_novel / r.n_shingles) < 1e-6
-
-
 # ------------------------------------------- degree distribution
 
 def test_degree_histogram_matches_python_degrees(spark):
@@ -696,7 +609,7 @@ def test_vocab_coverage_monotone_and_agrees_with_vocab_build(spark):
     )
     import re as _re
 
-    from recommedation_system_under_flink_spark.operators.textstats import (
+    from recommedation_system_under_flink_spark.functions.text import (
         TOKEN_SPLIT_REGEX,
     )
     from recommedation_system_under_flink_spark.sources.tables import load_raw

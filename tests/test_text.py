@@ -7,12 +7,18 @@ step-by-step from TextRank.java:164-192 in the comments.
 from __future__ import annotations
 
 import math
+import re
 
+import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from recommedation_system_under_flink_spark.functions.text import (
+    DOC_TOKENS_SQL,
+    TOKEN_SPLIT_REGEX,
     cooccurrence_clique,
     cooccurrence_windowed,
+    doc_tokens,
     extract_keywords_clique,
     extract_keywords_windowed,
     textrank_vote,
@@ -37,6 +43,34 @@ from recommedation_system_under_flink_spark.functions.text import (
 )
 def test_tokenize(text, expected):
     assert tokenize(text) == expected
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "",
+        " \t\n  ",
+        "!!! ... ,;-- ??",
+        "MiXeD Case42 snake_case_Name 7UP",
+        "--leading and trailing--",
+        "Café ÜBER straße naïve",
+    ],
+)
+def test_doc_tokens_parity(spark, text):
+    """The document tokenizer is one spec in three engines: Spark
+    ``doc_tokens``, DuckDB ``DOC_TOKENS_SQL`` and the Python regex split
+    every oracle is reasoned against."""
+    expected = [t for t in re.split(TOKEN_SPLIT_REGEX, text.lower()) if t]
+    got_spark = (
+        spark.createDataFrame([(text,)], "text string")
+        .select(doc_tokens(F.col("text")).alias("ts"))
+        .collect()[0]["ts"]
+    )
+    got_duck = duckdb.execute(
+        f"SELECT {DOC_TOKENS_SQL} FROM (SELECT CAST(? AS VARCHAR) AS text)", [text]
+    ).fetchone()[0]
+    assert got_spark == expected
+    assert got_duck == expected
 
 
 def test_token_counts():
