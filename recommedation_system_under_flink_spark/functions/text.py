@@ -13,10 +13,12 @@ Pinned specs replacing reference code that is absent from the snapshot
   (TextRank.java:9) but absent. Pin: lowercase → split on
   ``[^a-z0-9]+`` → drop empties → drop STOPWORDS. The same regex +
   stop list is used verbatim by the SQL twins (operators/*.py oracles),
-  so UDF and relational paths tokenize identically. The document form
-  (stop words kept) is :func:`doc_tokens` in Spark and
-  ``DOC_TOKENS_SQL`` in DuckDB — the one copy every relational builder
-  and oracle reads.
+  so UDF and relational paths tokenize identically. The stop-word form
+  is :func:`content_tokens` (array) / :func:`is_content_token` (row
+  filter) in Spark and :func:`content_tokens_sql` in DuckDB; the
+  document form (stop words kept) is :func:`doc_tokens` and
+  ``DOC_TOKENS_SQL`` — the one copy every relational builder and
+  oracle reads.
 - **F2 window clamp** — the reference has an off-by-one: when the
   right window edge passes the end of the token list it is reset to
   ``0`` instead of ``size-1`` (TextRank.java:183-184), silently
@@ -46,21 +48,60 @@ TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 
 _STOPSET = frozenset(STOPWORDS)
 
+#: The stop list as a SQL ``IN (...)`` list body.
+STOPWORDS_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
+
+#: Chunk geometry: CHUNK_SIZE-token windows every CHUNK_STRIDE tokens
+#: (CHUNK_SIZE - CHUNK_STRIDE tokens of overlap between neighbors).
+CHUNK_SIZE = 64
+CHUNK_STRIDE = 48
+
+
+def _split_sql(col: str) -> str:
+    return f"string_split_regex(lower({col}), '{TOKEN_SPLIT_REGEX}')"
+
+
 #: DuckDB twin of :func:`doc_tokens` over a ``text`` column.
-DOC_TOKENS_SQL = (
-    f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_REGEX}'), t -> t <> '')"
-)
+DOC_TOKENS_SQL = f"list_filter({_split_sql('text')}, t -> t <> '')"
+
+
+def content_tokens_sql(col: str) -> str:
+    """DuckDB twin of :func:`content_tokens` over the SQL column ``col``."""
+    return f"list_filter({_split_sql(col)}, t -> t <> '' AND t NOT IN ({STOPWORDS_SQL}))"
+
+
+# The Spark forms import pyspark inside the function: the keyword UDF
+# workers import this module and need none of the DataFrame API.
+
+def split_tokens(text: Column) -> Column:
+    """Lowercase → split on ``TOKEN_SPLIT_REGEX`` (empties kept)."""
+    from pyspark.sql import functions as F
+
+    return F.split(F.lower(text), TOKEN_SPLIT_REGEX)
+
+
+def is_content_token(t: Column) -> Column:
+    """The stop-word predicate of :func:`tokenize`: non-empty and not in
+    STOPWORDS. Row paths filter exploded tokens with it; in Spark 4.1
+    the higher-order ``filter`` is interpreted (CodegenFallback), so
+    per-token work stays out of it unless positions are needed."""
+    return (t != "") & ~t.isin(*STOPWORDS)
+
+
+def content_tokens(text: Column) -> Column:
+    """:func:`tokenize` as a Spark array column (positions preserved)."""
+    from pyspark.sql import functions as F
+
+    return F.filter(split_tokens(text), is_content_token)
 
 
 def doc_tokens(text: Column) -> Column:
     """Document tokens as a Spark array column: lowercase → split on
     ``TOKEN_SPLIT_REGEX`` → drop empties. Stop words are kept (dedup
     and corpus statistics want the surface text)."""
-    # imported here: the keyword UDF workers import this module and
-    # need none of the DataFrame API
     from pyspark.sql import functions as F
 
-    return F.filter(F.split(F.lower(text), TOKEN_SPLIT_REGEX), lambda t: t != "")
+    return F.filter(split_tokens(text), lambda t: t != "")
 
 
 def tokenize(text: str | None) -> list[str]:

@@ -42,7 +42,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import DOC_TOKENS_SQL, STOPWORDS, doc_tokens
+from ..functions.text import (
+    CHUNK_SIZE,
+    CHUNK_STRIDE,
+    DOC_TOKENS_SQL,
+    content_tokens_sql,
+    doc_tokens,
+)
 from . import bsp
 from ..registry import register
 from .quantize import ppm_value
@@ -444,8 +450,7 @@ def _simhash_oracle() -> str:
     sign sums), so the oracle rebuilds it bit by bit in SQL: 64 sign-sum
     columns → 4 16-bit chunk values → OR-of-chunk-equality candidates →
     hamming as the count of disagreeing sign bits."""
-    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    toks_sql = f"list_filter({DOC_TOKENS_SQL}, t -> t NOT IN ({stop}))"
+    toks_sql = content_tokens_sql("text")
     v_cols = ",\n         ".join(
         f"COALESCE(SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN cnt ELSE -cnt END), 0) AS v{j}"
         for j in range(64)
@@ -772,9 +777,9 @@ def dedup_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT doc_id, md5(chunk_text) AS h
   FROM (
     SELECT doc_id,
-           array_to_string(ts[s + 1 : s + 64], ' ') AS chunk_text
+           array_to_string(ts[s + 1 : s + {CHUNK_SIZE}], ' ') AS chunk_text
     FROM (
-      SELECT doc_id, ts, unnest(generate_series(0, len(ts) - 1, 48)) AS s
+      SELECT doc_id, ts, unnest(generate_series(0, len(ts) - 1, {CHUNK_STRIDE})) AS s
       FROM toks
       WHERE len(ts) > 0
     )
@@ -805,8 +810,6 @@ def dedup_chunk_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the chunk hashes are the same state table
     `dedup_incremental_exact` maintains, so the ratio can be computed
     incrementally against yesterday's corpus."""
-    from .textstats import CHUNK_SIZE, CHUNK_STRIDE  # pinned geometry
-
     base = _token_arrays(load_raw(spark, sf_dir, "documents")).filter(F.size("ts") > 0)
     chunks = base.select(
         "doc_id",

@@ -128,22 +128,30 @@ def ef_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- sessionization
 
-_SESSIONS_ORACLE = f"""WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS tsm, value FROM events
+def _sessions_ctes(cols: tuple[str, ...] = (), where: str = "") -> str:
+    """SQL twin of :func:`annotate_sessions`: CTEs ``e`` → ``flagged``
+    (lag gap flag) → ``sess`` (running-sum ``session_seq``) over the
+    ``events`` rows matching ``where``, carrying ``cols``."""
+    carry = "".join(f", {c}" for c in cols)
+    return f"""e AS (
+  SELECT user_id, event_id, epoch_us(ts) AS tsm{carry} FROM events{where}
 ), flagged AS (
-  SELECT user_id, event_id, tsm, value,
+  SELECT user_id, event_id, tsm{carry},
          CASE WHEN lag(tsm) OVER w IS NULL
                 OR tsm - lag(tsm) OVER w > {SESSION_GAP_US}
               THEN 1 ELSE 0 END AS is_start
   FROM e
   WINDOW w AS (PARTITION BY user_id ORDER BY tsm, event_id)
 ), sess AS (
-  SELECT user_id, tsm, value,
+  SELECT user_id, tsm{carry},
          CAST(SUM(is_start) OVER (PARTITION BY user_id ORDER BY tsm, event_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
            AS session_seq
   FROM flagged
-)
+)"""
+
+
+_SESSIONS_ORACLE = f"""WITH {_sessions_ctes(("value",))}
 SELECT user_id, session_seq,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        MIN(tsm) AS session_start,
@@ -381,21 +389,7 @@ def ef_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ------------------------------------------------- native session window
 
-_SESSIONS_NATIVE_ORACLE = f"""WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS tsm FROM events
-), flagged AS (
-  SELECT user_id, event_id, tsm,
-         CASE WHEN lag(tsm) OVER w IS NULL
-                OR tsm - lag(tsm) OVER w > {SESSION_GAP_US}
-              THEN 1 ELSE 0 END AS is_start
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY tsm, event_id)
-), sess AS (
-  SELECT user_id, tsm,
-         SUM(is_start) OVER (PARTITION BY user_id ORDER BY tsm, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-  FROM flagged
-)
+_SESSIONS_NATIVE_ORACLE = f"""WITH {_sessions_ctes()}
 SELECT user_id,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        MIN(tsm) AS session_start,
@@ -404,23 +398,18 @@ FROM sess
 GROUP BY user_id, session_seq"""
 
 
-@register("ef_sessionize_native", _SESSIONS_NATIVE_ORACLE)
-def ef_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap sessionization via Spark's NATIVE ``session_window`` — the
-    built-in operator the manual lag-chain (:func:`ef_sessionize`)
-    reimplements relationally. Both are registered so the two
-    constructions cross-validate through the same oracle family.
+def native_sessions(ev: DataFrame) -> DataFrame:
+    """Per-session ``(user_id, n_events, session_start, session_end)``
+    via Spark's native ``session_window`` over any frame with
+    ``user_id`` and a nanos-long ``ts`` — the batch ``events_raw`` and
+    the streaming source alike, so batch and stream run one query.
 
     Boundary pinning: ``session_window`` merges an event into the
     current session when ``next < prev + gap`` (strict), the lag form
     when ``next - prev ≤ gap`` — so the native gap is ``GAP + 1 µs``
     to make the two bit-identical (an event exactly GAP after its
-    predecessor belongs to the same session in both).
-
-    Plan: one shuffle on user_id + one sort — same shape as the manual
-    form; in Structured Streaming the identical expression runs
-    incrementally with watermark-bounded state (SCALE.md §9)."""
-    ev = events_raw(spark, sf_dir).select(
+    predecessor belongs to the same session in both)."""
+    ev = ev.select(
         "user_id",
         F.expr("ts DIV 1000").alias("tsm"),
         F.timestamp_micros(F.expr("ts DIV 1000")).alias("event_time"),
@@ -439,23 +428,23 @@ def ef_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("ef_sessionize_native", _SESSIONS_NATIVE_ORACLE)
+def ef_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap sessionization via Spark's NATIVE ``session_window``
+    (:func:`native_sessions`) — the built-in operator the manual
+    lag-chain (:func:`ef_sessionize`) reimplements relationally. Both
+    are registered so the two constructions cross-validate through the
+    same oracle family.
+
+    Plan: one shuffle on user_id + one sort — same shape as the manual
+    form; in Structured Streaming the identical expression runs
+    incrementally with watermark-bounded state (SCALE.md §9)."""
+    return native_sessions(events_raw(spark, sf_dir))
+
+
 # ------------------------------------------------- session funnel
 
-_SESSION_FUNNEL_ORACLE = f"""WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tsm FROM events
-), flagged AS (
-  SELECT user_id, event_id, event_type, tsm,
-         CASE WHEN lag(tsm) OVER w IS NULL
-                OR tsm - lag(tsm) OVER w > {SESSION_GAP_US}
-              THEN 1 ELSE 0 END AS is_start
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY tsm, event_id)
-), sess AS (
-  SELECT user_id, event_type, tsm,
-         SUM(is_start) OVER (PARTITION BY user_id ORDER BY tsm, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-  FROM flagged
-), v AS (
+_SESSION_FUNNEL_ORACLE = f"""WITH {_sessions_ctes(("event_type",))}, v AS (
   SELECT user_id, session_seq, MIN(tsm) AS t1 FROM sess
   WHERE event_type = 'view' GROUP BY 1, 2
 ), c AS (
@@ -699,6 +688,20 @@ def first_conv_agg():
     return F.min(F.when(F.col("pts") > F.col("ctsm"), F.col("pts")))
 
 
+#: SQL twin of :func:`conversion_subjects`: CTE ``conv(user_id, ctsm,
+#: pts)``, every click left-joined to the same user's purchases.
+_CONV_CTE = """conv AS (
+  SELECT c.user_id, epoch_us(c.ts) AS ctsm, p.pts
+  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
+  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
+             FROM events WHERE event_type = 'purchase') p
+    ON p.user_id = c.user_id
+)"""
+#: SQL twins of :func:`converted_agg` / :func:`first_conv_agg` over ``conv``.
+_CONVERTED_SQL = "MAX(CASE WHEN pts > ctsm THEN 1 ELSE 0 END)"
+_FIRST_CONV_SQL = "MIN(CASE WHEN pts > ctsm THEN pts END)"
+
+
 # ------------------------------------------------- survival analysis
 
 #: Microseconds per day (duration discretization for the KM curve).
@@ -709,15 +712,9 @@ _US_PER_DAY = 86_400_000_000
     "ef_kaplan_meier",
     f"""WITH obs AS (
   SELECT MAX(epoch_us(ts)) AS t_end FROM events
-), subj AS (
-  SELECT c.user_id,
-         MIN(epoch_us(c.ts)) AS t0,
-         MIN(CASE WHEN p.pts > epoch_us(c.ts) THEN p.pts END) AS tp
-  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
-             FROM events WHERE event_type = 'purchase') p
-    ON p.user_id = c.user_id
-  GROUP BY c.user_id
+), {_CONV_CTE}, subj AS (
+  SELECT user_id, MIN(ctsm) AS t0, {_FIRST_CONV_SQL} AS tp
+  FROM conv GROUP BY user_id
 ), durations AS (
   SELECT user_id,
          CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS event,
@@ -827,16 +824,10 @@ def ef_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ef_conversion_ztest",
-    f"""WITH subj AS (
-  SELECT c.user_id,
-         CAST(MAX(CASE WHEN p.pts > epoch_us(c.ts) THEN 1 ELSE 0 END)
-              AS INTEGER) AS converted,
-         CAST(MIN(epoch_us(c.ts)) AS BIGINT) % 2 AS cohort
-  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
-             FROM events WHERE event_type = 'purchase') p
-    ON p.user_id = c.user_id
-  GROUP BY c.user_id
+    f"""WITH {_CONV_CTE}, subj AS (
+  SELECT user_id, CAST({_CONVERTED_SQL} AS INTEGER) AS converted,
+         CAST(MIN(ctsm) AS BIGINT) % 2 AS cohort
+  FROM conv GROUP BY user_id
 ), g AS (
   SELECT cohort,
          CAST(COUNT(*) AS BIGINT) AS n,
@@ -918,16 +909,10 @@ def ef_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ef_logrank_test",
     f"""WITH obs AS (
   SELECT MAX(epoch_us(ts)) AS t_end FROM events
-), subj AS (
-  SELECT c.user_id,
-         MIN(epoch_us(c.ts)) AS t0,
-         MIN(CASE WHEN p.pts > epoch_us(c.ts) THEN p.pts END) AS tp,
-         CAST(MIN(epoch_us(c.ts)) AS BIGINT) % 2 AS cohort
-  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
-             FROM events WHERE event_type = 'purchase') p
-    ON p.user_id = c.user_id
-  GROUP BY c.user_id
+), {_CONV_CTE}, subj AS (
+  SELECT user_id, MIN(ctsm) AS t0, {_FIRST_CONV_SQL} AS tp,
+         CAST(MIN(ctsm) AS BIGINT) % 2 AS cohort
+  FROM conv GROUP BY user_id
 ), durations AS (
   SELECT cohort,
          CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS event,
@@ -1833,15 +1818,9 @@ SPRT_ALPHA = 0.05
 
 @register(
     "ef_sprt_decision",
-    f"""WITH subj AS (
-  SELECT c.user_id,
-         CAST(MAX(CASE WHEN p.pts > epoch_us(c.ts) THEN 1 ELSE 0 END)
-              AS INTEGER) AS converted
-  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
-             FROM events WHERE event_type = 'purchase') p
-    ON p.user_id = c.user_id
-  GROUP BY c.user_id
+    f"""WITH {_CONV_CTE}, subj AS (
+  SELECT user_id, CAST({_CONVERTED_SQL} AS INTEGER) AS converted
+  FROM conv GROUP BY user_id
 ), g AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(converted) AS BIGINT) AS x
@@ -1914,16 +1893,10 @@ POWER_REL_MDE = 0.10
 
 @register(
     "ef_power_analysis",
-    f"""WITH subj AS (
-  SELECT c.user_id,
-         CAST(MAX(CASE WHEN p.pts > epoch_us(c.ts) THEN 1 ELSE 0 END)
-              AS INTEGER) AS converted,
-         CAST(MIN(epoch_us(c.ts)) AS BIGINT) % 2 AS cohort
-  FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-  LEFT JOIN (SELECT user_id, epoch_us(ts) AS pts
-             FROM events WHERE event_type = 'purchase') p
-    ON p.user_id = c.user_id
-  GROUP BY c.user_id
+    f"""WITH {_CONV_CTE}, subj AS (
+  SELECT user_id, CAST({_CONVERTED_SQL} AS INTEGER) AS converted,
+         CAST(MIN(ctsm) AS BIGINT) % 2 AS cohort
+  FROM conv GROUP BY user_id
 ), g AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
          CAST(SUM(converted) AS BIGINT) AS x,
@@ -2255,22 +2228,7 @@ def ef_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 OVERLAP_USERS = 120
 OVERLAP_BAND_US = 7_200_000_000  # 2 h
 
-_OVERLAP_ORACLE = f"""WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS tsm FROM events
-  WHERE user_id < {OVERLAP_USERS}
-), flagged AS (
-  SELECT user_id, event_id, tsm,
-         CASE WHEN lag(tsm) OVER w IS NULL
-                OR tsm - lag(tsm) OVER w > {SESSION_GAP_US}
-              THEN 1 ELSE 0 END AS is_start
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY tsm, event_id)
-), sess AS (
-  SELECT user_id, tsm,
-         SUM(is_start) OVER (PARTITION BY user_id ORDER BY tsm, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-  FROM flagged
-), s AS (
+_OVERLAP_ORACLE = f"""WITH {_sessions_ctes(where=f" WHERE user_id < {OVERLAP_USERS}")}, s AS (
   SELECT user_id, session_seq,
          MIN(tsm) AS session_start, MAX(tsm) AS session_end
   FROM sess GROUP BY user_id, session_seq

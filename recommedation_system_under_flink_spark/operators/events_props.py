@@ -23,12 +23,13 @@ Engine approach (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
 from ..registry import register
 from ..sources import events_raw
+from ..sources.tables import ts_date
 from .quantize import ppm_sum, ppm_value
 
 #: Explicit payload schema — the single source of truth for the parse.
@@ -218,8 +219,6 @@ def ev_daily_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     day): spine size is days × types regardless of event volume, so at
     100 TB the dense side of the join is still trivially small — gap
     filling is always cheap AFTER aggregation, never before it."""
-    from ..sources.tables import ts_date
-
     ev = events_raw(spark, sf_dir)
     daily = (
         ev.select("event_type", ts_date("ts").alias("day"))
@@ -277,8 +276,6 @@ def ev_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     The z-score is quantized to 6 decimals for the cross-engine hash
     (stddev accumulates in data-dependent order). Constant series
     (sd = 0) are excluded — no z-score is defined there."""
-    from ..sources.tables import ts_date
-
     ev = events_raw(spark, sf_dir)
     daily = (
         ev.select("event_type", ts_date("ts").alias("day"))
@@ -318,10 +315,6 @@ def ev_user_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     is :func:`ev_user_rfm_scalable` (distinct-value-histogram ECDF
     cuts + map-side bucketing); this exact form survives only as the
     pytest cross-check (tests/test_relational.py)."""
-    from ..sources import events_raw
-    from ..sources.tables import ts_date
-    from pyspark.sql import Window
-
     base = (
         events_raw(spark, sf_dir)
         .groupBy("user_id")
@@ -429,11 +422,6 @@ def ev_user_rfm_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (unlike ntile, which splits ties by the user_id tiebreak);
     agreement with the exact-ntile diagnostic is pytest-asserted
     (tests/test_relational.py)."""
-    from pyspark.sql import Window
-
-    from ..sources import events_raw
-    from ..sources.tables import ts_date
-
     base = bsp.persist(
         events_raw(spark, sf_dir)
         .groupBy("user_id")
@@ -553,11 +541,7 @@ def ev_user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap), which downstream imputation handles explicitly."""
     import datetime as dt
 
-    from pyspark.sql import Window
-
     from ..config import TODAY
-    from ..sources import events_raw
-    from ..sources.tables import ts_date
 
     week_start = TODAY - dt.timedelta(days=6)
     ev = events_raw(spark, sf_dir).select(
@@ -618,11 +602,6 @@ def ev_daily_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix (days² per type, trivial after aggregation — never over raw
     events). POWER on doubles can drift an ulp between libm and the
     JVM; positive sums + 6-dp quantization absorb it."""
-    from pyspark.sql import functions as F
-
-    from ..sources import events_raw
-    from ..sources.tables import ts_date
-
     daily = (
         events_raw(spark, sf_dir)
         .groupBy("event_type", ts_date("ts").alias("day"))
@@ -669,11 +648,6 @@ def ev_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-of-week functions disagree on week start and indexing. The
     input is the aggregated daily matrix, so the profile costs nothing
     at any scale."""
-    from pyspark.sql import functions as F
-
-    from ..sources import events_raw
-    from ..sources.tables import ts_date
-
     daily = (
         events_raw(spark, sf_dir)
         .groupBy("event_type", ts_date("ts").alias("day"))
@@ -821,8 +795,6 @@ def ev_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("cn", F.lit(0)).alias("cn"),
         )
     )
-    from pyspark.sql import Window
-
     w = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -836,23 +808,47 @@ def ev_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ------------------------------------------------- daily click series
+
+def daily_click_series(ev: DataFrame) -> DataFrame:
+    """Clicks per day ``(date, y)`` with the 0-based day order ``x`` (a
+    row_number over the tiny daily relation) — the series every trend
+    and forecast query below fits. Callers rename, cast or offset
+    ``x``/``y`` themselves. SQL twin: ``_DAILY_CTES``."""
+    daily = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy(ts_date().alias("date"))
+        .agg(F.count("*").cast("long").alias("y"))
+    )
+    return daily.select(
+        "date",
+        "y",
+        (F.row_number().over(Window.orderBy("date")) - 1).cast("long").alias("x"),
+    )
+
+
+#: SQL twin of :func:`daily_click_series`: ``daily(date, y)`` and
+#: ``idx(date, y, x)``.
+_DAILY_CTES = """daily AS (
+  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
+  FROM events WHERE event_type = 'click' GROUP BY 1
+), idx AS (
+  SELECT date, y, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
+  FROM daily
+)"""
+
+
 # --------------------------------------------------------- OLS trend
 
 @register(
     "ev_daily_trend_ols",
-    """WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS n
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT n, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
-  FROM daily
-), s AS (
+    f"""WITH {_DAILY_CTES}, s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
          CAST(SUM(x) AS BIGINT) AS sx,
-         CAST(SUM(n) AS BIGINT) AS sy,
+         CAST(SUM(y) AS BIGINT) AS sy,
          CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(x * n) AS BIGINT) AS sxy,
-         CAST(SUM(n * n) AS BIGINT) AS syy
+         CAST(SUM(x * y) AS BIGINT) AS sxy,
+         CAST(SUM(y * y) AS BIGINT) AS syy
   FROM idx
 )
 SELECT cnt AS n_days,
@@ -872,29 +868,14 @@ def ev_daily_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from a row_number over the (tiny) daily relation; the
     moments are one map-side-combinable aggregate. Degenerate
     zero-variance y pins R² = 1."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import events_raw, ts_date
-
-    daily = (
-        events_raw(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .groupBy(ts_date("ts").alias("date"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    idx = daily.select(
-        "n",
-        (F.row_number().over(Window.orderBy("date")) - 1)
-        .cast("long")
-        .alias("x"),
-    )
+    idx = daily_click_series(events_raw(spark, sf_dir))
     s = idx.agg(
         F.count("*").cast("long").alias("cnt"),
         F.sum("x").cast("long").alias("sx"),
-        F.sum("n").cast("long").alias("sy"),
+        F.sum("y").cast("long").alias("sy"),
         F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("x") * F.col("n")).cast("long").alias("sxy"),
-        F.sum(F.col("n") * F.col("n")).cast("long").alias("syy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
     )
     sl_num = F.col("cnt") * F.col("sxy") - F.col("sx") * F.col("sy")
     sl_den = F.col("cnt") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -972,7 +953,6 @@ def ev_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     The max over per-value ECDF gaps is a plain aggregate. State
     bounds: distinct-value relation ≤ the value grid; bucket grid ≤
     value range / {width} — both domain-bounded, never O(rows)."""
-    from ..sources.tables import events_raw
     from .prefix import with_cum_before
 
     s = events_raw(spark, sf_dir).filter(
@@ -1085,10 +1065,6 @@ def ev_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Symmetrically ``S⁻_n = max(0, max_j Q_j) − Q_n`` on ``z + k``.
     The alarm compares the 6-dp-quantized sums on both engines, so the
     boundary decision itself is hash-stable."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
     ev = events_raw(spark, sf_dir)
     daily = (
         ev.select("event_type", ts_date("ts").alias("day"))
@@ -1194,9 +1170,6 @@ def ev_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound is a 1-row MAX(day) scalar broadcast. At 100 TB the distinct
     dominates; the window partitions by user (millions of independent
     partitions, no global sort)."""
-    from ..sources.tables import ts_date
-    from pyspark.sql import Window
-
     activity = (
         events_raw(spark, sf_dir)
         .select("user_id", ts_date("ts").alias("day"))
@@ -1318,9 +1291,6 @@ def ev_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type over the O(days)-per-type daily matrix — the same
     bounded-relation discipline as EWMA/CUSUM; nothing global, nothing
     data-sized past the first aggregate."""
-    from ..sources.tables import ts_date
-    from pyspark.sql import Window
-
     daily = (
         events_raw(spark, sf_dir)
         .groupBy("event_type", ts_date("ts").alias("day"))
@@ -1498,15 +1468,9 @@ def ev_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_theil_sen",
-    """WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS n
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT n, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
-  FROM daily
-), pairs AS (
+    f"""WITH {_DAILY_CTES}, pairs AS (
   SELECT a.x AS xi, b.x AS xj,
-         (b.n - a.n) * 1.0 / (b.x - a.x) AS sl
+         (b.y - a.y) * 1.0 / (b.x - a.x) AS sl
   FROM idx a JOIN idx b ON b.x > a.x
 ), ms AS (
   SELECT sl, ROW_NUMBER() OVER (ORDER BY sl, xi, xj) AS rn,
@@ -1516,7 +1480,7 @@ def ev_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT AVG(sl) AS slope FROM ms
   WHERE rn IN ((m + 1) // 2, (m + 2) // 2)
 ), res AS (
-  SELECT i.n - med.slope * i.x AS r, i.x FROM idx i CROSS JOIN med
+  SELECT i.y - med.slope * i.x AS r, i.x FROM idx i CROSS JOIN med
 ), mr AS (
   SELECT r, ROW_NUMBER() OVER (ORDER BY r, x) AS rn,
          COUNT(*) OVER () AS c
@@ -1544,26 +1508,13 @@ def ev_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Slopes are ratios of exact integers (identical doubles both
     engines); medians select by deterministic (value, pair) order and
     average at most two identical doubles. One row out."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
-    ev = events_raw(spark, sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy(ts_date().alias("date"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
     # idx (|days| rows) feeds both pair sides, the residual pass and
     # the day count; pairs feeds the median window and the pair count —
     # persist both tiny relations or the events scan re-runs per
     # consumer (r12 scan audit: 8 duplicate scans before)
     idx = bsp.persist(
-        daily.select(
-            "n",
-            (F.row_number().over(Window.orderBy("date")) - 1)
-            .cast("long")
-            .alias("x"),
+        daily_click_series(events_raw(spark, sf_dir)).select(
+            F.col("y").alias("n"), "x"
         )
     )
     a = idx.select(F.col("x").alias("xi"), F.col("n").alias("ni"))
@@ -1624,18 +1575,12 @@ ACF_MAX_LAG = 7
 
 @register(
     "ev_autocorrelation",
-    f"""WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY date) AS BIGINT) AS t
-  FROM daily
-), s AS (
+    f"""WITH {_DAILY_CTES}, s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS sy
   FROM idx
 ), dev AS (
   -- n·y_t − S: integer deviations scaled by n (exact, no rational mean)
-  SELECT t, i.y * s.n - s.sy AS d, s.n FROM idx i CROSS JOIN s
+  SELECT i.x + 1 AS t, i.y * s.n - s.sy AS d, s.n FROM idx i CROSS JOIN s
 ), denom AS (
   SELECT CAST(SUM(d * d) AS BIGINT) AS den FROM dev
 ), lags AS (
@@ -1663,22 +1608,12 @@ def ev_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     double op on identical operands. The lag join runs over the
     pre-aggregated daily relation (|days| rows) against a 7-row lag
     spine — bounded like every series op here."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
-    ev = events_raw(spark, sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy(ts_date().alias("date"))
-        .agg(F.count("*").cast("long").alias("y"))
-    )
     # idx feeds the totals and the deviation pass; dev feeds the
     # denominator and both lag-join sides — persist both tiny series
     # relations (r12 scan audit: 6 duplicate scans before)
     idx = bsp.persist(
-        daily.select(
-            "y", F.row_number().over(Window.orderBy("date")).cast("long").alias("t")
+        daily_click_series(events_raw(spark, sf_dir)).select(
+            "y", (F.col("x") + 1).alias("t")
         )
     )
     s = idx.agg(
@@ -1717,44 +1652,15 @@ def ev_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: t < W; for t >= W the dropped tail carries (1-a)^W ~ 0.68% of the
 #: weight -- BOTH engines compute this identical definition, which is
 #: also the fixed-lookback recompute a streaming EWMA deployment
-#: uses). Weights are pinned literal doubles injected into BOTH
-#: plans -- no pow() in either engine, so no libm variance.
+#: uses). The weights are computed once here as ``a*(1-a)**j`` and
+#: ``(1-a)**j`` (a running product differs in the last ulp) and injected
+#: into BOTH plans as literal doubles -- no pow() in either engine, so
+#: no libm variance.
 EWMA_ALPHA = 0.3
 EWMA_W = 14
 
-_EWMA_A = [
-    0.3,
-    0.21,
-    0.14699999999999996,
-    0.10289999999999998,
-    0.07202999999999998,
-    0.05042099999999998,
-    0.035294699999999984,
-    0.02470628999999999,
-    0.01729440299999999,
-    0.012106082099999993,
-    0.008474257469999994,
-    0.005931980228999996,
-    0.0041523861602999965,
-    0.0029066703122099975
-]
-_EWMA_H = [
-    1.0,
-    0.7,
-    0.48999999999999994,
-    0.3429999999999999,
-    0.24009999999999995,
-    0.16806999999999994,
-    0.11764899999999996,
-    0.08235429999999996,
-    0.05764800999999997,
-    0.04035360699999998,
-    0.028247524899999984,
-    0.019773267429999988,
-    0.01384128720099999,
-    0.009688901040699992
-]
-
+_EWMA_A = [EWMA_ALPHA * (1 - EWMA_ALPHA) ** j for j in range(EWMA_W)]
+_EWMA_H = [(1 - EWMA_ALPHA) ** j for j in range(EWMA_W)]
 
 
 def _ewma_smoothed(spark: SparkSession, idx: DataFrame) -> DataFrame:
@@ -1803,29 +1709,31 @@ def _ewma_smoothed(spark: SparkSession, idx: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "ev_ewma_forecast",
-    """WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
-  FROM daily
-), coef(j, c) AS (VALUES (0, 0.3), (1, 0.21), (2, 0.14699999999999996), (3, 0.10289999999999998), (4, 0.07202999999999998), (5, 0.05042099999999998), (6, 0.035294699999999984), (7, 0.02470628999999999), (8, 0.01729440299999999), (9, 0.012106082099999993), (10, 0.008474257469999994), (11, 0.005931980228999996), (12, 0.0041523861602999965), (13, 0.0029066703122099975)),
-head(t, h) AS (VALUES (0, 1.0), (1, 0.7), (2, 0.48999999999999994), (3, 0.3429999999999999), (4, 0.24009999999999995), (5, 0.16806999999999994), (6, 0.11764899999999996), (7, 0.08235429999999996), (8, 0.05764800999999997), (9, 0.04035360699999998), (10, 0.028247524899999984), (11, 0.019773267429999988), (12, 0.01384128720099999), (13, 0.009688901040699992)),
+def _ewma_values_sql() -> str:
+    """SQL twin of :func:`_ewma_smoothed` over ``idx(x, y)``: CTEs
+    ``coef``, ``head``, ``y0`` and the smoothed levels ``s(x, s)``."""
+    a_vals = ", ".join(f"({j}, {c!r})" for j, c in enumerate(_EWMA_A))
+    h_vals = ", ".join(f"({t}, {h!r})" for t, h in enumerate(_EWMA_H))
+    return f"""coef(j, c) AS (VALUES {a_vals}),
+head(t, h) AS (VALUES {h_vals}),
 y0 AS (SELECT y AS y0 FROM idx WHERE x = 0),
 s AS (
-  SELECT t.x, t.y,
+  SELECT t.x,
          CASE WHEN t.x = 0 THEN CAST(t.y AS DOUBLE)
               ELSE SUM(c.c * k.y) + COALESCE(MAX(hd.h * y0.y0), 0.0)
          END AS s
   FROM idx t
   CROSS JOIN y0
-  LEFT JOIN idx k ON k.x >= GREATEST(1, t.x - 13) AND k.x <= t.x
+  LEFT JOIN idx k ON k.x >= GREATEST(1, t.x - {EWMA_W - 1}) AND k.x <= t.x
   LEFT JOIN coef c ON c.j = t.x - k.x
-  LEFT JOIN head hd ON hd.t = t.x AND t.x BETWEEN 1 AND 13
+  LEFT JOIN head hd ON hd.t = t.x AND t.x BETWEEN 1 AND {EWMA_W - 1}
   GROUP BY t.x, t.y
-),
+)"""
+
+
+@register(
+    "ev_ewma_forecast",
+    f"""WITH {_DAILY_CTES}, {_ewma_values_sql()},
 last AS (SELECT s FROM s ORDER BY x DESC LIMIT 1),
 mae AS (
   SELECT AVG(ABS(i.y - sp.s)) AS m
@@ -1849,27 +1757,10 @@ def ev_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded self-join is |days| x W rows (a year -> ~5k), the same
     aggregate-first discipline as Theil-Sen/autocorrelation. At
     100 TB only the daily count aggregate touches data."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
-    ev = events_raw(spark, sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy(ts_date().alias("date"))
-        .agg(F.count("*").cast("long").alias("y"))
-    )
     # idx feeds the smoother and the day count; the smoothed series
     # feeds the last value, the shifted copy and the MAE join — persist
     # both tiny series relations (r12 scan audit: 10 duplicate scans)
-    idx = bsp.persist(
-        daily.select(
-            "y",
-            (F.row_number().over(Window.orderBy("date")) - 1)
-            .cast("long")
-            .alias("x"),
-        )
-    )
+    idx = bsp.persist(daily_click_series(events_raw(spark, sf_dir)).select("y", "x"))
     s = bsp.persist(_ewma_smoothed(spark, idx))
     last = (
         s.orderBy(F.col("tx").desc())
@@ -1900,10 +1791,7 @@ def ev_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ev_seasonal_decomposition",
-    """WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), tr AS (
+    f"""WITH {_DAILY_CTES}, tr AS (
   SELECT date, y, isodow(date) AS dow,
          AVG(y) OVER (ORDER BY date
                       ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS ma,
@@ -1943,16 +1831,7 @@ def ev_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|days|) series — one global 7-row sliding window over days, one
     7-group aggregate, 1-row variance broadcast. Only the daily count
     aggregate is data-sized, identical to every op in this family."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
-    ev = events_raw(spark, sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy(ts_date().alias("date"))
-        .agg(F.count("*").cast("long").alias("y"))
-    )
+    daily = daily_click_series(events_raw(spark, sf_dir)).select("date", "y")
     wma = Window.orderBy("date").rowsBetween(-3, 3)
     tr = daily.select(
         (F.weekday("date") + 1).cast("int").alias("dow"),
@@ -2031,8 +1910,6 @@ def ev_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user_id hash aggregate, one distinct-value grid, one
     ordered prefix-sum window over the bounded money grid — the exact
     shape the r3 verdict prescribed for rank statistics."""
-    from pyspark.sql import Window
-
     ev = events_raw(spark, sf_dir)
     per_user = (
         ev.filter(F.col("event_type") == "purchase")
@@ -2088,35 +1965,8 @@ def ev_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ forecast backtest
 
-def _ewma_values_sql() -> tuple[str, str]:
-    a_vals = ", ".join(f"({j}, {c!r})" for j, c in enumerate(_EWMA_A))
-    h_vals = ", ".join(f"({t}, {h!r})" for t, h in enumerate(_EWMA_H))
-    return a_vals, h_vals
-
-
 def _backtest_oracle() -> str:
-    a_vals, h_vals = _ewma_values_sql()
-    return f"""WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
-  FROM daily
-), coef(j, c) AS (VALUES {a_vals}),
-head(t, h) AS (VALUES {h_vals}),
-y0 AS (SELECT y AS y0 FROM idx WHERE x = 0),
-s AS (
-  SELECT t.x,
-         CASE WHEN t.x = 0 THEN CAST(t.y AS DOUBLE)
-              ELSE SUM(c.c * k.y) + COALESCE(MAX(hd.h * y0.y0), 0.0)
-         END AS s
-  FROM idx t
-  CROSS JOIN y0
-  LEFT JOIN idx k ON k.x >= GREATEST(1, t.x - {EWMA_W - 1}) AND k.x <= t.x
-  LEFT JOIN coef c ON c.j = t.x - k.x
-  LEFT JOIN head hd ON hd.t = t.x AND t.x BETWEEN 1 AND {EWMA_W - 1}
-  GROUP BY t.x, t.y
-), lagged AS (
+    return f"""WITH {_DAILY_CTES}, {_ewma_values_sql()}, lagged AS (
   SELECT i.x, i.y,
          LAG(i.y, 1) OVER (ORDER BY i.x) AS f_naive,
          LAG(i.y, 7) OVER (ORDER BY i.x) AS f_seasonal,
@@ -2158,22 +2008,7 @@ def ev_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the EWMA levels reuse the shared |days|×W banded kernel
     (``_ewma_smoothed``); the naive/seasonal forecasts are two lag
     windows over the O(|days|) series; one aggregate row out."""
-    from pyspark.sql import Window
-
-    from ..sources.tables import ts_date
-
-    ev = events_raw(spark, sf_dir)
-    daily = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy(ts_date().alias("date"))
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    idx = daily.select(
-        "y",
-        (F.row_number().over(Window.orderBy("date")) - 1)
-        .cast("long")
-        .alias("x"),
-    )
+    idx = daily_click_series(events_raw(spark, sf_dir)).select("y", "x")
     s = _ewma_smoothed(spark, idx).select(
         F.col("tx").alias("px"), F.col("s").alias("f_ewma")
     )
@@ -2244,8 +2079,6 @@ def ev_pivot_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts: map-side combinable, output rows = |event_type|. DOW uses
     the portable (epoch_days + 4) % 7, not either engine's dayofweek
     convention."""
-    from pyspark.sql import functions as F
-
     ev = events_raw(spark, sf_dir).select(
         "event_type",
         ((F.expr("(ts DIV 1000) DIV 86400000000") + 4) % 7).alias("dow"),
@@ -2313,13 +2146,8 @@ def _harmonic_oracle() -> str:
         f"SUM(f{i} * f{j}) AS m{i}{j}" for i in range(4) for j in range(i, 4)
     )
     bs = ", ".join(f"SUM(f{i} * y) AS b{i}" for i in range(4))
-    return f"""WITH daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS DOUBLE) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), idx AS (
-  SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY date) - 1 AS BIGINT) AS x
-  FROM daily
-), f AS (SELECT y, {feats} FROM idx),
+    return f"""WITH {_DAILY_CTES},
+f AS (SELECT CAST(y AS DOUBLE) AS y, {feats} FROM idx),
 mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days, {moms}, {bs},
                SUM(y) AS sy, SUM(y * y) AS syy FROM f),
 beta AS (
@@ -2357,20 +2185,10 @@ def ev_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment aggregate is map-side combinable and everything after it is
     O(1); no driver-side solve, no collect — the whole fit is a
     DataFrame expression."""
-    from pyspark.sql import Window as W
-
-    daily = (
-        events_raw(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .groupBy(F.expr("(ts DIV 1000) DIV 86400000000").alias("epoch_day"))
-        .agg(F.count("*").cast("double").alias("y"))
-    )
-    idx = daily.withColumn(
-        "x", (F.row_number().over(W.orderBy("epoch_day")) - 1).cast("long")
-    )
+    idx = daily_click_series(events_raw(spark, sf_dir))
     tau = 2 * 3.141592653589793 / _HARM_PERIOD
     f = idx.select(
-        "y",
+        F.col("y").cast("double").alias("y"),
         F.lit(1.0).alias("f0"),
         F.col("x").cast("double").alias("f1"),
         F.sin(F.lit(tau) * F.col("x")).alias("f2"),
@@ -2594,28 +2412,22 @@ def _holt_idiv(a: int, b: int) -> int:
 
 
 def _holt_oracle() -> str:
-    return f"""WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS date, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events WHERE event_type = 'click' GROUP BY 1
-),
-idx AS (
-  SELECT date, y, CAST(ROW_NUMBER() OVER (ORDER BY date) AS BIGINT) AS x
-  FROM daily
-),
+    return f"""WITH RECURSIVE {_DAILY_CTES},
+days AS (SELECT date, y, x + 1 AS x FROM idx),
 hw AS (
   SELECT x, date, y,
          y * {_HOLT_PPM} AS lev,
-         CAST(COALESCE((SELECT y FROM idx WHERE x = 2) - y, 0)
+         CAST(COALESCE((SELECT y FROM days WHERE x = 2) - y, 0)
               * {_HOLT_PPM} AS BIGINT) AS tr,
          CAST(NULL AS BIGINT) AS fitted
-  FROM idx WHERE x = 1
+  FROM days WHERE x = 1
   UNION ALL
   SELECT i.x, i.date, i.y,
          (i.y * {_HOLT_PPM} + (hw.lev + hw.tr)) // 2 AS lev,
          ((((i.y * {_HOLT_PPM} + (hw.lev + hw.tr)) // 2) - hw.lev) + hw.tr)
            // 2 AS tr,
          hw.lev + hw.tr AS fitted
-  FROM idx i JOIN hw ON i.x = hw.x + 1
+  FROM days i JOIN hw ON i.x = hw.x + 1
 )
 SELECT date, y, lev AS level_ppm, tr AS trend_ppm, fitted AS fitted_ppm,
        CASE WHEN fitted IS NULL THEN NULL
@@ -2650,15 +2462,7 @@ def ev_holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the collected series and the result re-enters as a bounded
     relation. A century of days is 36 k rows; the click log is the
     100 TB, the series never is."""
-    from ..sources import clicks
-
-    daily = (
-        clicks(spark, sf_dir)
-        .groupBy("date")
-        .agg(F.count("*").cast("long").alias("y"))
-        .orderBy("date")
-        .collect()
-    )
+    daily = daily_click_series(events_raw(spark, sf_dir)).orderBy("x").collect()
     schema = (
         "date date, y long, level_ppm long, trend_ppm long,"
         " fitted_ppm long, resid_ppm long"

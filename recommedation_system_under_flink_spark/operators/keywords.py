@@ -52,7 +52,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_SCENE, TODAY
-from ..functions.text import extract_keywords_clique, extract_keywords_windowed
+from ..functions.text import (
+    content_tokens,
+    content_tokens_sql,
+    extract_keywords_clique,
+    extract_keywords_windowed,
+)
 from . import bsp
 from ..registry import register
 from ..sources import news, tweets
@@ -176,24 +181,11 @@ def _served_tweets(tw: DataFrame) -> DataFrame:
 TEXTRANK_SQL_ITERS = 5
 
 
-def _content_tokens():
-    """Lower-cased ``content`` split on the shared token regex, empty
-    strings and stopwords dropped — functions.text.tokenize as a
-    Catalyst expression."""
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
-
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.filter(
-        F.split(F.lower(F.col("content")), TOKEN_SPLIT_REGEX),
-        lambda t: (t != "") & ~F.array_contains(stop, t),
-    )
-
-
 def tr_positions_from(docs: DataFrame) -> DataFrame:
     """(news_id, i, term) from any (news_id, content) frame:
     position-indexed tokens, positions taken in the stopword-FILTERED
     list exactly as functions.text.tokenize returns it."""
-    return docs.select("news_id", _content_tokens().alias("ts")).select(
+    return docs.select("news_id", content_tokens(F.col("content")).alias("ts")).select(
         "news_id", F.posexplode("ts").alias("i", "term")
     )
 
@@ -203,18 +195,13 @@ def _p1_kw_ctes(prefix: str = "") -> list[str]:
     ``{prefix}kw(news_id, term, score)``); assumes ``news`` is in
     scope. ``prefix`` namespaces every CTE so two keyword chains can
     share one WITH clause (the pipeline oracle)."""
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
-
-    stop_sql = ", ".join(f"'{w}'" for w in STOPWORDS)
     w = DEFAULT_SCENE.window_size
     p = prefix
     ctes = [
         f"""{p}pos AS (
   SELECT news_id, i, ts[i] AS term FROM (
     SELECT news_id, ts, generate_subscripts(ts, 1) AS i FROM (
-      SELECT news_id, list_filter(
-        string_split_regex(lower(content), '{TOKEN_SPLIT_REGEX}'),
-        t -> t <> '' AND t NOT IN ({stop_sql})) AS ts
+      SELECT news_id, {content_tokens_sql("content")} AS ts
       FROM news
     )
   )
@@ -538,17 +525,11 @@ def _a3_kw_ctes(prefix: str = "") -> list[str]:
     """CTEs computing the distributed A3 keywords (final CTE
     ``{prefix}kw(user_id, term, score)``); assumes ``tweets`` is in
     scope."""
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
-
-    stop_sql = ", ".join(f"'{w}'" for w in STOPWORDS)
     p = prefix
     ctes = [
         f"""{p}ut AS (
   SELECT DISTINCT user_id, tweet_id, term FROM (
-    SELECT user_id, tweet_id,
-           unnest(list_filter(
-             string_split_regex(lower(content), '{TOKEN_SPLIT_REGEX}'),
-             t -> t <> '' AND t NOT IN ({stop_sql}))) AS term
+    SELECT user_id, tweet_id, unnest({content_tokens_sql("content")}) AS term
     FROM tweets
   )
 )""",
@@ -595,7 +576,7 @@ def a3_keywords_from(rows: DataFrame, key: str = "user_id") -> DataFrame:
     so filtering ``rows`` yields exactly the kept keys' rows of the
     unfiltered result."""
     ut = rows.select(
-        key, "tweet_id", F.explode(_content_tokens()).alias("term")
+        key, "tweet_id", F.explode(content_tokens(F.col("content"))).alias("term")
     ).distinct()
     a = ut.alias("a")
     b = ut.alias("b")
@@ -639,10 +620,8 @@ def _a3_windowed_sql_oracle() -> str:
     keyed on a synthesized ``(day, user)`` long (``epoch_day·10⁶ +
     user_id`` — the shared vote CTEs take one key column), decomposed
     back at the end."""
-    from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
     from ..sources import TWEETS_CTE, with_ctes
 
-    stop_sql = ", ".join(f"'{w}'" for w in STOPWORDS)
     nd = DEFAULT_SCENE.num_days
     lo = DEFAULT_SCENE.from_date.isoformat()
     hi = TODAY.isoformat()
@@ -660,10 +639,7 @@ def _a3_windowed_sql_oracle() -> str:
 )""",
         f"""ut AS (
   SELECT DISTINCT duk, tweet_id, term FROM (
-    SELECT duk, tweet_id,
-           unnest(list_filter(
-             string_split_regex(lower(content), '{TOKEN_SPLIT_REGEX}'),
-             t -> t <> '' AND t NOT IN ({stop_sql}))) AS term
+    SELECT duk, tweet_id, unnest({content_tokens_sql("content")}) AS term
     FROM served
   )
 )""",

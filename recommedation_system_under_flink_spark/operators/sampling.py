@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
-from ..functions.text import DOC_TOKENS_SQL, doc_tokens
+from ..functions.text import DOC_TOKENS_SQL, STOPWORDS_SQL, doc_tokens
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -776,8 +776,6 @@ CURRICULUM_BUCKETS = 10
 
 
 def _curriculum_oracle() -> str:
-    from .textstats import _STOP_SQL
-
     n_cuts = CURRICULUM_BUCKETS - 1
     cut_cols = ", ".join(
         f"MIN(CASE WHEN h.cum >= t.t{k} THEN h.v END) AS c{k}"
@@ -794,7 +792,7 @@ def _curriculum_oracle() -> str:
   SELECT doc_id,
          CAST(CAST(FLOOR((CAST(0.4 * LEAST(CAST(len(ts) AS DOUBLE) / 100.0, 1.0)
               + 0.3 * LEAST(CASE WHEN len(ts) > 0 THEN
-                    CAST(len(list_filter(ts, t -> t IN ({_STOP_SQL}))) AS DOUBLE) / len(ts)
+                    CAST(len(list_filter(ts, t -> t IN ({STOPWORDS_SQL}))) AS DOUBLE) / len(ts)
                   ELSE 0.0 END * 4, 1.0)
               + 0.3 * (CASE WHEN len(ts) > 0 THEN
                     CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts)

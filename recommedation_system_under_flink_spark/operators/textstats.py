@@ -22,13 +22,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import DOC_TOKENS_SQL, STOPWORDS, doc_tokens
+from ..functions.text import (
+    CHUNK_SIZE,
+    CHUNK_STRIDE,
+    DOC_TOKENS_SQL,
+    STOPWORDS,
+    STOPWORDS_SQL,
+    doc_tokens,
+)
 from . import bsp
 from ..registry import register
 from ..sources import load_raw
 from .quantize import ppm_value
-
-_STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 #: Marker tokens per language for the lang-ID heuristic. English reuses
 #: the pinned engine stop list; the others are the everyday closed-class
@@ -120,7 +125,7 @@ def ts_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM (
   SELECT doc_id,
          CASE WHEN len(ts) > 0 THEN
-           CAST(len(list_filter(ts, t -> t IN ({_STOP_SQL}))) AS DOUBLE) / len(ts)
+           CAST(len(list_filter(ts, t -> t IN ({STOPWORDS_SQL}))) AS DOUBLE) / len(ts)
          ELSE 0.0 END AS stop_ratio,
          CASE WHEN len(ts) > 0 THEN
            1.0 - CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts)
@@ -323,7 +328,7 @@ TOP_TERMS_N = 10
   FROM (
     SELECT lang, t AS term, CAST(COUNT(*) AS BIGINT) AS n
     FROM (SELECT lang, unnest({DOC_TOKENS_SQL}) AS t FROM documents)
-    WHERE t NOT IN ({_STOP_SQL})
+    WHERE t NOT IN ({STOPWORDS_SQL})
     GROUP BY lang, t
   )
 ) WHERE pos <= {TOP_TERMS_N}""",
@@ -389,12 +394,6 @@ def ts_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- chunking
-
-#: Chunk geometry: CHUNK_SIZE-token windows every CHUNK_STRIDE tokens
-#: (CHUNK_SIZE - CHUNK_STRIDE tokens of overlap between neighbors).
-CHUNK_SIZE = 64
-CHUNK_STRIDE = 48
-
 
 #: DuckDB twin of the chunk geometry — shared by the Catalyst chunker
 #: and its UDTF twin (same output contract, two execution surfaces).
@@ -2141,7 +2140,7 @@ _RAKE_ORACLE = f"""WITH toks AS (
   FROM (SELECT doc_id, {DOC_TOKENS_SQL} AS ts FROM documents)
 ), flagged AS (
   SELECT doc_id, pos, tok,
-         CASE WHEN tok IN ({_STOP_SQL}) THEN 1 ELSE 0 END AS is_stop
+         CASE WHEN tok IN ({STOPWORDS_SQL}) THEN 1 ELSE 0 END AS is_stop
   FROM toks
 ), grouped AS (
   SELECT doc_id, pos, tok, is_stop,
@@ -3145,8 +3144,7 @@ FROM (
 
 
 def _gopher_oracle() -> str:
-    stops = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return _GOPHER_ORACLE.replace("{stops}", stops)
+    return _GOPHER_ORACLE.replace("{stops}", STOPWORDS_SQL)
 
 
 @register("ts_gopher_rules", _gopher_oracle())

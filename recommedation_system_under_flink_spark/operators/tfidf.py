@@ -35,14 +35,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SCENE
-from ..functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
+from ..functions.text import content_tokens_sql, is_content_token, split_tokens
 from ..registry import register
 from ..sources import NEWS_CTE, TWEETS_CTE, news, tweets, with_ctes
 
 K_NEWS = DEFAULT_SCENE.num_news_keywords
 K_USER = DEFAULT_SCENE.num_user_keywords
-
-_STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
 # ----------------------------------------------------------- tokenizer (SQL)
@@ -56,9 +54,9 @@ def sql_tokens(df: DataFrame, id_col: str, text_col: str | Column, weight: float
     return (
         df.select(
             F.col(id_col),
-            F.explode(F.split(F.lower(c), TOKEN_SPLIT_REGEX)).alias("term"),
+            F.explode(split_tokens(c)).alias("term"),
         )
-        .filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
+        .filter(is_content_token(F.col("term")))
         .withColumn("w", F.lit(weight))
     )
 
@@ -66,11 +64,8 @@ def sql_tokens(df: DataFrame, id_col: str, text_col: str | Column, weight: float
 def _tokens_cte(table: str, id_col: str, text_col: str, weight: float) -> str:
     """DuckDB twin of :func:`sql_tokens` (one field)."""
     return f"""(
-    SELECT {id_col}, term, {weight} AS w FROM (
-      SELECT {id_col},
-             unnest(string_split_regex(lower({text_col}), '{TOKEN_SPLIT_REGEX}')) AS term
-      FROM {table}
-    ) WHERE term <> '' AND term NOT IN ({_STOP_SQL})
+    SELECT {id_col}, unnest({content_tokens_sql(text_col)}) AS term, {weight} AS w
+    FROM {table}
   )"""
 
 
@@ -116,11 +111,9 @@ def news_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "news_id",
             F.col("fld.w").alias("w"),
-            F.explode(F.split(F.lower(F.col("fld.txt")), TOKEN_SPLIT_REGEX)).alias(
-                "term"
-            ),
+            F.explode(split_tokens(F.col("fld.txt"))).alias("term"),
         )
-        .filter((F.col("term") != "") & ~F.col("term").isin(*STOPWORDS))
+        .filter(is_content_token(F.col("term")))
     )
     return stacked.groupBy("news_id", "term").agg(F.sum("w").alias("tf"))
 

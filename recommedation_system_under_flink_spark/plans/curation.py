@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import DOC_TOKENS_SQL, doc_tokens
+from ..functions.text import CHUNK_SIZE, CHUNK_STRIDE, DOC_TOKENS_SQL, doc_tokens
 from ..operators.sampling import samp_split_assign
 from ..operators.textstats import quality_parts, ts_lang_id, ts_quality_score
 from ..operators.quantize import ppm_value
@@ -368,11 +368,7 @@ def llm_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prep_oracle() -> str:
-    from ..operators.textstats import (
-        CHUNK_SIZE,
-        CHUNK_STRIDE,
-        PACK_BUDGET,
-    )
+    from ..operators.textstats import PACK_BUDGET
 
     return f"""WITH curated AS (
 {_CURATION_ORACLE}
@@ -425,11 +421,7 @@ def llm_pretrain_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the components run individually."""
     from pyspark.sql import Window
 
-    from ..operators.textstats import (
-        CHUNK_SIZE,
-        CHUNK_STRIDE,
-        PACK_BUDGET,
-    )
+    from ..operators.textstats import PACK_BUDGET
 
     curated = llm_curation_pipeline(spark, sf_dir).select("doc_id", "split")
     docs = load_raw(spark, sf_dir, "documents").select(

@@ -48,6 +48,16 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 CODEGEN_CACHE_ENTRIES = 8192
 
 
+def default_driver_mem() -> str:
+    """Driver heap unless ``SPARK_GRAFT_DRIVER_MEM`` is set: 3/8 of
+    physical RAM, capped at 24 GB. A heap near the host's RAM lets G1
+    grow past it before collecting, and the JVM is OOM-killed; on a
+    16 GB host this gives 6 GB, where the test suite and a full
+    ``scripts/check.py`` run complete."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, ram * 3 // 8 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "recommedation_system_under_flink_spark",
     master: str | None = None,
@@ -82,7 +92,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -62,9 +62,9 @@ def _canon_ts(ev: DataFrame) -> DataFrame:
     return ev
 
 
-def stream_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of sources.tables.clicks: file-source readStream →
-    click filter → event-time column from the nanos long."""
+def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Raw event stream (file-source readStream) with ``ts`` as a nanos
+    long — the streaming twin of ``sources.tables.events_raw``."""
     # The file source wants a directory to monitor; the fixture is one
     # file among unrelated tables, so expose it via a symlink dir (in
     # production this is the landing directory / Kafka topic).
@@ -75,11 +75,17 @@ def stream_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
         os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    ev = _canon_ts(
+    return _canon_ts(
         spark.readStream.schema(_events_stream_schema(spark, sf_dir)).parquet(
             stream_dir
         )
     )
+
+
+def stream_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming twin of sources.tables.clicks: file-source readStream →
+    click filter → event-time column from the nanos long."""
+    ev = _stream_events(spark, sf_dir)
     return ev.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         (F.col("event_id") % NEWS_MOD).alias("news_id"),
@@ -245,23 +251,6 @@ def stream_hot_topics_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _run_to_memory(agg, "complete")
-
-
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw event stream over the symlink landing dir (see
-    stream_clicks), event-time derived from the nanos long."""
-    stream_dir = os.path.join(
-        "/tmp", "spark_stream_src", sf_dir.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    return _canon_ts(
-        spark.readStream.schema(_events_stream_schema(spark, sf_dir)).parquet(
-            stream_dir
-        )
-    )
 
 
 @register(
@@ -445,11 +434,11 @@ def _sessions_stream_oracle() -> str:
 @register("stream_sessionize", _sessions_stream_oracle())
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming **session windows**: the batch gap-sessionization
-    (``ef_sessionize_native``) run as a continuous query —
-    ``session_window`` over event-time, grouped per user, with the
-    same GAP+1µs boundary pinning. The bounded availableNow replay in
-    complete mode settles to exactly the batch session set, so the
-    full batch oracle applies.
+    (``ef_sessionize_native``) run as a continuous query — the same
+    ``events_flow.native_sessions`` query (``session_window`` over
+    event-time, GAP+1µs boundary pinning) over the stream source. The
+    bounded availableNow replay in complete mode settles to exactly the
+    batch session set, so the full batch oracle applies.
 
     This is THE stateful-streaming session shape: window state merges
     adjacent sessions as events arrive (out-of-order events within the
@@ -457,38 +446,9 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session emits once the watermark passes its close, bounding state
     to open sessions only — the knob SCALE.md §9 documents for
     100 TB/day."""
-    from ..operators.events_flow import SESSION_GAP_US
+    from ..operators.events_flow import native_sessions
 
-    stream_dir = os.path.join(
-        "/tmp", "spark_stream_src", sf_dir.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    ev = _canon_ts(
-        spark.readStream.schema(_events_stream_schema(spark, sf_dir)).parquet(
-            stream_dir
-        )
-    )
-    sessions = (
-        ev.select(
-            "user_id",
-            F.expr("ts DIV 1000").alias("tsm"),
-            F.timestamp_micros(F.expr("ts DIV 1000")).alias("event_time"),
-        )
-        .groupBy(
-            "user_id",
-            F.session_window("event_time", f"{SESSION_GAP_US + 1} microseconds"),
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.min("tsm").alias("session_start"),
-            F.max("tsm").alias("session_end"),
-        )
-        .select("user_id", "n_events", "session_start", "session_end")
-    )
-    return _run_to_memory(sessions, "complete")
+    return _run_to_memory(native_sessions(_stream_events(spark, sf_dir)), "complete")
 
 
 # ------------------------------------------- streaming decayed popularity

@@ -1,10 +1,15 @@
-"""Semantic invariants for the event-flow, components, and sampling
+"""Semantic invariants for the event-flow (sessions, as-of joins,
+experiment statistics, attribution), components, and sampling
 operators — properties the DuckDB oracle parity can't express (the
 oracle proves engine agreement; these prove the *semantics* are the
 advertised ones), on the sf0.001 fixtures."""
 
 from __future__ import annotations
 
+import datetime as dt
+
+import duckdb
+import numpy as np
 import pytest
 
 from conftest import SF_DIR
@@ -501,3 +506,412 @@ def test_kaplan_meier_curve_properties(spark):
     assert abs(
         first["survival"] - (1 - first["d_events"] / first["n_risk"])
     ) <= 1e-6
+
+
+def _subjects(sf_dir: str = SF_DIR):
+    """Per-user purchase totals + parity cohort, straight from parquet."""
+    return duckdb.sql(
+        f"""SELECT user_id,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS x,
+                   user_id % 2 AS cohort
+            FROM '{sf_dir}/events.parquet'
+            WHERE event_type = 'purchase' GROUP BY user_id"""
+    ).df()
+
+
+def test_welch_ttest_matches_numpy(queries, spark):
+    row = queries["ef_welch_ttest"](spark, SF_DIR).collect()[0]
+    df = _subjects()
+    a = df[df.cohort == 0].x.to_numpy()
+    b = df[df.cohort == 1].x.to_numpy()
+    se2a = a.var(ddof=1) / len(a)
+    se2b = b.var(ddof=1) / len(b)
+    t = (a.mean() - b.mean()) / np.sqrt(se2a + se2b)
+    dof = (se2a + se2b) ** 2 / (
+        se2a**2 / (len(a) - 1) + se2b**2 / (len(b) - 1)
+    )
+    assert row["n_a"] == len(a) and row["n_b"] == len(b)
+    assert row["mean_a"] == pytest.approx(a.mean(), abs=2e-6)
+    assert row["t_stat"] == pytest.approx(t, abs=1e-4)
+    assert row["welch_df"] == pytest.approx(dof, abs=0.01)
+
+
+def test_mannwhitney_matches_rank_definition(queries, spark):
+    row = queries["ef_mannwhitney_u"](spark, SF_DIR).collect()[0]
+    df = _subjects()
+    df["xc"] = df.x.round(2)  # the operator's cent quantization
+    df["r"] = df.xc.rank(method="average")  # average ranks, ties shared
+    a = df[df.cohort == 0]
+    n_a, n_b = len(a), len(df) - len(a)
+    u_a = a.r.sum() - n_a * (n_a + 1) / 2
+    z = (u_a - n_a * n_b / 2) / np.sqrt(n_a * n_b * (n_a + n_b + 1) / 12)
+    assert row["n_a"] == n_a and row["n_b"] == n_b
+    assert row["u_a"] == pytest.approx(u_a, abs=1e-6)
+    assert row["z_stat"] == pytest.approx(z, abs=1e-4)
+
+
+def test_cuped_matches_numpy_and_reduces_variance(queries, spark):
+    row = queries["ef_cuped_adjustment"](spark, SF_DIR).collect()[0]
+    subj = duckdb.sql(
+        f"""WITH mid AS (SELECT (MIN(epoch_us(ts)) + MAX(epoch_us(ts))) // 2
+                           AS t_mid FROM '{SF_DIR}/events.parquet')
+        SELECT e.user_id,
+               CAST(COALESCE(SUM(CASE WHEN e.event_type = 'purchase'
+                                       AND epoch_us(e.ts) < mid.t_mid
+                                  THEN CAST(e.value AS DECIMAL(18,6)) END),
+                             0) AS DOUBLE) AS x,
+               CAST(COALESCE(SUM(CASE WHEN e.event_type = 'purchase'
+                                       AND epoch_us(e.ts) >= mid.t_mid
+                                  THEN CAST(e.value AS DECIMAL(18,6)) END),
+                             0) AS DOUBLE) AS y,
+               e.user_id % 2 AS cohort
+        FROM '{SF_DIR}/events.parquet' e CROSS JOIN mid
+        GROUP BY e.user_id"""
+    ).df()
+    x, y = subj.x.to_numpy(), subj.y.to_numpy()
+    theta = np.cov(x, y, bias=True)[0, 1] / x.var()
+    rho2 = np.cov(x, y, bias=True)[0, 1] ** 2 / (x.var() * y.var())
+    a, b = subj[subj.cohort == 0], subj[subj.cohort == 1]
+    adj = lambda g: g.y.mean() - theta * (g.x.mean() - x.mean())  # noqa: E731
+    assert row["n_users"] == len(subj)
+    assert row["theta"] == pytest.approx(theta, abs=1e-4)
+    assert row["var_reduction"] == pytest.approx(rho2, abs=1e-4)
+    assert row["raw_diff"] == pytest.approx(
+        a.y.mean() - b.y.mean(), abs=2e-6
+    )
+    assert row["adj_diff"] == pytest.approx(adj(a) - adj(b), abs=1e-4)
+    assert 0.0 <= row["var_reduction"] <= 1.0
+
+
+def test_asof_forward_is_earliest_following_click(queries, spark):
+    rows = queries["ef_asof_forward"](spark, SF_DIR).collect()
+    clicks = duckdb.sql(
+        f"""SELECT user_id, event_id, epoch_us(ts) FROM
+            '{SF_DIR}/events.parquet' WHERE event_type = 'click'"""
+    ).fetchall()
+    by_user: dict[int, list] = {}
+    for u, e, t in clicks:
+        by_user.setdefault(u, []).append((t, e))
+    assert rows
+    n_matched = 0
+    for r in rows:
+        cand = [
+            (t, e)
+            for t, e in by_user.get(r["user_id"], [])
+            if t >= r["purchase_tsm"]
+        ]
+        if r["click_id"] is None:
+            assert not cand
+        else:
+            n_matched += 1
+            assert r["click_tsm"] == min(cand)[0]
+            assert r["gap_us"] == r["click_tsm"] - r["purchase_tsm"] >= 0
+    assert n_matched > 0
+
+
+def test_markov_attribution_matches_numpy_linear_solve(queries, spark):
+    """The 128-step matrix-power absorption must agree with the EXACT
+    absorbing-chain solve (I-Q)^-1 R (geometric convergence makes the
+    horizon truncation ~<1e-6 here) and with a numpy P^128 replay."""
+    rows = {
+        r["channel"]: r
+        for r in queries["ef_markov_attribution"](spark, SF_DIR).collect()
+    }
+    assert set(rows) == {0, 1, 2, 3}
+    ev = duckdb.sql(
+        f"""SELECT user_id, epoch_us(ts) AS t, event_id,
+                   (event_id % 500) % 4 AS ch, event_type
+            FROM '{SF_DIR}/events.parquet'
+            WHERE event_type IN ('click', 'purchase')
+            ORDER BY user_id, t, event_id"""
+    ).fetchall()
+    from collections import defaultdict
+
+    journeys = defaultdict(list)
+    last_purchase = {}
+    for u, t, e, ch, typ in ev:
+        if typ == "click":
+            journeys[u].append((t, e, ch))
+        else:
+            last_purchase[u] = max(last_purchase.get(u, 0), t)
+    START, CONV, NULL = 100, 101, 102
+    counts = defaultdict(int)
+    for u, cl in journeys.items():
+        cl.sort()
+        counts[(START, cl[0][2])] += 1
+        for (_, _, a), (_, _, b) in zip(cl, cl[1:]):
+            counts[(a, b)] += 1
+        term = CONV if last_purchase.get(u, 0) > cl[-1][0] else NULL
+        counts[(cl[-1][2], term)] += 1
+    states = [0, 1, 2, 3, START, CONV, NULL]
+    idx = {s: k for k, s in enumerate(states)}
+
+    def build(removed=None):
+        P = np.zeros((7, 7))
+        tot = defaultdict(int)
+        c2 = {}
+        for (a, b), n in counts.items():
+            if removed is not None and a == removed:
+                continue
+            b2 = NULL if b == removed else b
+            c2[(a, b2)] = c2.get((a, b2), 0) + n
+            tot[a] += n
+        for (a, b), n in c2.items():
+            P[idx[a], idx[b]] = n / tot[a]
+        P[idx[CONV], idx[CONV]] = 1.0
+        P[idx[NULL], idx[NULL]] = 1.0
+        return P
+
+    for c in [None, 0, 1, 2, 3]:
+        P = build(c)
+        p16 = np.linalg.matrix_power(P, 128)[idx[START], idx[CONV]]
+        # exact absorption via fundamental matrix
+        trans = [idx[s] for s in [0, 1, 2, 3, START] if s != c]
+        Q = P[np.ix_(trans, trans)]
+        R = P[np.ix_(trans, [idx[CONV]])]
+        exact = (np.linalg.solve(np.eye(len(Q)) - Q, R))[
+            trans.index(idx[START]), 0
+        ]
+        for ch, r in rows.items():
+            got = r["base_conv_prob"] if c is None else None
+            if c == ch:
+                got = r["rm_conv_prob"]
+            if got is not None:
+                assert got == pytest.approx(p16, abs=1e-5)
+                assert got == pytest.approx(exact, abs=1e-4)
+    for r in rows.values():
+        assert 0 <= r["rm_conv_prob"] <= r["base_conv_prob"] + 1e-9
+        assert r["removal_effect"] == pytest.approx(
+            1 - r["rm_conv_prob"] / r["base_conv_prob"], abs=1e-5
+        )
+
+
+def test_conversion_lag_percentiles_nearest_rank(queries, spark):
+    row = queries["ef_conversion_lag_percentiles"](spark, SF_DIR).collect()[0]
+    gaps = duckdb.sql(
+        f"""SELECT (epoch_us(p.ts) - epoch_us(c.ts)) // 1000000
+            FROM (SELECT * FROM '{SF_DIR}/events.parquet'
+                  WHERE event_type = 'purchase') p
+            ASOF JOIN (SELECT * FROM '{SF_DIR}/events.parquet'
+                       WHERE event_type = 'click') c
+              ON p.user_id = c.user_id AND p.ts >= c.ts"""
+    ).fetchall()
+    vals = sorted(g for (g,) in gaps)
+    n = len(vals)
+    assert row["n_matched"] == n
+
+    def nearest_rank(p):
+        import math as _m
+
+        return vals[_m.ceil(p * n / 100) - 1]
+
+    assert row["p50_s"] == nearest_rank(50)
+    assert row["p90_s"] == nearest_rank(90)
+    assert row["p99_s"] == nearest_rank(99)
+    assert row["max_s"] == vals[-1]
+    assert row["p50_s"] <= row["p90_s"] <= row["p99_s"] <= row["max_s"]
+
+
+def test_sprt_llr_and_decision(queries, spark):
+    import math as _m
+
+    from recommedation_system_under_flink_spark.operators.events_flow import (
+        SPRT_ALPHA,
+        SPRT_P0,
+        SPRT_P1,
+    )
+
+    row = queries["ef_sprt_decision"](spark, SF_DIR).collect()[0]
+    n, x = row["n"], row["x"]
+    llr = x * _m.log(SPRT_P1 / SPRT_P0) + (n - x) * _m.log(
+        (1 - SPRT_P1) / (1 - SPRT_P0)
+    )
+    assert row["llr"] == pytest.approx(llr, abs=1e-5)
+    ln_a = _m.log((1 - SPRT_ALPHA) / SPRT_ALPHA)
+    ln_b = _m.log(SPRT_ALPHA / (1 - SPRT_ALPHA))
+    expect = (
+        "accept_h1"
+        if llr >= ln_a
+        else "accept_h0" if llr <= ln_b else "continue"
+    )
+    assert row["decision"] == expect
+
+
+def test_power_analysis_matches_statsmodels_formula(queries, spark):
+    """Replay the closed-form n/arm with numpy from the op's own
+    subject counts and pin the z constants to scipy-free truth."""
+    row = queries["ef_power_analysis"](spark, SF_DIR).collect()[0]
+    p0, p1 = row["p0"], row["p1"]
+    za, zb = 1.959963984540054, 0.8416212335729143
+    pbar = (p0 + p1) / 2
+    if p1 != p0:
+        n_req = np.ceil(
+            (za * np.sqrt(2 * pbar * (1 - pbar))
+             + zb * np.sqrt(p0 * (1 - p0) + p1 * (1 - p1))) ** 2
+            / (p1 - p0) ** 2
+        )
+        assert row["n_required_per_arm"] == int(n_req)
+        assert row["powered"] == (
+            row["n_available_per_arm"] >= n_req
+        )
+    assert row["n_arm_a"] + row["n_arm_b"] == row["n_users"]
+    # direction adapts: p1 above baseline unless saturated
+    if p0 * 1.1 <= 1.0:
+        assert p1 == pytest.approx(p0 * 1.1, abs=2e-6)
+    else:
+        assert p1 == pytest.approx(p0 * 0.9, abs=2e-6)
+
+
+def test_interarrival_profile_matches_numpy(queries, spark):
+    gaps = duckdb.sql(
+        f"""WITH c AS (
+          SELECT user_id, epoch_us(ts) AS us, event_id
+          FROM '{SF_DIR}/events.parquet' WHERE event_type = 'click')
+        SELECT (us - LAG(us) OVER (PARTITION BY user_id
+                 ORDER BY us, event_id)) // 1000000 AS g
+        FROM c QUALIFY g IS NOT NULL"""
+    ).df().g.to_numpy()
+    row = queries["ef_interarrival_profile"](spark, SF_DIR).collect()[0]
+    assert row["n_gaps"] == len(gaps)
+    srt = np.sort(gaps)
+    for p, col in ((50, "p50_s"), (90, "p90_s"), (99, "p99_s")):
+        k = int(np.ceil(len(gaps) * p / 100.0))
+        assert row[col] == srt[k - 1]
+    mu, sd = gaps.mean(), gaps.std()
+    assert row["mean_s"] == pytest.approx(mu, abs=1e-5)
+    assert row["burstiness"] == pytest.approx(
+        (sd - mu) / (sd + mu), abs=1e-5
+    )
+    assert -1.0 <= row["burstiness"] <= 1.0
+
+
+def test_design_effect_matches_anova_replay(queries, spark):
+    df = duckdb.sql(
+        f"""SELECT user_id,
+               CAST(ROUND(CAST(value AS DECIMAL(18,6)) * 100, 0) AS BIGINT)
+                 AS x
+            FROM '{SF_DIR}/events.parquet' WHERE event_type='purchase'"""
+    ).df()
+    groups = [g.x.to_numpy(dtype=float) for _, g in df.groupby("user_id")]
+    k = len(groups)
+    n = sum(len(g) for g in groups)
+    grand = np.concatenate(groups)
+    msb = (
+        sum(len(g) * (g.mean() - grand.mean()) ** 2 for g in groups)
+    ) / (k - 1)
+    msw = sum(((g - g.mean()) ** 2).sum() for g in groups) / (n - k)
+    m0 = (n - sum(len(g) ** 2 for g in groups) / n) / (k - 1)
+    icc = (msb - msw) / (msb + (m0 - 1) * msw)
+    row = queries["ef_design_effect"](spark, SF_DIR).collect()[0]
+    assert row["k_clusters"] == k and row["n_events"] == n
+    assert row["icc"] == pytest.approx(icc, abs=1e-5)
+    assert row["deff"] == pytest.approx(1 + (m0 - 1) * icc, abs=1e-5)
+    assert row["effective_n"] == pytest.approx(
+        n / (1 + (m0 - 1) * icc), abs=1e-3
+    )
+
+
+def test_session_overlap_planted(queries, spark, tmp_path):
+    """Hand-planted sessions with known pairwise overlaps. Sessions are
+    single gap-bounded runs (events 10 min apart < the 30-min gap);
+    user 1 [00:00-01:00] and user 2 [00:30-02:00] overlap 30 min;
+    user 3 [05:00-05:10] overlaps nobody; the user-1×user-2 second
+    sessions [10:00-10:40] vs [10:20-10:30] nest fully → 10 min."""
+    base = dt.datetime(2024, 3, 1)
+    rows, eid = [], 0
+
+    def sess(uid, start_min, end_min):
+        nonlocal eid
+        t = start_min
+        while t <= end_min:
+            rows.append((eid, base + dt.timedelta(minutes=t), uid, "click", 1.0, "{}"))
+            eid += 1
+            t += 10
+    sess(1, 0, 60)
+    sess(2, 30, 120)
+    sess(3, 300, 310)
+    sess(1, 600, 640)
+    sess(2, 620, 630)
+    duckdb.sql(
+        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        "event_type VARCHAR, value DOUBLE, props VARCHAR)"
+    )
+    duckdb.executemany("INSERT INTO ev VALUES (?,?,?,?,?,?)", rows)
+    duckdb.sql(f"COPY ev TO '{tmp_path}/events.parquet' (FORMAT PARQUET)")
+    duckdb.sql("DROP TABLE ev")
+    out = {
+        (r["user_a"], r["user_b"]): r
+        for r in queries["ef_session_overlap_join"](spark, str(tmp_path)).collect()
+    }
+    assert set(out) == {(1, 2)}  # user 3 overlaps nobody
+    assert out[(1, 2)]["n_session_pairs"] == 2
+    assert out[(1, 2)]["total_overlap_us"] == (30 + 10) * 60 * 1_000_000
+
+
+def test_session_overlap_no_nested_loop(queries, spark):
+    plan = queries["ef_session_overlap_join"](
+        spark, SF_DIR
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_diff_in_diff_matches_numpy(queries, spark):
+    import numpy as np
+
+    row = queries["ef_diff_in_diff"](spark, SF_DIR).collect()[0]
+    df = duckdb.sql(
+        f"""SELECT user_id % 2 AS treated,
+                   CASE WHEN epoch_us(ts) // 86400000000 >= 19738
+                        THEN 1 ELSE 0 END AS post,
+                   user_id,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
+            FROM '{SF_DIR}/events.parquet' WHERE event_type = 'purchase'
+            GROUP BY 1, 2, user_id"""
+    ).df()
+    mus, var_over_n = {}, 0.0
+    for (t, p), sub in df.groupby(["treated", "post"]):
+        mus[(t, p)] = sub.y.mean()
+        var_over_n += sub.y.var(ddof=1) / len(sub)
+    did = (mus[(1, 1)] - mus[(1, 0)]) - (mus[(0, 1)] - mus[(0, 0)])
+    assert row["did_estimate"] == pytest.approx(did, abs=2e-6)
+    assert row["se"] == pytest.approx(float(np.sqrt(var_over_n)), abs=2e-6)
+    assert row["t_stat"] == pytest.approx(did / np.sqrt(var_over_n), abs=1e-4)
+
+
+def test_regression_discontinuity_matches_numpy(queries, spark):
+    import numpy as np
+
+    row = queries["ef_regression_discontinuity"](spark, SF_DIR).collect()[0]
+    df = duckdb.sql(
+        f"""SELECT CAST(n_chars - 300 AS DOUBLE) AS x,
+               CASE WHEN list_contains(
+                 list_filter(string_split(text,' '), t->t<>''), 'the')
+               THEN 1.0 ELSE 0.0 END AS y,
+               n_chars >= 300 AS side
+            FROM '{SF_DIR}/documents.parquet'
+            WHERE n_chars >= 150 AND n_chars < 450"""
+    ).df()
+    limits = {}
+    for side, sub in df.groupby("side"):
+        b, a = np.polyfit(sub.x.to_numpy(), sub.y.to_numpy(), 1)
+        limits[side] = a  # intercept at centered cutoff
+    assert row["limit_left"] == pytest.approx(limits[False], abs=2e-6)
+    assert row["limit_right"] == pytest.approx(limits[True], abs=2e-6)
+    assert row["rd_jump"] == pytest.approx(limits[True] - limits[False], abs=2e-6)
+
+
+def test_uplift_deciles_partition_users(queries, spark):
+    rows = queries["ef_uplift_by_decile"](spark, SF_DIR).collect()
+    assert [r["decile"] for r in rows] == list(range(1, 11))
+    n_users = duckdb.sql(
+        f"SELECT COUNT(DISTINCT user_id) FROM '{SF_DIR}/events.parquet'"
+    ).fetchone()[0]
+    assert sum(r["n_treated"] + r["n_control"] for r in rows) == n_users
+    for r in rows:
+        if r["mu_treated"] is None or r["mu_control"] is None:
+            assert r["uplift"] is None  # decile with an empty arm
+            continue
+        assert r["uplift"] == pytest.approx(
+            r["mu_treated"] - r["mu_control"], abs=2e-6
+        )

@@ -1,5 +1,6 @@
-"""Round-6 operator invariants: interval-overlap band join (planted
-ground truth), PIVOT by day-of-week (conservation vs duckdb)."""
+"""Round-6 operator invariants: PIVOT by day-of-week (conservation vs
+duckdb), next-item and path queries on planted logs (the session-overlap
+and causal-effect tests live in tests/test_events_flow.py)."""
 
 from __future__ import annotations
 
@@ -16,51 +17,6 @@ def queries():
     from recommedation_system_under_flink_spark import registry
 
     return registry.queries()
-
-
-def test_session_overlap_planted(queries, spark, tmp_path):
-    """Hand-planted sessions with known pairwise overlaps. Sessions are
-    single gap-bounded runs (events 10 min apart < the 30-min gap);
-    user 1 [00:00-01:00] and user 2 [00:30-02:00] overlap 30 min;
-    user 3 [05:00-05:10] overlaps nobody; the user-1×user-2 second
-    sessions [10:00-10:40] vs [10:20-10:30] nest fully → 10 min."""
-    base = dt.datetime(2024, 3, 1)
-    rows, eid = [], 0
-
-    def sess(uid, start_min, end_min):
-        nonlocal eid
-        t = start_min
-        while t <= end_min:
-            rows.append((eid, base + dt.timedelta(minutes=t), uid, "click", 1.0, "{}"))
-            eid += 1
-            t += 10
-    sess(1, 0, 60)
-    sess(2, 30, 120)
-    sess(3, 300, 310)
-    sess(1, 600, 640)
-    sess(2, 620, 630)
-    duckdb.sql(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type VARCHAR, value DOUBLE, props VARCHAR)"
-    )
-    duckdb.executemany("INSERT INTO ev VALUES (?,?,?,?,?,?)", rows)
-    duckdb.sql(f"COPY ev TO '{tmp_path}/events.parquet' (FORMAT PARQUET)")
-    duckdb.sql("DROP TABLE ev")
-    out = {
-        (r["user_a"], r["user_b"]): r
-        for r in queries["ef_session_overlap_join"](spark, str(tmp_path)).collect()
-    }
-    assert set(out) == {(1, 2)}  # user 3 overlaps nobody
-    assert out[(1, 2)]["n_session_pairs"] == 2
-    assert out[(1, 2)]["total_overlap_us"] == (30 + 10) * 60 * 1_000_000
-
-
-def test_session_overlap_no_nested_loop(queries, spark):
-    plan = queries["ef_session_overlap_join"](
-        spark, SF_DIR
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_pivot_dow_conserves_counts(queries, spark):
@@ -246,29 +202,6 @@ def test_basket_pairs_lift_and_symmetry_free(queries, spark):
         assert r["lift"] > 0
 
 
-def test_diff_in_diff_matches_numpy(queries, spark):
-    import numpy as np
-
-    row = queries["ef_diff_in_diff"](spark, SF_DIR).collect()[0]
-    df = duckdb.sql(
-        f"""SELECT user_id % 2 AS treated,
-                   CASE WHEN epoch_us(ts) // 86400000000 >= 19738
-                        THEN 1 ELSE 0 END AS post,
-                   user_id,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
-            FROM '{SF_DIR}/events.parquet' WHERE event_type = 'purchase'
-            GROUP BY 1, 2, user_id"""
-    ).df()
-    mus, var_over_n = {}, 0.0
-    for (t, p), sub in df.groupby(["treated", "post"]):
-        mus[(t, p)] = sub.y.mean()
-        var_over_n += sub.y.var(ddof=1) / len(sub)
-    did = (mus[(1, 1)] - mus[(1, 0)]) - (mus[(0, 1)] - mus[(0, 0)])
-    assert row["did_estimate"] == pytest.approx(did, abs=2e-6)
-    assert row["se"] == pytest.approx(float(np.sqrt(var_over_n)), abs=2e-6)
-    assert row["t_stat"] == pytest.approx(did / np.sqrt(var_over_n), abs=1e-4)
-
-
 def test_balanced_downsample_equalizes_classes(queries, spark):
     rows = queries["samp_balanced_downsample"](spark, SF_DIR).collect()
     from collections import Counter
@@ -281,41 +214,3 @@ def test_balanced_downsample_equalizes_classes(queries, spark):
             GROUP BY lang = 'en')"""
     ).fetchone()[0]
     assert c[0] == c[1] == n_min
-
-
-def test_regression_discontinuity_matches_numpy(queries, spark):
-    import numpy as np
-
-    row = queries["ef_regression_discontinuity"](spark, SF_DIR).collect()[0]
-    df = duckdb.sql(
-        f"""SELECT CAST(n_chars - 300 AS DOUBLE) AS x,
-               CASE WHEN list_contains(
-                 list_filter(string_split(text,' '), t->t<>''), 'the')
-               THEN 1.0 ELSE 0.0 END AS y,
-               n_chars >= 300 AS side
-            FROM '{SF_DIR}/documents.parquet'
-            WHERE n_chars >= 150 AND n_chars < 450"""
-    ).df()
-    limits = {}
-    for side, sub in df.groupby("side"):
-        b, a = np.polyfit(sub.x.to_numpy(), sub.y.to_numpy(), 1)
-        limits[side] = a  # intercept at centered cutoff
-    assert row["limit_left"] == pytest.approx(limits[False], abs=2e-6)
-    assert row["limit_right"] == pytest.approx(limits[True], abs=2e-6)
-    assert row["rd_jump"] == pytest.approx(limits[True] - limits[False], abs=2e-6)
-
-
-def test_uplift_deciles_partition_users(queries, spark):
-    rows = queries["ef_uplift_by_decile"](spark, SF_DIR).collect()
-    assert [r["decile"] for r in rows] == list(range(1, 11))
-    n_users = duckdb.sql(
-        f"SELECT COUNT(DISTINCT user_id) FROM '{SF_DIR}/events.parquet'"
-    ).fetchone()[0]
-    assert sum(r["n_treated"] + r["n_control"] for r in rows) == n_users
-    for r in rows:
-        if r["mu_treated"] is None or r["mu_control"] is None:
-            assert r["uplift"] is None  # decile with an empty arm
-            continue
-        assert r["uplift"] == pytest.approx(
-            r["mu_treated"] - r["mu_control"], abs=2e-6
-        )

@@ -17,6 +17,8 @@ from recommedation_system_under_flink_spark.functions.text import (
     DOC_TOKENS_SQL,
     TOKEN_SPLIT_REGEX,
     cooccurrence_clique,
+    content_tokens,
+    content_tokens_sql,
     cooccurrence_windowed,
     doc_tokens,
     extract_keywords_clique,
@@ -57,20 +59,26 @@ def test_tokenize(text, expected):
     ],
 )
 def test_doc_tokens_parity(spark, text):
-    """The document tokenizer is one spec in three engines: Spark
-    ``doc_tokens``, DuckDB ``DOC_TOKENS_SQL`` and the Python regex split
-    every oracle is reasoned against."""
+    """Both tokenizer forms are one spec in three engines: Spark
+    ``doc_tokens`` / ``content_tokens``, DuckDB ``DOC_TOKENS_SQL`` /
+    ``content_tokens_sql`` and the Python regex split (document form)
+    or :func:`tokenize` (stop-word form) every oracle is reasoned
+    against."""
     expected = [t for t in re.split(TOKEN_SPLIT_REGEX, text.lower()) if t]
-    got_spark = (
+    got_spark, got_content = (
         spark.createDataFrame([(text,)], "text string")
-        .select(doc_tokens(F.col("text")).alias("ts"))
-        .collect()[0]["ts"]
+        .select(doc_tokens(F.col("text")), content_tokens(F.col("text")))
+        .collect()[0]
     )
-    got_duck = duckdb.execute(
-        f"SELECT {DOC_TOKENS_SQL} FROM (SELECT CAST(? AS VARCHAR) AS text)", [text]
-    ).fetchone()[0]
+    got_duck, got_duck_content = duckdb.execute(
+        f"SELECT {DOC_TOKENS_SQL}, {content_tokens_sql('text')}"
+        " FROM (SELECT CAST(? AS VARCHAR) AS text)",
+        [text],
+    ).fetchone()
     assert got_spark == expected
     assert got_duck == expected
+    assert got_content == tokenize(text)
+    assert got_duck_content == tokenize(text)
 
 
 def test_token_counts():
