@@ -18,7 +18,9 @@ Pinned specs replacing reference code that is absent from the snapshot
   filter) in Spark and :func:`content_tokens_sql` in DuckDB; the
   document form (stop words kept) is :func:`doc_tokens` and
   ``DOC_TOKENS_SQL`` — the one copy every relational builder and
-  oracle reads.
+  oracle reads. The ML features split the raw text on single spaces
+  instead: :func:`space_tokens` / :func:`space_tokens_sql`, with the
+  contains-'the' label :func:`the_label` / :func:`the_label_sql`.
 - **F2 window clamp** — the reference has an off-by-one: when the
   right window edge passes the end of the token list it is reset to
   ``0`` instead of ``size-1`` (TextRank.java:183-184), silently
@@ -70,6 +72,19 @@ def content_tokens_sql(col: str) -> str:
     return f"list_filter({_split_sql(col)}, t -> t <> '' AND t NOT IN ({STOPWORDS_SQL}))"
 
 
+def space_tokens_sql(col: str = "text") -> str:
+    """DuckDB twin of :func:`space_tokens` over the SQL column ``col``."""
+    return f"list_filter(string_split({col}, ' '), t -> t <> '')"
+
+
+def the_label_sql(col: str = "text") -> str:
+    """DuckDB twin of :func:`the_label` over the SQL column ``col``."""
+    return (
+        f"CASE WHEN list_contains({space_tokens_sql(col)}, 'the')"
+        " THEN 1.0 ELSE 0.0 END"
+    )
+
+
 # The Spark forms import pyspark inside the function: the keyword UDF
 # workers import this module and need none of the DataFrame API.
 
@@ -102,6 +117,23 @@ def doc_tokens(text: Column) -> Column:
     from pyspark.sql import functions as F
 
     return F.filter(split_tokens(text), lambda t: t != "")
+
+
+def space_tokens(text: Column) -> Column:
+    """Raw text split on single spaces, empties dropped: no lowercasing
+    and no regex. The ML features' token count and the contains-'the'
+    label read this form, not :func:`doc_tokens`."""
+    from pyspark.sql import functions as F
+
+    return F.filter(F.split(text, " "), lambda t: t != F.lit(""))
+
+
+def the_label(text: Column) -> Column:
+    """1.0 when :func:`space_tokens` holds the token ``the``, else 0.0:
+    a binary label that varies within every language."""
+    from pyspark.sql import functions as F
+
+    return F.when(F.array_contains(space_tokens(text), "the"), 1.0).otherwise(0.0)
 
 
 def tokenize(text: str | None) -> list[str]:

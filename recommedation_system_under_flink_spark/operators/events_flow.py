@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
+from ..functions.text import the_label, the_label_sql
 from ..registry import register
 from ..sources import events_raw
 from .quantize import ppm_sum, ppm_value
@@ -321,31 +322,47 @@ def staged_funnel(ev: DataFrame, key: list[str]) -> DataFrame:
     return v.join(c, key, "left").join(p, key, "left")
 
 
-_FUNNEL_ORACLE = """WITH ev AS (
+def _staged_funnel_sql(src: str, key: tuple[str, str]) -> str:
+    """SQL twin of :func:`staged_funnel` over the CTE ``src``: the
+    ``v``, ``c`` and ``p`` stage CTEs keyed on ``key``, and ``staged``,
+    one row per key that viewed, with its funnel ``depth`` (1-3)."""
+    def cols(a: str) -> str:
+        return ", ".join(f"{a}.{c}" for c in key)
+
+    def on(a: str, b: str) -> str:
+        return " AND ".join(f"{a}.{c} = {b}.{c}" for c in key)
+
+    by = ", ".join(str(i) for i in range(1, len(key) + 1))
+    return f"""v AS (
+  SELECT {", ".join(key)}, MIN(tsm) AS t1 FROM {src}
+  WHERE event_type = 'view' GROUP BY {by}
+), c AS (
+  SELECT {cols("e")}, MIN(e.tsm) AS t2
+  FROM {src} e JOIN v ON {on("e", "v")}
+  WHERE e.event_type = 'click' AND e.tsm > v.t1
+  GROUP BY {by}
+), p AS (
+  SELECT {cols("e")}, MIN(e.tsm) AS t3
+  FROM {src} e JOIN c ON {on("e", "c")}
+  WHERE e.event_type = 'purchase' AND e.tsm > c.t2
+  GROUP BY {by}
+), staged AS (
+  SELECT {cols("v")},
+         CAST(CASE WHEN p.t3 IS NOT NULL THEN 3
+                   WHEN c.t2 IS NOT NULL THEN 2
+                   ELSE 1 END AS INTEGER) AS depth
+  FROM v
+  LEFT JOIN c ON {on("v", "c")}
+  LEFT JOIN p ON {on("v", "p")}
+)"""
+
+
+_FUNNEL_ORACLE = f"""WITH ev AS (
   SELECT user_id, CAST(ts AS DATE) AS day, event_type, epoch_us(ts) AS tsm
   FROM events
-), v AS (
-  SELECT user_id, day, MIN(tsm) AS t1 FROM ev
-  WHERE event_type = 'view' GROUP BY 1, 2
-), c AS (
-  SELECT e.user_id, e.day, MIN(e.tsm) AS t2
-  FROM ev e JOIN v ON e.user_id = v.user_id AND e.day = v.day
-  WHERE e.event_type = 'click' AND e.tsm > v.t1
-  GROUP BY 1, 2
-), p AS (
-  SELECT e.user_id, e.day, MIN(e.tsm) AS t3
-  FROM ev e JOIN c ON e.user_id = c.user_id AND e.day = c.day
-  WHERE e.event_type = 'purchase' AND e.tsm > c.t2
-  GROUP BY 1, 2
-)
-SELECT v.day,
-       CAST(CASE WHEN p.t3 IS NOT NULL THEN 3
-                 WHEN c.t2 IS NOT NULL THEN 2
-                 ELSE 1 END AS INTEGER) AS depth,
-       CAST(COUNT(*) AS BIGINT) AS n_users
-FROM v
-LEFT JOIN c ON v.user_id = c.user_id AND v.day = c.day
-LEFT JOIN p ON v.user_id = p.user_id AND v.day = p.day
+), {_staged_funnel_sql("ev", ("user_id", "day"))}
+SELECT day, depth, CAST(COUNT(*) AS BIGINT) AS n_users
+FROM staged
 GROUP BY 1, 2"""
 
 
@@ -444,27 +461,10 @@ def ef_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- session funnel
 
-_SESSION_FUNNEL_ORACLE = f"""WITH {_sessions_ctes(("event_type",))}, v AS (
-  SELECT user_id, session_seq, MIN(tsm) AS t1 FROM sess
-  WHERE event_type = 'view' GROUP BY 1, 2
-), c AS (
-  SELECT s.user_id, s.session_seq, MIN(s.tsm) AS t2
-  FROM sess s JOIN v ON s.user_id = v.user_id AND s.session_seq = v.session_seq
-  WHERE s.event_type = 'click' AND s.tsm > v.t1
-  GROUP BY 1, 2
-), p AS (
-  SELECT s.user_id, s.session_seq, MIN(s.tsm) AS t3
-  FROM sess s JOIN c ON s.user_id = c.user_id AND s.session_seq = c.session_seq
-  WHERE s.event_type = 'purchase' AND s.tsm > c.t2
-  GROUP BY 1, 2
-)
-SELECT CAST(CASE WHEN p.t3 IS NOT NULL THEN 3
-                 WHEN c.t2 IS NOT NULL THEN 2
-                 ELSE 1 END AS INTEGER) AS depth,
-       CAST(COUNT(*) AS BIGINT) AS n_sessions
-FROM v
-LEFT JOIN c ON v.user_id = c.user_id AND v.session_seq = c.session_seq
-LEFT JOIN p ON v.user_id = p.user_id AND v.session_seq = p.session_seq
+_SESSION_FUNNEL_ORACLE = f"""WITH {_sessions_ctes(("event_type",))},
+{_staged_funnel_sql("sess", ("user_id", "session_seq"))}
+SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_sessions
+FROM staged
 GROUP BY 1"""
 
 
@@ -2426,9 +2426,7 @@ RD_BANDWIDTH = 150
 
 _RD_ORACLE = f"""WITH pts AS (
   SELECT CAST(n_chars - {RD_CUTOFF} AS DOUBLE) AS x,
-         CASE WHEN list_contains(
-                list_filter(string_split(text, ' '), t -> t <> ''), 'the')
-              THEN 1.0 ELSE 0.0 END AS y,
+         {the_label_sql()} AS y,
          CASE WHEN n_chars >= {RD_CUTOFF} THEN 1 ELSE 0 END AS side
   FROM documents
   WHERE n_chars >= {RD_CUTOFF - RD_BANDWIDTH}
@@ -2470,10 +2468,9 @@ def ef_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") >= RD_CUTOFF - RD_BANDWIDTH)
         & (F.col("n_chars") < RD_CUTOFF + RD_BANDWIDTH)
     )
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     pts = docs.select(
         (F.col("n_chars") - RD_CUTOFF).cast("double").alias("x"),
-        F.when(F.array_contains(toks, "the"), 1.0).otherwise(0.0).alias("y"),
+        the_label(F.col("text")).alias("y"),
         F.when(F.col("n_chars") >= RD_CUTOFF, 1).otherwise(0).alias("side"),
     )
     n, sx, sy = F.count("*"), F.sum("x"), F.sum("y")

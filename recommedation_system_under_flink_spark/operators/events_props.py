@@ -23,7 +23,7 @@ Engine approach (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
@@ -2138,24 +2138,120 @@ def _cramer4(m: str = "m", b: str = "b") -> list[str]:
     return [det(None)] + [det(k) for k in range(4)]
 
 
-def _harmonic_oracle() -> str:
-    d, d0, d1, d2, d3 = _cramer4()
-    tau = 2 * 3.141592653589793 / _HARM_PERIOD
-    feats = f"1.0 AS f0, CAST(x AS DOUBLE) AS f1, SIN({tau} * x) AS f2, COS({tau} * x) AS f3"
-    moms = ", ".join(
-        f"SUM(f{i} * f{j}) AS m{i}{j}" for i in range(4) for j in range(i, 4)
+# One normal-equation solve per engine, shared by ev_harmonic_regression,
+# ml_ridge_regression and ml_cv_ridge_path. The input has a target
+# ``y`` and the features ``f0``..``f3``; the moments are ``m{i}{j}``
+# (i ≤ j) and ``b{i}``, the solved coefficients ``c0``..``c3``.
+
+
+def _gram4(agg=F.sum, ridge: float | None = None) -> list[Column]:
+    """Aggregate columns of the Gram moments ``m{i}{j}`` and the
+    feature·target moments ``b{i}``, each ``agg`` of its product
+    (``ppm_sum`` for quantized moments). ``ridge`` rides on the
+    diagonal; the off-diagonal moments then get ``+ 0.0``."""
+    def ridged(c: Column, i: int, j: int) -> Column:
+        if ridge is None:
+            return c
+        return c + (F.lit(float(ridge)) if i == j else F.lit(0.0))
+
+    return [
+        ridged(agg(F.col(f"f{i}") * F.col(f"f{j}")), i, j).alias(f"m{i}{j}")
+        for i in range(4)
+        for j in range(i, 4)
+    ] + [agg(F.col(f"f{i}") * F.col("y")).alias(f"b{i}") for i in range(4)]
+
+
+def _cramer4_solve(mom: DataFrame, keep: list[str], m: str = "m",
+                   b: str = "b") -> DataFrame:
+    """``keep`` plus the coefficients ``c0``..``c3`` solved by
+    :func:`_cramer4` from the moment columns of ``mom``."""
+    d, d0, d1, d2, d3 = _cramer4(m, b)
+    return mom.select(
+        *keep,
+        F.expr(f"{d0} / {d}").alias("c0"),
+        F.expr(f"{d1} / {d}").alias("c1"),
+        F.expr(f"{d2} / {d}").alias("c2"),
+        F.expr(f"{d3} / {d}").alias("c3"),
     )
-    bs = ", ".join(f"SUM(f{i} * y) AS b{i}" for i in range(4))
-    return f"""WITH {_DAILY_CTES},
-f AS (SELECT CAST(y AS DOUBLE) AS y, {feats} FROM idx),
-mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days, {moms}, {bs},
-               SUM(y) AS sy, SUM(y * y) AS syy FROM f),
-beta AS (
-  SELECT n_days, sy, syy,
+
+
+def _fit4() -> Column:
+    """The fitted value c0·f0 + c1·f1 + c2·f2 + c3·f3."""
+    return (
+        F.col("c0") * F.col("f0")
+        + F.col("c1") * F.col("f1")
+        + F.col("c2") * F.col("f2")
+        + F.col("c3") * F.col("f3")
+    )
+
+
+def _ols4(f: DataFrame, n: str,
+          ridge: float | None = None) -> tuple[DataFrame, Column]:
+    """One-pass least squares of ``y`` on f0..f3 over ``f``: the 1-row
+    moments (row count ``n``, Σy, Σy²), the Cramer solve, and ``f``
+    joined back with that row. Returns the joined frame and its R²
+    aggregate column."""
+    mom = f.agg(
+        F.count("*").alias(n),
+        *_gram4(ridge=ridge),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+    fit = _fit4()
+    r2 = 1.0 - F.sum((F.col("y") - fit) * (F.col("y") - fit)) / (
+        F.first("syy") - F.first("sy") * F.first("sy") / F.first(n)
+    )
+    return f.crossJoin(F.broadcast(_cramer4_solve(mom, [n, "sy", "syy"]))), r2
+
+
+def _gram4_sql(agg=lambda e: f"SUM({e})", ridge: float | None = None) -> str:
+    """SQL twin of :func:`_gram4`: the select list of the moments
+    (``ridge`` added to the diagonal only)."""
+    moms = ", ".join(
+        agg(f"f{i} * f{j}")
+        + (f" + {ridge}" if ridge is not None and i == j else "")
+        + f" AS m{i}{j}"
+        for i in range(4)
+        for j in range(i, 4)
+    )
+    bs = ", ".join(f"{agg(f'f{i} * y')} AS b{i}" for i in range(4))
+    return f"{moms}, {bs}"
+
+
+def _cramer4_solve_sql(keep: str, src: str) -> str:
+    """SQL twin of :func:`_cramer4_solve`: a SELECT over ``src``."""
+    d, d0, d1, d2, d3 = _cramer4()
+    return f"""SELECT {keep},
          {d0} / {d} AS c0, {d1} / {d} AS c1,
          {d2} / {d} AS c2, {d3} / {d} AS c3
-  FROM mom
-)
+  FROM {src}"""
+
+
+#: SQL twin of :func:`_fit4`.
+_FIT4_SQL = "(c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3)"
+
+
+def _ols4_sql(n: str, ridge: float | None = None) -> tuple[str, str]:
+    """SQL twin of :func:`_ols4` over the CTE ``f``: the ``mom`` and
+    ``beta`` CTEs, and the R² aggregate over ``f CROSS JOIN beta``."""
+    ctes = f"""mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS {n}, {_gram4_sql(ridge=ridge)},
+               SUM(y) AS sy, SUM(y * y) AS syy FROM f),
+beta AS (
+  {_cramer4_solve_sql(f"{n}, sy, syy", "mom")}
+)"""
+    r2 = f"""1.0 - SUM((y - {_FIT4_SQL}) * (y - {_FIT4_SQL}))
+                   / (ANY_VALUE(syy) - ANY_VALUE(sy) * ANY_VALUE(sy)
+                      / ANY_VALUE(beta.{n}))"""
+    return ctes, r2
+
+
+def _harmonic_oracle() -> str:
+    tau = 2 * 3.141592653589793 / _HARM_PERIOD
+    feats = f"1.0 AS f0, CAST(x AS DOUBLE) AS f1, SIN({tau} * x) AS f2, COS({tau} * x) AS f3"
+    ols, r2 = _ols4_sql("n_days")
+    return f"""WITH {_DAILY_CTES},
+f AS (SELECT CAST(y AS DOUBLE) AS y, {feats} FROM idx),
+{ols}
 SELECT ANY_VALUE(beta.n_days) AS n_days,
        ROUND(ANY_VALUE(c0), 6) AS intercept,
        ROUND(ANY_VALUE(c1), 6) AS slope,
@@ -2163,10 +2259,7 @@ SELECT ANY_VALUE(beta.n_days) AS n_days,
        ROUND(ANY_VALUE(c3), 6) AS cos_coef,
        ROUND(SQRT(ANY_VALUE(c2) * ANY_VALUE(c2)
                   + ANY_VALUE(c3) * ANY_VALUE(c3)), 6) AS amplitude,
-       ROUND(1.0 - SUM((y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3))
-                       * (y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3)))
-                   / (ANY_VALUE(syy) - ANY_VALUE(sy) * ANY_VALUE(sy)
-                      / ANY_VALUE(beta.n_days)), 6) AS r2
+       ROUND({r2}, 6) AS r2
 FROM f CROSS JOIN beta"""
 
 
@@ -2194,36 +2287,8 @@ def ev_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sin(F.lit(tau) * F.col("x")).alias("f2"),
         F.cos(F.lit(tau) * F.col("x")).alias("f3"),
     )
-    moms = [
-        F.sum(F.col(f"f{i}") * F.col(f"f{j}")).alias(f"m{i}{j}")
-        for i in range(4)
-        for j in range(i, 4)
-    ]
-    bs = [F.sum(F.col(f"f{i}") * F.col("y")).alias(f"b{i}") for i in range(4)]
-    mom = f.agg(
-        F.count("*").alias("n_days"),
-        *moms,
-        *bs,
-        F.sum("y").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    d, d0, d1, d2, d3 = _cramer4()
-    beta = mom.select(
-        "n_days",
-        "sy",
-        "syy",
-        F.expr(f"{d0} / {d}").alias("c0"),
-        F.expr(f"{d1} / {d}").alias("c1"),
-        F.expr(f"{d2} / {d}").alias("c2"),
-        F.expr(f"{d3} / {d}").alias("c3"),
-    )
-    fit = (
-        F.col("c0") * F.col("f0")
-        + F.col("c1") * F.col("f1")
-        + F.col("c2") * F.col("f2")
-        + F.col("c3") * F.col("f3")
-    )
-    return f.crossJoin(F.broadcast(beta)).agg(
+    fitted, r2 = _ols4(f, "n_days")
+    return fitted.agg(
         F.first("n_days").alias("n_days"),
         F.round(F.first("c0"), 6).alias("intercept"),
         F.round(F.first("c1"), 6).alias("slope"),
@@ -2235,15 +2300,7 @@ def ev_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("amplitude"),
-        F.round(
-            1.0
-            - F.sum((F.col("y") - fit) * (F.col("y") - fit))
-            / (
-                F.first("syy")
-                - F.first("sy") * F.first("sy") / F.first("n_days")
-            ),
-            6,
-        ).alias("r2"),
+        F.round(r2, 6).alias("r2"),
     )
 
 

@@ -283,9 +283,6 @@ def f10_positive_correlation_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------- F11
 
-_RANGE_DAYS = (TODAY - DEFAULT_SCENE.from_date).days + 1
-
-
 @register(
     "f11_date_sequence",
     f"""SELECT CAST(unnest(generate_series(DATE '{DEFAULT_SCENE.from_date}',

@@ -28,6 +28,24 @@ than O(model) bytes:
   the matrix baked into the plan as literals; the distortion report
   quantifies what the 4× shrink costs before anyone retrains on it.
 
+Each rule the builders share is written once per engine:
+
+- **the GD trainer** — :func:`_gd_train` fits every ``(lr, mask)``
+  config in one aggregate per iteration (ml_logreg_gd, ml_lr_sweep,
+  ml_learning_curve); :func:`_gd_chain_sql` is its unrolled CTE twin.
+  The logit, sigmoid and logloss are :func:`_logit` / :func:`_sigmoid`
+  / :func:`_logloss` and their ``_sql`` twins.
+- **the pinned scorer** — :func:`_cal_scored` carries the ``CAL_W``
+  probability ``s`` beside both labels (``y`` = en, ``y_the`` =
+  contains 'the', ``functions.text.the_label``); ``_CAL_SCORE_SQL``
+  and ``_SCORED_THE_CTE`` in SQL.
+- **the Gini split scan** — :func:`_gini_split_frame` /
+  :func:`_gini_split_sql` (ml_decision_stump, ml_histogram_split).
+- **the normal-equation solve** — ``events_props._ols4``,
+  ``_gram4``, ``_cramer4_solve`` and ``_fit4`` and their ``_sql``
+  twins (ml_ridge_regression, ml_cv_ridge_path,
+  ev_harmonic_regression).
+
 Oracle determinism follows the repo conventions: integer-derived
 features (exact in both engines), pinned hash constants instead of RNG,
 and 6-dp quantization of float outputs (exp/ln are correctly rounded to
@@ -41,6 +59,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bsp
+from ..functions.text import space_tokens, space_tokens_sql, the_label, the_label_sql
 from ..registry import register
 from .quantize import ppm_value
 from ..sources import load_raw
@@ -73,14 +92,6 @@ JL_PAIR_OFFSET = 250
 JL_N_PAIRS = 50
 
 
-def _tokens(text: Column) -> Column:
-    """Whitespace tokens, empties dropped (mirrors the SQL twin)."""
-    return F.filter(F.split(text, " "), lambda t: t != F.lit(""))
-
-
-#: SQL fragment: the same tokenizer in DuckDB.
-_SQL_TOKENS = "list_filter(string_split(text, ' '), t -> t <> '')"
-
 #: Shared feature CTE: label = (lang = 'en'), two integer-derived
 #: features scaled into O(1) range. All values are exact in both
 #: engines (integer ÷ double-constant is correctly rounded IEEE).
@@ -88,77 +99,165 @@ _FEATS_CTE = f"""feats AS (
   SELECT doc_id,
          CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
          n_chars / 500.0 AS x1,
-         len({_SQL_TOKENS}) / 50.0 AS x2,
-         n_chars / (len({_SQL_TOKENS}) * 10.0) AS x3
+         len({space_tokens_sql()}) / 50.0 AS x2,
+         n_chars / (len({space_tokens_sql()}) * 10.0) AS x3
   FROM documents
 )"""
 
 
-def _feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _doc_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per document: ``doc_id``, ``lang``, the en label ``y``, the
+    contains-'the' label ``y_the`` and the features ``x1``..``x3``."""
     docs = load_raw(spark, sf_dir, "documents")
-    ntok = F.size(_tokens(F.col("text")))
+    ntok = F.size(space_tokens(F.col("text")))
     return docs.select(
         "doc_id",
+        "lang",
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
+        the_label(F.col("text")).alias("y_the"),
         (F.col("n_chars") / 500.0).alias("x1"),
         (ntok / 50.0).alias("x2"),
         (F.col("n_chars") / (ntok * 10.0)).alias("x3"),
     )
 
 
+def _feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The GD feature table ``(doc_id, y, x1, x2, x3)``."""
+    return _doc_feats(spark, sf_dir).select("doc_id", "y", "x1", "x2", "x3")
+
+
+def _logit(w, xs=("x1", "x2", "x3")) -> Column:
+    """w[0] + w[1]·xs[0] + …: each weight a float (a plan literal) or a
+    column, each feature a column name."""
+    z = F.lit(w[0])
+    for wi, x in zip(w[1:], xs):
+        z = z + F.lit(wi) * F.col(x)
+    return z
+
+
+def _sigmoid(z: Column) -> Column:
+    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+
+
+def _logloss(p: Column) -> Column:
+    """Per-row logloss of the probability ``p`` against ``y``."""
+    return -(
+        F.col("y") * F.log(p) + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
+    )
+
+
+def _hit(p: Column) -> Column:
+    """1.0 when ``p`` thresholded at 0.5 predicts ``y``, else 0.0."""
+    return F.when((p >= 0.5) == (F.col("y") == 1.0), 1.0).otherwise(0.0)
+
+
+def _logit_sql(w, xs=("x1", "x2", "x3")) -> str:
+    """SQL twin of :func:`_logit` (weights are literals or SQL text)."""
+    return " + ".join([f"{w[0]}"] + [f"{wi} * {x}" for wi, x in zip(w[1:], xs)])
+
+
+def _sigmoid_sql(z: str) -> str:
+    return f"1.0 / (1.0 + EXP(-({z})))"
+
+
+def _logloss_sql(p: str) -> str:
+    return f"-(y * LN({p}) + (1.0 - y) * LN(1.0 - ({p})))"
+
+
+def _hit_sql(p: str) -> str:
+    return f"CASE WHEN ({p} >= 0.5) = (y = 1.0) THEN 1.0 ELSE 0.0 END"
+
+
 # ------------------------------------------- logistic regression (GD)
 
 
-def _logreg_oracle() -> str:
-    """Unrolled GD: each iteration is one aggregate CTE over ``feats``
-    cross-joined with the 1-row previous-weights CTE — exactly the
-    dataflow the Spark side executes (scan → 4-double reduce →
-    driver update), spelled as SQL."""
-    parts = [_FEATS_CTE]
+def _gd_train(feats: DataFrame, configs) -> list[list[float]]:
+    """Full-batch logistic GD from w = 0 for every ``(lr, mask)``
+    config at once: each of the GD_ITERS iterations is ONE aggregate
+    over ``feats`` holding every config's 4 gradient averages (a
+    ``mask`` column limits its config to the rows where it holds).
+    Returns each config's final ``[wb, w1, w2, w3]``. A config whose
+    gradient is NULL (no rows) gets NaN weights, as the oracle's NULL
+    AVG propagates; the loop stops when every gradient is NULL, so
+    empty input leaves w = 0."""
+    ws = [[0.0, 0.0, 0.0, 0.0] for _ in configs]
+    for _ in range(GD_ITERS):
+        aggs = []
+        for ci, ((_, mask), w) in enumerate(zip(configs, ws)):
+            resid = _sigmoid(_logit(w)) - F.col("y")
+            if mask is not None:
+                resid = F.when(mask, resid)
+            aggs += [
+                F.avg(resid).alias(f"gb_{ci}"),
+                F.avg(resid * F.col("x1")).alias(f"g1_{ci}"),
+                F.avg(resid * F.col("x2")).alias(f"g2_{ci}"),
+                F.avg(resid * F.col("x3")).alias(f"g3_{ci}"),
+            ]
+        g = feats.agg(*aggs).collect()[0]
+        if all(g[f"gb_{ci}"] is None for ci in range(len(configs))):
+            break
+        for ci, (lr, _) in enumerate(configs):
+            if g[f"gb_{ci}"] is None:
+                ws[ci] = [float("nan")] * 4
+                continue
+            ws[ci] = [
+                wk - lr * g[f"{k}_{ci}"]
+                for wk, k in zip(ws[ci], ("gb", "g1", "g2", "g3"))
+            ]
+    return ws
+
+
+def _gd_chain_sql(tag: str, lr: float, src: str) -> tuple[list[str], str]:
+    """SQL twin of one :func:`_gd_train` config: the unrolled chain of
+    gradient CTEs ``g{tag}{it}`` and weight CTEs ``w{tag}{it}`` over
+    ``src`` (each gradient CTE is cross-joined with the 1-row previous
+    weights). Returns the CTEs and the final weights CTE's name."""
+    parts = []
     prev = None
     for it in range(GD_ITERS):
-        z = (
-            "0.0"
-            if prev is None
-            else f"{prev}.wb + {prev}.w1 * x1 + {prev}.w2 * x2 + {prev}.w3 * x3"
-        )
-        src = "feats" if prev is None else f"feats, {prev}"
+        if prev is None:
+            z, gsrc, w = "0.0", src, ("0.0",) * 4
+        else:
+            w = tuple(f"{prev}.{c}" for c in ("wb", "w1", "w2", "w3"))
+            z, gsrc = _logit_sql(w), f"{src}, {prev}"
+        r = f"({_sigmoid_sql(z)} - y)"
         parts.append(
-            f"""g{it} AS (
-  SELECT AVG(1.0 / (1.0 + EXP(-({z}))) - y) AS gb,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x1) AS g1,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x2) AS g2,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x3) AS g3
-  FROM {src}
+            f"""g{tag}{it} AS (
+  SELECT AVG{r} AS gb, AVG({r} * x1) AS g1,
+         AVG({r} * x2) AS g2, AVG({r} * x3) AS g3
+  FROM {gsrc}
 )"""
         )
-        wsrc = f"g{it}" if prev is None else f"g{it}, {prev}"
-        wb = "0.0" if prev is None else f"{prev}.wb"
-        w1 = "0.0" if prev is None else f"{prev}.w1"
-        w2 = "0.0" if prev is None else f"{prev}.w2"
-        w3 = "0.0" if prev is None else f"{prev}.w3"
+        wsrc = f"g{tag}{it}" if prev is None else f"g{tag}{it}, {prev}"
         parts.append(
-            f"""w{it} AS (
-  SELECT {wb} - {GD_LR} * gb AS wb, {w1} - {GD_LR} * g1 AS w1,
-         {w2} - {GD_LR} * g2 AS w2, {w3} - {GD_LR} * g3 AS w3
+            f"""w{tag}{it} AS (
+  SELECT {w[0]} - {lr} * gb AS wb, {w[1]} - {lr} * g1 AS w1,
+         {w[2]} - {lr} * g2 AS w2, {w[3]} - {lr} * g3 AS w3
   FROM {wsrc}
 )"""
         )
-        prev = f"w{it}"
-    zf = f"{prev}.wb + {prev}.w1 * x1 + {prev}.w2 * x2 + {prev}.w3 * x3"
-    p = f"1.0 / (1.0 + EXP(-({zf})))"
+        prev = f"w{tag}{it}"
+    return parts, prev
+
+
+def _logreg_oracle() -> str:
+    """Unrolled GD (:func:`_gd_chain_sql`): each iteration is one
+    aggregate CTE over ``feats`` cross-joined with the 1-row
+    previous-weights CTE — exactly the dataflow the Spark side executes
+    (scan → 4-double reduce → driver update), spelled as SQL."""
+    chain, w = _gd_chain_sql("", GD_LR, "feats")
+    p = _sigmoid_sql(_logit_sql([f"{w}.{c}" for c in ("wb", "w1", "w2", "w3")]))
     return (
         "WITH "
-        + ",\n".join(parts)
+        + ",\n".join([_FEATS_CTE, *chain])
         + f"""
-SELECT ROUND(ANY_VALUE({prev}.wb), 6) AS w_bias,
-       ROUND(ANY_VALUE({prev}.w1), 6) AS w_x1,
-       ROUND(ANY_VALUE({prev}.w2), 6) AS w_x2,
-       ROUND(ANY_VALUE({prev}.w3), 6) AS w_x3,
-       ROUND(AVG(-(y * LN({p}) + (1.0 - y) * LN(1.0 - ({p})))), 6) AS logloss,
-       ROUND(AVG(CASE WHEN ({p} >= 0.5) = (y = 1.0) THEN 1.0 ELSE 0.0 END), 6)
-         AS accuracy
-FROM feats, {prev}"""
+SELECT ROUND(ANY_VALUE({w}.wb), 6) AS w_bias,
+       ROUND(ANY_VALUE({w}.w1), 6) AS w_x1,
+       ROUND(ANY_VALUE({w}.w2), 6) AS w_x2,
+       ROUND(ANY_VALUE({w}.w3), 6) AS w_x3,
+       ROUND(AVG({_logloss_sql(p)}), 6) AS logloss,
+       ROUND(AVG({_hit_sql(p)}), 6) AS accuracy
+FROM feats, {w}"""
     )
 
 
@@ -175,36 +274,8 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same driver-bounded-state contract as sim_kmeans_lloyd."""
     feats = _feats(spark, sf_dir)
     bsp.persist(feats)
-    w = [0.0, 0.0, 0.0, 0.0]
-    for _ in range(GD_ITERS):
-        z = (
-            F.lit(w[0])
-            + F.lit(w[1]) * F.col("x1")
-            + F.lit(w[2]) * F.col("x2")
-            + F.lit(w[3]) * F.col("x3")
-        )
-        resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-        g = feats.agg(
-            F.avg(resid).alias("gb"),
-            F.avg(resid * F.col("x1")).alias("g1"),
-            F.avg(resid * F.col("x2")).alias("g2"),
-            F.avg(resid * F.col("x3")).alias("g3"),
-        ).collect()[0]
-        if g["gb"] is None:  # empty input: no gradient, w stays 0
-            break
-        w = [
-            w[0] - GD_LR * g["gb"],
-            w[1] - GD_LR * g["g1"],
-            w[2] - GD_LR * g["g2"],
-            w[3] - GD_LR * g["g3"],
-        ]
-    z = (
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-    )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    (w,) = _gd_train(feats, [(GD_LR, None)])
+    p = _sigmoid(_logit(w))
     # The scope releases feats before the caller collects: the returned
     # plan holds only literal weights, so it recomputes feats in one pass.
     return feats.agg(
@@ -212,23 +283,8 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.lit(w[1]), 6).alias("w_x1"),
         F.round(F.lit(w[2]), 6).alias("w_x2"),
         F.round(F.lit(w[3]), 6).alias("w_x3"),
-        F.round(
-            F.avg(
-                -(
-                    F.col("y") * F.log(p)
-                    + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-                )
-            ),
-            6,
-        ).alias("logloss"),
-        F.round(
-            F.avg(
-                F.when(
-                    (p >= 0.5) == (F.col("y") == 1.0), 1.0
-                ).otherwise(0.0)
-            ),
-            6,
-        ).alias("accuracy"),
+        F.round(F.avg(_logloss(p)), 6).alias("logloss"),
+        F.round(F.avg(_hit(p)), 6).alias("accuracy"),
     )
 
 
@@ -246,7 +302,7 @@ _NB_ORACLE = f"""WITH toks AS (
   SELECT doc_id, lang,
          {split_hash_sql()} % 10 < {TRAIN_BUCKETS} AS is_train,
          t
-  FROM documents, UNNEST({_SQL_TOKENS}) AS u(t)
+  FROM documents, UNNEST({space_tokens_sql()}) AS u(t)
 ),
 train_counts AS (
   SELECT lang, t, CAST(COUNT(*) AS DOUBLE) AS cnt
@@ -313,7 +369,7 @@ def ml_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fix is the materialized token table (s19). OPTIMIZATION_r12.md.
     toks = docs.select(
         "doc_id", "lang", is_train.alias("is_train"),
-        F.explode(_tokens(F.col("text"))).alias("t"),
+        F.explode(space_tokens(F.col("text"))).alias("t"),
     )
     train = toks.filter("is_train")
     test = toks.filter(~F.col("is_train"))
@@ -372,9 +428,17 @@ def ml_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ calibration audits
 
-_CAL_SCORE_SQL = (
-    f"1.0 / (1.0 + EXP(-({CAL_W[0]} + {CAL_W[1]} * x1 + {CAL_W[2]} * x2)))"
-)
+#: The pinned scorer's probability over ``feats`` columns.
+_CAL_SCORE_SQL = _sigmoid_sql(_logit_sql(CAL_W, ("x1", "x2")))
+
+#: The pinned scorer against the contains-'the' label: ``lang``, ``y``
+#: and the 6dp-quantized ``s``. GROUP BY s is tie-structure-sensitive
+#: to the score's last ulp (same convention + rationale as _ROC_ORACLE).
+_SCORED_THE_CTE = f"""scored AS (
+  SELECT d.lang, {the_label_sql("d.text")} AS y,
+         ROUND({_CAL_SCORE_SQL}, 6) AS s
+  FROM feats JOIN documents d USING (doc_id)
+)"""
 
 _CAL_BINS_ORACLE = f"""WITH {_FEATS_CTE},
 scored AS (
@@ -389,13 +453,10 @@ GROUP BY 1 ORDER BY 1"""
 
 
 def _cal_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * F.col("x1")
-        + F.lit(CAL_W[2]) * F.col("x2")
-    )
-    return _feats(spark, sf_dir).select(
-        "y", (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("s")
+    """:func:`_doc_feats` plus the pinned scorer's probability ``s``
+    (unquantized: the quantized callers round it themselves)."""
+    return _doc_feats(spark, sf_dir).withColumn(
+        "s", _sigmoid(_logit(CAL_W, ("x1", "x2")))
     )
 
 
@@ -671,46 +732,19 @@ SWEEP_LRS = (0.5, 1.0, 2.0)
 
 
 def _sweep_oracle() -> str:
-    """Per-LR unrolled GD chains + one shared scoring pass: the CTE
-    mirror of training ALL configs in the same scans."""
+    """Per-LR unrolled GD chains (:func:`_gd_chain_sql`) + one shared
+    scoring pass: the CTE mirror of training ALL configs in the same
+    scans."""
     parts = [_FEATS_CTE]
     finals = []
     for ci, lr in enumerate(SWEEP_LRS):
-        prev = None
-        for it in range(GD_ITERS):
-            z = (
-                "0.0"
-                if prev is None
-                else f"{prev}.wb + {prev}.w1 * x1 + {prev}.w2 * x2 + {prev}.w3 * x3"
-            )
-            src = "feats" if prev is None else f"feats, {prev}"
-            parts.append(
-                f"""g{ci}_{it} AS (
-  SELECT AVG(1.0 / (1.0 + EXP(-({z}))) - y) AS gb,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x1) AS g1,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x2) AS g2,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x3) AS g3
-  FROM {src}
-)"""
-            )
-            wsrc = f"g{ci}_{it}" if prev is None else f"g{ci}_{it}, {prev}"
-            wb = "0.0" if prev is None else f"{prev}.wb"
-            w1 = "0.0" if prev is None else f"{prev}.w1"
-            w2 = "0.0" if prev is None else f"{prev}.w2"
-            w3 = "0.0" if prev is None else f"{prev}.w3"
-            parts.append(
-                f"""w{ci}_{it} AS (
-  SELECT {wb} - {lr} * gb AS wb, {w1} - {lr} * g1 AS w1,
-         {w2} - {lr} * g2 AS w2, {w3} - {lr} * g3 AS w3
-  FROM {wsrc}
-)"""
-            )
-            prev = f"w{ci}_{it}"
+        chain, w = _gd_chain_sql(f"{ci}_", lr, "feats")
+        parts += chain
         finals.append(
-            f"SELECT CAST({lr} AS DOUBLE) AS lr, wb, w1, w2, w3 FROM {prev}"
+            f"SELECT CAST({lr} AS DOUBLE) AS lr, wb, w1, w2, w3 FROM {w}"
         )
     parts.append("sweep AS (" + " UNION ALL ".join(finals) + ")")
-    p = "1.0 / (1.0 + EXP(-(wb + w1 * x1 + w2 * x2 + w3 * x3)))"
+    p = _sigmoid_sql(_logit_sql(("wb", "w1", "w2", "w3")))
     return (
         "WITH "
         + ",\n".join(parts)
@@ -720,9 +754,8 @@ SELECT lr,
        ROUND(ANY_VALUE(w1), 6) AS w_x1,
        ROUND(ANY_VALUE(w2), 6) AS w_x2,
        ROUND(ANY_VALUE(w3), 6) AS w_x3,
-       ROUND(AVG(-(y * LN({p}) + (1.0 - y) * LN(1.0 - ({p})))), 6) AS logloss,
-       ROUND(AVG(CASE WHEN ({p} >= 0.5) = (y = 1.0) THEN 1.0 ELSE 0.0 END), 6)
-         AS accuracy
+       ROUND(AVG({_logloss_sql(p)}), 6) AS logloss,
+       ROUND(AVG({_hit_sql(p)}), 6) AS accuracy
 FROM feats CROSS JOIN sweep
 GROUP BY lr ORDER BY lr"""
     )
@@ -741,46 +774,12 @@ def ml_lr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scoring is one final pass with the 3-row weight table broadcast."""
     feats = _feats(spark, sf_dir)
     bsp.persist(feats)
-    ws = {lr: [0.0, 0.0, 0.0, 0.0] for lr in SWEEP_LRS}
-    for _ in range(GD_ITERS):
-        aggs = []
-        for ci, lr in enumerate(SWEEP_LRS):
-            w = ws[lr]
-            z = (
-                F.lit(w[0])
-                + F.lit(w[1]) * F.col("x1")
-                + F.lit(w[2]) * F.col("x2")
-                + F.lit(w[3]) * F.col("x3")
-            )
-            resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-            aggs += [
-                F.avg(resid).alias(f"gb_{ci}"),
-                F.avg(resid * F.col("x1")).alias(f"g1_{ci}"),
-                F.avg(resid * F.col("x2")).alias(f"g2_{ci}"),
-                F.avg(resid * F.col("x3")).alias(f"g3_{ci}"),
-            ]
-        g = feats.agg(*aggs).collect()[0]
-        if g["gb_0"] is None:  # empty input: no gradients, w stays 0
-            break
-        for ci, lr in enumerate(SWEEP_LRS):
-            w = ws[lr]
-            ws[lr] = [
-                w[0] - lr * g[f"gb_{ci}"],
-                w[1] - lr * g[f"g1_{ci}"],
-                w[2] - lr * g[f"g2_{ci}"],
-                w[3] - lr * g[f"g3_{ci}"],
-            ]
+    ws = _gd_train(feats, [(lr, None) for lr in SWEEP_LRS])
     sweep = spark.createDataFrame(
-        [(float(lr), *ws[lr]) for lr in SWEEP_LRS],
+        [(float(lr), *w) for lr, w in zip(SWEEP_LRS, ws)],
         "lr double, wb double, w1 double, w2 double, w3 double",
     )
-    z = (
-        F.col("wb")
-        + F.col("w1") * F.col("x1")
-        + F.col("w2") * F.col("x2")
-        + F.col("w3") * F.col("x3")
-    )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+    p = _sigmoid(_logit([F.col(c) for c in ("wb", "w1", "w2", "w3")]))
     return (
         feats.crossJoin(F.broadcast(sweep))
         .groupBy("lr")
@@ -789,23 +788,8 @@ def ml_lr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.first("w1"), 6).alias("w_x1"),
             F.round(F.first("w2"), 6).alias("w_x2"),
             F.round(F.first("w3"), 6).alias("w_x3"),
-            F.round(
-                F.avg(
-                    -(
-                        F.col("y") * F.log(p)
-                        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
-                    )
-                ),
-                6,
-            ).alias("logloss"),
-            F.round(
-                F.avg(
-                    F.when((p >= 0.5) == (F.col("y") == 1.0), 1.0).otherwise(
-                        0.0
-                    )
-                ),
-                6,
-            ).alias("accuracy"),
+            F.round(F.avg(_logloss(p)), 6).alias("logloss"),
+            F.round(F.avg(_hit(p)), 6).alias("accuracy"),
         )
         .orderBy("lr")
     )
@@ -880,21 +864,11 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed at fixture group sizes. Certified by pytest KKT invariants
     (strictly increasing block means, mass conservation, exact planted
     solution) rather than a DuckDB oracle."""
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    ntok = F.size(toks)
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * (F.col("n_chars") / 500.0)
-        + F.lit(CAL_W[2]) * (ntok / 50.0)
-    )
     # Label varies WITHIN each lang group (unlike lang='en') and is
     # genuinely monotone-ish in the score: longer docs are more likely
     # to contain the common token.
-    scored = docs.select(
-        "lang",
-        F.when(F.array_contains(toks, "the"), 1.0).otherwise(0.0).alias("y"),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("s"),
+    scored = _cal_scored(spark, sf_dir).select(
+        "lang", F.col("y_the").alias("y"), "s"
     )
     return scored.groupBy("lang").applyInPandas(
         lambda pdf: _pava_blocks(pdf), schema=_ISO_SCHEMA
@@ -1162,14 +1136,7 @@ def ml_als_two_sweeps(spark: SparkSession, sf_dir: str) -> DataFrame:
 WOE_SMOOTH = 0.5
 
 _WOE_ORACLE = f"""WITH {_FEATS_CTE},
-scored AS (
-  -- 6dp-quantized score: GROUP BY s is tie-structure-sensitive to the
-  -- score's last ulp (same convention + rationale as _ROC_ORACLE)
-  SELECT CASE WHEN list_contains({_SQL_TOKENS.replace("text", "d.text")}, 'the')
-              THEN 1.0 ELSE 0.0 END AS y,
-         ROUND({_CAL_SCORE_SQL}, 6) AS s
-  FROM feats JOIN documents d USING (doc_id)
-),
+{_SCORED_THE_CTE},
 binned AS (
   SELECT LEAST(FLOOR(s * {CAL_BINS}), {CAL_BINS - 1}) AS bin, y FROM scored
 ),
@@ -1203,20 +1170,12 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution is ≥ 0 by construction, so the audit is also a
     per-bin sanity check. One scan, one 10-group aggregate, a 1-row
     totals broadcast."""
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    ntok = F.size(toks)
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * (F.col("n_chars") / 500.0)
-        + F.lit(CAL_W[2]) * (ntok / 50.0)
-    )
-    scored = docs.select(
-        F.when(F.array_contains(toks, "the"), 1.0).otherwise(0.0).alias("y"),
+    scored = _cal_scored(spark, sf_dir).select(
+        F.col("y_the").alias("y"),
         # 6dp-quantized BEFORE binning, matching the oracle: the FLOOR
         # bin edge is last-ulp sensitive exactly like a rank tie (see
         # ml_roc_auc's rationale)
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("s"),
+        F.round("s", 6).alias("s"),
     )
     binned = scored.select(
         F.least(F.floor(F.col("s") * CAL_BINS), F.lit(CAL_BINS - 1)).alias("bin"),
@@ -1253,9 +1212,7 @@ def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
 TE_SMOOTH = 10.0
 
 _TE_ORACLE = f"""WITH lab AS (
-  SELECT doc_id, source,
-         CASE WHEN list_contains({_SQL_TOKENS}, 'the')
-              THEN 1.0 ELSE 0.0 END AS y
+  SELECT doc_id, source, {the_label_sql()} AS y
   FROM documents
 ),
 prior AS (SELECT AVG(y) AS mu FROM lab),
@@ -1282,13 +1239,7 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is |categories|-sized — the encoder ships as a tiny side
     table, but the LOO correction stays per-row by construction."""
     docs = load_raw(spark, sf_dir, "documents")
-    lab = docs.select(
-        "doc_id",
-        "source",
-        F.when(F.array_contains(_tokens(F.col("text")), "the"), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    )
+    lab = docs.select("doc_id", "source", the_label(F.col("text")).alias("y"))
     prior = lab.agg(F.avg("y").alias("mu"))
     grp = lab.groupBy("source").agg(
         F.sum("y").alias("ysum"), F.count("*").alias("n")
@@ -1325,8 +1276,8 @@ scored AS (
 ),
 per_fold AS (
   SELECT fold, CAST(COUNT(*) AS BIGINT) AS n,
-         AVG(-(y * LN(s) + (1.0 - y) * LN(1.0 - s))) AS logloss,
-         AVG(CASE WHEN (s >= 0.5) = (y = 1.0) THEN 1.0 ELSE 0.0 END) AS acc
+         AVG({_logloss_sql("s")}) AS logloss,
+         AVG({_hit_sql("s")}) AS acc
   FROM scored GROUP BY fold
 )
 SELECT fold, n, ROUND(logloss, 6) AS logloss, ROUND(acc, 6) AS accuracy,
@@ -1344,28 +1295,13 @@ def ml_kfold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is signal or split noise. One scan, one {_KFOLD_K}-group aggregate,
     one {_KFOLD_K}-row window; the scorer is a plan constant, so this
     composes behind any model table at any scale."""
-    feats = _feats(spark, sf_dir)
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * F.col("x1")
-        + F.lit(CAL_W[2]) * F.col("x2")
-    )
-    scored = feats.select(
-        (split_hash("doc_id") % _KFOLD_K).cast("int").alias("fold"),
-        "y",
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("s"),
+    scored = _cal_scored(spark, sf_dir).select(
+        (split_hash("doc_id") % _KFOLD_K).cast("int").alias("fold"), "y", "s"
     )
     per_fold = scored.groupBy("fold").agg(
         F.count("*").alias("n"),
-        F.avg(
-            -(
-                F.col("y") * F.log("s")
-                + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - F.col("s"))
-            )
-        ).alias("logloss_raw"),
-        F.avg(
-            F.when((F.col("s") >= 0.5) == (F.col("y") == 1.0), 1.0).otherwise(0.0)
-        ).alias("acc_raw"),
+        F.avg(_logloss(F.col("s"))).alias("logloss_raw"),
+        F.avg(_hit(F.col("s"))).alias("acc_raw"),
     )
     w = Window.partitionBy()
     return per_fold.select(
@@ -1380,30 +1316,72 @@ def ml_kfold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ decision stump
 
-_STUMP_ORACLE = f"""WITH {_FEATS_CTE},
-pts AS (SELECT x1 AS x, y FROM feats),
-tot AS (
-  SELECT SUM(y) AS tp, CAST(COUNT(*) AS BIGINT) AS n FROM pts
-),
-cand AS (
-  -- candidate split AFTER each distinct x: cumulative (n, pos) on the left
-  SELECT x, SUM(cnt) OVER w AS nl, SUM(pos) OVER w AS pl
-  FROM (SELECT x, CAST(COUNT(*) AS BIGINT) AS cnt, SUM(y) AS pos
-        FROM pts GROUP BY x)
-  WINDOW w AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-scored AS (
-  SELECT x AS threshold, nl, tot.n - nl AS nr, pl, tot.tp - pl AS pr,
-         -- weighted Gini impurity of the split (lower = better)
+def _gini_split_sql(src: str, key: str) -> str:
+    """CTE body: every candidate split AFTER a distinct ``key`` value of
+    CTE ``src`` (columns ``key``, ``y``) — the cumulative left-side
+    (n, positives) from ONE ordered window scan — with its weighted
+    Gini impurity ``gini`` (lower = better) and ``gini_parent``.
+    Shared by ml_decision_stump and ml_histogram_split."""
+    return f"""(
+  SELECT {key}, nl, tot.n - nl AS nr, pl, tot.tp - pl AS pr,
          (nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
           + (tot.n - nl) * (2.0 * ((tot.tp - pl) / (tot.n - nl))
                             * (1.0 - (tot.tp - pl) / (tot.n - nl)))) / tot.n
            AS gini,
          2.0 * (tot.tp / tot.n) * (1.0 - tot.tp / tot.n) AS gini_parent
-  FROM cand CROSS JOIN tot
+  FROM (
+    SELECT {key}, SUM(cnt) OVER w AS nl, SUM(pos) OVER w AS pl
+    FROM (SELECT {key}, CAST(COUNT(*) AS BIGINT) AS cnt, SUM(y) AS pos
+          FROM {src} GROUP BY {key})
+    WINDOW w AS (ORDER BY {key} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+  ) cand
+  CROSS JOIN (SELECT SUM(y) AS tp, CAST(COUNT(*) AS BIGINT) AS n FROM {src}) tot
   WHERE nl < tot.n  -- a split must leave something on the right
-)
-SELECT ROUND(threshold, 6) AS threshold,
+)"""
+
+
+def _gini_split_frame(pts: DataFrame, key: str) -> DataFrame:
+    """Spark twin of :func:`_gini_split_sql`: per candidate split
+    ``key``, ``nl``/``nr``, ``pl``/``pr``, the weighted Gini ``gini``
+    and ``gain`` = parent Gini − ``gini``. One groupBy on the key, one
+    cumulative window over its distinct values, a broadcast 1-row
+    total."""
+    tot = pts.agg(F.sum("y").alias("tp"), F.count("*").alias("n"))
+    by_key = pts.groupBy(key).agg(
+        F.count("*").alias("cnt"), F.sum("y").alias("pos")
+    )
+    w = Window.orderBy(key).rowsBetween(Window.unboundedPreceding, 0)
+    cand = by_key.select(
+        key,
+        F.sum("cnt").over(w).alias("nl"),
+        F.sum("pos").over(w).alias("pl"),
+    )
+    j = cand.crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
+    pl, nl = F.col("pl"), F.col("nl")
+    pr = F.col("tp") - pl
+    nr = F.col("n") - nl
+    gini = (
+        nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
+        + nr * (2.0 * (pr / nr) * (1.0 - pr / nr))
+    ) / F.col("n")
+    gini_parent = (
+        2.0 * (F.col("tp") / F.col("n")) * (1.0 - F.col("tp") / F.col("n"))
+    )
+    return j.select(
+        key,
+        "nl",
+        nr.alias("nr"),
+        "pl",
+        pr.alias("pr"),
+        gini.alias("gini"),
+        (gini_parent - gini).alias("gain"),
+    )
+
+
+_STUMP_ORACLE = f"""WITH {_FEATS_CTE},
+pts AS (SELECT x1 AS x, y FROM feats),
+scored AS {_gini_split_sql("pts", "x")}
+SELECT ROUND(x, 6) AS threshold,
        CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right,
        ROUND(pl / nl, 6) AS rate_left,
        ROUND(pr / nr, 6) AS rate_right,
@@ -1421,46 +1399,36 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature value, ONE ordered cumulative scan gives the left-side
     (count, positives) at every candidate threshold simultaneously,
     and the best split is an argmin over the Gini of the induced
-    partition. No per-threshold passes: |thresholds| candidates cost
-    one sort. At 100 TB the standard scale move is identical shape on
-    quantized bins (the histogram trick — XGBoost/LightGBM's
-    'approx'): replace the distinct-value grouping with a fixed-bin
-    grouping and the scan shrinks to 256 rows per feature."""
-    feats = _feats(spark, sf_dir).select(F.col("x1").alias("x"), "y")
-    tot = feats.agg(F.sum("y").alias("tp"), F.count("*").alias("n"))
-    by_x = feats.groupBy("x").agg(
-        F.count("*").alias("cnt"), F.sum("y").alias("pos")
-    )
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cand = by_x.select(
-        "x",
-        F.sum("cnt").over(w).alias("nl"),
-        F.sum("pos").over(w).alias("pl"),
-    )
-    j = cand.crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
-    pl, nl = F.col("pl"), F.col("nl")
-    pr = F.col("tp") - pl
-    nr = F.col("n") - nl
-    gini = (
-        nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
-        + nr * (2.0 * (pr / nr) * (1.0 - pr / nr))
-    ) / F.col("n")
-    gini_parent = (
-        2.0 * (F.col("tp") / F.col("n")) * (1.0 - F.col("tp") / F.col("n"))
-    )
-    scored = j.select(
+    partition (:func:`_gini_split_frame`). No per-threshold passes:
+    |thresholds| candidates cost one sort. At 100 TB the standard
+    scale move is identical shape on quantized bins (the histogram
+    trick — XGBoost/LightGBM's 'approx', ml_histogram_split): replace
+    the distinct-value grouping with a fixed-bin grouping and the scan
+    shrinks to 256 rows per feature."""
+    pts = _feats(spark, sf_dir).select(F.col("x1").alias("x"), "y")
+    nl, nr = F.col("nl"), F.col("nr")
+    scored = _gini_split_frame(pts, "x").select(
         F.round(F.col("x"), 6).alias("threshold"),
         nl.alias("n_left"),
         nr.alias("n_right"),
-        F.round(pl / nl, 6).alias("rate_left"),
-        F.round(pr / nr, 6).alias("rate_right"),
-        F.round(gini, 6).alias("gini_split"),
-        F.round(gini_parent - gini, 6).alias("gain"),
+        F.round(F.col("pl") / nl, 6).alias("rate_left"),
+        F.round(F.col("pr") / nr, 6).alias("rate_right"),
+        F.round("gini", 6).alias("gini_split"),
+        F.round("gain", 6).alias("gain"),
     )
     return scored.orderBy(F.desc("gain"), F.asc("threshold")).limit(1)
 
 
 # ------------------------------------------------ ROC / exact AUC
+
+
+def _threshold_spine(spark: SparkSession) -> DataFrame:
+    """The 11 score thresholds ``thr`` = 0.0, 0.1, …, 1.0 shared by the
+    ROC curve and the confusion sweep."""
+    return spark.range(0, 11).select(
+        (F.col("id").cast("double") / 10).alias("thr")
+    )
+
 
 _ROC_ORACLE = f"""WITH {_FEATS_CTE},
 -- s quantized to 6dp BEFORE ranking: the midrank AUC's tie structure
@@ -1547,9 +1515,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("auc")
         )
     )
-    spine = spark.range(0, 11).select(
-        (F.col("id").cast("double") / 10).alias("thr")
-    )
+    spine = _threshold_spine(spark)
     pts = (
         scored.crossJoin(F.broadcast(spine))
         .crossJoin(F.broadcast(tot))
@@ -1599,22 +1565,7 @@ pts AS (
   SELECT LEAST(FLOOR(x1 / 2.0 * {HIST_BINS}), {HIST_BINS - 1}) AS bin, y
   FROM feats
 ),
-tot AS (SELECT SUM(y) AS tp, CAST(COUNT(*) AS BIGINT) AS n FROM pts),
-cand AS (
-  SELECT bin, SUM(cnt) OVER w AS nl, SUM(pos) OVER w AS pl
-  FROM (SELECT bin, CAST(COUNT(*) AS BIGINT) AS cnt, SUM(y) AS pos
-        FROM pts GROUP BY bin)
-  WINDOW w AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-scored AS (
-  SELECT bin, nl, tot.n - nl AS nr, pl, tot.tp - pl AS pr,
-         (nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
-          + (tot.n - nl) * (2.0 * ((tot.tp - pl) / (tot.n - nl))
-                            * (1.0 - (tot.tp - pl) / (tot.n - nl)))) / tot.n
-           AS gini,
-         2.0 * (tot.tp / tot.n) * (1.0 - tot.tp / tot.n) AS gini_parent
-  FROM cand CROSS JOIN tot WHERE nl < tot.n
-)
+scored AS {_gini_split_sql("pts", "bin")}
 SELECT CAST(bin AS BIGINT) AS split_bin,
        ROUND((bin + 1) * 2.0 / {HIST_BINS}, 6) AS threshold,
        CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right,
@@ -1633,41 +1584,20 @@ def ml_histogram_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combinable (bin → count, positives) aggregate. The
     exact/approx pair on the same data lets pytest bound the gain the
     quantization gives up."""
-    feats = _feats(spark, sf_dir)
-    pts = feats.select(
+    pts = _feats(spark, sf_dir).select(
         F.least(
             F.floor(F.col("x1") / 2.0 * HIST_BINS), F.lit(HIST_BINS - 1)
         ).alias("bin"),
         "y",
     )
-    tot = pts.agg(F.sum("y").alias("tp"), F.count("*").alias("n"))
-    by_bin = pts.groupBy("bin").agg(
-        F.count("*").alias("cnt"), F.sum("y").alias("pos")
-    )
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cand = by_bin.select(
-        "bin",
-        F.sum("cnt").over(w).alias("nl"),
-        F.sum("pos").over(w).alias("pl"),
-    )
-    j = cand.crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
-    pl, nl = F.col("pl"), F.col("nl")
-    pr = F.col("tp") - pl
-    nr = F.col("n") - nl
-    gini = (
-        nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
-        + nr * (2.0 * (pr / nr) * (1.0 - pr / nr))
-    ) / F.col("n")
-    gini_parent = (
-        2.0 * (F.col("tp") / F.col("n")) * (1.0 - F.col("tp") / F.col("n"))
-    )
     return (
-        j.select(
+        _gini_split_frame(pts, "bin")
+        .select(
             F.col("bin").cast("long").alias("split_bin"),
             F.round((F.col("bin") + 1) * 2.0 / HIST_BINS, 6).alias("threshold"),
-            nl.cast("long").alias("n_left"),
-            nr.cast("long").alias("n_right"),
-            F.round(gini_parent - gini, 6).alias("gain"),
+            F.col("nl").cast("long").alias("n_left"),
+            F.col("nr").cast("long").alias("n_right"),
+            F.round("gain", 6).alias("gain"),
         )
         .orderBy(F.desc("gain"), F.asc("split_bin"))
         .limit(1)
@@ -1969,62 +1899,28 @@ CURVE_FRACTIONS = (0.1, 0.3, 1.0)
 
 
 def _curve_oracle() -> str:
-    """Per-fraction unrolled GD over the masked subset; every fraction's
-    gradients come from the same feats CTE (one scan's worth per
-    iteration when executed by Spark)."""
+    """Per-fraction unrolled GD (:func:`_gd_chain_sql`) over the masked
+    subset; every fraction's gradients come from the same feats CTE
+    (one scan's worth per iteration when executed by Spark)."""
     parts = [
         _FEATS_CTE.replace(
-            "FROM documents",
-            f"FROM documents",
+            "  FROM documents",
+            f"""         , {split_hash_sql()} % 10 AS bucket
+  FROM documents""",
         )
     ]
-    parts[0] = parts[0].replace(
-        "  FROM documents",
-        f"""         , {split_hash_sql()} % 10 AS bucket
-  FROM documents""",
-    )
     finals = []
     for ci, frac in enumerate(CURVE_FRACTIONS):
         nbuck = int(round(frac * 10))
-        prev = None
-        for it in range(GD_ITERS):
-            z = (
-                "0.0"
-                if prev is None
-                else f"{prev}.wb + {prev}.w1 * x1 + {prev}.w2 * x2 + {prev}.w3 * x3"
-            )
-            src = (
-                f"(SELECT * FROM feats WHERE bucket < {nbuck})"
-                if prev is None
-                else f"(SELECT * FROM feats WHERE bucket < {nbuck}), {prev}"
-            )
-            parts.append(
-                f"""cg{ci}_{it} AS (
-  SELECT AVG(1.0 / (1.0 + EXP(-({z}))) - y) AS gb,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x1) AS g1,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x2) AS g2,
-         AVG((1.0 / (1.0 + EXP(-({z}))) - y) * x3) AS g3
-  FROM {src}
-)"""
-            )
-            wsrc = f"cg{ci}_{it}" if prev is None else f"cg{ci}_{it}, {prev}"
-            wb = "0.0" if prev is None else f"{prev}.wb"
-            w1 = "0.0" if prev is None else f"{prev}.w1"
-            w2 = "0.0" if prev is None else f"{prev}.w2"
-            w3 = "0.0" if prev is None else f"{prev}.w3"
-            parts.append(
-                f"""cw{ci}_{it} AS (
-  SELECT {wb} - {GD_LR} * gb AS wb, {w1} - {GD_LR} * g1 AS w1,
-         {w2} - {GD_LR} * g2 AS w2, {w3} - {GD_LR} * g3 AS w3
-  FROM {wsrc}
-)"""
-            )
-            prev = f"cw{ci}_{it}"
+        chain, w = _gd_chain_sql(
+            f"{ci}_", GD_LR, f"(SELECT * FROM feats WHERE bucket < {nbuck})"
+        )
+        parts += chain
         finals.append(
-            f"SELECT {frac} AS fraction, {nbuck} AS n_buckets, wb, w1, w2, w3 FROM {prev}"
+            f"SELECT {frac} AS fraction, {nbuck} AS n_buckets, wb, w1, w2, w3 FROM {w}"
         )
     parts.append("curve AS (" + " UNION ALL ".join(finals) + ")")
-    p = "1.0 / (1.0 + EXP(-(wb + w1 * x1 + w2 * x2 + w3 * x3)))"
+    ll = _logloss_sql(_sigmoid_sql(_logit_sql(("wb", "w1", "w2", "w3"))))
     return (
         "WITH "
         + ",\n".join(parts)
@@ -2032,11 +1928,9 @@ def _curve_oracle() -> str:
 SELECT fraction,
        CAST(SUM(CASE WHEN bucket < n_buckets THEN 1 ELSE 0 END) AS BIGINT)
          AS n_train,
-       ROUND(AVG(CASE WHEN bucket < n_buckets
-                 THEN -(y * LN({p}) + (1.0 - y) * LN(1.0 - ({p}))) END), 6)
+       ROUND(AVG(CASE WHEN bucket < n_buckets THEN {ll} END), 6)
          AS train_logloss,
-       ROUND(AVG(-(y * LN({p}) + (1.0 - y) * LN(1.0 - ({p})))), 6)
-         AS full_logloss
+       ROUND(AVG({ll}), 6) AS full_logloss
 FROM feats CROSS JOIN curve
 GROUP BY fraction, n_buckets ORDER BY fraction"""
     )
@@ -2051,70 +1945,25 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate whose per-fraction gradients are masked averages of the
     same scanned rows (`AVG(CASE WHEN bucket < k …)`), so the whole
     curve costs K passes — not K×|fractions| — and the subsets nest by
-    construction (bucket < 1 ⊂ bucket < 3 ⊂ all)."""
+    construction (bucket < 1 ⊂ bucket < 3 ⊂ all). An empty subset's
+    weights are NaN (:func:`_gd_train`), which canonicalizes to the
+    oracle's NULL."""
     feats = _feats(spark, sf_dir).withColumn(
         "bucket", split_hash("doc_id") % 10
     )
     bsp.persist(feats)
-    ws = {f: [0.0, 0.0, 0.0, 0.0] for f in CURVE_FRACTIONS}
-    for _ in range(GD_ITERS):
-        aggs = []
-        for ci, frac in enumerate(CURVE_FRACTIONS):
-            nbuck = int(round(frac * 10))
-            w = ws[frac]
-            z = (
-                F.lit(w[0])
-                + F.lit(w[1]) * F.col("x1")
-                + F.lit(w[2]) * F.col("x2")
-                + F.lit(w[3]) * F.col("x3")
-            )
-            resid = F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("y")
-            mask = F.when(F.col("bucket") < nbuck, resid)
-            aggs += [
-                F.avg(mask).alias(f"gb_{ci}"),
-                F.avg(mask * F.col("x1")).alias(f"g1_{ci}"),
-                F.avg(mask * F.col("x2")).alias(f"g2_{ci}"),
-                F.avg(mask * F.col("x3")).alias(f"g3_{ci}"),
-            ]
-        g = feats.agg(*aggs).collect()[0]
-        if all(
-            g[f"gb_{ci}"] is None for ci in range(len(CURVE_FRACTIONS))
-        ):
-            break
-        for ci, frac in enumerate(CURVE_FRACTIONS):
-            # an empty subset (e.g. bucket<1 matched no rows) yields
-            # NULL gradients — poison that config's weights with NaN,
-            # truly mirroring the oracle's NULL propagation (its NULL
-            # AVG makes every later weight and the fitted loglosses
-            # NULL; NaN canonicalizes to the same NULL in the gate)
-            if g[f"gb_{ci}"] is None:
-                ws[frac] = [float("nan")] * 4
-                continue
-            w = ws[frac]
-            ws[frac] = [
-                w[0] - GD_LR * g[f"gb_{ci}"],
-                w[1] - GD_LR * g[f"g1_{ci}"],
-                w[2] - GD_LR * g[f"g2_{ci}"],
-                w[3] - GD_LR * g[f"g3_{ci}"],
-            ]
+    nbucks = [int(round(f * 10)) for f in CURVE_FRACTIONS]
+    ws = _gd_train(feats, [(GD_LR, F.col("bucket") < nb) for nb in nbucks])
     curve = spark.createDataFrame(
         [
-            (float(f), int(round(f * 10)), *ws[f])
-            for f in CURVE_FRACTIONS
+            (float(f), nb, *w)
+            for f, nb, w in zip(CURVE_FRACTIONS, nbucks, ws)
         ],
         "fraction double, n_buckets int, wb double, w1 double, "
         "w2 double, w3 double",
     )
-    z = (
-        F.col("wb")
-        + F.col("w1") * F.col("x1")
-        + F.col("w2") * F.col("x2")
-        + F.col("w3") * F.col("x3")
-    )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    ll = -(
-        F.col("y") * F.log(p)
-        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - p)
+    ll = _logloss(
+        _sigmoid(_logit([F.col(c) for c in ("wb", "w1", "w2", "w3")]))
     )
     return (
         feats.crossJoin(F.broadcast(curve))
@@ -2139,14 +1988,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ average precision
 
 _AP_ORACLE = f"""WITH {_FEATS_CTE},
-scored AS (
-  -- 6dp-quantized score: GROUP BY s is tie-structure-sensitive to the
-  -- score's last ulp (same convention + rationale as _ROC_ORACLE)
-  SELECT CASE WHEN list_contains({_SQL_TOKENS.replace("text", "d.text")}, 'the')
-              THEN 1.0 ELSE 0.0 END AS y,
-         ROUND({_CAL_SCORE_SQL}, 6) AS s
-  FROM feats JOIN documents d USING (doc_id)
-),
+{_SCORED_THE_CTE},
 by_s AS (
   SELECT s, SUM(y) AS pos, CAST(COUNT(*) AS DOUBLE) AS cnt FROM scored GROUP BY s
 ),
@@ -2179,18 +2021,10 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct s| pre-aggregated rows (never a global per-row rank),
     each score group contributing its positives at the group's
     trailing precision tp/k."""
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    ntok = F.size(toks)
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * (F.col("n_chars") / 500.0)
-        + F.lit(CAL_W[2]) * (ntok / 50.0)
-    )
-    scored = docs.select(
-        F.when(F.array_contains(toks, "the"), 1.0).otherwise(0.0).alias("y"),
+    scored = _cal_scored(spark, sf_dir).select(
+        F.col("y_the").alias("y"),
         # 6dp-quantized before the GROUP BY: see ml_roc_auc's rationale
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("s"),
+        F.round("s", 6).alias("s"),
     )
     by_s = scored.groupBy("s").agg(
         F.sum("y").alias("pos"), F.count("*").cast("double").alias("cnt")
@@ -2239,20 +2073,15 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the dominant feature — the explain-this-score column every
     curation review UI needs. One 1-row means broadcast + a pure
     projection; the top-K is a rank prune."""
-    feats = _feats(spark, sf_dir)
-    mu = feats.agg(F.avg("x1").alias("m1"), F.avg("x2").alias("m2"))
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * F.col("x1")
-        + F.lit(CAL_W[2]) * F.col("x2")
-    )
+    scored = _cal_scored(spark, sf_dir)
+    mu = scored.agg(F.avg("x1").alias("m1"), F.avg("x2").alias("m2"))
     c1 = F.lit(CAL_W[1]) * (F.col("x1") - F.col("m1"))
     c2 = F.lit(CAL_W[2]) * (F.col("x2") - F.col("m2"))
     return (
-        feats.crossJoin(F.broadcast(mu))
+        scored.crossJoin(F.broadcast(mu))
         .select(
             "doc_id",
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
+            F.round("s", 6).alias("score"),
             F.round(c1, 6).alias("contrib_x1"),
             F.round(c2, 6).alias("contrib_x2"),
             F.when(F.abs(c1) >= F.abs(c2), "x1").otherwise("x2").alias(
@@ -2274,37 +2103,18 @@ RIDGE_LAMBDA = 1.0
 
 
 def _ridge_oracle() -> str:
-    from .events_props import _cramer4
+    from .events_props import _ols4_sql
 
-    d, d0, d1, d2, d3 = _cramer4()
-    moms = ", ".join(
-        f"SUM(f{i} * f{j})"
-        + (f" + {RIDGE_LAMBDA}" if i == j else "")
-        + f" AS m{i}{j}"
-        for i in range(4)
-        for j in range(i, 4)
-    )
-    bs = ", ".join(f"SUM(f{i} * y) AS b{i}" for i in range(4))
+    ols, r2 = _ols4_sql("n", ridge=RIDGE_LAMBDA)
     return f"""WITH {_FEATS_CTE},
 f AS (SELECT y, 1.0 AS f0, x1 AS f1, x2 AS f2, x3 AS f3 FROM feats),
-mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, {moms}, {bs},
-               SUM(y) AS sy, SUM(y * y) AS syy FROM f),
-beta AS (
-  SELECT n, sy, syy,
-         {d0} / {d} AS c0, {d1} / {d} AS c1,
-         {d2} / {d} AS c2, {d3} / {d} AS c3
-  FROM mom
-)
+{ols}
 SELECT ANY_VALUE(beta.n) AS n,
        ROUND(ANY_VALUE(c0), 6) AS w_bias,
        ROUND(ANY_VALUE(c1), 6) AS w_x1,
        ROUND(ANY_VALUE(c2), 6) AS w_x2,
        ROUND(ANY_VALUE(c3), 6) AS w_x3,
-       ROUND(1.0 - SUM((y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3))
-                       * (y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3)))
-                   / (ANY_VALUE(syy)
-                      - ANY_VALUE(sy) * ANY_VALUE(sy) / ANY_VALUE(beta.n)),
-             6) AS r2
+       ROUND({r2}, 6) AS r2
 FROM f CROSS JOIN beta"""
 
 
@@ -2314,70 +2124,31 @@ def ml_ridge_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     the en label on the 3 doc features): one pass accumulates the 4×4
     Gram matrix + feature·target moments, λ=1 rides on the diagonal,
     and Cramer's rule solves the normal equations INSIDE the plan —
-    the same engine-embedded `_cramer4` algebra as
-    ev_harmonic_regression, so Spark and DuckDB execute literally the
-    same determinant expressions. Complements ml_logreg_gd: GD is the
+    the normal-equation solve shared with ev_harmonic_regression
+    (``events_props._ols4`` / ``_ols4_sql``, Cramer's rule via
+    ``_cramer4``), so Spark and DuckDB execute literally the same
+    determinant expressions. Complements ml_logreg_gd: GD is the
     iterative path (K passes), this is the one-pass exact path — at
     100 TB the moments are a map-side-combinable 14-double aggregate
     and the solve is O(1) on the driver-free 1-row relation. A second
     pass scores R² against the broadcast coefficients."""
-    feats = _feats(spark, sf_dir)
-    f = feats.select(
+    from .events_props import _ols4
+
+    f = _feats(spark, sf_dir).select(
         "y",
         F.lit(1.0).alias("f0"),
         F.col("x1").alias("f1"),
         F.col("x2").alias("f2"),
         F.col("x3").alias("f3"),
     )
-    moms = [
-        (
-            F.sum(F.col(f"f{i}") * F.col(f"f{j}"))
-            + (F.lit(float(RIDGE_LAMBDA)) if i == j else F.lit(0.0))
-        ).alias(f"m{i}{j}")
-        for i in range(4)
-        for j in range(i, 4)
-    ]
-    bs = [F.sum(F.col(f"f{i}") * F.col("y")).alias(f"b{i}") for i in range(4)]
-    mom = f.agg(
-        F.count("*").alias("n"),
-        *moms,
-        *bs,
-        F.sum("y").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    from .events_props import _cramer4
-
-    d, d0, d1, d2, d3 = _cramer4()
-    beta = mom.select(
-        "n",
-        "sy",
-        "syy",
-        F.expr(f"{d0} / {d}").alias("c0"),
-        F.expr(f"{d1} / {d}").alias("c1"),
-        F.expr(f"{d2} / {d}").alias("c2"),
-        F.expr(f"{d3} / {d}").alias("c3"),
-    )
-    fit = (
-        F.col("c0") * F.col("f0")
-        + F.col("c1") * F.col("f1")
-        + F.col("c2") * F.col("f2")
-        + F.col("c3") * F.col("f3")
-    )
-    return f.crossJoin(F.broadcast(beta)).agg(
+    fitted, r2 = _ols4(f, "n", ridge=RIDGE_LAMBDA)
+    return fitted.agg(
         F.first("n").alias("n"),
         F.round(F.first("c0"), 6).alias("w_bias"),
         F.round(F.first("c1"), 6).alias("w_x1"),
         F.round(F.first("c2"), 6).alias("w_x2"),
         F.round(F.first("c3"), 6).alias("w_x3"),
-        F.round(
-            1.0
-            - F.sum((F.col("y") - fit) * (F.col("y") - fit))
-            / (
-                F.first("syy")
-                - F.first("sy") * F.first("sy") / F.first("n")
-            ),
-            6,
-        ).alias("r2"),
+        F.round(r2, 6).alias("r2"),
     )
 
 
@@ -2422,9 +2193,7 @@ def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _cal_scored(spark, sf_dir).select(
         "y", F.round("s", 6).alias("s")
     )
-    spine = spark.range(0, 11).select(
-        (F.col("id").cast("double") / 10).alias("thr")
-    )
+    spine = _threshold_spine(spark)
     pred = F.col("s") >= F.col("thr")
     pos = F.col("y") == 1.0
     tp = F.sum(F.when(pos & pred, 1).otherwise(0))
@@ -2475,16 +2244,8 @@ def ml_confusion_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------- isotonic calibration, oracle twin
 
-_ISO_HASHABLE_ORACLE = f"""WITH scored AS (
-  SELECT lang,
-         CASE WHEN list_contains({_SQL_TOKENS}, 'the')
-              THEN 1.0 ELSE 0.0 END AS y,
-         -- 6dp-quantized score: identical tie groups on both engines
-         -- (same convention + rationale as ml_roc_auc)
-         ROUND(1.0 / (1.0 + EXP(-({CAL_W[0]} + {CAL_W[1]} * (n_chars / 500.0)
-                + {CAL_W[2]} * (len({_SQL_TOKENS}) / 50.0)))), 6) AS s
-  FROM documents
-), by_s AS (
+_ISO_HASHABLE_ORACLE = f"""WITH {_FEATS_CTE},
+{_SCORED_THE_CTE}, by_s AS (
   SELECT lang, s, CAST(SUM(y) AS BIGINT) AS ysum,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM scored GROUP BY lang, s
@@ -2536,18 +2297,8 @@ def ml_isotonic_calibration_hashable(
     The oracle's O(n²) pair relation is per-language |distinct s|² —
     an ORACLE cost, not a production one; the production path stays
     the one-pass PAVA."""
-    docs = load_raw(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    ntok = F.size(toks)
-    z = (
-        F.lit(CAL_W[0])
-        + F.lit(CAL_W[1]) * (F.col("n_chars") / 500.0)
-        + F.lit(CAL_W[2]) * (ntok / 50.0)
-    )
-    scored = docs.select(
-        "lang",
-        F.when(F.array_contains(toks, "the"), 1.0).otherwise(0.0).alias("y"),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("s"),
+    scored = _cal_scored(spark, sf_dir).select(
+        "lang", F.col("y_the").alias("y"), F.round("s", 6).alias("s")
     )
     pts = scored.groupBy("lang", "s").agg(
         F.count("*").cast("long").alias("n_point")
@@ -2587,21 +2338,6 @@ PERM_BUCKETS = 64
 #: so an overflow is a cross-engine divergence, not just a wrong order.
 PERM_MULT = 1640531527
 
-#: 16-bit split point for the overflow-safe bucket mix below.
-_MIX_LO = 1 << 16
-
-
-def _safe_bucket_sql() -> str:
-    """Overflow-safe pinned hash (the round-8 fix generalized this
-    decomposition into sampling.split_hash_sql; delegate to it so the
-    algebra lives in exactly one place)."""
-    return split_hash_sql()
-
-
-def _safe_bucket_col() -> Column:
-    """Spark twin of :func:`_safe_bucket_sql` (sampling.split_hash)."""
-    return split_hash("doc_id")
-
 
 def _perm_oracle() -> str:
     px = []
@@ -2610,16 +2346,13 @@ def _perm_oracle() -> str:
             f"COALESCE(LEAD({f}) OVER w, FIRST_VALUE({f}) OVER w) AS p{f}"
         )
     def ll(x1: str, x2: str) -> str:
-        p = (
-            f"(1.0 / (1.0 + EXP(-({CAL_W[0]} + {CAL_W[1]} * {x1}"
-            f" + {CAL_W[2]} * {x2}))))"
-        )
-        return f"AVG(-(y * LN({p}) + (1.0 - y) * LN(1.0 - {p})))"
+        p = _sigmoid_sql(_logit_sql(CAL_W, (x1, x2)))
+        return f"AVG({_logloss_sql(p)})"
 
     return f"""WITH {_FEATS_CTE},
 b AS (
   SELECT doc_id, y, x1, x2,
-         ({_safe_bucket_sql()}) % {PERM_BUCKETS} AS bucket,
+         ({split_hash_sql()}) % {PERM_BUCKETS} AS bucket,
          ((doc_id % {HASH_MOD}) * {PERM_MULT}) % {HASH_MOD} AS h2
   FROM feats
 ),
@@ -2661,7 +2394,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "x1",
         "x2",
-        (_safe_bucket_col() % PERM_BUCKETS).alias("bucket"),
+        (split_hash("doc_id") % PERM_BUCKETS).alias("bucket"),
         (((F.col("doc_id") % HASH_MOD) * PERM_MULT) % HASH_MOD).alias("h2"),
     )
     w = Window.partitionBy("bucket").orderBy("h2", "doc_id")
@@ -2678,21 +2411,12 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("px2"),
     )
 
-    def ll(x1, x2):
-        prob = F.lit(1.0) / (
-            F.lit(1.0)
-            + F.exp(-(F.lit(CAL_W[0]) + F.lit(CAL_W[1]) * x1 + F.lit(CAL_W[2]) * x2))
-        )
-        return F.avg(
-            -(
-                F.col("y") * F.log(prob)
-                + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - prob)
-            )
-        )
+    def ll(x1: str, x2: str) -> Column:
+        return F.avg(_logloss(_sigmoid(_logit(CAL_W, (x1, x2)))))
 
-    base = ll(F.col("x1"), F.col("x2"))
-    perm1 = ll(F.col("px1"), F.col("x2"))
-    perm2 = ll(F.col("x1"), F.col("px2"))
+    base = ll("x1", "x2")
+    perm1 = ll("px1", "x2")
+    perm2 = ll("x1", "px2")
     return p.agg(
         F.count("*").cast("long").alias("n"),
         F.round(base, 6).alias("logloss_baseline"),
@@ -2717,9 +2441,7 @@ RIDGE_CV_LAMBDAS = (0.1, 1.0, 10.0)
 
 
 def _cv_ridge_oracle() -> str:
-    from .events_props import _cramer4
-
-    d, d0, d1, d2, d3 = _cramer4()
+    from .events_props import _FIT4_SQL, _cramer4_solve_sql, _gram4_sql
     from .quantize import ppm_floor_sql, ppm_value_sql
 
     # Round-9 (advisor + sf0.1 repro): each moment term is quantized
@@ -2731,14 +2453,7 @@ def _cv_ridge_oracle() -> str:
     # doubles reappear only in the Cramer tree shared verbatim by
     # both engines, and every published float goes through the same
     # FLOOR quantizer.
-    raw_moms = ", ".join(
-        f"SUM({ppm_floor_sql(f'f{i} * f{j}')}) AS m{i}{j}"
-        for i in range(4)
-        for j in range(i, 4)
-    )
-    raw_bs = ", ".join(
-        f"SUM({ppm_floor_sql(f'f{i} * y')}) AS b{i}" for i in range(4)
-    )
+    raw_moms = _gram4_sql(lambda e: f"SUM({ppm_floor_sql(e)})")
     g_moms = ", ".join(
         f"SUM(m{i}{j}) AS gm{i}{j}" for i in range(4) for j in range(i, 4)
     )
@@ -2763,7 +2478,7 @@ f AS (
   FROM feats
 ),
 foldmom AS (
-  SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_test, {raw_moms}, {raw_bs}
+  SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_test, {raw_moms}
   FROM f GROUP BY fold
 ),
 gmom AS (SELECT {g_moms}, {g_bs} FROM foldmom),
@@ -2773,10 +2488,7 @@ trainmom AS (
        CROSS JOIN (SELECT unnest(CAST([{lam_list}] AS DOUBLE[])) AS lam) lams
 ),
 beta AS (
-  SELECT fold, n_test, lam,
-         {d0} / {d} AS c0, {d1} / {d} AS c1,
-         {d2} / {d} AS c2, {d3} / {d} AS c3
-  FROM trainmom
+  {_cramer4_solve_sql("fold, n_test, lam", "trainmom")}
 )
 SELECT ROUND(lam, 6) AS ridge_lambda,
        f.fold AS fold,
@@ -2787,8 +2499,7 @@ SELECT ROUND(lam, 6) AS ridge_lambda,
        {ppm_value_sql("ANY_VALUE(c3)")} AS w_x3,
        CAST(CAST(FLOOR(
            CAST(SUM({ppm_floor_sql(
-               "(y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3))"
-               " * (y - (c0 * f0 + c1 * f1 + c2 * f2 + c3 * f3))"
+               f"(y - {_FIT4_SQL}) * (y - {_FIT4_SQL})"
            )}) AS DOUBLE)
            / CAST(COUNT(*) AS DOUBLE) + 0.5) AS BIGINT) AS DOUBLE)
          / 1000000.0 AS test_mse
@@ -2810,9 +2521,11 @@ def ml_cv_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold's TRAINING moments are just global - fold (+ lambda on the
     diagonal) - no second pass over the data per fold or per lambda,
     which is the whole trick. The {L}-point lambda grid rides the
-    (fold-count)-row relation as a cross join, and Cramer's rule
-    (`_cramer4`, the identical expression strings on both engines)
-    solves all {KL} normal-equation systems inside the plan. A second
+    (fold-count)-row relation as a cross join, and the normal-equation
+    solve shared with ml_ridge_regression (``events_props._gram4`` for
+    the quantized moments, ``_cramer4_solve`` and ``_fit4``; the
+    identical Cramer expression strings on both engines) solves all
+    {KL} systems inside the plan. A second
     scan joins the broadcast {KL}-row coefficient table back on fold
     for held-out MSE.
 
@@ -2820,7 +2533,7 @@ def ml_cv_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold; pass 2 is a scan + broadcast-join + (fold, lambda) aggregate.
     Folds are the pinned Knuth-hash folds of samp_kfold_assign, so the
     grid is reproducible on any engine/partitioning/retry."""
-    from .events_props import _cramer4
+    from .events_props import _cramer4_solve, _fit4, _gram4
 
     feats = _feats(spark, sf_dir)
     f = feats.select(
@@ -2837,17 +2550,7 @@ def ml_cv_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Rule-free micro-unit quantization of every moment term (see
     # _cv_ridge_oracle): exact, order-free BIGINT accumulation.
     foldmom = f.groupBy("fold").agg(
-        F.count("*").alias("n_test"),
-        *[
-            ppm_sum(F.col(f"f{i}") * F.col(f"f{j}")).alias(
-                f"m{i}{j}"
-            )
-            for i, j in pairs
-        ],
-        *[
-            ppm_sum(F.col(f"f{i}") * F.col("y")).alias(f"b{i}")
-            for i in range(4)
-        ],
+        F.count("*").alias("n_test"), *_gram4(agg=ppm_sum)
     )
     glob = foldmom.agg(
         *[F.sum(f"m{i}{j}").alias(f"gm{i}{j}") for i, j in pairs],
@@ -2889,22 +2592,8 @@ def ml_cv_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    d, d0, d1, d2, d3 = _cramer4(m="tm", b="tb")
-    beta = trainmom.select(
-        "fold",
-        "n_test",
-        "lam",
-        F.expr(f"{d0} / {d}").alias("c0"),
-        F.expr(f"{d1} / {d}").alias("c1"),
-        F.expr(f"{d2} / {d}").alias("c2"),
-        F.expr(f"{d3} / {d}").alias("c3"),
-    )
-    pred = (
-        F.col("c0") * F.col("f0")
-        + F.col("c1") * F.col("f1")
-        + F.col("c2") * F.col("f2")
-        + F.col("c3") * F.col("f3")
-    )
+    beta = _cramer4_solve(trainmom, ["fold", "n_test", "lam"], m="tm", b="tb")
+    pred = _fit4()
     return (
         f.join(F.broadcast(beta), "fold")
         .groupBy("lam", "fold")

@@ -18,7 +18,7 @@ exercise — is the Spark-side plumbing a 100 TB media pipeline needs:
 The actual decoders (PIL/ffmpeg/torchaudio) are NOT in this container;
 ``decode_features`` computes a deterministic fake feature vector from
 the raw bytes, and the real-decoder seam is one clearly-marked function
-(``_decode_stub``) raising ``NotImplementedError`` when a real decode
+(``_decode_real``) raising ``NotImplementedError`` when a real decode
 is requested.
 
 Scale notes: blobs ride in parquet binary columns; column pruning means
@@ -253,10 +253,6 @@ def _decode_real(payload: bytes, modality: str) -> bytes:
         "uncompressed 24-bit BMP, PCM WAV); plug PIL/ffmpeg/torchaudio "
         "in here for other formats"
     )
-
-
-#: Back-compat alias (the seam's historical name).
-_decode_stub = _decode_real
 
 
 def _fake_features(payload: bytes) -> list[float]:

@@ -1,5 +1,6 @@
-"""Dead-code guard: every top-level function or class in the package is
-registered or referenced somewhere. References are names, attributes,
+"""Dead-code guard: every top-level function or class in the package, and
+every top-level assignment to a ``_``-prefixed name, is registered or
+referenced somewhere. References are names, attributes,
 imports and identifiers inside string values (not docstrings, and not
 from the definition's own body), read from the package, the tests, the
 scripts, ``bench.py``, ``__spark_entry__.py`` and ``perfbench``."""
@@ -69,9 +70,28 @@ def _registered(node: ast.AST) -> bool:
     return False
 
 
+def _private_targets(stmt: ast.stmt) -> list[str]:
+    """The ``_``-prefixed (not dunder) names a top-level assignment binds."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+        and n.id.startswith("_")
+        and not n.id.startswith("__")
+    ]
+
+
 def unreferenced_definitions() -> list[str]:
     """``module.name`` of every unregistered, unreferenced top-level
-    function or class in the package."""
+    function or class, and every unreferenced top-level ``_``-prefixed
+    constant, in the package."""
     total: Counter = Counter()
     defs = []  # (qualified name, name, own refs)
     for rel in _SOURCES:
@@ -93,6 +113,11 @@ def unreferenced_definitions() -> list[str]:
                     and not stmt.name.startswith("__")
                 ):
                     defs.append((f"{module}.{stmt.name}", stmt.name, own))
+                if in_pkg:
+                    defs += [
+                        (f"{module}.{name}", name, own)
+                        for name in _private_targets(stmt)
+                    ]
     return sorted(q for q, name, own in defs if total[name] - own[name] <= 0)
 
 

@@ -1,5 +1,7 @@
-"""Round-6 ML-primitive invariants: GD logistic regression, naive-Bayes
-language ID, calibration audits, feature hashing, JL projection.
+"""ML-family invariants: GD logistic regression and its sweep and
+learning curve, naive-Bayes language ID, calibration and scorer audits,
+feature hashing, JL projection, split finding, boosting, isotonic
+calibration, ALS, and the closed-form and cross-validated ridge fits.
 
 Ground truth is recomputed independently (numpy over duckdb-extracted
 feature tables), NOT by re-running the operator's SQL oracle — the
@@ -8,6 +10,8 @@ is the *right* math.
 """
 
 from __future__ import annotations
+
+import sys
 
 import duckdb
 import numpy as np
@@ -462,3 +466,271 @@ def test_linear_attribution_sums_to_centered_logit(queries, spark):
         assert r["contrib_x1"] + r["contrib_x2"] == pytest.approx(
             centered, abs=5e-6
         )
+
+
+def test_ridge_matches_numpy(spark, queries):
+    """Closed-form ridge must equal numpy's solve of (X'X + λI)w = X'y
+    and the reported R² must match the residual computation."""
+    import numpy as np
+
+    from recommedation_system_under_flink_spark.operators.ml import (
+        RIDGE_LAMBDA,
+    )
+
+    row = queries["ml_ridge_regression"](spark, SF_DIR).collect()[0]
+    m = _feats()
+    y, X = m[:, 0], np.column_stack([np.ones(len(m)), m[:, 1:]])
+    w = np.linalg.solve(X.T @ X + RIDGE_LAMBDA * np.eye(4), X.T @ y)
+    got = [row["w_bias"], row["w_x1"], row["w_x2"], row["w_x3"]]
+    assert got == pytest.approx(list(w), abs=2e-6)
+    resid = y - X @ w
+    r2 = 1.0 - (resid @ resid) / ((y - y.mean()) @ (y - y.mean()))
+    assert row["r2"] == pytest.approx(r2, abs=2e-6)
+    assert row["n"] == len(y)
+
+
+def test_confusion_sweep_consistency(spark, queries):
+    """Counts must tile the corpus at every threshold, tp must be
+    non-increasing in the threshold, and the rates must agree with
+    ml_roc_auc's curve at the shared thresholds."""
+    rows = queries["ml_confusion_threshold_sweep"](spark, SF_DIR).collect()
+    assert len(rows) == 11
+    n = rows[0]["tp"] + rows[0]["fp"] + rows[0]["tn"] + rows[0]["fn"]
+    npos = rows[0]["tp"] + rows[0]["fn"]
+    prev_tp = None
+    for r in rows:
+        assert r["tp"] + r["fp"] + r["tn"] + r["fn"] == n
+        assert r["tp"] + r["fn"] == npos
+        if prev_tp is not None:
+            assert r["tp"] <= prev_tp
+        prev_tp = r["tp"]
+        if r["f1"] is not None:
+            f1 = 2.0 * r["tp"] / (2 * r["tp"] + r["fp"] + r["fn"])
+            assert r["f1"] == pytest.approx(f1, abs=2e-6)
+    roc = {
+        r["threshold"]: r
+        for r in queries["ml_roc_auc"](spark, SF_DIR).collect()
+    }
+    for r in rows:
+        assert roc[r["threshold"]]["tpr"] == pytest.approx(
+            r["tp"] / npos, abs=2e-6
+        )
+
+
+def test_isotonic_hashable_twin_matches_production_blocks(spark, queries):
+    """The hashable twin's per-point fits must be monotone in s within
+    each lang and conserve mass (sum fitted*n = sum y), mirroring the
+    production PAVA's KKT invariants on the quantized score."""
+    rows = queries["ml_isotonic_calibration_hashable"](
+        spark, SF_DIR
+    ).collect()
+    assert rows
+    by_lang = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append(r)
+    for lang, pts in by_lang.items():
+        pts.sort(key=lambda r: r["s"])
+        fits = [r["fitted"] for r in pts]
+        assert fits == sorted(fits), f"non-monotone fit for {lang}"
+        assert all(0.0 <= f <= 1.0 for f in fits)
+
+
+def test_permutation_importance_matches_pandas_replay(spark, queries):
+    """All three loglosses must match a pandas replay of the SAME
+    pinned in-bucket rotation (bucket = hash % 64, order by second
+    mixer then doc_id, neighbor's value with first-row wraparound).
+    Note: the scorer is PINNED, not fitted, so importances may
+    legitimately be negative — the invariant is the identity, not the
+    sign."""
+    import duckdb
+    import numpy as np
+
+    from recommedation_system_under_flink_spark.operators.ml import (
+        CAL_W,
+        PERM_BUCKETS,
+        PERM_MULT,
+    )
+    from recommedation_system_under_flink_spark.operators.sampling import (
+        HASH_MOD,
+        HASH_MULT,
+    )
+
+    row = queries["ml_permutation_importance"](spark, SF_DIR).collect()[0]
+    df = duckdb.sql(
+        f"""SELECT doc_id,
+               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
+               n_chars / 500.0 AS x1,
+               len(list_filter(string_split(text, ' '), t -> t <> ''))
+                 / 50.0 AS x2
+            FROM '{SF_DIR}/documents.parquet'"""
+    ).df()
+    df["bucket"] = (df.doc_id * HASH_MULT) % HASH_MOD % PERM_BUCKETS
+    df["h2"] = (df.doc_id * PERM_MULT) % HASH_MOD
+    df = df.sort_values(["bucket", "h2", "doc_id"]).reset_index(drop=True)
+    for f in ("x1", "x2"):
+        df[f"p{f}"] = df.groupby("bucket")[f].transform(
+            lambda s: np.roll(s.to_numpy(), -1)
+        )
+
+    def ll(x1, x2):
+        p = 1.0 / (1.0 + np.exp(-(CAL_W[0] + CAL_W[1] * x1 + CAL_W[2] * x2)))
+        return float(
+            np.mean(-(df.y * np.log(p) + (1 - df.y) * np.log(1 - p)))
+        )
+
+    base = ll(df.x1, df.x2)
+    assert row["n"] == len(df)
+    assert row["logloss_baseline"] == pytest.approx(base, abs=2e-6)
+    assert row["logloss_perm_x1"] == pytest.approx(ll(df.px1, df.x2), abs=2e-6)
+    assert row["logloss_perm_x2"] == pytest.approx(ll(df.x1, df.px2), abs=2e-6)
+    assert row["logloss_perm_x1"] == pytest.approx(
+        row["logloss_baseline"] + row["importance_x1"], abs=2e-6
+    )
+
+
+def test_learning_curve_empty_subset_null_parity(spark, queries, tmp_path):
+    """Planted fixture where every doc hashes to bucket >= 3: the 10%
+    and 30% training subsets are EMPTY, so (matching the oracle's NULL
+    propagation) those configs' weights poison to NaN and their
+    fitted loglosses canonicalize to NULL, while the 100% config stays
+    finite. Runs BOTH engines on the planted fixture and compares the
+    driver-canonicalized snapshots — a real parity check of the branch
+    the standard fixtures never exercise."""
+    import duckdb
+    import pandas as pd
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": [2, 3, 5, 6, 7, 8],  # buckets 6,7,7,8,3,4 — all >= 3
+            "text": [
+                "the quick brown fox jumps over the lazy dog",
+                "a plain short doc with the common token",
+                "numbers and words mix the day away",
+                "short text",
+                "the the the repeated tokens here",
+                "completely different content entirely",
+            ],
+            "lang": ["en", "en", "de", "en", "fr", "en"],
+            "source": ["s1"] * 6,
+            "n_chars": [44, 40, 35, 10, 32, 38],
+        }
+    )
+    sf_dir = str(tmp_path)
+    docs.to_parquet(f"{sf_dir}/documents.parquet")
+
+    import os
+
+    from recommedation_system_under_flink_spark import registry
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import scripts.check as C
+
+    sdf = queries["ml_learning_curve"](spark, sf_dir).toPandas()
+    scols, srows = C._snapshot(
+        list(sdf.columns),
+        [tuple(r) for r in sdf.itertuples(index=False, name=None)],
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    ocols, orows = C._oracle_frame(
+        con, registry.oracles()["ml_learning_curve"]
+    )
+    ocols, orows = C._snapshot(ocols, orows)
+    assert scols == ocols
+    assert srows == orows
+    # and the planted property actually held: 10%/30% rows NULL-trained
+    by_frac = {r["fraction"]: r for _, r in sdf.iterrows()}
+    assert by_frac[1.0]["n_train"] == 6
+    for frac in (0.1, 0.3):
+        assert by_frac[frac]["n_train"] == 0
+
+
+def test_gbdt_prefix_equals_boosted_stumps(queries, spark):
+    """Stages 1-2 of the K-round loop are definitionally the certified
+    two-round operator — same splits, same steps, same MSEs."""
+    gbdt = queries["ml_gbdt_k_rounds"](spark, SF_DIR).collect()
+    two = queries["ml_boosted_stumps"](spark, SF_DIR).collect()
+    assert [r.asDict() for r in gbdt[:2]] == [r.asDict() for r in two]
+
+
+def test_gbdt_train_mse_monotone(queries, spark):
+    """Shrinkage < 1 with SSE-optimal splits never increases train MSE
+    (each stage's step is a strict descent direction or zero)."""
+    mses = [
+        r["train_mse"]
+        for r in queries["ml_gbdt_k_rounds"](spark, SF_DIR).collect()
+    ]
+    assert len(mses) == 4
+    assert all(a >= b - 1e-9 for a, b in zip(mses, mses[1:])), mses
+
+
+def test_cv_ridge_matches_numpy_replay(queries, spark):
+    """Ground truth: refit every (fold, lambda) cell with numpy's
+    linear solver on the exact same features/folds and require the
+    engine's Cramer-solved weights and held-out MSE to agree."""
+    import numpy as np
+
+    from recommedation_system_under_flink_spark.operators.ml import (
+        RIDGE_CV_LAMBDAS,
+    )
+    from recommedation_system_under_flink_spark.operators.sampling import (
+        HASH_MOD,
+        HASH_MULT,
+        KFOLD_K,
+    )
+
+    got = {
+        (round(r["ridge_lambda"], 6), r["fold"]): r
+        for r in queries["ml_cv_ridge_path"](spark, SF_DIR).collect()
+    }
+    assert len(got) == KFOLD_K * len(RIDGE_CV_LAMBDAS)
+
+    con = duckdb.connect()
+    rows = con.execute(
+        f"SELECT doc_id, text, lang, n_chars FROM '{SF_DIR}/documents.parquet'"
+    ).fetchall()
+    con.close()
+    X, y, fold = [], [], []
+    for doc_id, text, lang, n_chars in rows:
+        ntok = len([t for t in text.split(" ") if t != ""])
+        X.append([1.0, n_chars / 500.0, ntok / 50.0, n_chars / (ntok * 10.0)])
+        y.append(1.0 if lang == "en" else 0.0)
+        fold.append((doc_id * HASH_MULT) % HASH_MOD % KFOLD_K)
+    X, y, fold = np.array(X), np.array(y), np.array(fold)
+
+    for lam in RIDGE_CV_LAMBDAS:
+        for k in range(KFOLD_K):
+            tr, te = fold != k, fold == k
+            w = np.linalg.solve(
+                X[tr].T @ X[tr] + lam * np.eye(4), X[tr].T @ y[tr]
+            )
+            mse = float(np.mean((y[te] - X[te] @ w) ** 2))
+            r = got[(lam, k)]
+            assert r["n_test"] == int(te.sum())
+            eng_w = [r["w_bias"], r["w_x1"], r["w_x2"], r["w_x3"]]
+            assert np.allclose(eng_w, w, atol=2e-5), (lam, k, eng_w, w)
+            assert abs(r["test_mse"] - mse) < 2e-5, (lam, k)
+
+
+def test_cv_ridge_shrinkage_monotone(queries, spark):
+    """Uniform-diagonal ridge: the coefficient norm must be
+    non-increasing in lambda within every fold, and the folds must
+    partition the corpus."""
+    rows = queries["ml_cv_ridge_path"](spark, SF_DIR).collect()
+    by_fold: dict[int, list] = {}
+    for r in rows:
+        by_fold.setdefault(r["fold"], []).append(r)
+    for fold_rows in by_fold.values():
+        fold_rows.sort(key=lambda r: r["ridge_lambda"])
+        norms = [
+            r["w_bias"] ** 2 + r["w_x1"] ** 2 + r["w_x2"] ** 2 + r["w_x3"] ** 2
+            for r in fold_rows
+        ]
+        assert norms == sorted(norms, reverse=True)
+    n_docs = duckdb.sql(
+        f"SELECT count(*) FROM '{SF_DIR}/documents.parquet'"
+    ).fetchone()[0]
+    per_fold = {r["fold"]: r["n_test"] for r in rows}
+    assert sum(per_fold.values()) == n_docs

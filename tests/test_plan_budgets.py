@@ -140,6 +140,17 @@ BUDGETS = {
     # moved back above a vote brings its news or events scan back
     "tfidf_recommend_all_days": (10, 27, True, True),
     "textrank_pipeline_distributed": (0, 3, False, True),
+    # the ML family's shared cores, measured at sf0.001: the GD sweep
+    # and the learning curve 1/3 (the returned plan scores the
+    # broadcast weight table, so the cartesian is that broadcast), the
+    # exact and histogram Gini splits 2/4 each (cartesian = the 1-row
+    # totals broadcast), ridge 2/3 (cartesian = the 1-row coefficient
+    # broadcast)
+    "ml_lr_sweep": (1, 3, True, False),
+    "ml_learning_curve": (1, 3, True, False),
+    "ml_decision_stump": (2, 4, True, False),
+    "ml_histogram_split": (2, 4, True, False),
+    "ml_ridge_regression": (2, 3, True, False),
 }
 
 #: Queries whose plans must contain ZERO single-partition Window nodes

@@ -11,8 +11,6 @@ the join result stays exactly correct.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -177,70 +175,6 @@ def test_curation_mix_budget_invariants(spark, queries):
 # ------------------------------------------ round-7 new-op invariants
 
 
-def _feats_np():
-    import duckdb
-    import numpy as np
-
-    return duckdb.sql(
-        f"""SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-                   n_chars / 500.0 AS x1,
-                   len(list_filter(string_split(text, ' '), t -> t <> ''))
-                     / 50.0 AS x2,
-                   n_chars / (len(list_filter(string_split(text, ' '),
-                                              t -> t <> '')) * 10.0) AS x3
-            FROM '{SF_DIR}/documents.parquet' ORDER BY doc_id"""
-    ).df().to_numpy()
-
-
-def test_ridge_matches_numpy(spark, queries):
-    """Closed-form ridge must equal numpy's solve of (X'X + λI)w = X'y
-    and the reported R² must match the residual computation."""
-    import numpy as np
-
-    from recommedation_system_under_flink_spark.operators.ml import (
-        RIDGE_LAMBDA,
-    )
-
-    row = queries["ml_ridge_regression"](spark, SF_DIR).collect()[0]
-    m = _feats_np()
-    y, X = m[:, 0], np.column_stack([np.ones(len(m)), m[:, 1:]])
-    w = np.linalg.solve(X.T @ X + RIDGE_LAMBDA * np.eye(4), X.T @ y)
-    got = [row["w_bias"], row["w_x1"], row["w_x2"], row["w_x3"]]
-    assert got == pytest.approx(list(w), abs=2e-6)
-    resid = y - X @ w
-    r2 = 1.0 - (resid @ resid) / ((y - y.mean()) @ (y - y.mean()))
-    assert row["r2"] == pytest.approx(r2, abs=2e-6)
-    assert row["n"] == len(y)
-
-
-def test_confusion_sweep_consistency(spark, queries):
-    """Counts must tile the corpus at every threshold, tp must be
-    non-increasing in the threshold, and the rates must agree with
-    ml_roc_auc's curve at the shared thresholds."""
-    rows = queries["ml_confusion_threshold_sweep"](spark, SF_DIR).collect()
-    assert len(rows) == 11
-    n = rows[0]["tp"] + rows[0]["fp"] + rows[0]["tn"] + rows[0]["fn"]
-    npos = rows[0]["tp"] + rows[0]["fn"]
-    prev_tp = None
-    for r in rows:
-        assert r["tp"] + r["fp"] + r["tn"] + r["fn"] == n
-        assert r["tp"] + r["fn"] == npos
-        if prev_tp is not None:
-            assert r["tp"] <= prev_tp
-        prev_tp = r["tp"]
-        if r["f1"] is not None:
-            f1 = 2.0 * r["tp"] / (2 * r["tp"] + r["fp"] + r["fn"])
-            assert r["f1"] == pytest.approx(f1, abs=2e-6)
-    roc = {
-        r["threshold"]: r
-        for r in queries["ml_roc_auc"](spark, SF_DIR).collect()
-    }
-    for r in rows:
-        assert roc[r["threshold"]]["tpr"] == pytest.approx(
-            r["tp"] / npos, abs=2e-6
-        )
-
-
 def test_dataset_card_sanity(spark, queries):
     import duckdb
 
@@ -308,136 +242,6 @@ def test_decontamination_flags_verbatim_test_dups(spark, queries):
         if split_of(i) == "train" and t in test_texts and ntok(t) >= DECON_N:
             assert i in rows, f"verbatim dup of a test doc not flagged: {i}"
             assert rows[i]["contamination_rate"] == pytest.approx(1.0)
-
-
-def test_isotonic_hashable_twin_matches_production_blocks(spark, queries):
-    """The hashable twin's per-point fits must be monotone in s within
-    each lang and conserve mass (sum fitted*n = sum y), mirroring the
-    production PAVA's KKT invariants on the quantized score."""
-    rows = queries["ml_isotonic_calibration_hashable"](
-        spark, SF_DIR
-    ).collect()
-    assert rows
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r)
-    for lang, pts in by_lang.items():
-        pts.sort(key=lambda r: r["s"])
-        fits = [r["fitted"] for r in pts]
-        assert fits == sorted(fits), f"non-monotone fit for {lang}"
-        assert all(0.0 <= f <= 1.0 for f in fits)
-
-
-def test_permutation_importance_matches_pandas_replay(spark, queries):
-    """All three loglosses must match a pandas replay of the SAME
-    pinned in-bucket rotation (bucket = hash % 64, order by second
-    mixer then doc_id, neighbor's value with first-row wraparound).
-    Note: the scorer is PINNED, not fitted, so importances may
-    legitimately be negative — the invariant is the identity, not the
-    sign."""
-    import duckdb
-    import numpy as np
-
-    from recommedation_system_under_flink_spark.operators.ml import (
-        CAL_W,
-        PERM_BUCKETS,
-        PERM_MULT,
-    )
-    from recommedation_system_under_flink_spark.operators.sampling import (
-        HASH_MOD,
-        HASH_MULT,
-    )
-
-    row = queries["ml_permutation_importance"](spark, SF_DIR).collect()[0]
-    df = duckdb.sql(
-        f"""SELECT doc_id,
-               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-               n_chars / 500.0 AS x1,
-               len(list_filter(string_split(text, ' '), t -> t <> ''))
-                 / 50.0 AS x2
-            FROM '{SF_DIR}/documents.parquet'"""
-    ).df()
-    df["bucket"] = (df.doc_id * HASH_MULT) % HASH_MOD % PERM_BUCKETS
-    df["h2"] = (df.doc_id * PERM_MULT) % HASH_MOD
-    df = df.sort_values(["bucket", "h2", "doc_id"]).reset_index(drop=True)
-    for f in ("x1", "x2"):
-        df[f"p{f}"] = df.groupby("bucket")[f].transform(
-            lambda s: np.roll(s.to_numpy(), -1)
-        )
-
-    def ll(x1, x2):
-        p = 1.0 / (1.0 + np.exp(-(CAL_W[0] + CAL_W[1] * x1 + CAL_W[2] * x2)))
-        return float(
-            np.mean(-(df.y * np.log(p) + (1 - df.y) * np.log(1 - p)))
-        )
-
-    base = ll(df.x1, df.x2)
-    assert row["n"] == len(df)
-    assert row["logloss_baseline"] == pytest.approx(base, abs=2e-6)
-    assert row["logloss_perm_x1"] == pytest.approx(ll(df.px1, df.x2), abs=2e-6)
-    assert row["logloss_perm_x2"] == pytest.approx(ll(df.x1, df.px2), abs=2e-6)
-    assert row["logloss_perm_x1"] == pytest.approx(
-        row["logloss_baseline"] + row["importance_x1"], abs=2e-6
-    )
-
-
-def test_learning_curve_empty_subset_null_parity(spark, queries, tmp_path):
-    """Planted fixture where every doc hashes to bucket >= 3: the 10%
-    and 30% training subsets are EMPTY, so (matching the oracle's NULL
-    propagation) those configs' weights poison to NaN and their
-    fitted loglosses canonicalize to NULL, while the 100% config stays
-    finite. Runs BOTH engines on the planted fixture and compares the
-    driver-canonicalized snapshots — a real parity check of the branch
-    the standard fixtures never exercise."""
-    import duckdb
-    import pandas as pd
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": [2, 3, 5, 6, 7, 8],  # buckets 6,7,7,8,3,4 — all >= 3
-            "text": [
-                "the quick brown fox jumps over the lazy dog",
-                "a plain short doc with the common token",
-                "numbers and words mix the day away",
-                "short text",
-                "the the the repeated tokens here",
-                "completely different content entirely",
-            ],
-            "lang": ["en", "en", "de", "en", "fr", "en"],
-            "source": ["s1"] * 6,
-            "n_chars": [44, 40, 35, 10, 32, 38],
-        }
-    )
-    sf_dir = str(tmp_path)
-    docs.to_parquet(f"{sf_dir}/documents.parquet")
-
-    import os
-
-    from recommedation_system_under_flink_spark import registry
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import scripts.check as C
-
-    sdf = queries["ml_learning_curve"](spark, sf_dir).toPandas()
-    scols, srows = C._snapshot(
-        list(sdf.columns),
-        [tuple(r) for r in sdf.itertuples(index=False, name=None)],
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    ocols, orows = C._oracle_frame(
-        con, registry.oracles()["ml_learning_curve"]
-    )
-    ocols, orows = C._snapshot(ocols, orows)
-    assert scols == ocols
-    assert srows == orows
-    # and the planted property actually held: 10%/30% rows NULL-trained
-    by_frac = {r["fraction"]: r for _, r in sdf.iterrows()}
-    assert by_frac[1.0]["n_train"] == 6
-    for frac in (0.1, 0.3):
-        assert by_frac[frac]["n_train"] == 0
 
 
 def test_gopher_rules_consistency(spark, queries):

@@ -96,27 +96,6 @@ def test_cdc_boundaries_are_local_content(queries, spark, tmp_path):
     assert out[2]["n_dup_chunks"] >= out[1]["n_chunks"] - 2
 
 
-# ------------------------------------------------ K-round GBDT
-
-def test_gbdt_prefix_equals_boosted_stumps(queries, spark):
-    """Stages 1-2 of the K-round loop are definitionally the certified
-    two-round operator — same splits, same steps, same MSEs."""
-    gbdt = queries["ml_gbdt_k_rounds"](spark, SF_DIR).collect()
-    two = queries["ml_boosted_stumps"](spark, SF_DIR).collect()
-    assert [r.asDict() for r in gbdt[:2]] == [r.asDict() for r in two]
-
-
-def test_gbdt_train_mse_monotone(queries, spark):
-    """Shrinkage < 1 with SSE-optimal splits never increases train MSE
-    (each stage's step is a strict descent direction or zero)."""
-    mses = [
-        r["train_mse"]
-        for r in queries["ml_gbdt_k_rounds"](spark, SF_DIR).collect()
-    ]
-    assert len(mses) == 4
-    assert all(a >= b - 1e-9 for a, b in zip(mses, mses[1:])), mses
-
-
 # ------------------------------------------- perceptual-hash dedup
 
 def test_phash_planted_pairs(queries, spark, tmp_path):
@@ -246,79 +225,6 @@ def test_cdc_short_documents_survive(queries, spark, tmp_path):
         assert out[d]["n_chunks"] == 1, out[d]
     assert out[1]["n_dup_chunks"] == 1 and out[5]["n_dup_chunks"] == 1
     assert out[2]["n_dup_chunks"] == 0
-
-
-# --------------------------------------------- cross-validated ridge
-
-
-def test_cv_ridge_matches_numpy_replay(queries, spark):
-    """Ground truth: refit every (fold, lambda) cell with numpy's
-    linear solver on the exact same features/folds and require the
-    engine's Cramer-solved weights and held-out MSE to agree."""
-    import numpy as np
-
-    from recommedation_system_under_flink_spark.operators.ml import (
-        RIDGE_CV_LAMBDAS,
-    )
-    from recommedation_system_under_flink_spark.operators.sampling import (
-        HASH_MOD,
-        HASH_MULT,
-        KFOLD_K,
-    )
-
-    got = {
-        (round(r["ridge_lambda"], 6), r["fold"]): r
-        for r in queries["ml_cv_ridge_path"](spark, SF_DIR).collect()
-    }
-    assert len(got) == KFOLD_K * len(RIDGE_CV_LAMBDAS)
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT doc_id, text, lang, n_chars FROM '{SF_DIR}/documents.parquet'"
-    ).fetchall()
-    con.close()
-    X, y, fold = [], [], []
-    for doc_id, text, lang, n_chars in rows:
-        ntok = len([t for t in text.split(" ") if t != ""])
-        X.append([1.0, n_chars / 500.0, ntok / 50.0, n_chars / (ntok * 10.0)])
-        y.append(1.0 if lang == "en" else 0.0)
-        fold.append((doc_id * HASH_MULT) % HASH_MOD % KFOLD_K)
-    X, y, fold = np.array(X), np.array(y), np.array(fold)
-
-    for lam in RIDGE_CV_LAMBDAS:
-        for k in range(KFOLD_K):
-            tr, te = fold != k, fold == k
-            w = np.linalg.solve(
-                X[tr].T @ X[tr] + lam * np.eye(4), X[tr].T @ y[tr]
-            )
-            mse = float(np.mean((y[te] - X[te] @ w) ** 2))
-            r = got[(lam, k)]
-            assert r["n_test"] == int(te.sum())
-            eng_w = [r["w_bias"], r["w_x1"], r["w_x2"], r["w_x3"]]
-            assert np.allclose(eng_w, w, atol=2e-5), (lam, k, eng_w, w)
-            assert abs(r["test_mse"] - mse) < 2e-5, (lam, k)
-
-
-def test_cv_ridge_shrinkage_monotone(queries, spark):
-    """Uniform-diagonal ridge: the coefficient norm must be
-    non-increasing in lambda within every fold, and the folds must
-    partition the corpus."""
-    rows = queries["ml_cv_ridge_path"](spark, SF_DIR).collect()
-    by_fold: dict[int, list] = {}
-    for r in rows:
-        by_fold.setdefault(r["fold"], []).append(r)
-    for fold_rows in by_fold.values():
-        fold_rows.sort(key=lambda r: r["ridge_lambda"])
-        norms = [
-            r["w_bias"] ** 2 + r["w_x1"] ** 2 + r["w_x2"] ** 2 + r["w_x3"] ** 2
-            for r in fold_rows
-        ]
-        assert norms == sorted(norms, reverse=True)
-    n_docs = duckdb.sql(
-        f"SELECT count(*) FROM '{SF_DIR}/documents.parquet'"
-    ).fetchone()[0]
-    per_fold = {r["fold"]: r["n_test"] for r in rows}
-    assert sum(per_fold.values()) == n_docs
 
 
 # --------------------------------------------- line-level dedup

@@ -23,6 +23,8 @@ from recommedation_system_under_flink_spark.functions.text import (
     doc_tokens,
     extract_keywords_clique,
     extract_keywords_windowed,
+    space_tokens,
+    space_tokens_sql,
     textrank_vote,
     token_counts,
     tokenize,
@@ -59,19 +61,26 @@ def test_tokenize(text, expected):
     ],
 )
 def test_doc_tokens_parity(spark, text):
-    """Both tokenizer forms are one spec in three engines: Spark
-    ``doc_tokens`` / ``content_tokens``, DuckDB ``DOC_TOKENS_SQL`` /
-    ``content_tokens_sql`` and the Python regex split (document form)
-    or :func:`tokenize` (stop-word form) every oracle is reasoned
-    against."""
+    """The tokenizer forms are one spec in three engines: Spark
+    ``doc_tokens`` / ``content_tokens`` / ``space_tokens``, DuckDB
+    ``DOC_TOKENS_SQL`` / ``content_tokens_sql`` / ``space_tokens_sql``
+    and the Python regex split (document form), :func:`tokenize`
+    (stop-word form) or the single-space split (ML feature form) every
+    oracle is reasoned against."""
     expected = [t for t in re.split(TOKEN_SPLIT_REGEX, text.lower()) if t]
-    got_spark, got_content = (
+    expected_space = [t for t in text.split(" ") if t]
+    got_spark, got_content, got_space = (
         spark.createDataFrame([(text,)], "text string")
-        .select(doc_tokens(F.col("text")), content_tokens(F.col("text")))
+        .select(
+            doc_tokens(F.col("text")),
+            content_tokens(F.col("text")),
+            space_tokens(F.col("text")),
+        )
         .collect()[0]
     )
-    got_duck, got_duck_content = duckdb.execute(
-        f"SELECT {DOC_TOKENS_SQL}, {content_tokens_sql('text')}"
+    got_duck, got_duck_content, got_duck_space = duckdb.execute(
+        f"SELECT {DOC_TOKENS_SQL}, {content_tokens_sql('text')},"
+        f" {space_tokens_sql('text')}"
         " FROM (SELECT CAST(? AS VARCHAR) AS text)",
         [text],
     ).fetchone()
@@ -79,6 +88,8 @@ def test_doc_tokens_parity(spark, text):
     assert got_duck == expected
     assert got_content == tokenize(text)
     assert got_duck_content == tokenize(text)
+    assert got_space == expected_space
+    assert got_duck_space == expected_space
 
 
 def test_token_counts():
