@@ -1319,44 +1319,51 @@ def ml_kfold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _gini_split_sql(src: str, key: str) -> str:
     """CTE body: every candidate split AFTER a distinct ``key`` value of
     CTE ``src`` (columns ``key``, ``y``) — the cumulative left-side
-    (n, positives) from ONE ordered window scan — with its weighted
-    Gini impurity ``gini`` (lower = better) and ``gini_parent``.
-    Shared by ml_decision_stump and ml_histogram_split."""
+    (n, positives) and the totals ``(n, tp)`` from ONE ordered window
+    scan of the per-key counts — with its weighted Gini impurity
+    ``gini`` (lower = better) and ``gini_parent``. Shared by
+    ml_decision_stump and ml_histogram_split."""
     return f"""(
-  SELECT {key}, nl, tot.n - nl AS nr, pl, tot.tp - pl AS pr,
+  SELECT {key}, nl, n - nl AS nr, pl, tp - pl AS pr,
          (nl * (2.0 * (pl / nl) * (1.0 - pl / nl))
-          + (tot.n - nl) * (2.0 * ((tot.tp - pl) / (tot.n - nl))
-                            * (1.0 - (tot.tp - pl) / (tot.n - nl)))) / tot.n
+          + (n - nl) * (2.0 * ((tp - pl) / (n - nl))
+                        * (1.0 - (tp - pl) / (n - nl)))) / n
            AS gini,
-         2.0 * (tot.tp / tot.n) * (1.0 - tot.tp / tot.n) AS gini_parent
+         2.0 * (tp / n) * (1.0 - tp / n) AS gini_parent
   FROM (
-    SELECT {key}, SUM(cnt) OVER w AS nl, SUM(pos) OVER w AS pl
+    SELECT {key}, SUM(cnt) OVER w AS nl, SUM(pos) OVER w AS pl,
+           SUM(cnt) OVER wall AS n, SUM(pos) OVER wall AS tp
     FROM (SELECT {key}, CAST(COUNT(*) AS BIGINT) AS cnt, SUM(y) AS pos
           FROM {src} GROUP BY {key})
-    WINDOW w AS (ORDER BY {key} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    WINDOW w AS (ORDER BY {key} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+           wall AS (ORDER BY {key} ROWS BETWEEN UNBOUNDED PRECEDING
+                    AND UNBOUNDED FOLLOWING)
   ) cand
-  CROSS JOIN (SELECT SUM(y) AS tp, CAST(COUNT(*) AS BIGINT) AS n FROM {src}) tot
-  WHERE nl < tot.n  -- a split must leave something on the right
+  WHERE nl < n  -- a split must leave something on the right
 )"""
 
 
 def _gini_split_frame(pts: DataFrame, key: str) -> DataFrame:
     """Spark twin of :func:`_gini_split_sql`: per candidate split
     ``key``, ``nl``/``nr``, ``pl``/``pr``, the weighted Gini ``gini``
-    and ``gain`` = parent Gini − ``gini``. One groupBy on the key, one
-    cumulative window over its distinct values, a broadcast 1-row
-    total."""
-    tot = pts.agg(F.sum("y").alias("tp"), F.count("*").alias("n"))
+    and ``gain`` = parent Gini − ``gini``. One groupBy on the key and
+    one window over its distinct values, which gives both the cumulative
+    left side and the whole-frame totals ``(tp, n)``, so the input is
+    read once."""
     by_key = pts.groupBy(key).agg(
         F.count("*").alias("cnt"), F.sum("y").alias("pos")
     )
     w = Window.orderBy(key).rowsBetween(Window.unboundedPreceding, 0)
-    cand = by_key.select(
+    wall = Window.orderBy(key).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    j = by_key.select(
         key,
         F.sum("cnt").over(w).alias("nl"),
         F.sum("pos").over(w).alias("pl"),
-    )
-    j = cand.crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
+        F.sum("cnt").over(wall).alias("n"),
+        F.sum("pos").over(wall).alias("tp"),
+    ).filter(F.col("nl") < F.col("n"))
     pl, nl = F.col("pl"), F.col("nl")
     pr = F.col("tp") - pl
     nr = F.col("n") - nl

@@ -18,6 +18,27 @@ queries broadcast (the corpus is scanned once, no shuffle); the per-row
 cost stays JVM-side. LSH replaces the corpus×corpus pair space with
 per-bucket pair spaces; bucket keys are hash-uniform, and the
 hyperplane matrix is a plan literal (no driver lookup at execution).
+
+Scoring-and-ranking core, written once per engine (the DuckDB twins
+share no code with the Spark side):
+
+- **rank**: :func:`_top_k` / :func:`_top_k_sql` — ``row_number`` per
+  query by score rounded to 6 dp descending, then item id ascending,
+  kept while ``<= k``;
+- **query set**: :func:`_query_rows` (the ``vec_id < N_QUERIES`` rows
+  as ``query_id``) over :func:`_emb_base`, the up-cast corpus with
+  norms;
+- **cosine**: :func:`_cosine` (dot over precomputed norms) /
+  :func:`_cos_sql`, and ``_SCORED_CTE``, the exact cosine of a
+  ``cand(query_id, corpus_id)`` CTE;
+- **LSH probe top-k**: :func:`_lsh_probe_topk` /
+  :func:`_lsh_probe_topk_sql` (bucket equi-join → self-exclusion →
+  distinct → exact cosine → rank), fed the probe rows;
+- **SQ8 sizing**: :func:`_sq8_sized` / ``_SQ8_SIZED_CTE``;
+- **covariance**: :func:`_cov_relation` over the ``quantize.ppm_floor``
+  grid (:func:`_ppm_grid` / ``_PPM_GRID_CTE``, moments
+  ``_COV_MOMENT_CTES``), :func:`_cov_matrix` and :func:`_cov_eigh` on
+  the driver, and :func:`_centered_projection` back onto the corpus.
 """
 
 from __future__ import annotations
@@ -28,10 +49,12 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import bsp
+from .quantize import ppm_floor, ppm_floor_sql, ppm_value, ppm_value_sql
 from ..registry import register
 from ..sources import load_raw
 
@@ -64,13 +87,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity, computed in double (embeddings are float32 on
-    disk; both engines must up-cast before multiplying or 9-digit
-    comparison fails)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _as_double(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return c.cast("array<double>")
@@ -79,41 +95,125 @@ def _as_double(c: Column | str) -> Column:
 _EMB_CAST = "CAST(embedding AS DOUBLE[])"
 
 
+# ------------------------------------------- scoring-and-ranking core
+
+
+def _cosine(
+    a: Column | str, b: Column | str, an: Column | str, bn: Column | str
+) -> Column:
+    """Cosine of double vectors ``a``, ``b`` from their precomputed
+    norms ``an``, ``bn`` (columns or column names). Embeddings are
+    float32 on disk, and both engines up-cast to double before
+    multiplying, or the 9-digit comparison fails. Norms are per row, so
+    callers compute them BEFORE a pair join instead of once per pair."""
+    a, b, an, bn = (F.col(c) if isinstance(c, str) else c for c in (a, b, an, bn))
+    return _dot(a, b) / (an * bn)
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int = TOP_K,
+    score: str = "cosine",
+    by: str = "query_id",
+    item: str = "corpus_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """The pinned ranking of every sim_* top-k: ``rank`` = row_number
+    per ``by`` over ``score`` rounded to 6 dp descending, then ``item``
+    ascending, kept while ``<= k``. The quantized key keeps float ulp
+    noise from flipping near-ties between engines (see
+    operators/tfidf.py); rounding an already-rounded score again
+    returns the same double."""
+    w = Window.partitionBy(by).orderBy(F.desc(F.round(score, 6)), F.asc(item))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _query_rows(frame: DataFrame, *cols: Column | str) -> DataFrame:
+    """The query set: ``frame``'s rows with ``vec_id < N_QUERIES``, as
+    ``query_id`` plus ``cols``."""
+    return frame.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), *cols
+    )
+
+
+def _emb_base(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``(vec_id, *cols, emb, nrm)``: the corpus up-cast to double, with
+    norms."""
+    emb = load_raw(spark, sf_dir, "embeddings")
+    return emb.select("vec_id", *cols, _as_double("embedding").alias("emb")).withColumn(
+        "nrm", _norm(F.col("emb"))
+    )
+
+
+def _cos_sql(x: str, y: str) -> str:
+    """DuckDB cosine of two DOUBLE[] vector expressions (callers up-cast,
+    as :func:`_cosine` says)."""
+    return f"""list_dot_product({x}, {y})
+         / (sqrt(list_dot_product({x}, {x}))
+            * sqrt(list_dot_product({y}, {y})))"""
+
+
+def _top_k_sql(
+    src: str,
+    k: int = TOP_K,
+    score: str = "cosine",
+    by: str = "query_id",
+    item: str = "corpus_id",
+    rank: str = "rank",
+) -> str:
+    """DuckDB twin of :func:`_top_k`: every column of ``src`` (a CTE
+    name or a parenthesized query) plus the INTEGER ``rank``, kept
+    while ``<= k``."""
+    return f"""SELECT * FROM (
+  SELECT *, CAST(ROW_NUMBER() OVER (
+    PARTITION BY {by} ORDER BY ROUND({score}, 6) DESC, {item} ASC
+  ) AS INTEGER) AS {rank}
+  FROM {src}
+) WHERE {rank} <= {k}"""
+
+
+#: The up-cast corpus projection every twin starts from.
+_PROJ_CTE = f"""proj AS (
+  SELECT vec_id, {_EMB_CAST} AS e FROM embeddings
+)"""
+
+#: Exact cosine of every candidate of a ``cand(query_id, corpus_id,
+#: ...)`` CTE over ``proj``; the candidate's columns are kept.
+_SCORED_CTE = f"""scored AS (
+  SELECT c.*, {_cos_sql("pq.e", "pc.e")} AS cosine
+  FROM cand c
+  JOIN proj pq ON pq.vec_id = c.query_id
+  JOIN proj pc ON pc.vec_id = c.corpus_id
+)"""
+
+#: Cosine of the raw embeddings of rows ``a`` and ``b``.
+_PAIR_COS_SQL = _cos_sql(
+    "CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])"
+)
+
+
 @register(
     "sim_bruteforce_topk",
-    f"""SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-       list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))))
-         AS cosine,
-       ROW_NUMBER() OVER (
-         PARTITION BY q.vec_id
-         ORDER BY ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-           / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) DESC,
-           c.vec_id ASC
-       ) AS rank
-FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-WHERE q.vec_id < {N_QUERIES}
-QUALIFY rank <= {TOP_K}""",
+    f"""WITH {_PROJ_CTE}, scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+         {_cos_sql("q.e", "c.e")} AS cosine
+  FROM proj q JOIN proj c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}
+)
+{_top_k_sql("scored")}""",
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: queries (first N_QUERIES ids) broadcast
     against the corpus; one corpus scan, no shuffle until the top-k
-    window. The ranking key is quantized (round 6) so float ulp noise
-    can't flip near-ties between engines (see operators/tfidf.py)."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    # Norms are per-row, so compute them BEFORE the pair join — inlining
-    # `cosine()` there would recompute each corpus norm once per query.
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), _as_double("embedding").alias("c_emb")
-    ).withColumn("c_norm", _norm(F.col("c_emb")))
-    queries = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"), _as_double("embedding").alias("q_emb")
-        )
-        .withColumn("q_norm", _norm(F.col("q_emb")))
+    window (:func:`_top_k`)."""
+    base = _emb_base(spark, sf_dir)
+    corpus = base.select(
+        F.col("vec_id").alias("corpus_id"),
+        F.col("emb").alias("c_emb"),
+        F.col("nrm").alias("c_norm"),
+    )
+    queries = _query_rows(
+        base, F.col("emb").alias("q_emb"), F.col("nrm").alias("q_norm")
     )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
@@ -121,20 +221,10 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "corpus_id",
-            (
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
+            _cosine("q_emb", "c_emb", "q_norm", "c_norm").alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(scored)
 
 
 # ----------------------------------------------------------------- LSH
@@ -262,90 +352,75 @@ def _lsh_sig_ctes(tables: int, bits: int) -> str:
 )"""
 
 
-def _lsh_topk_oracle(tables: int, bits: int) -> str:
-    """DuckDB twin of :func:`sim_lsh_topk`: same pinned hyperplane
-    buckets, exact cosine over candidates, quantized-rank top-k."""
-    return f"""WITH {_lsh_sig_ctes(tables, bits)},
-cand AS (
+def _lsh_probe_topk_sql(tables: int, probes: str) -> str:
+    """DuckDB twin of :func:`_lsh_probe_topk`: the pinned hyperplane
+    buckets of ``tables`` tables, the ``probes(vec_id, tbl, bucket)``
+    CTE body, then the same chain to the quantized-rank top-k."""
+    return f"""WITH {_lsh_sig_ctes(tables, LSH_BITS)},
+probes AS (
+{probes}
+), cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS corpus_id
-  FROM tb q JOIN tb c
+  FROM probes q JOIN tb c
     ON q.tbl = c.tbl AND q.bucket = c.bucket AND c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-), scored AS (
-  SELECT c.query_id, c.corpus_id,
-         list_dot_product(pq.e, pc.e)
-           / (sqrt(list_dot_product(pq.e, pq.e)) * sqrt(list_dot_product(pc.e, pc.e)))
-           AS cosine
-  FROM cand c
-  JOIN proj pq ON pq.vec_id = c.query_id
-  JOIN proj pc ON pc.vec_id = c.corpus_id
-)
-SELECT query_id, corpus_id, cosine, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY ROUND(cosine, 6) DESC, corpus_id ASC
-  ) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= {TOP_K}"""
+), {_SCORED_CTE}
+{_top_k_sql("scored")}"""
 
 
-
-@register("sim_lsh_topk", _lsh_topk_oracle(LSH_TABLES, LSH_BITS))
-def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k: candidates share a (table,
-    bucket) cell with the query; exact cosine + top-k only over
-    candidates. Recall vs brute force is pytest-checked
-    (tests/test_llm_ops.py); the pinned hyperplanes also make the whole
-    chain hash-comparable against the DuckDB twin
-    (:func:`_lsh_topk_oracle`)."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    bucketed = _bucketed(emb)
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "table",
-        "bucket",
-    )
+def _lsh_probe_topk(bucketed: DataFrame, probes: DataFrame) -> DataFrame:
+    """The LSH bucket-probe top-k over :func:`_bucketed` rows: every
+    corpus vector sharing a (table, bucket) cell with a probe row
+    ``(query_id, q_emb, q_nrm, table, bucket)`` (broadcast equi-join),
+    the query itself excluded, distinct per (query, corpus) pair, exact
+    cosine, :func:`_top_k`. The distinct runs over rows that carry the
+    vectors, so the pairs it leaves are unique and the cosine needs no
+    second distinct."""
     cands = (
-        bucketed.join(F.broadcast(queries), ["table", "bucket"])
+        bucketed.join(F.broadcast(probes), ["table", "bucket"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id", "q_emb", "q_nrm", F.col("vec_id").alias("corpus_id"), "emb", "nrm"
         )
         .distinct()
     )
-    # No .distinct() here: cands is already unique per (query_id,
-    # corpus_id) — the embeddings/norms are functions of the ids — so a
-    # second distinct would only add a wide shuffle over double rows.
-    scored = cands.select(
-        "query_id",
-        "corpus_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
+    return _top_k(
+        cands.select(
+            "query_id",
+            "corpus_id",
+            _cosine("q_emb", "emb", "q_nrm", "nrm").alias("cosine"),
+        )
     )
 
 
 @register(
+    "sim_lsh_topk",
+    _lsh_probe_topk_sql(
+        LSH_TABLES, f"  SELECT vec_id, tbl, bucket FROM tb WHERE vec_id < {N_QUERIES}"
+    ),
+)
+def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed approximate top-k: candidates share a (table,
+    bucket) cell with the query; exact cosine + top-k only over
+    candidates. Recall vs brute force is pytest-checked
+    (tests/test_llm_ops.py); the pinned hyperplanes also make the whole
+    chain hash-comparable against the DuckDB twin
+    (:func:`_lsh_probe_topk_sql`)."""
+    bucketed = _bucketed(load_raw(spark, sf_dir, "embeddings"))
+    probes = _query_rows(
+        bucketed,
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        "table",
+        "bucket",
+    )
+    return _lsh_probe_topk(bucketed, probes)
+
+
+@register(
     "sim_neardup_pairs_exact",
-    f"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
-         AS cosine
+    f"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_PAIR_COS_SQL} AS cosine
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
-      >= {COSINE_THRESHOLD}""",
+WHERE {_PAIR_COS_SQL} >= {COSINE_THRESHOLD}""",
 )
 def sim_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact baseline: all pairs with
@@ -536,14 +611,9 @@ def _score_candidates_blocked(
 # ----------------------------------------------------------------- IVF
 
 #: IVF-flat parameters: K centroid cells, NPROBE cells searched per
-#: query, ITERS Lloyd refinement rounds over a deterministic sample.
+#: query.
 IVF_K = 16
 IVF_NPROBE = 4
-IVF_ITERS = 2
-#: Fit-sample size target: ~400 points per centroid — k-means quality
-#: saturates there, so at 100 TB the fit samples every Nth vector
-#: (deterministic, id-keyed) and never sees the full corpus.
-IVF_FIT_TARGET = IVF_K * 400
 
 def _probe_udf(cents: list[list[float]], nprobe: int):
     """Arrow-batched probe: the ``nprobe`` nearest centroid ids by
@@ -568,38 +638,6 @@ def _probe_udf(cents: list[list[float]], nprobe: int):
     return probe
 
 
-def _ivf_centroids(
-    base: DataFrame, k: int = IVF_K, iters: int = IVF_ITERS, dim: int = EMB_DIM
-) -> list[list[float]]:
-    """Fit IVF centroids: deterministic id-keyed sample + ``iters``
-    Lloyd rounds, run locally in numpy. The sample is bounded by
-    ``IVF_FIT_TARGET`` *by design* — k-means quality saturates at a few
-    hundred points per cell — so collecting it is O(K·400·D) no matter
-    how big the corpus is; one Spark job total instead of one per Lloyd
-    round. The centroids are model parameters held on the driver,
-    exactly like the pinned LSH hyperplanes."""
-    mod = max(1, base.count() // IVF_FIT_TARGET)
-    rows = (
-        base.filter((F.col("vec_id") % mod) == 0)
-        .select("vec_id", "emb")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])
-    if not rows:
-        return []
-    x = np.array([list(r["emb"]) for r in rows], dtype=np.float64)
-    cents = x[:k].copy()  # init: first k by vec_id (deterministic)
-    for _ in range(iters):
-        # argmax of cosine == argmax of dot with unit centroids; first
-        # max wins, matching the probe UDF's lower-cid tiebreak
-        cid = np.argmax(x @ _unit_rows(cents).T, axis=1)
-        for c in range(k):  # empty cells keep their previous centroid
-            members = x[cid == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return [list(map(float, c)) for c in cents]
-
-
 # ------------------------------------------------ pinned-IVF index core
 #
 # The one index core of the IVF family: flat, SQ8, PQ, SemDeDup,
@@ -611,15 +649,6 @@ def _ivf_centroids(
 # data-independent given the id order, so the whole index is
 # reproducible in SQL.
 
-#: The up-cast corpus projection every twin starts from.
-_PROJ_CTE = f"""proj AS (
-  SELECT vec_id, {_EMB_CAST} AS e FROM embeddings
-)"""
-
-#: Cosine of vector ``v`` to centroid ``c``.
-_CELL_COS = """list_dot_product(v.e, c.e)
-             / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(c.e, c.e)))"""
-
 #: DuckDB form of the index core: ``ranked_cells`` ranks every
 #: (vector, centroid) pair by raw cosine ``c_cos`` with ties to the
 #: lower cid (``cell_rank`` 1 = nearest), and ``cells`` keeps each
@@ -627,9 +656,9 @@ _CELL_COS = """list_dot_product(v.e, c.e)
 _PINNED_CELLS_CTES = f"""{_PROJ_CTE}, cents AS (
   SELECT vec_id AS cid, e FROM proj WHERE vec_id < {IVF_K}
 ), ranked_cells AS (
-  SELECT v.vec_id, c.cid, {_CELL_COS} AS c_cos,
+  SELECT v.vec_id, c.cid, {_cos_sql("v.e", "c.e")} AS c_cos,
          ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id ORDER BY {_CELL_COS} DESC, c.cid ASC
+           PARTITION BY v.vec_id ORDER BY {_cos_sql("v.e", "c.e")} DESC, c.cid ASC
          ) AS cell_rank
   FROM proj v CROSS JOIN cents c
 ), cells AS (
@@ -650,14 +679,6 @@ def _ivf_cand_ctes(nprobe: int) -> str:
   FROM probes p JOIN cells c ON p.cid = c.cid
   WHERE c.vec_id <> p.query_id
 )"""
-
-
-def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(vec_id, emb, nrm)``: the corpus up-cast to double, with norms."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
 
 
 def _pinned_centroids(base: DataFrame) -> list[list[float]]:
@@ -690,8 +711,8 @@ def _ivf_candidates(
     corpus vector's ``base`` columns, ``query_id``, ``cell_rank`` (1 =
     the query's nearest cell) and ``query_cols`` read from the query's
     row. No pair repeats (see ``_ivf_cand_ctes``), so no distinct."""
-    probes = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
+    probes = _query_rows(
+        base,
         *query_cols,
         F.posexplode(_probe_udf(cents, nprobe)(F.col("emb"))).alias("pos", "cid"),
     )
@@ -714,53 +735,8 @@ def _ivf_flat_scored(
         "query_id",
         F.col("vec_id").alias("corpus_id"),
         "cell_rank",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
+        _cosine("q_emb", "emb", "q_nrm", "nrm").alias("cosine"),
     )
-
-
-def _ivf_flat_topk(
-    spark: SparkSession, base: DataFrame, cents: list[list[float]]
-) -> DataFrame:
-    """IVF-flat top-k over ``_emb_base`` rows: probe ``IVF_NPROBE``
-    cells per query, exact cosine over their members, quantized-rank
-    top-k. The fitted and the pinned index differ only in ``cents``."""
-    if not cents:  # empty corpus → nothing to index or search
-        return spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return (
-        _ivf_flat_scored(base, cents, IVF_NPROBE)
-        .drop("cell_rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
-
-
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat approximate top-k: corpus vectors live in their nearest
-    centroid cell; each query searches its ``IVF_NPROBE`` nearest cells
-    with exact cosine. The centroid-count/probe trade is the classic IVF
-    dial: candidates ≈ nprobe/K of the corpus per query. Recall vs brute
-    force is pytest-checked next to the LSH variant — IVF is the scale
-    path when embeddings are clustered (real corpora), LSH when they
-    are adversarially uniform.
-
-    UNREGISTERED pytest diagnostic: the certified form of the IVF probe
-    chain is :func:`sim_ivf_topk_pinned` — the same
-    :func:`_ivf_flat_topk` with the Lloyd fit replaced by pinned
-    centroids, fully DuckDB-oracle-backed. The Lloyd fit itself is
-    separately oracle-verified round-by-round as ``sim_kmeans_lloyd``,
-    so this fitted-index composition keeps only its
-    recall-vs-bruteforce pytest and stays out of the registry."""
-    base = _emb_base(spark, sf_dir)
-    return _ivf_flat_topk(spark, base, _ivf_centroids(base))
 
 
 def _lsh_oracle(tables: int, bits: int, threshold: float) -> str:
@@ -771,22 +747,18 @@ def _lsh_oracle(tables: int, bits: int, threshold: float) -> str:
     within float-sum error (~1e-15) of zero — measure-zero for
     continuous data. Candidates = same (table, bucket) cell; verify =
     exact cosine ≥ threshold, as in the exact twin."""
+    cos = _cos_sql("pa.e", "pb.e")
     return f"""WITH {_lsh_sig_ctes(tables, bits)},
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM tb a JOIN tb b
     ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
-SELECT c.vec_a, c.vec_b,
-       list_dot_product(pa.e, pb.e)
-         / (sqrt(list_dot_product(pa.e, pa.e)) * sqrt(list_dot_product(pb.e, pb.e)))
-         AS cosine
+SELECT c.vec_a, c.vec_b, {cos} AS cosine
 FROM cand c
 JOIN proj pa ON pa.vec_id = c.vec_a
 JOIN proj pb ON pb.vec_id = c.vec_b
-WHERE list_dot_product(pa.e, pb.e)
-        / (sqrt(list_dot_product(pa.e, pa.e)) * sqrt(list_dot_product(pb.e, pb.e)))
-      >= {threshold}"""
+WHERE {cos} >= {threshold}"""
 
 
 @register(
@@ -820,14 +792,10 @@ def sim_neardup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: check is plenty — the cap only guards against a pathological chain.
 COMPONENT_MAX_ITERS = 10
 
-_COSINE_SQL = f"""list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))"""
-
 _COMPONENTS_ORACLE = f"""WITH RECURSIVE pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_COSINE_SQL} >= {COSINE_THRESHOLD}
+  WHERE {_PAIR_COS_SQL} >= {COSINE_THRESHOLD}
 ), edges AS (
   SELECT vec_a AS src, vec_b AS dst FROM pairs
   UNION ALL
@@ -1036,36 +1004,31 @@ def _ivf_pinned_oracle() -> str:
     """DuckDB twin of :func:`sim_ivf_topk_pinned`: the pinned cells and
     probes of ``_PINNED_CELLS_CTES``, exact cosine over the candidates,
     and the quantized-rank top-k."""
-    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}, scored AS (
-  SELECT c.query_id, c.corpus_id,
-         list_dot_product(pq.e, pc.e)
-           / (sqrt(list_dot_product(pq.e, pq.e)) * sqrt(list_dot_product(pc.e, pc.e)))
-           AS cosine
-  FROM cand c
-  JOIN proj pq ON pq.vec_id = c.query_id
-  JOIN proj pc ON pc.vec_id = c.corpus_id
-)
+    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}, {_SCORED_CTE}
 SELECT query_id, corpus_id, cosine, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY ROUND(cosine, 6) DESC, corpus_id ASC
-  ) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= {TOP_K}"""
+{_top_k_sql("scored")}
+)"""
 
 
 @register("sim_ivf_topk_pinned", _ivf_pinned_oracle())
 def sim_ivf_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with **pinned** centroids (the first ``IVF_K`` corpus
-    vectors, no Lloyd refinement): the index structure — cell
-    assignment, nprobe probing, candidate generation, quantized top-k —
-    is :func:`sim_ivf_topk`'s :func:`_ivf_flat_topk`, but with the model
-    parameters data-independent the whole chain becomes
-    DuckDB-reproducible and hash-verified. The Lloyd-fitted variant
-    keeps the better recall and stays rows-only (fitted parameters are
-    what make real ANN indexes non-portable); this twin proves the
-    *machinery* correct."""
+    """IVF-flat top-k with **pinned** centroids (the first ``IVF_K``
+    corpus vectors, no Lloyd refinement): corpus vectors live in their
+    nearest centroid cell; each query searches its ``IVF_NPROBE``
+    nearest cells with exact cosine, then the quantized top-k. The
+    centroid-count/probe trade is the classic IVF dial: candidates ≈
+    nprobe/K of the corpus per query. With the model parameters
+    data-independent, the whole chain (cell assignment, nprobe probing,
+    candidate generation, ranking) is DuckDB-reproducible and
+    hash-verified; a Lloyd-fitted deployment swaps only the centroid
+    source (the fit itself is oracle-verified as ``sim_kmeans_lloyd``)."""
     base = _emb_base(spark, sf_dir)
-    return _ivf_flat_topk(spark, base, _pinned_centroids(base))
+    cents = _pinned_centroids(base)
+    if not cents:  # empty corpus → nothing to index or search
+        return spark.createDataFrame(
+            [], "query_id long, corpus_id long, cosine double, rank int"
+        )
+    return _top_k(_ivf_flat_scored(base, cents, IVF_NPROBE).drop("cell_rank"))
 
 
 # ------------------------------------------- scalar-quantized (int8) ANN
@@ -1087,31 +1050,43 @@ def _sq8_quantize(e: Column) -> Column:
     )
 
 
+def _sq8_sized(base: DataFrame) -> DataFrame:
+    """``_emb_base`` rows plus the int8-quantized vector ``qv`` and its
+    norm ``qn``; vectors that quantize to zero are dropped (neither
+    queries nor candidates)."""
+    return (
+        base.withColumn("qv", _sq8_quantize(F.col("emb")))
+        .withColumn("qn", _norm(F.col("qv")))
+        .filter(F.col("qn") > 0)
+    )
+
+
 _SQ8_Q_SQL = f"""CASE WHEN list_max(list_transform({_EMB_CAST}, x -> abs(x))) = 0
   THEN list_transform({_EMB_CAST}, x -> 0.0)
   ELSE list_transform({_EMB_CAST},
     x -> floor(x * {SQ8_LEVELS} / list_max(list_transform({_EMB_CAST}, y -> abs(y))) + 0.5))
 END"""
 
+#: DuckDB twin of :func:`_sq8_sized`: ``s8(vec_id, qv, qn)``.
+_SQ8_SIZED_CTE = f"""s8 AS (
+  SELECT * FROM (
+    SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS qn
+    FROM (SELECT vec_id, {_SQ8_Q_SQL} AS qv FROM embeddings)
+  ) WHERE qn > 0
+)"""
+
+#: Quantized cosine of s8 rows ``a`` and ``b``.
+_SQ8_COS_SQL = "ROUND(list_dot_product(a.qv, b.qv) / (a.qn * b.qn), 6)"
+
 
 @register(
     "sim_sq8_topk",
-    f"""WITH q AS (
-  SELECT vec_id, {_SQ8_Q_SQL} AS qv FROM embeddings
-), sized AS (
-  SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS qn FROM q
-  WHERE sqrt(list_dot_product(qv, qv)) > 0
-)
-SELECT query_id, corpus_id, cosine_q, rank FROM (
-  SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
-         ROUND(list_dot_product(a.qv, b.qv) / (a.qn * b.qn), 6) AS cosine_q,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY a.vec_id
-           ORDER BY ROUND(list_dot_product(a.qv, b.qv) / (a.qn * b.qn), 6) DESC,
-                    b.vec_id ASC) AS INTEGER) AS rank
-  FROM sized a JOIN sized b ON b.vec_id <> a.vec_id
+    f"""WITH {_SQ8_SIZED_CTE}, scored AS (
+  SELECT a.vec_id AS query_id, b.vec_id AS corpus_id, {_SQ8_COS_SQL} AS cosine_q
+  FROM s8 a JOIN s8 b ON b.vec_id <> a.vec_id
   WHERE a.vec_id < {N_QUERIES}
-) WHERE rank <= {TOP_K}""",
+)
+{_top_k_sql("scored", score="cosine_q")}""",
 )
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k cosine over **scalar-quantized int8 embeddings** — the
@@ -1127,44 +1102,25 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the int8 corpus is ~dim bytes/vector — 4× more vectors per
     executor-GB than float32, which is the difference between an
     in-memory and a spilling ANN serve at 10⁹ vectors; compose with the
-    IVF cell layout (`sim_ivf_topk`) for the full IVF-SQ8 index."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", _sq8_quantize(_as_double("embedding")).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv"))).filter(F.col("qn") > 0)
-    corpus = base.select(
+    IVF cell layout (``sim_ivfsq8_topk_pinned``) for the full IVF-SQ8
+    index."""
+    sized = _sq8_sized(_emb_base(spark, sf_dir))
+    corpus = sized.select(
         F.col("vec_id").alias("corpus_id"),
         F.col("qv").alias("c_qv"),
         F.col("qn").alias("c_qn"),
     )
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("qn").alias("q_qn"),
-    )
-    from pyspark.sql import Window
-
+    queries = _query_rows(sized, F.col("qv").alias("q_qv"), F.col("qn").alias("q_qn"))
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("corpus_id") != F.col("query_id"))
         .select(
             "query_id",
             "corpus_id",
-            F.round(
-                _dot(F.col("q_qv"), F.col("c_qv"))
-                / (F.col("q_qn") * F.col("c_qn")),
-                6,
-            ).alias("cosine_q"),
+            F.round(_cosine("q_qv", "c_qv", "q_qn", "c_qn"), 6).alias("cosine_q"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_q"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "corpus_id", "cosine_q", "rank")
-    )
+    return _top_k(scored, score="cosine_q")
 
 
 # --------------------------------------------- IVF-SQ8 composed index
@@ -1173,23 +1129,14 @@ def _ivfsq8_oracle() -> str:
     """DuckDB twin of :func:`sim_ivfsq8_topk_pinned`: the pinned cells
     and probes of ``_PINNED_CELLS_CTES`` composed with the int8
     quantized scoring chain (cf. ``sim_sq8_topk``)."""
-    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)}, q8 AS (
-  SELECT vec_id, {_SQ8_Q_SQL} AS qv FROM embeddings
-), s8 AS (
-  SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS qn FROM q8
-  WHERE sqrt(list_dot_product(qv, qv)) > 0
-)
-SELECT query_id, corpus_id, cosine_q, rank FROM (
-  SELECT c.query_id, c.corpus_id,
-         ROUND(list_dot_product(a.qv, b.qv) / (a.qn * b.qn), 6) AS cosine_q,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY c.query_id
-           ORDER BY ROUND(list_dot_product(a.qv, b.qv) / (a.qn * b.qn), 6) DESC,
-                    c.corpus_id ASC) AS INTEGER) AS rank
+    return f"""WITH {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(IVF_NPROBE)},
+{_SQ8_SIZED_CTE}, scored AS (
+  SELECT c.query_id, c.corpus_id, {_SQ8_COS_SQL} AS cosine_q
   FROM cand c
   JOIN s8 a ON a.vec_id = c.query_id
   JOIN s8 b ON b.vec_id = c.corpus_id
-) WHERE rank <= {TOP_K}"""
+)
+{_top_k_sql("scored", score="cosine_q")}"""
 
 
 @register("sim_ivfsq8_topk_pinned", _ivfsq8_oracle())
@@ -1214,29 +1161,19 @@ def sim_ivfsq8_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, corpus_id long, cosine_q double, rank int"
         )
-    sized = (
-        base.withColumn("qv", _sq8_quantize(F.col("emb")))
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
-    )
     cands = _ivf_candidates(
-        sized, cents, IVF_NPROBE, F.col("qv").alias("q_qv"), F.col("qn").alias("q_qn")
+        _sq8_sized(base),
+        cents,
+        IVF_NPROBE,
+        F.col("qv").alias("q_qv"),
+        F.col("qn").alias("q_qn"),
     )
     scored = cands.select(
         "query_id",
         F.col("vec_id").alias("corpus_id"),
-        F.round(
-            _dot(F.col("q_qv"), F.col("qv")) / (F.col("q_qn") * F.col("qn")), 6
-        ).alias("cosine_q"),
+        F.round(_cosine("q_qv", "qv", "q_qn", "qn"), 6).alias("cosine_q"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_q"), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(scored, score="cosine_q")
 
 
 # ------------------------------------ label-centroid outlier scoring
@@ -1356,19 +1293,14 @@ def _pq_topk_sql(ctes: str, adot: str) -> str:
     corpus_id, ad)`` ADC sums by approximate cosine."""
     return f"""WITH {ctes}, {_PQ_CTES}, adot AS (
 {adot}
-)
-SELECT query_id, corpus_id, cosine_pq, rank FROM (
-  SELECT a.query_id, a.corpus_id,
-         ROUND(a.ad / (q.qn * r.rn), 6) AS cosine_pq,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY a.query_id
-           ORDER BY ROUND(a.ad / (q.qn * r.rn), 6) DESC, a.corpus_id ASC
-         ) AS INTEGER) AS rank
+), scored AS (
+  SELECT a.query_id, a.corpus_id, ROUND(a.ad / (q.qn * r.rn), 6) AS cosine_pq
   FROM adot a
   JOIN qn q ON a.query_id = q.vec_id
   JOIN rec_norm r ON a.corpus_id = r.vec_id
   WHERE q.qn > 0 AND r.rn > 0
-) WHERE rank <= {TOP_K}"""
+)
+{_top_k_sql("scored", score="cosine_pq")}"""
 
 
 def _pq_topk(base: DataFrame, adc) -> DataFrame:
@@ -1378,8 +1310,6 @@ def _pq_topk(base: DataFrame, adc) -> DataFrame:
     lut)`` returns the ``(query_id, corpus_id, ad)`` ADC sums over the
     caller's candidates: every corpus vector for PQ, the probed cells'
     members for IVF-PQ."""
-    from pyspark.sql import Window
-
     subs = base.select(
         "vec_id",
         F.explode(
@@ -1415,22 +1345,12 @@ def _pq_topk(base: DataFrame, adc) -> DataFrame:
     )
     rec_norm = encoded.groupBy("vec_id").agg(F.sqrt(F.sum("cc")).alias("rnm"))
     lut = (
-        subs.filter(F.col("vec_id") < N_QUERIES)
+        _query_rows(subs, "s", "sv")
         .join(F.broadcast(codebook), "s")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "s",
-            "cw",
-            _dot(F.col("sv"), F.col("cv")).alias("pdot"),
-        )
+        .select("query_id", "s", "cw", _dot(F.col("sv"), F.col("cv")).alias("pdot"))
     )
-    qn = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn")
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_pq"), F.asc("corpus_id")
-    )
-    return (
+    qn = _query_rows(base, F.col("nrm").alias("qn"))
+    scored = (
         adc(encoded, lut)
         .join(F.broadcast(qn), "query_id")
         .join(rec_norm, F.col("corpus_id") == rec_norm.vec_id)
@@ -1438,13 +1358,10 @@ def _pq_topk(base: DataFrame, adc) -> DataFrame:
         .select(
             "query_id",
             "corpus_id",
-            F.round(F.col("ad") / (F.col("qn") * F.col("rnm")), 6).alias(
-                "cosine_pq"
-            ),
+            F.round(F.col("ad") / (F.col("qn") * F.col("rnm")), 6).alias("cosine_pq"),
         )
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= TOP_K)
     )
+    return _top_k(scored, score="cosine_pq")
 
 
 def _pq_pinned_oracle() -> str:
@@ -1506,37 +1423,28 @@ def _mrl_oracle() -> str:
     """DuckDB twin of :func:`sim_mrl_prefix_rerank`: stage-1 ranks by
     prefix-dim cosine (round-6 + id tiebreak, the engine-stable order),
     stage-2 reranks the shortlist by full-dim cosine the same way."""
-    pref_cos = """list_dot_product(q.p, c.p)
-      / (sqrt(list_dot_product(q.p, q.p)) * sqrt(list_dot_product(c.p, c.p)))"""
-    full_cos = """list_dot_product(q.e, c.e)
-      / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e)))"""
+    shortlist = _top_k_sql("pref", k=MRL_SHORTLIST, score="pref_cos", rank="prank")
     return f"""WITH proj AS (
   SELECT vec_id, {_EMB_CAST} AS e,
          ({_EMB_CAST})[1 : {MRL_PREFIX}] AS p
   FROM embeddings
+), pref AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+         {_cos_sql("q.p", "c.p")} AS pref_cos
+  FROM proj q JOIN proj c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}
+    AND list_dot_product(q.p, q.p) > 0 AND list_dot_product(c.p, c.p) > 0
 ), shortlist AS (
   SELECT query_id, corpus_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY ROUND({pref_cos}, 6) DESC, c.vec_id ASC
-           ) AS prank
-    FROM proj q JOIN proj c ON c.vec_id <> q.vec_id
-    WHERE q.vec_id < {N_QUERIES}
-      AND list_dot_product(q.p, q.p) > 0 AND list_dot_product(c.p, c.p) > 0
-  ) WHERE prank <= {MRL_SHORTLIST}
-)
-SELECT query_id, corpus_id, cosine, rank FROM (
-  SELECT s.query_id, s.corpus_id,
-         ROUND({full_cos}, 6) AS cosine,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY s.query_id
-           ORDER BY ROUND({full_cos}, 6) DESC, s.corpus_id ASC
-         ) AS INTEGER) AS rank
+{shortlist}
+  )
+), scored AS (
+  SELECT s.query_id, s.corpus_id, ROUND({_cos_sql("q.e", "c.e")}, 6) AS cosine
   FROM shortlist s
   JOIN proj q ON s.query_id = q.vec_id
   JOIN proj c ON s.corpus_id = c.vec_id
-) WHERE rank <= {TOP_K}"""
+)
+{_top_k_sql("scored")}"""
 
 
 @register("sim_mrl_prefix_rerank", _mrl_oracle())
@@ -1562,68 +1470,46 @@ def sim_mrl_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-bounded (on the near-random fixture the prefix is a genuine
     lossy projection — the test pins the funnel's behavior, an
     MRL-trained checkpoint is what makes prefix≈full in production)."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    proj = emb.select(
-        "vec_id",
-        _as_double("embedding").alias("e"),
-        F.slice(_as_double("embedding"), 1, MRL_PREFIX).alias("p"),
-    )
-    corpus = proj.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("e").alias("c_e"),
-        F.col("p").alias("c_p"),
+    base = _emb_base(spark, sf_dir).withColumn("p", F.slice("emb", 1, MRL_PREFIX))
+    corpus = base.select(
+        F.col("vec_id").alias("corpus_id"), F.col("p").alias("c_p")
     ).withColumn("c_pn", _norm(F.col("c_p")))
-    queries = (
-        proj.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("q_e"),
-            F.col("p").alias("q_p"),
-        )
-        .withColumn("q_pn", _norm(F.col("q_p")))
+    queries = _query_rows(base, F.col("p").alias("q_p")).withColumn(
+        "q_pn", _norm(F.col("q_p"))
     )
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("pref_cos", 6)), F.asc("corpus_id")
-    )
-    shortlist = (
+    pref = (
         corpus.filter(F.col("c_pn") > 0)
         .crossJoin(F.broadcast(queries.filter(F.col("q_pn") > 0)))
         .filter(F.col("corpus_id") != F.col("query_id"))
         .select(
             "query_id",
             "corpus_id",
-            (
-                _dot(F.col("q_p"), F.col("c_p")) / (F.col("q_pn") * F.col("c_pn"))
-            ).alias("pref_cos"),
+            _cosine("q_p", "c_p", "q_pn", "c_pn").alias("pref_cos"),
         )
-        .withColumn("prank", F.row_number().over(pw))
-        .filter(F.col("prank") <= MRL_SHORTLIST)
-        .select("query_id", "corpus_id")
     )
-    q_full = proj.select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("q_e")
-    ).withColumn("q_n", _norm(F.col("q_e")))
-    c_full = proj.select(
-        F.col("vec_id").alias("corpus_id"), F.col("e").alias("c_e")
-    ).withColumn("c_n", _norm(F.col("c_e")))
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("corpus_id")
+    shortlist = _top_k(pref, k=MRL_SHORTLIST, score="pref_cos", rank="prank").select(
+        "query_id", "corpus_id"
     )
-    return (
+    q_full = base.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_e"),
+        F.col("nrm").alias("q_n"),
+    )
+    c_full = base.select(
+        F.col("vec_id").alias("corpus_id"),
+        F.col("emb").alias("c_e"),
+        F.col("nrm").alias("c_n"),
+    )
+    scored = (
         shortlist.join(F.broadcast(q_full), "query_id")
         .join(c_full, "corpus_id")
         .select(
             "query_id",
             "corpus_id",
-            F.round(
-                _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_n") * F.col("c_n")), 6
-            ).alias("cosine"),
+            F.round(_cosine("q_e", "c_e", "q_n", "c_n"), 6).alias("cosine"),
         )
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= TOP_K)
     )
+    return _top_k(scored)
 
 
 # -------------------------------------- dedup threshold tuning sweep
@@ -1634,13 +1520,10 @@ SWEEP_BASE = 0.30
 
 
 def _sweep_oracle() -> str:
-    cos = """list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-         * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))"""
     return f"""WITH pairs AS (
-  SELECT ROUND({cos}, 6) AS c
+  SELECT ROUND({_PAIR_COS_SQL}, 6) AS c
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {cos} >= {SWEEP_BASE}
+  WHERE {_PAIR_COS_SQL} >= {SWEEP_BASE}
 ), bins AS (
   SELECT CAST(FLOOR(c * 20) AS BIGINT) AS bin, CAST(COUNT(*) AS BIGINT) AS n
   FROM pairs GROUP BY 1
@@ -1667,8 +1550,6 @@ def sim_threshold_sweep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical), and both engines then apply the identical
     IEEE ``floor(c*20)`` to the same doubles. Cumulative counts ride a
     1-column window over ≤14 bin rows."""
-    from pyspark.sql import Window
-
     emb = load_raw(spark, sf_dir, "embeddings")
     pairs = _exact_pairs_blocked(_vec_blocks(emb), SWEEP_BASE).select(
         F.round("cosine", 6).alias("c")
@@ -1690,23 +1571,17 @@ def sim_threshold_sweep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_hard_negatives",
-    f"""SELECT q.vec_id AS query_id, c.vec_id AS negative_id,
-       q.label AS query_label, c.label AS negative_label,
-       ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6)
-         AS cosine,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY q.vec_id
-         ORDER BY ROUND(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-           / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))), 6) DESC,
-             c.vec_id ASC
-       ) AS INTEGER) AS rank
-FROM embeddings q JOIN embeddings c
-  ON c.vec_id <> q.vec_id AND c.label <> q.label
-WHERE q.vec_id < {N_QUERIES}
-QUALIFY rank <= {TOP_K}""",
+    f"""WITH scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS negative_id,
+         q.label AS query_label, c.label AS negative_label,
+         ROUND({_cos_sql(
+           "CAST(q.embedding AS DOUBLE[])", "CAST(c.embedding AS DOUBLE[])"
+         )}, 6) AS cosine
+  FROM embeddings q JOIN embeddings c
+    ON c.vec_id <> q.vec_id AND c.label <> q.label
+  WHERE q.vec_id < {N_QUERIES}
+)
+{_top_k_sql("scored", item="negative_id")}""",
 )
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Hard-negative mining** for retriever/contrastive training:
@@ -1722,23 +1597,19 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix rerank) and keep the label filter on the candidates —
     mining tolerates approximation, the loss just needs HARD
     negatives, not exact ranks."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    corpus = emb.select(
+    base = _emb_base(spark, sf_dir, "label")
+    corpus = base.select(
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("negative_label"),
-        _as_double("embedding").alias("c_emb"),
-    ).withColumn("c_norm", _norm(F.col("c_emb")))
-    queries = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("query_label"),
-            _as_double("embedding").alias("q_emb"),
-        )
-        .withColumn("q_norm", _norm(F.col("q_emb")))
+        F.col("emb").alias("c_emb"),
+        F.col("nrm").alias("c_norm"),
     )
-    from pyspark.sql import Window
-
+    queries = _query_rows(
+        base,
+        F.col("label").alias("query_label"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_norm"),
+    )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(
@@ -1750,19 +1621,10 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "negative_id",
             "query_label",
             "negative_label",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
+            F.round(_cosine("q_emb", "c_emb", "q_norm", "c_norm"), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("negative_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(scored, item="negative_id")
 
 
 # -------------------------------------------------- IVF-PQ composition
@@ -1829,10 +1691,6 @@ def _semdedup_oracle() -> str:
     """DuckDB twin of :func:`sim_semdedup`: the pinned cells of
     ``_PINNED_CELLS_CTES``, then the keep rule evaluated as a
     relational EXISTS over intra-cluster pairs."""
-    cos_me = (
-        "list_dot_product(pm.e, pe.e) / (sqrt(list_dot_product(pm.e, pm.e))"
-        " * sqrt(list_dot_product(pe.e, pe.e)))"
-    )
     return f"""WITH {_PINNED_CELLS_CTES}, mem AS (
   SELECT vec_id, cid, ROUND(c_cos, 6) AS c_cos FROM cells
 ), dropped AS (
@@ -1842,7 +1700,7 @@ def _semdedup_oracle() -> str:
     AND (e.c_cos < m.c_cos OR (e.c_cos = m.c_cos AND e.vec_id < m.vec_id))
   JOIN proj pm ON pm.vec_id = m.vec_id
   JOIN proj pe ON pe.vec_id = e.vec_id
-  WHERE {cos_me} >= {SEMDEDUP_THRESHOLD}
+  WHERE {_cos_sql("pm.e", "pe.e")} >= {SEMDEDUP_THRESHOLD}
 )
 SELECT m.vec_id, m.cid, m.c_cos AS centroid_cos,
        d.vec_id IS NULL AS kept
@@ -1892,11 +1750,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cid",
-            F.round(
-                _dot(F.col("emb"), F.col("cemb"))
-                / (F.col("nrm") * F.col("cnrm")),
-                6,
-            ).alias("c_cos"),
+            F.round(_cosine("emb", "cemb", "nrm", "cnrm"), 6).alias("c_cos"),
             "emb",
             "nrm",
         )
@@ -1907,9 +1761,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("e.c_cos") == F.col("m.c_cos"))
         & (F.col("e.vec_id") < F.col("m.vec_id"))
     )
-    dup_edge = (
-        _dot(F.col("m.emb"), F.col("e.emb")) / (F.col("m.nrm") * F.col("e.nrm"))
-    ) >= SEMDEDUP_THRESHOLD
+    dup_edge = _cosine("m.emb", "e.emb", "m.nrm", "e.nrm") >= SEMDEDUP_THRESHOLD
     dropped = (
         m.join(e, (F.col("m.cid") == F.col("e.cid")) & precedes & dup_edge, "left_semi")
         .select(F.col("m.vec_id").alias("vec_id"))
@@ -1943,22 +1795,15 @@ def _mmr_oracle() -> str:
     candidates per query; each block picks the argmax MMR score over
     the not-yet-selected pool, with every comparison quantized to 6 dp
     and tie-broken by corpus_id so both engines pick identical items."""
-    cos = (
-        "list_dot_product(a.e, b.e) / (sqrt(list_dot_product(a.e, a.e))"
-        " * sqrt(list_dot_product(b.e, b.e)))"
-    )
+    cos = _cos_sql("a.e", "b.e")
     blocks = [
         f"""sel1 AS (
   SELECT query_id, corpus_id, rel, 1 AS pick FROM (
-    SELECT query_id, corpus_id, rel,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY rel DESC, corpus_id ASC) AS rn
-    FROM pool
-  ) WHERE rn = 1
+{_top_k_sql("pool", k=1, score="rel", rank="rn")}
+  )
 )"""
     ]
     for k in range(2, MMR_K + 1):
-        prev = ", ".join(f"sel{i}" for i in range(1, k))
         blocks.append(
             f"""sel{k} AS (
   SELECT query_id, corpus_id, rel, {k} AS pick FROM (
@@ -1982,22 +1827,17 @@ def _mmr_oracle() -> str:
   ) WHERE rn = 1
 )"""
         )
-        _ = prev
     union_all = " UNION ALL SELECT * FROM ".join(
         f"sel{i}" for i in range(1, MMR_K + 1)
     )
-    return f"""WITH proj AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+    return f"""WITH {_PROJ_CTE}, rels AS (
+  SELECT a.vec_id AS query_id, b.vec_id AS corpus_id, ROUND({cos}, 6) AS rel
+  FROM proj a JOIN proj b ON b.vec_id <> a.vec_id
+  WHERE a.vec_id < {N_QUERIES}
 ), pool AS (
   SELECT query_id, corpus_id, rel FROM (
-    SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
-           ROUND({cos}, 6) AS rel,
-           ROW_NUMBER() OVER (
-             PARTITION BY a.vec_id ORDER BY ROUND({cos}, 6) DESC, b.vec_id ASC
-           ) AS rn
-    FROM proj a JOIN proj b ON b.vec_id <> a.vec_id
-    WHERE a.vec_id < {N_QUERIES}
-  ) WHERE rn <= {MMR_POOL}
+{_top_k_sql("rels", k=MMR_POOL, score="rel", rank="rn")}
+  )
 ), sims AS (
   SELECT p.query_id, a.vec_id AS id_a, b.vec_id AS id_b, ROUND({cos}, 6) AS sim
   FROM pool p
@@ -2085,38 +1925,22 @@ def _mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``MMR_POOL`` relevance candidates per query with their
     embeddings, quantized ranking — the shared front end of both MMR
     forms."""
-    from pyspark.sql import Window
-
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
+    base = _emb_base(spark, sf_dir)
+    queries = _query_rows(
+        base, F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm")
     )
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    rel_w = Window.partitionBy("query_id").orderBy(
-        F.desc("rel"), F.asc("corpus_id")
-    )
-    return (
+    rel = (
         base.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("corpus_id"),
-            F.round(
-                _dot(F.col("q_emb"), F.col("emb"))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ).alias("rel"),
+            F.round(_cosine("q_emb", "emb", "q_nrm", "nrm"), 6).alias("rel"),
             "emb",
             "nrm",
         )
-        .withColumn("rn", F.row_number().over(rel_w))
-        .filter(F.col("rn") <= MMR_POOL)
-        .drop("rn")
     )
+    return _top_k(rel, k=MMR_POOL, score="rel", rank="rn").drop("rn")
 
 
 def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2124,9 +1948,9 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     of join + max-aggregate + row_number (zero UDFs) — the form that
     proves the trajectory is relational. Slower than the grouped-UDF
     form by constant stage overhead (≈5 stages per round), identical
-    output (pytest-pinned); not registered, the fast form is."""
-    from pyspark.sql import Window
-
+    output: not registered, the fast form is, and
+    ``test_mmr_udf_equals_unrolled_catalyst`` uses this form as the
+    exact reference for :func:`sim_mmr_rerank`."""
     pool = bsp.persist(_mmr_pool(spark, sf_dir))
     a = pool.select("query_id", F.col("corpus_id").alias("id_a"), "emb", "nrm")
     b = pool.select(
@@ -2142,21 +1966,12 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("emb"), F.col("b_emb"))
-                / (F.col("nrm") * F.col("b_nrm")),
-                6,
-            ).alias("sim"),
+            F.round(_cosine("emb", "b_emb", "nrm", "b_nrm"), 6).alias("sim"),
         )
     )
     cand = pool.select("query_id", "corpus_id", "rel")
-    rel_w = Window.partitionBy("query_id").orderBy(
-        F.desc("rel"), F.asc("corpus_id")
-    )
-    selected = (
-        cand.withColumn("rn", F.row_number().over(rel_w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "corpus_id", "rel", F.lit(1).alias("pick"))
+    selected = _top_k(cand, k=1, score="rel", rank="rn").select(
+        "query_id", "corpus_id", "rel", F.lit(1).alias("pick")
     )
     for k in range(2, MMR_K + 1):
         sel_ids = selected.select(
@@ -2167,10 +1982,7 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["query_id", "corpus_id"],
             "left_anti",
         )
-        score_w = Window.partitionBy("query_id").orderBy(
-            F.desc("mmr"), F.asc("corpus_id")
-        )
-        next_pick = (
+        mmr = (
             remaining.join(sel_ids, "query_id")
             .join(
                 sims,
@@ -2186,9 +1998,9 @@ def mmr_rerank_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
                     6,
                 ).alias("mmr")
             )
-            .withColumn("rn", F.row_number().over(score_w))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "corpus_id", "rel", F.lit(k).alias("pick"))
+        )
+        next_pick = _top_k(mmr, k=1, score="mmr", rank="rn").select(
+            "query_id", "corpus_id", "rel", F.lit(k).alias("pick")
         )
         selected = selected.unionByName(next_pick)
     return bsp.checkpoint_result(selected)
@@ -2207,13 +2019,9 @@ def _kcenter_oracle() -> str:
     takes the quantized LEAST, and selects the next farthest point
     with the vec_id tiebreak — the same trajectory the Spark loop
     walks."""
-    cos = (
-        "list_dot_product(p.e, c.e) / (sqrt(list_dot_product(p.e, p.e))"
-        " * sqrt(list_dot_product(c.e, c.e)))"
-    )
+    cos = _cos_sql("p.e", "c.e")
     parts = [
-        "proj AS (\n  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e"
-        " FROM embeddings\n)",
+        _PROJ_CTE,
         "c1 AS (\n  SELECT e FROM proj WHERE vec_id = 0\n)",
         f"d1 AS (\n  SELECT p.vec_id, ROUND(1 - ({cos}), 6) AS dmin\n"
         "  FROM proj p CROSS JOIN c1 c\n)",
@@ -2268,10 +2076,7 @@ def sim_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook distributed farthest-point sweep. Distances quantized to
     6 dp with vec_id tiebreaks → the whole trajectory hash-matches the
     unrolled-CTE DuckDB oracle."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", _as_double("embedding").alias("emb")).withColumn(
-        "nrm", _norm(F.col("emb"))
-    )
+    base = _emb_base(spark, sf_dir)
     seed = base.filter(F.col("vec_id") == 0).select("emb").collect()
     if not seed:
         return spark.createDataFrame(
@@ -2280,12 +2085,8 @@ def sim_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def dist_to(vec: list[float]) -> Column:
         lit_vec = F.array(*[F.lit(float(x)) for x in vec])
-        import math
-
-        vnrm = math.sqrt(sum(x * x for x in vec))
-        return F.round(
-            1 - _dot(F.col("emb"), lit_vec) / (F.col("nrm") * F.lit(vnrm)), 6
-        )
+        vnrm = F.lit(math.sqrt(sum(x * x for x in vec)))
+        return F.round(1 - _cosine("emb", lit_vec, "nrm", vnrm), 6)
 
     state = bsp.persist(
         base.select(
@@ -2363,8 +2164,6 @@ def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pinned-IVF core, :func:`_pinned_centroids`); one
     corpus × K broadcast distance computation, one row per vector, a
     K-row result."""
-    from pyspark.sql import Window
-
     base = _emb_base(spark, sf_dir)
     cents = _pinned_centroids(base)
     if not cents:
@@ -2374,12 +2173,7 @@ def sim_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     dists = base.crossJoin(F.broadcast(_centroid_table(spark, cents))).select(
         "vec_id",
         "cid",
-        F.round(
-            1
-            - _dot(F.col("emb"), F.col("cemb"))
-            / (F.col("nrm") * F.col("cnrm")),
-            6,
-        ).alias("d"),
+        F.round(1 - _cosine("emb", "cemb", "nrm", "cnrm"), 6).alias("d"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
     ranked = dists.withColumn("rk", F.row_number().over(w))
@@ -2453,7 +2247,7 @@ _DBSCAN_ORACLE = _dbscan_oracle_from_pairs(
     f"""pairs AS (
   SELECT a.vec_id AS va, b.vec_id AS vb
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_COSINE_SQL} >= {DBSCAN_EPS_COS}
+  WHERE {_PAIR_COS_SQL} >= {DBSCAN_EPS_COS}
 )"""
 )
 
@@ -2620,13 +2414,30 @@ def sim_dbscan_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_K = 8
 
 
-#: Input quantization for the covariance sums: embeddings land as
-#: 1e6-scaled BIGINTs (``FLOOR(x·1e6 + 0.5)``), so every downstream
-#: SUM is exact integer arithmetic — order-independent across
-#: partitions AND engines. |x| < 1 and dim = 64 bound the products at
-#: ~3.6e11 and the sums at n·3.6e11, safely inside BIGINT up to ~2.5e7
-#: vectors; beyond that a production build would widen to DECIMAL(38,0).
-_COV_SCALE = 1_000_000
+def _ppm_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, e array<long>)``: every embedding on the 1e-6 integer
+    grid (``quantize.ppm_floor`` per element, ``FLOOR(x·1e6 + 0.5)``),
+    so every downstream moment SUM is exact integer arithmetic —
+    order-independent across partitions AND engines. |x| < 1 and
+    dim = 64 bound the products at ~3.6e11 and the sums at n·3.6e11,
+    safely inside BIGINT up to ~2.5e7 vectors; beyond that a production
+    build would widen to DECIMAL(38,0)."""
+    return load_raw(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform(_as_double("embedding"), ppm_floor).alias("e")
+    )
+
+
+#: DuckDB twin of :func:`_ppm_grid`: ``x(vec_id, e)``.
+_PPM_GRID_CTE = f"""x AS MATERIALIZED (
+  SELECT vec_id, list_transform({_EMB_CAST}, v -> {ppm_floor_sql("v")}) AS e
+  FROM embeddings
+)"""
+
+#: ``xs(vec_id, i, xi)``: one row per vector and 0-based dimension of ``x``.
+_PPM_CELLS_CTE = """xs AS MATERIALIZED (
+  SELECT vec_id, CAST(i - 1 AS INTEGER) AS i, e[i] AS xi
+  FROM (SELECT vec_id, e, generate_subscripts(e, 1) AS i FROM x)
+)"""
 
 
 def _cov_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2638,7 +2449,7 @@ def _cov_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate in partition order, and a value landing within an ulp of
     a 6-dp half-boundary then ROUNDs differently across engines /
     environments (the r8 driver flip). The inputs are therefore
-    quantized to ``_COV_SCALE``-scaled BIGINTs first, the three moment
+    quantized to the :func:`_ppm_grid` BIGINTs first, the three moment
     sums are exact integers, and the covariance is one deterministic
     IEEE-double expression tree evaluated identically by Spark and
     DuckDB, finished with FLOOR(x·1e6 + 0.5) (no rounding-rule
@@ -2655,14 +2466,7 @@ def _cov_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy GEMM (X_pᵀX_p partials via mapInPandas) — same algebra,
     same bounded shuffle; the Catalyst form is kept because it is
     fully oracle-comparable."""
-    x = load_raw(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            _as_double("embedding"),
-            lambda v: F.floor(v * _COV_SCALE + 0.5).cast("long"),
-        ).alias("e"),
-    )
-    ex = x.select("e", F.posexplode("e").alias("i", "xi"))
+    ex = _ppm_grid(spark, sf_dir).select("e", F.posexplode("e").alias("i", "xi"))
     pr = ex.select(
         F.col("i").cast("int").alias("i"),
         "xi",
@@ -2689,32 +2493,29 @@ def _cov_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("i", "j", (ppm.cast("double") / 1e6).alias("cov"))
 
 
-_COV_ORACLE = f"""WITH x AS (
-  SELECT vec_id,
-         list_transform(
-           CAST(embedding AS DOUBLE[]),
-           v -> CAST(FLOOR(v * {_COV_SCALE} + 0.5) AS BIGINT)
-         ) AS e
-  FROM embeddings
-),
-ex AS (
+#: The SQL form of :func:`_cov_relation`'s exact-integer moment sums:
+#: ``g(i, j, n, sx, sy, sxy)`` for i ≤ j over ``_PPM_GRID_CTE``.
+_COV_MOMENT_CTES = f"""{_PPM_GRID_CTE},
+ex AS MATERIALIZED (
   SELECT e, i, e[i] AS xi
   FROM (SELECT e, generate_subscripts(e, 1) AS i FROM x)
 ),
-pr AS (
+pr AS MATERIALIZED (
   SELECT CAST(i - 1 AS INTEGER) AS i, CAST(j - 1 AS INTEGER) AS j,
          xi, e[j] AS xj
   FROM (SELECT e, i, xi, generate_subscripts(e, 1) AS j FROM ex)
   WHERE j >= i
 ),
-g AS (
+g AS MATERIALIZED (
   SELECT i, j,
          CAST(COUNT(*) AS DOUBLE) AS n,
          CAST(CAST(SUM(xi) AS BIGINT) AS DOUBLE) AS sx,
          CAST(CAST(SUM(xj) AS BIGINT) AS DOUBLE) AS sy,
          CAST(CAST(SUM(xi * xj) AS BIGINT) AS DOUBLE) AS sxy
   FROM pr GROUP BY i, j
-)
+)"""
+
+_COV_ORACLE = f"""WITH {_COV_MOMENT_CTES}
 SELECT i, j,
        CAST(CAST(FLOOR((sxy - sx * sy / n) / n / 1e6 + 0.5)
                  AS BIGINT) AS DOUBLE) / 1e6 AS cov
@@ -2758,28 +2559,49 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     against an independent numpy PCA: matching per-component variance
     spectrum, orthonormal loadings, near-zero cross-component
     covariance, and value agreement under the pinned sign convention."""
-    import numpy as np
-
-    cov_rows = _cov_relation(spark, sf_dir).collect()
-    if not cov_rows:
+    eig = _cov_eigh(spark, sf_dir)
+    if eig is None:
         return spark.createDataFrame([], "vec_id long, pc int, value double")
-    C = np.zeros((EMB_DIM, EMB_DIM))
-    for r in cov_rows:
-        C[r["i"], r["j"]] = r["cov"]
-        C[r["j"], r["i"]] = r["cov"]
-    evals, evecs = np.linalg.eigh(C)  # ascending
-    order = np.argsort(evals)[::-1][:PCA_K]
+    evals, evecs = eig  # ascending
     comps = []
-    for idx in order:
+    for idx in np.argsort(evals)[::-1][:PCA_K]:
         v = evecs[:, idx]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        comps.append([float(z) for z in v])
+        comps.append(-v if v[int(np.argmax(np.abs(v)))] < 0 else v)
+    return _centered_projection(spark, sf_dir, comps, "pc")
 
+
+def _cov_matrix(spark: SparkSession, sf_dir: str) -> np.ndarray | None:
+    """The symmetric EMB_DIM × EMB_DIM matrix of :func:`_cov_relation`,
+    collected to the driver (bounded model state: dim², never
+    corpus-sized); None for an empty corpus."""
+    rows = _cov_relation(spark, sf_dir).collect()
+    if not rows:
+        return None
+    C = np.zeros((EMB_DIM, EMB_DIM))
+    for r in rows:
+        C[r["i"], r["j"]] = C[r["j"], r["i"]] = r["cov"]
+    return C
+
+
+def _cov_eigh(spark: SparkSession, sf_dir: str):
+    """The symmetric eigendecomposition of :func:`_cov_matrix` (eigenvalues ascending,
+    eigenvectors as columns); None for an empty corpus."""
+    C = _cov_matrix(spark, sf_dir)
+    return None if C is None else np.linalg.eigh(C)
+
+
+def _centered_projection(
+    spark: SparkSession, sf_dir: str, rows, col: str
+) -> DataFrame:
+    """Every embedding centered on the per-dimension means and dotted
+    with each vector of ``rows``: flat ``(vec_id, col int, value)``,
+    one row per vector and entry of ``rows``, value rounded to 6 dp.
+    The means are one collect of a dim-row aggregate, and the vectors
+    re-enter the plan as literals, so the projection is one
+    shuffle-free map per row."""
     x = load_raw(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("e")
     )
-    # per-dim means for centering, from the tiny diagonal of the sums
     mean = (
         x.select(F.posexplode("e").alias("i", "xi"))
         .groupBy("i")
@@ -2789,24 +2611,14 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = [0.0] * EMB_DIM
     for r in mean:
         mu[r["i"]] = float(r["m"])
-    mu_lit = F.array(*[F.lit(v) for v in mu])
-    centered = F.zip_with(F.col("e"), mu_lit, lambda a, b: a - b)
-    pcs = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    centered,
-                    F.array(*[F.lit(v) for v in comp]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for comp in comps
-        ]
+    centered = F.zip_with(
+        F.col("e"), F.array(*[F.lit(v) for v in mu]), lambda a, b: a - b
     )
-    return x.select("vec_id", F.posexplode(pcs).alias("pc", "value")).select(
-        "vec_id", F.col("pc").cast("int").alias("pc"), F.round("value", 6).alias("value")
+    out = F.array(
+        *[_dot(centered, F.array(*[F.lit(float(w)) for w in row])) for row in rows]
+    )
+    return x.select("vec_id", F.posexplode(out).alias(col, "value")).select(
+        "vec_id", F.col(col).cast("int").alias(col), F.round("value", 6).alias("value")
     )
 
 
@@ -2877,83 +2689,34 @@ def sim_whiten_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions don't explode. Output is flat (vec_id, dim, value),
     rows-only by nature; pytest asserts the whitened sample covariance
     is ≈ identity on the non-degenerate spectrum."""
-    import numpy as np
-
-    cov_rows = _cov_relation(spark, sf_dir).collect()
-    if not cov_rows:
+    eig = _cov_eigh(spark, sf_dir)
+    if eig is None:
         return spark.createDataFrame([], "vec_id long, dim int, value double")
-    C = np.zeros((EMB_DIM, EMB_DIM))
-    for r in cov_rows:
-        C[r["i"], r["j"]] = r["cov"]
-        C[r["j"], r["i"]] = r["cov"]
-    evals, evecs = np.linalg.eigh(C)
+    evals, evecs = eig
     scale = 1.0 / np.sqrt(np.maximum(evals, WHITEN_EPS))
     W = (evecs * scale) @ evecs.T  # ZCA: V Λ^-1/2 Vᵀ
-
-    x = load_raw(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("e")
-    )
-    mean = (
-        x.select(F.posexplode("e").alias("i", "xi"))
-        .groupBy("i")
-        .agg(F.avg("xi").alias("m"))
-        .collect()
-    )
-    mu = [0.0] * EMB_DIM
-    for r in mean:
-        mu[r["i"]] = float(r["m"])
-    centered = F.zip_with(
-        F.col("e"), F.array(*[F.lit(v) for v in mu]), lambda a, b: a - b
-    )
-    out_dims = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    centered,
-                    F.array(*[F.lit(float(w)) for w in W[d, :]]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for d in range(EMB_DIM)
-        ]
-    )
-    return x.select("vec_id", F.posexplode(out_dims).alias("dim", "value")).select(
-        "vec_id",
-        F.col("dim").cast("int").alias("dim"),
-        F.round("value", 6).alias("value"),
-    )
+    return _centered_projection(spark, sf_dir, W, "dim")
 
 
 # --------------------------- diagonal whitening, fully oracle-backed
 
-_WHITEN_DIAG_ORACLE = """WITH x AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        v -> CAST(FLOOR(v * 1000000.0 + 0.5) AS BIGINT)) AS e
-  FROM embeddings
-),
-ex AS (
-  SELECT vec_id, CAST(i - 1 AS INTEGER) AS i, e[i] AS xi
-  FROM (SELECT vec_id, e, generate_subscripts(e, 1) AS i FROM x)
-),
+#: The published z-score of :func:`sim_whiten_diag_project`, over
+#: ``xs`` joined to the per-dimension moments ``mom``.
+_WHITEN_Z_SQL = """(CAST(xi AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+        / SQRT((CAST(sxx AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+               / CAST(n AS DOUBLE) + 1000000.0)"""
+
+_WHITEN_DIAG_ORACLE = f"""WITH {_PPM_GRID_CTE},
+{_PPM_CELLS_CTE},
 mom AS (
   SELECT i, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(xi) AS HUGEINT) AS sx,
          CAST(SUM(xi * xi) AS HUGEINT) AS sxx
-  FROM ex GROUP BY i
+  FROM xs GROUP BY i
 )
-SELECT ex.vec_id, ex.i AS dim,
-       CAST(CAST(FLOOR(((CAST(xi AS DOUBLE)
-                         - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                        / SQRT((CAST(sxx AS DOUBLE)
-                                - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)
-                                  / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-                               + 1000000.0))
-                       * 1000000.0 + 0.5) AS BIGINT) AS DOUBLE)
-         / 1000000.0 AS value
-FROM ex JOIN mom ON ex.i = mom.i"""
+SELECT xs.vec_id, xs.i AS dim, {ppm_value_sql(_WHITEN_Z_SQL)} AS value
+FROM xs JOIN mom ON xs.i = mom.i"""
 
 
 @register("sim_whiten_diag_project", _WHITEN_DIAG_ORACLE)
@@ -2981,14 +2744,7 @@ def sim_whiten_diag_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly dim groups, then a broadcast join of the 64-row moment
     table back onto the exploded stream — shuffle bounded by dim ×
     partitions, projection at scan speed; no collect anywhere."""
-    x = load_raw(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            _as_double("embedding"),
-            lambda v: F.floor(v * 1_000_000 + 0.5).cast("long"),
-        ).alias("e"),
-    )
-    ex = x.select("vec_id", F.posexplode("e").alias("i", "xi"))
+    ex = _ppm_grid(spark, sf_dir).select("vec_id", F.posexplode("e").alias("i", "xi"))
     mom = ex.groupBy("i").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.col("xi").cast("decimal(38,0)")).alias("sx"),
@@ -3005,8 +2761,7 @@ def sim_whiten_diag_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.col("i").cast("int").alias("dim"),
-            (F.floor(z * 1_000_000.0 + 0.5).cast("long").cast("double")
-             / F.lit(1_000_000.0)).alias("value"),
+            ppm_value(z).alias("value"),
         )
     )
 
@@ -3080,30 +2835,7 @@ def _pc1_oracle() -> str:
     normalize-and-square rounds on the (i, j, c) matrix relation →
     max-diagonal column read-out → sign pin → exact-integer centered
     projection. HUGEINT throughout; ``//`` matches Spark ``div``."""
-    head = f"""WITH x AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        v -> CAST(FLOOR(v * {_COV_SCALE} + 0.5) AS BIGINT)) AS e
-  FROM embeddings
-),
-ex AS MATERIALIZED (
-  SELECT e, i, e[i] AS xi
-  FROM (SELECT e, generate_subscripts(e, 1) AS i FROM x)
-),
-pr AS MATERIALIZED (
-  SELECT CAST(i - 1 AS INTEGER) AS i, CAST(j - 1 AS INTEGER) AS j,
-         xi, e[j] AS xj
-  FROM (SELECT e, i, xi, generate_subscripts(e, 1) AS j FROM ex)
-  WHERE j >= i
-),
-g AS MATERIALIZED (
-  SELECT i, j,
-         CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(CAST(SUM(xi) AS BIGINT) AS DOUBLE) AS sx,
-         CAST(CAST(SUM(xj) AS BIGINT) AS DOUBLE) AS sy,
-         CAST(CAST(SUM(xi * xj) AS BIGINT) AS DOUBLE) AS sxy
-  FROM pr GROUP BY i, j
-),
+    head = f"""WITH {_COV_MOMENT_CTES},
 covu AS MATERIALIZED (
   SELECT i, j,
          CAST(CAST(FLOOR((sxy - sx * sy / n) / n / 1e6 + 0.5) AS BIGINT)
@@ -3148,10 +2880,7 @@ pin AS MATERIALIZED (
               THEN -1 ELSE 1 END AS sg
 ),
 wf AS MATERIALIZED (SELECT i, w * sg AS w FROM wn, pin),
-xs AS MATERIALIZED (
-  SELECT vec_id, CAST(i - 1 AS INTEGER) AS i, e[i] AS xi
-  FROM (SELECT vec_id, e, generate_subscripts(e, 1) AS i FROM x)
-),
+{_PPM_CELLS_CTE},
 ncte AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM x),
 colsum AS MATERIALIZED (SELECT i, CAST(SUM(xi) AS HUGEINT) AS sx FROM xs GROUP BY i),
 swc AS MATERIALIZED (SELECT CAST(SUM(c.sx * w.w) AS HUGEINT) AS sw
@@ -3197,23 +2926,18 @@ def sim_pca_pc1_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     wherever it runs. Bound contract: |x| < 2^53/(n·1e12) per the
     DECIMAL(38,0) sums; int64 holds the driver-side T = S·S because
     |S| ≤ 1e6 by construction."""
-    cov_rows = _cov_relation(spark, sf_dir).collect()
-    if not cov_rows:
+    C = _cov_matrix(spark, sf_dir)
+    if C is None:
         return spark.createDataFrame([], "vec_id long, pc1_ppm long, value double")
-    cov_ppm: dict[tuple[int, int], int] = {}
-    for r in cov_rows:
-        c = int(round(r["cov"] * 1_000_000))  # exact: cov IS ppm/1e6
-        cov_ppm[(r["i"], r["j"])] = c
-        cov_ppm[(r["j"], r["i"])] = c
-    w = _pc1_weights(cov_ppm)
-
-    x = load_raw(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            _as_double("embedding"),
-            lambda v: F.floor(v * _COV_SCALE + 0.5).cast("long"),
-        ).alias("e"),
+    w = _pc1_weights(
+        {  # exact: cov IS ppm/1e6
+            (i, j): int(round(float(C[i, j]) * 1_000_000))
+            for i in range(EMB_DIM)
+            for j in range(EMB_DIM)
+        }
     )
+
+    x = _ppm_grid(spark, sf_dir)
     # one fused pass: per-dim exact sums AND n (every dim group holds
     # exactly one entry per vector, so any group's count IS n) — no
     # separate x.count() job
@@ -3331,16 +3055,12 @@ def _nprobe_curve_oracle() -> str:
     bf = _REGISTRY["sim_bruteforce_topk"].oracle
     per_n = []
     for n in NPROBE_SWEEP:
+        probed = f"(SELECT * FROM scored WHERE cell_rank <= {n})"
         per_n.append(
             f"""topk_{n} AS (
   SELECT query_id, corpus_id FROM (
-    SELECT query_id, corpus_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY query_id
-             ORDER BY ROUND(cosine, 6) DESC, corpus_id ASC
-           ) AS r
-    FROM scored WHERE cell_rank <= {n}
-  ) WHERE r <= {TOP_K}
+{_top_k_sql(probed, rank="r")}
+  )
 ), hits_{n} AS (
   SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS h
   FROM bf b JOIN topk_{n} t
@@ -3357,15 +3077,7 @@ FROM spine s LEFT JOIN hits_{n} h ON h.query_id = s.query_id"""
     )
     return f"""WITH bf AS (
 {bf}
-), {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(max(NPROBE_SWEEP))}, scored AS (
-  SELECT c.query_id, c.corpus_id, c.cell_rank,
-         list_dot_product(pq.e, pc.e)
-           / (sqrt(list_dot_product(pq.e, pq.e)) * sqrt(list_dot_product(pc.e, pc.e)))
-           AS cosine
-  FROM cand c
-  JOIN proj pq ON pq.vec_id = c.query_id
-  JOIN proj pc ON pc.vec_id = c.corpus_id
-), spine AS (
+), {_PINNED_CELLS_CTES}, {_ivf_cand_ctes(max(NPROBE_SWEEP))}, {_SCORED_CTE}, spine AS (
   SELECT query_id, CAST(COUNT(*) AS BIGINT) AS k_eff FROM bf GROUP BY query_id
 ), {", ".join(per_n)}
 {selects}"""
@@ -3402,19 +3114,10 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "corpus_id")
     )
     spine = bf.groupBy("query_id").agg(F.count("*").cast("long").alias("k_eff"))
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
     slices = []
     for n in NPROBE_SWEEP:
-        topk = (
-            cands.filter(F.col("cell_rank") <= n)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= TOP_K)
-            .select("query_id", "corpus_id")
+        topk = _top_k(cands.filter(F.col("cell_rank") <= n), rank="r").select(
+            "query_id", "corpus_id"
         )
         hits = (
             bf.join(topk, ["query_id", "corpus_id"])
@@ -3441,11 +3144,11 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- Lloyd k-means, verified
 
-#: Lloyd rounds / cluster count for the oracle-verified fit. The other
-#: k-means in this module (`_ivf_centroids`) is a driver-side model
-#: fit whose output parameterizes pinned indexes; THIS one runs the
-#: rounds as distributed dataflow and hash-verifies every round
+#: Lloyd rounds / cluster count for the oracle-verified fit: the rounds
+#: run as distributed dataflow and every round is hash-verified
 #: against an unrolled-CTE DuckDB twin — the fit itself is the query.
+#: The pinned indexes above take this module's only other centroids,
+#: the first ``IVF_K`` vectors, without a fit.
 KM_K = 8
 KM_ROUNDS = 2
 
@@ -3494,8 +3197,6 @@ GROUP BY a2.cid"""
 def _km_assign(base: DataFrame, cents: DataFrame) -> DataFrame:
     """One Lloyd assignment pass: nearest (6-dp-quantized squared L2,
     lowest-cid tiebreak) of a broadcast centroid set."""
-    from pyspark.sql import Window
-
     d2 = F.round(
         F.aggregate(
             F.zip_with("e", "ce", lambda a, b: (a - b) * (a - b)),
@@ -3725,23 +3426,17 @@ KNN_K = 5
 @register(
     "sim_knn_label_agreement",
     f"""WITH vecs AS (
-  SELECT vec_id, label, embedding FROM embeddings
+  SELECT vec_id, label, {_EMB_CAST} AS e FROM embeddings
 ), pairs AS (
   SELECT q.vec_id AS query_id, q.label AS true_label,
          c.vec_id AS corpus_id, c.label AS c_label,
-         ROUND(list_dot_product(q.embedding, c.embedding)
-               / (sqrt(list_dot_product(q.embedding, q.embedding))
-                  * sqrt(list_dot_product(c.embedding, c.embedding))), 6)
-           AS cos_q
+         ROUND({_cos_sql("q.e", "c.e")}, 6) AS cos_q
   FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
   WHERE q.vec_id % {KNN_PROBE_MOD} = 0
 ), topk AS (
   SELECT query_id, true_label, c_label FROM (
-    SELECT query_id, true_label, c_label,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cos_q DESC, corpus_id) AS rn
-    FROM pairs
-  ) WHERE rn <= {KNN_K}
+{_top_k_sql("pairs", k=KNN_K, score="cos_q", rank="rn")}
+  )
 ), votes AS (
   SELECT query_id, true_label, c_label, COUNT(*) AS v
   FROM topk GROUP BY query_id, true_label, c_label
@@ -3780,22 +3475,18 @@ def sim_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`sim_bruteforce_topk` (one corpus scan, window per query);
     at 100 TB swap the exact scorer for the pinned IVF index probes —
     the vote/report stages are unchanged."""
-    from pyspark.sql import Window
-
-    emb = load_raw(spark, sf_dir, "embeddings")
-    corpus = emb.select(
+    base = _emb_base(spark, sf_dir, "label")
+    corpus = base.select(
         F.col("vec_id").alias("corpus_id"),
         F.col("label").alias("c_label"),
-        _as_double("embedding").alias("c_emb"),
-    ).withColumn("c_norm", _norm(F.col("c_emb")))
-    probes = (
-        emb.filter(F.col("vec_id") % KNN_PROBE_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("true_label"),
-            _as_double("embedding").alias("q_emb"),
-        )
-        .withColumn("q_norm", _norm(F.col("q_emb")))
+        F.col("emb").alias("c_emb"),
+        F.col("nrm").alias("c_norm"),
+    )
+    probes = base.filter(F.col("vec_id") % KNN_PROBE_MOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("true_label"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_norm"),
     )
     pairs = (
         corpus.crossJoin(F.broadcast(probes))
@@ -3805,21 +3496,10 @@ def sim_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "corpus_id",
             "c_label",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cos_q"),
+            F.round(_cosine("q_emb", "c_emb", "q_norm", "c_norm"), 6).alias("cos_q"),
         )
     )
-    topk = pairs.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("cos_q").desc(), F.col("corpus_id")
-            )
-        ),
-    ).filter(F.col("rn") <= KNN_K)
+    topk = _top_k(pairs, k=KNN_K, score="cos_q", rank="rn")
     votes = topk.groupBy("query_id", "true_label", "c_label").agg(
         F.count("*").alias("v")
     )
@@ -3850,39 +3530,34 @@ def sim_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- NN-descent round
 
-#: Cosine over the norm-precomputed ``projn`` relation: norms are
-#: per-NODE (computed once in projn), not per pair — the oracle's cost
-#: is candidate-linear, mirroring the Spark side's proj/nrm projection.
-_NND_COS = "list_dot_product(pu.e, pv.e) / (pu.nrm * pv.nrm)"
-
-
 def _nnd_topk_sql(src: str, name: str) -> str:
-    """Top-K neighbor selection CTE body over a (u, v) candidate
-    relation ``src`` — quantized-cosine rank with vec_id tie-break,
-    the pinned ordering every sim_* ranking uses. MATERIALIZED:
-    DuckDB inlines CTEs by default, and g0 feeds undir (twice),
-    cand1, and the final recall join — without materialization the
-    million-row cosine window re-executes per reference (measured 6×
-    at sf0.1, 52 s → 4 s). The Spark side localCheckpoints g0 for the
-    same reason."""
+    """Top-K neighbor selection CTE over a (u, v) candidate relation
+    ``src`` — the pinned :func:`_top_k_sql` ranking per ``u``.
+    MATERIALIZED: DuckDB inlines CTEs by default, and g0 feeds undir
+    (twice), cand1, and the final recall join — without materialization
+    the million-row cosine window re-executes per reference (measured
+    6× at sf0.1, 52 s → 4 s). The Spark side localCheckpoints g0 for
+    the same reason."""
+    scored = f"""(
+    SELECT s.u, s.v, {_cos_sql("pu.e", "pv.e")} AS cosine
+    FROM {src} s
+    JOIN proj pu ON pu.vec_id = s.u
+    JOIN proj pv ON pv.vec_id = s.v
+  )"""
     return f"""{name} AS MATERIALIZED (
   SELECT u, v FROM (
-    SELECT s.u, s.v,
-           ROW_NUMBER() OVER (
-             PARTITION BY s.u ORDER BY ROUND({_NND_COS}, 6) DESC, s.v ASC
-           ) AS r
-    FROM {src} s
-    JOIN projn pu ON pu.vec_id = s.u
-    JOIN projn pv ON pv.vec_id = s.v
-  ) WHERE r <= {TOP_K}
+{_top_k_sql(scored, by="u", item="v", rank="r")}
+  )
 )"""
 
 
 def _nndescent_oracle() -> str:
+    exact = f"""(
+    SELECT pu.vec_id AS u, pv.vec_id AS v
+    FROM proj pu JOIN proj pv ON pv.vec_id <> pu.vec_id
+    WHERE pu.vec_id < {N_QUERIES}
+  )"""
     return f"""WITH {_lsh_sig_ctes(LSH_TABLES, LSH_BITS)},
-projn AS MATERIALIZED (
-  SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm FROM proj
-),
 cand0 AS (
   SELECT DISTINCT a.vec_id AS u, b.vec_id AS v
   FROM tb a JOIN tb b
@@ -3897,17 +3572,7 @@ cand1 AS (
   SELECT u, v FROM g0
 ),
 {_nnd_topk_sql("cand1", "g1")},
-exact AS (
-  SELECT u, v FROM (
-    SELECT pu.vec_id AS u, pv.vec_id AS v,
-           ROW_NUMBER() OVER (
-             PARTITION BY pu.vec_id
-             ORDER BY ROUND({_NND_COS}, 6) DESC, pv.vec_id ASC
-           ) AS r
-    FROM projn pu JOIN projn pv ON pv.vec_id <> pu.vec_id
-    WHERE pu.vec_id < {N_QUERIES}
-  ) WHERE r <= {TOP_K}
-)
+{_nnd_topk_sql(exact, "exact")}
 SELECT e.u AS query_id,
        ROUND(SUM(CASE WHEN g0.v IS NOT NULL THEN 1.0 ELSE 0.0 END)
              / {TOP_K}, 6) AS recall_init,
@@ -3945,8 +3610,6 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the standard iterated kNN-graph build (each extra round =
     one more self-join, no new scan of the embeddings).
     """
-    from pyspark.sql import Window
-
     emb = load_raw(spark, sf_dir, "embeddings")
     # shared by all three scoring legs (init, refined, exact) — persist
     # once, released by the query scope after checkpoint_result below
@@ -3960,14 +3623,7 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _score_candidates_blocked(blocks, cand)
 
     def rank_topk(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy("u").orderBy(
-            F.desc(F.round("cosine", 6)), F.asc("v")
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= TOP_K)
-            .select("u", "v")
-        )
+        return _top_k(scored, by="u", item="v", rank="r").select("u", "v")
 
     def topk(cand: DataFrame) -> DataFrame:
         return rank_topk(score(cand))
@@ -4008,8 +3664,8 @@ def sim_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ids = emb.select("vec_id")
     exact = topk(
-        ids.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("u"))
+        _query_rows(ids)
+        .select(F.col("query_id").alias("u"))
         .crossJoin(ids.select(F.col("vec_id").alias("v")))
         .filter(F.col("u") != F.col("v"))
     )
@@ -4057,34 +3713,14 @@ MP_TABLES = 2
 
 
 def _multiprobe_oracle() -> str:
-    return f"""WITH {_lsh_sig_ctes(MP_TABLES, LSH_BITS)},
-probes AS (
-  SELECT DISTINCT vec_id, tbl,
+    return _lsh_probe_topk_sql(
+        MP_TABLES,
+        f"""  SELECT DISTINCT vec_id, tbl,
          CASE WHEN d = 0 THEN bucket
               ELSE xor(bucket, 1 << (d - 1)) END AS bucket
   FROM tb CROSS JOIN generate_series(0, {LSH_BITS}) g(d)
-  WHERE vec_id < {N_QUERIES}
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS corpus_id
-  FROM probes q JOIN tb c
-    ON q.tbl = c.tbl AND q.bucket = c.bucket AND c.vec_id <> q.vec_id
-),
-scored AS (
-  SELECT c.query_id, c.corpus_id,
-         list_dot_product(pq.e, pc.e)
-           / (sqrt(list_dot_product(pq.e, pq.e))
-              * sqrt(list_dot_product(pc.e, pc.e))) AS cosine
-  FROM cand c
-  JOIN proj pq ON pq.vec_id = c.query_id
-  JOIN proj pc ON pc.vec_id = c.corpus_id
-)
-SELECT query_id, corpus_id, cosine, rank FROM (
-  SELECT *, CAST(ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY ROUND(cosine, 6) DESC, corpus_id ASC
-  ) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= {TOP_K}"""
+  WHERE vec_id < {N_QUERIES}""",
+    )
 
 
 @register("sim_multiprobe_lsh_topk", _multiprobe_oracle())
@@ -4106,13 +3742,11 @@ def sim_multiprobe_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries x (1 + {BITS}) rows broadcast into the bucket equi-join,
     then exact cosine + quantized-rank top-k over candidates — the
     sim_lsh_topk plan with a fatter (still tiny) broadcast side."""
-    emb = load_raw(spark, sf_dir, "embeddings")
-    bucketed = _bucketed(emb, MP_TABLES, LSH_BITS)
+    bucketed = _bucketed(load_raw(spark, sf_dir, "embeddings"), MP_TABLES, LSH_BITS)
     probe_ids = F.array(*[F.lit(d) for d in range(LSH_BITS + 1)])
-    queries = (
-        bucketed.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
+    probes = (
+        _query_rows(
+            bucketed,
             F.col("emb").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
             "table",
@@ -4130,35 +3764,7 @@ def sim_multiprobe_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    cands = (
-        bucketed.join(F.broadcast(queries), ["table", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            F.col("vec_id").alias("corpus_id"),
-            "emb",
-            "nrm",
-        )
-        .distinct()
-    )
-    # cands is already unique per pair (see sim_lsh_topk): no distinct.
-    scored = cands.select(
-        "query_id",
-        "corpus_id",
-        (
-            _dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))
-        ).alias("cosine"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("corpus_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    return _lsh_probe_topk(bucketed, probes)
 
 
 sim_multiprobe_lsh_topk.__doc__ = (

@@ -42,7 +42,7 @@ def test_every_documented_query_exists():
     # Names COVERAGE.md mentions precisely BECAUSE they left the
     # registry (round-10 rows-only demotions); the doc line records
     # the demotion, so their absence from queries() is the point.
-    documented_demotions = {"sim_ivf_topk", "ml_isotonic_calibration"}
+    documented_demotions = {"ml_isotonic_calibration"}
     stale = sorted(
         tok for tok in candidates - known_non_queries - documented_demotions
         if tok not in qs

@@ -231,7 +231,7 @@ def test_asof_core_matches_naive_on_random_logs(spark):
 def test_empty_input_robustness(queries, spark):
     """Empty inputs are normal at scale (quiet days, fresh deploys) —
     operators must return empty relations, not throw. Regression set:
-    the three historical offenders plus one per operator family; the
+    the historical offenders plus one per operator family; the
     full 77-query sweep lives in scripts/empty_sweep.py."""
     import sys
 
@@ -239,14 +239,6 @@ def test_empty_input_robustness(queries, spark):
     from empty_sweep import make_empty_fixture
 
     dst = make_empty_fixture(SF_DIR)
-    # historical offender now outside the registry (round-10 demotion;
-    # certified form sim_ivf_topk_pinned): keep the empty-input check
-    # via direct import
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        sim_ivf_topk,
-    )
-
-    assert sim_ivf_topk(spark, dst).count() == 0
     for name in (
         "als_recommendations",           # historical: ALS on no ratings
         "s7_partitioned_write_pruned_read",  # historical: no partition dirs

@@ -143,14 +143,27 @@ BUDGETS = {
     # the ML family's shared cores, measured at sf0.001: the GD sweep
     # and the learning curve 1/3 (the returned plan scores the
     # broadcast weight table, so the cartesian is that broadcast), the
-    # exact and histogram Gini splits 2/4 each (cartesian = the 1-row
-    # totals broadcast), ridge 2/3 (cartesian = the 1-row coefficient
-    # broadcast)
+    # exact and histogram Gini splits 1/2 each (the totals come from a
+    # whole-frame window over the per-key counts, so the input is read
+    # once and nothing is broadcast), ridge 2/3 (cartesian = the 1-row
+    # coefficient broadcast)
     "ml_lr_sweep": (1, 3, True, False),
     "ml_learning_curve": (1, 3, True, False),
-    "ml_decision_stump": (2, 4, True, False),
-    "ml_histogram_split": (2, 4, True, False),
+    "ml_decision_stump": (1, 2, False, False),
+    "ml_histogram_split": (1, 2, False, False),
     "ml_ridge_regression": (2, 3, True, False),
+    # the similarity family's ranking core (similarity._top_k), measured
+    # at sf0.001 and sf0.01: LSH 2/3, SQ8 2/2, IVF-SQ8 2/2, PQ 7/11
+    # (the subvectors are re-scanned, see similarity._pq_topk), MRL
+    # 4/4, hard negatives 2/2, kNN label agreement 2/3; the cartesian
+    # of SQ8, MRL, hard negatives and kNN is the broadcast query fan-out
+    "sim_lsh_topk": (2, 3, False, False),
+    "sim_sq8_topk": (2, 2, True, False),
+    "sim_ivfsq8_topk_pinned": (2, 2, False, False),
+    "sim_pq_topk_pinned": (7, 11, False, False),
+    "sim_mrl_prefix_rerank": (4, 4, True, False),
+    "sim_hard_negatives": (2, 2, True, False),
+    "sim_knn_label_agreement": (2, 3, True, False),
 }
 
 #: Queries whose plans must contain ZERO single-partition Window nodes

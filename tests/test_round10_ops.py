@@ -575,62 +575,6 @@ def test_als1_rank1_degeneracy_is_shared_item_order(spark):
     )
 
 
-# --------------------------------- PC1 squaring twin vs numpy ground truth
-
-
-def test_pc1_squaring_matches_numpy_dominant_eigenvector(spark):
-    """The integer normalize-and-square chain must agree with numpy's
-    eigh on the SAME quantized covariance: projection correlation
-    ≥ 0.999 and the sign pin (largest-|loading| entry positive)."""
-    import duckdb
-    import numpy as np
-
-    from recommedation_system_under_flink_spark import registry
-
-    rows = registry.queries()["sim_pca_pc1_project"](spark, SF_DIR).collect()
-    got = {r["vec_id"]: r["value"] for r in rows}
-
-    emb = duckdb.sql(
-        f"SELECT vec_id, CAST(embedding AS DOUBLE[]) e"
-        f" FROM '{SF_DIR}/embeddings.parquet' ORDER BY vec_id"
-    ).fetchall()
-    ids = [r[0] for r in emb]
-    X = np.array([r[1] for r in emb])
-    Xq = np.floor(X * 1e6 + 0.5) / 1e6  # the engine's input grid
-    C = np.cov(Xq, rowvar=False, bias=True)
-    evals, evecs = np.linalg.eigh(C)
-    v = evecs[:, -1]
-    i_star = int(np.argmax(np.abs(v)))
-    if v[i_star] < 0:
-        v = -v
-    want = (Xq - Xq.mean(axis=0)) @ v
-    have = np.array([got[i] for i in ids])
-    corr = float(np.corrcoef(want, have)[0, 1])
-    assert abs(corr) > 0.999, corr
-    # sign pin makes the two projections positively aligned, not flipped
-    assert corr > 0, corr
-
-
-def test_pc1_weights_sign_pin_and_grid(spark):
-    """Driver-side weight vector invariants: ppm grid (|w| ≤ 1e6, at
-    least one entry AT 1e6 after normalization) and the pinned sign."""
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        _cov_relation,
-        _pc1_weights,
-    )
-
-    cov_rows = _cov_relation(spark, SF_DIR).collect()
-    cov = {}
-    for r in cov_rows:
-        c = int(round(r["cov"] * 1_000_000))
-        cov[(r["i"], r["j"])] = c
-        cov[(r["j"], r["i"])] = c
-    w = _pc1_weights(cov)
-    assert max(abs(x) for x in w) == 1_000_000
-    istar = max(range(len(w)), key=lambda i: (abs(w[i]), -i))
-    assert w[istar] > 0
-
-
 # ------------------------------- KMV bottom-k intersection sketch
 
 
@@ -716,40 +660,6 @@ def test_holt_recursion_identities_and_float_agreement(spark):
         fl = nfl
         assert abs(r["level_ppm"] / 1e6 - fl) < 0.01
         assert abs(r["trend_ppm"] / 1e6 - ft) < 0.01
-
-
-# ----------------------------------- diagonal whitening (z-scores)
-
-
-def test_whiten_diag_standardizes_each_dimension(spark):
-    """Population z-scores per dim: mean ~0, var ~1 (the eps floor and
-    the 1e-6 grid allow tiny slack), and agreement with numpy's
-    standardization of the SAME quantized inputs."""
-    import duckdb
-    import numpy as np
-
-    from recommedation_system_under_flink_spark import registry
-
-    rows = registry.queries()["sim_whiten_diag_project"](
-        spark, SF_DIR
-    ).collect()
-    emb = duckdb.sql(
-        f"SELECT vec_id, CAST(embedding AS DOUBLE[]) e"
-        f" FROM '{SF_DIR}/embeddings.parquet' ORDER BY vec_id"
-    ).fetchall()
-    ids = {r[0]: np.floor(np.array(r[1]) * 1e6 + 0.5) for r in emb}
-    X = np.array([ids[k] for k in sorted(ids)])
-    mu = X.mean(axis=0)
-    var = X.var(axis=0)
-    want = (X - mu) / np.sqrt(var + 1e6)
-    idx = {k: p for p, k in enumerate(sorted(ids))}
-    got = np.zeros_like(want)
-    for r in rows:
-        got[idx[r["vec_id"]], r["dim"]] = r["value"]
-    assert np.abs(got - want).max() < 2e-6
-    assert np.abs(got.mean(axis=0)).max() < 1e-3
-    v = got.var(axis=0)
-    assert (v < 1.001).all() and (v > 0.5).all()  # eps shrinks, never inflates past 1
 
 
 # ------------------------------------ KMV monthly rollup (closure)

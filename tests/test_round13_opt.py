@@ -38,52 +38,6 @@ def _ref_vote_fold(adj_rows, d, rounds):
     return scores
 
 
-def test_hash_min_contraction_matches_reference_cc(spark):
-    """The r13 per-partition union-find contraction must leave
-    hash_min_components' result exactly the reference connected
-    components (min vertex id per component), across partitionings —
-    exercised on a long chain (the worst case for round count), rings,
-    and scattered small components."""
-    from recommedation_system_under_flink_spark.operators.bsp import query_scope
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        hash_min_components,
-    )
-
-    edges = (
-        [(i, i + 1) for i in range(0, 40)]        # 41-node chain
-        + [(100, 101), (101, 102), (102, 100)]    # ring
-        + [(200, 201), (203, 202), (205, 204)]    # 2-node comps
-        + [(300, 310), (310, 305), (305, 301)]    # star-ish
-    )
-    # pure-Python reference: min label per component
-    parent = {}
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    for s, d in edges:
-        parent.setdefault(s, s)
-        parent.setdefault(d, d)
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[rs] = rd
-    mins = {}
-    for n in parent:
-        r = find(n)
-        mins[r] = min(mins.get(r, n), n)
-    ref = {n: mins[find(n)] for n in parent}
-
-    for nparts in (1, 3, 16):
-        df = spark.createDataFrame(edges, "a long, b long").repartition(nparts)
-        with query_scope():  # a helper, not a registered builder
-            got = {
-                r["node"]: r["comp"]
-                for r in hash_min_components(df, "a", "b").collect()
-            }
-        assert got == ref, f"nparts={nparts}: CC labels diverge"
-
-
 def test_vote_kernel_matches_catalyst_fold_bitexact(spark):
     from pyspark.sql import functions as F
 

@@ -1,6 +1,7 @@
 """Round-5 operator invariants: trimmed means, RAKE keywords,
-per-source caps, Lloyd k-means (the experiment statistics live in
-tests/test_events_flow.py).
+per-source caps (the experiment statistics live in
+tests/test_events_flow.py, the similarity ones in
+tests/test_ann_index.py).
 
 Ground truth is recomputed independently here (numpy / pandas over
 duckdb-extracted subject tables), NOT by re-running the operator's own
@@ -120,42 +121,6 @@ def test_source_cap_conservation_and_cap(queries, spark):
         assert r["n_kept"] == min(n, SOURCE_CAP)
         assert r["chars_total"] == chars
         assert 0 < r["chars_kept"] <= r["chars_total"]
-
-
-def test_kmeans_lloyd_matches_numpy_reference(queries, spark):
-    """Replay the quantized Lloyd rounds in numpy; sizes and inertia
-    must match the distributed fit exactly (same 6-dp quantization)."""
-    rows = {
-        r["cid"]: r
-        for r in queries["sim_kmeans_lloyd"](spark, SF_DIR).collect()
-    }
-    emb = duckdb.sql(
-        f"""SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-            FROM '{SF_DIR}/embeddings.parquet' ORDER BY vec_id"""
-    ).fetchall()
-    x = np.array([e for _, e in emb])
-    ids = np.array([v for v, _ in emb])
-    cents = x[np.argsort(ids)[:8]].copy()
-    for rnd in range(2):
-        d2 = np.round(
-            ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2), 6
-        )
-        cid = d2.argmin(axis=1)  # argmin takes the lowest index on ties
-        if rnd == 0:
-            cents = np.array(
-                [
-                    np.round(x[cid == c].mean(axis=0), 6)
-                    for c in range(8)
-                ]
-            )
-    for c in range(8):
-        members = d2[cid == c, c]
-        assert rows[c]["n_members"] == (cid == c).sum()
-        assert rows[c]["inertia"] == pytest.approx(members.sum(), abs=1e-5)
-        assert rows[c]["centroid_sqnorm"] == pytest.approx(
-            np.round((cents[c] ** 2).sum(), 6), abs=1e-5
-        )
-    assert sum(r["n_members"] for r in rows.values()) == len(x)
 
 
 def test_kneser_ney_matches_reference_model(queries, spark):
@@ -797,23 +762,6 @@ def test_lexical_diversity_matches_python_counts(queries, spark):
         )
 
 
-def test_embedding_drift_matches_numpy(queries, spark):
-    vecs = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{SF_DIR}/embeddings.parquet'"
-    ).fetchall()
-    ref = np.array([e for i, e in vecs if i % 2 == 0], dtype=np.float64)
-    new = np.array([e for i, e in vecs if i % 2 == 1], dtype=np.float64)
-    rows = queries["sim_embedding_drift"](spark, SF_DIR).collect()
-    assert len(rows) == ref.shape[1]
-    for r in rows:
-        d = r["dim"]
-        assert r["mu_ref"] == pytest.approx(ref[:, d].mean(), abs=1e-5)
-        assert r["mu_new"] == pytest.approx(new[:, d].mean(), abs=1e-5)
-        assert r["sd_ratio"] == pytest.approx(
-            new[:, d].std() / ref[:, d].std(), abs=1e-4
-        )
-
-
 def test_span_ops_on_planted_corpus(queries, spark, tmp_path):
     """Planted micro-corpus with a known shared 8-token phrase and an
     in-doc self-repeat: exact expected coverage and scrub survival."""
@@ -1052,27 +1000,6 @@ def test_corpus_planning_report_is_consistent_composition(queries, spark):
         assert r["n_docs"] == ney[s]["n_docs"]
 
 
-def test_dup_family_report_matches_components(queries, spark):
-    from collections import Counter
-
-    comp = queries["sim_neardup_components"](spark, SF_DIR).collect()
-    sizes = Counter(r["component"] for r in comp)
-    buckets = Counter()
-    vectors = Counter()
-    for sz in sizes.values():
-        b = sz.bit_length() - 1
-        buckets[b] += 1
-        vectors[b] += sz
-    rows = queries["sim_dup_family_report"](spark, SF_DIR).collect()
-    assert {r["bucket"] for r in rows} == set(buckets)
-    for r in rows:
-        b = r["bucket"]
-        assert r["n_families"] == buckets[b]
-        assert r["n_vectors"] == vectors[b]
-        assert r["lo"] == 2**b and r["hi"] == 2 ** (b + 1) - 1
-    assert sum(r["n_vectors"] for r in rows) == len(comp)
-
-
 def test_forecast_backtest_matches_python_replay(queries, spark):
     from recommedation_system_under_flink_spark.operators.events_props import (
         EWMA_ALPHA,
@@ -1243,44 +1170,6 @@ def test_pps_systematic_matches_python_walk(queries, spark):
         assert r["inclusion_prob"] == pytest.approx(
             min(1.0, m * r["n_tokens"] / total), abs=1e-6
         )
-
-
-def test_knn_label_agreement_matches_numpy(queries, spark):
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        KNN_K,
-        KNN_PROBE_MOD,
-    )
-
-    rows_db = duckdb.sql(
-        f"SELECT vec_id, label, embedding FROM "
-        f"'{SF_DIR}/embeddings.parquet' ORDER BY vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows_db])
-    labels = {r[0]: r[1] for r in rows_db}
-    X = np.array([r[2] for r in rows_db], dtype=np.float64)
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    sims = Xn @ Xn.T
-    stats = {}
-    for qi, qid in enumerate(ids):
-        if qid % KNN_PROBE_MOD:
-            continue
-        cand = [
-            (-round(sims[qi, ci], 6), ids[ci])
-            for ci in range(len(ids))
-            if ids[ci] != qid
-        ]
-        cand.sort()
-        top = [labels[c] for _, c in cand[:KNN_K]]
-        votes = sorted(
-            ((top.count(l), -l) for l in set(top)), reverse=True
-        )
-        pred = -votes[0][1]
-        t = labels[qid]
-        n, c = stats.get(t, (0, 0))
-        stats[t] = (n + 1, c + (pred == t))
-    rows = queries["sim_knn_label_agreement"](spark, SF_DIR).collect()
-    got = {r["true_label"]: (r["n_queries"], r["n_correct"]) for r in rows}
-    assert got == stats
 
 
 def test_schema_evolution_merges_with_nulls_for_v1(queries, spark):

@@ -161,47 +161,6 @@ def test_phash_kernel_matches_documented_grid():
     assert _phash_bands(b"") is None
 
 
-# ---------------------------------------------- NN-descent round
-
-def test_nndescent_recall_monotone_and_improving(queries, spark):
-    """The refined candidate set contains every current edge, so per
-    query the refined top-K recall can never drop (displacement only
-    by items that are themselves in the exact top-K). On the sf0.001
-    fixture at least one query must actually improve — otherwise the
-    round is a no-op and the operator demonstrates nothing."""
-    rows = queries["sim_nndescent_round"](spark, SF_DIR).collect()
-    assert len(rows) == 10
-    assert all(r["recall_refined"] >= r["recall_init"] for r in rows), rows
-    assert any(r["recall_refined"] > r["recall_init"] for r in rows), rows
-
-
-def test_nndescent_init_recall_equals_lsh_topk(queries, spark):
-    """g0 restricted to the evaluation queries IS sim_lsh_topk (same
-    pinned hyperplanes, same quantized ranking), so recall_init must
-    equal the recall computed externally from sim_lsh_topk's pairs
-    against sim_bruteforce_topk's exact pairs — cross-operator
-    consistency through public outputs only."""
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        TOP_K,
-    )
-
-    nnd = {
-        r["query_id"]: r["recall_init"]
-        for r in queries["sim_nndescent_round"](spark, SF_DIR).collect()
-    }
-    lsh = {
-        (r["query_id"], r["corpus_id"])
-        for r in queries["sim_lsh_topk"](spark, SF_DIR).collect()
-    }
-    exact = {
-        (r["query_id"], r["corpus_id"])
-        for r in queries["sim_bruteforce_topk"](spark, SF_DIR).collect()
-    }
-    for q in nnd:
-        hits = sum(1 for p in exact if p[0] == q and p in lsh)
-        assert abs(nnd[q] - hits / TOP_K) < 1e-9, (q, nnd[q], hits)
-
-
 def test_cdc_short_documents_survive(queries, spark, tmp_path):
     """Documents shorter than the CDC_W=4-token rolling window have no
     boundary candidates — one whole-doc chunk, exactly like the
@@ -317,75 +276,6 @@ def test_dp_release_matches_python_replay(queries, spark):
         n_neg += noise < 0
     # Laplace is symmetric: both signs must actually occur.
     assert 0 < n_neg < len(rows)
-
-
-# ------------------------------------------------- multi-probe LSH
-
-
-def test_multiprobe_superset_and_replay(queries, spark):
-    """Numpy replay of the whole multi-probe chain: the probe-bucket
-    candidate set must strictly contain the same-table single-probe
-    set, mean recall@5 vs exact brute force must not decrease, and the
-    engine's top-k pairs must equal the replay's."""
-    import numpy as np
-
-    from recommedation_system_under_flink_spark.operators.similarity import (
-        LSH_BITS,
-        MP_TABLES,
-        N_QUERIES,
-        TOP_K,
-        _hyperplanes,
-    )
-
-    con = duckdb.connect()
-    data = con.execute(
-        f"SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"'{SF_DIR}/embeddings.parquet' ORDER BY vec_id"
-    ).fetchall()
-    con.close()
-    ids = np.array([r[0] for r in data])
-    X = np.array([r[1] for r in data])
-    planes = _hyperplanes(MP_TABLES, LSH_BITS)
-    sig = np.zeros((MP_TABLES, len(ids)), dtype=int)
-    for t in range(MP_TABLES):
-        for b in range(LSH_BITS):
-            sig[t] += (X @ planes[t][b] > 0).astype(int) << b
-
-    def topk(cands_by_q):
-        cos = (X @ X.T) / (
-            np.linalg.norm(X, axis=1)[:, None] * np.linalg.norm(X, axis=1)[None, :]
-        )
-        out = {}
-        for q, cs in cands_by_q.items():
-            ranked = sorted(cs, key=lambda c: (-round(cos[q, c], 6), ids[c]))
-            out[q] = [ids[c] for c in ranked[:TOP_K]]
-        return out
-
-    home, multi = {}, {}
-    for q in range(N_QUERIES):
-        h_set, m_set = set(), set()
-        for t in range(MP_TABLES):
-            probes = {sig[t][q]} | {
-                sig[t][q] ^ (1 << b) for b in range(LSH_BITS)
-            }
-            h_set |= {c for c in range(len(ids)) if c != q and sig[t][c] == sig[t][q]}
-            m_set |= {c for c in range(len(ids)) if c != q and sig[t][c] in probes}
-        home[q], multi[q] = h_set, m_set
-        assert h_set <= m_set
-    assert sum(len(multi[q]) for q in multi) > sum(len(home[q]) for q in home)
-
-    exact = topk({q: [c for c in range(len(ids)) if c != q] for q in range(N_QUERIES)})
-    rec = lambda got: np.mean(  # noqa: E731
-        [len(set(got[q]) & set(exact[q])) / TOP_K for q in range(N_QUERIES)]
-    )
-    assert rec(topk(multi)) >= rec(topk(home))
-
-    got = queries["sim_multiprobe_lsh_topk"](spark, SF_DIR).collect()
-    got_pairs = {(r["query_id"], r["corpus_id"]) for r in got}
-    want_pairs = {
-        (q, c) for q, cs in topk(multi).items() for c in cs
-    }
-    assert got_pairs == want_pairs
 
 
 # --------------------------------------------------- video scene cuts

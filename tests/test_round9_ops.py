@@ -162,52 +162,6 @@ def test_scene_cuts_kernel_drops_null_duration_rows(spark):
     assert len([r for r in out if r["media_id"] == 1]) == 3
 
 
-# ------------------------------------ LSH DBSCAN vs exact DBSCAN
-
-def test_dbscan_lsh_refines_exact(queries, spark):
-    """The LSH-candidate eps-graph is a SUBSET of the exact eps-graph,
-    so (a) approximate cores must be exact cores, (b) two points the
-    approximate variant clusters together must share an exact cluster
-    (missed edges can split or drop, never merge), and (c) the
-    approximation must still recover a non-trivial share of the exact
-    core structure on the fixture."""
-    from conftest import SF_DIR
-
-    exact = {
-        r["vec_id"]: (r["role"], r["cluster"])
-        for r in queries["sim_dbscan"](spark, SF_DIR).collect()
-    }
-    approx = {
-        r["vec_id"]: (r["role"], r["cluster"])
-        for r in queries["sim_dbscan_lsh"](spark, SF_DIR).collect()
-    }
-    assert set(exact) == set(approx)
-
-    # (a) approximate cores are exact cores
-    for v, (role, _) in approx.items():
-        if role == "core":
-            assert exact[v][0] == "core", v
-
-    # (b) same approximate cluster -> same exact cluster, quantified
-    # over CORE members (a border point sitting between two clusters
-    # may legitimately attach differently in the two variants)
-    from collections import defaultdict
-
-    groups = defaultdict(list)
-    for v, (role, cl) in approx.items():
-        if cl is not None and role == "core":
-            groups[cl].append(v)
-    for cl, members in groups.items():
-        exact_clusters = {exact[v][1] for v in members}
-        assert len(exact_clusters) == 1, (cl, exact_clusters)
-
-    # (c) non-trivial recall of exact core structure
-    exact_cores = sum(1 for r, _ in exact.values() if r == "core")
-    approx_cores = sum(1 for r, _ in approx.values() if r == "core")
-    assert exact_cores > 0
-    assert approx_cores >= 0.5 * exact_cores, (approx_cores, exact_cores)
-
-
 # ----------------------------------- bucketed co-located join (s28)
 
 def test_s28_bucketed_join_is_colocated(queries, spark):
